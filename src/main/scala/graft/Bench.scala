@@ -1,204 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Pure regression-gate math, factored out of [[Bench]] so the baseline
-  * policy is spec-testable without a Spark run ([[BenchGateSpec]]).
-  *
-  * Round-10 lesson: gating against the previous round's CORRECTED figures
-  * (raw ÷ probe noise) produced 8 flags and all 8 were phantom — linear
-  * probe-deflation overcorrects contended measurements 2–4×, so a
-  * contended round plants an impossibly-fast baseline that the next quiet
-  * round "regresses" against. The fix is a per-query TRUSTED baseline:
-  * updated only when the measurement itself was quiet (probe factor
-  * inside the dead-band), carried forward unchanged through contended
-  * rounds, and compared only against quiet current measurements. A
-  * contended round followed by a quiet round then flags zero unchanged
-  * queries by construction.
-  */
-object BenchGate {
-  /** Probe-load factor below which a measurement counts as quiet — the
-    * same dead-band stratum the corrected figures use (probe self-jitter
-    * on a 0.1 s micro-probe is ~1.2–1.3×). */
-  val QuietFactor = 1.3
-  val RegressionRatio = 1.5
-  /** Sub-half-second queries regress on JIT luck, not plans. */
-  val FloorSec = 0.5
-
-  /** Baseline seed when the previous detail file predates the `trusted`
-    * field. The round-11 post-mortem: both r11 REGRESSION flags were
-    * phantom because this fallback took `corrected` verbatim — for a
-    * query whose winning run was CONTENDED, corrected = raw ÷ noise is a
-    * deflation ESTIMATE, not a measurement, and ~230 of the 322 first-
-    * generation trusted entries were armed with exactly such seeds (each
-    * minting one phantom flag at its first quiet measurement). The
-    * dead-band therefore gates the WHOLE fallback: a contended
-    * measurement (noise ≥ [[QuietFactor]]) seeds NOTHING — its raw is
-    * inflated and its corrected is an estimate — and the query re-earns
-    * a baseline at its first quiet measurement. Inside the band,
-    * corrected ≡ raw by construction, so either figure is an honest
-    * quiet measurement and seeds directly. */
-  def seedFallback(raw: Double, corrected: Double, noise: Double): Option[Double] =
-    if (noise >= QuietFactor) None
-    else if (corrected >= 0) Some(corrected)
-    else if (raw >= 0) Some(raw)
-    else None
-
-  /** Cross-RUN machine comparability: within-run noise factors catch
-    * contention windows, but the probe BASE itself drifts 2–3× between
-    * runs (r7–r10 history 0.044–0.151 s) — a whole run on a 2× slower
-    * machine state measures every query ~2× slower at noise 1.00, and
-    * absolute seconds are simply not comparable to a fast-state
-    * baseline. Trusted figures therefore carry the probe base they were
-    * measured at, and both flagging and updating require the current
-    * base inside the same dead-band of it. (Probe-LINEAR rescaling
-    * across runs is deliberately NOT done — that is the overcorrection
-    * that minted round 10's phantom baselines.) */
-  def comparable(curProbeBase: Double, trustedProbeBase: Double): Boolean =
-    trustedProbeBase > 0 && curProbeBase > 0 &&
-      curProbeBase < QuietFactor * trustedProbeBase
-
-  /** Per-key baseline seed when reading the previous detail file. The
-    * raw/corrected fallback applies ONLY to whole files that predate the
-    * `trusted` field: once the field exists, a query absent from it has
-    * never measured quiet, and seeding it from its corrected figure
-    * would resurrect exactly the noise-deflated contended baseline this
-    * gate refuses (contended round N → phantom flag in quiet round N+1).
-    */
-  def seedKey(trusted: Double, fileHasTrusted: Boolean,
-      raw: Double, corrected: Double, noise: Double): Option[Double] =
-    if (trusted >= 0) Some(trusted)
-    else if (fileHasTrusted) None
-    else seedFallback(raw, corrected, noise)
-
-  /** Per-run limit on how far the probe-base anchor may walk down —
-    * HALF the comparability band, so after one anomalously fast run the
-    * machine's typical state is still comparable
-    * (QuietFactor / AnchorStep > 1) and the anchor recovers instead of
-    * deadlocking the gate dormant. */
-  val AnchorStep = 1.15
-
-  /** Next probe-base anchor: follow the machine state at most one
-    * [[AnchorStep]] per run. A min-only ratchet lets a single
-    * anomalously fast run drag the anchor 2× down and deadlock the gate
-    * (every future normal-state run incomparable, baselines never
-    * updatable); consecutive fast runs — the legitimate case — still
-    * walk it down step by step, with quiet queries re-measuring at
-    * every step. */
-  def nextProbeBase(prev: Double, cur: Double, comparable: Boolean): Double =
-    if (!comparable) prev
-    else if (prev > 0) math.max(math.min(prev, cur), prev / AnchorStep)
-    else cur
-
-  /** Two-sided machine-state band for ADOPTING a measurement as the new
-    * trusted figure, checked against the post-walk anchor. [[comparable]]
-    * is deliberately one-sided (a faster machine state can only make an
-    * unchanged query faster — it can never mint a false flag), but
-    * ADOPTION on a faster state plants a deflated baseline that the
-    * machine's normal state then "regresses" against (the r11 ADVICE
-    * mirror of the phantom class: probe 0.05 run rewrites every quiet
-    * baseline at ~half, the next 0.10 run is still comparable and flags
-    * everything at ~2×). Adoption therefore requires the current probe
-    * base inside ONE [[AnchorStep]] of the anchor in BOTH directions —
-    * baselines can only walk down as fast as the anchor does. The band
-    * arithmetic makes state-scaled phantom flags impossible outright:
-    * a flagging state is < [[QuietFactor]] × anchor and the adoption
-    * state was > anchor / [[AnchorStep]], so an unchanged query whose
-    * cost scales with machine state moves at most
-    * QuietFactor × AnchorStep = 1.495 < [[RegressionRatio]].
-    */
-  def adoptable(curProbeBase: Double, anchor: Double): Boolean =
-    anchor <= 0 || (curProbeBase > 0 &&
-      curProbeBase < AnchorStep * anchor && curProbeBase > anchor / AnchorStep)
-
-  /** Consecutive slow-incomparable runs after which the machine state is
-    * judged durable (a new host, a throttled CPU — not a contention
-    * spike) and the gate RE-ANCHORS: adopt the current probe base as the
-    * anchor and drop the old-state baselines and flags. Absolute seconds
-    * from the fast state would mint phantom flags at the slow state, so
-    * queries re-earn baselines from the re-anchoring run's own quiet
-    * measurements — the bounded recovery path that keeps a durable state
-    * move from leaving the gate dormant forever (r11 ADVICE). */
-  val DormantRecoveryRuns = 3
-
-  /** The 1.15–1.3× gap between [[AnchorStep]] and [[QuietFactor]] has no
-    * other recovery path: a durable state move INTO that band stays
-    * comparable every run (so the dormancy counter never starts) while
-    * never adoptable (the anchor is a min-ratchet that cannot walk up)
-    * — baselines would freeze forever. After [[DormantRecoveryRuns]]
-    * consecutive comparable-but-slow-unadoptable runs the state is
-    * durable, not a spike, and the anchor steps UP one [[AnchorStep]]
-    * per run until adoption resumes (from anywhere in the band, one
-    * step suffices: 1.3 / 1.15 < 1.15). A transient contention run
-    * cannot move it — the counter resets at the first adoptable run.
-    */
-  def stepUpAnchor(anchor: Double, curProbeBase: Double, staleRuns: Int): Double =
-    if (anchor > 0 && curProbeBase > AnchorStep * anchor &&
-        staleRuns >= DormantRecoveryRuns)
-      math.min(curProbeBase, anchor * AnchorStep)
-    else anchor
-
-  /** Next trusted figure: a quiet successful measurement on an adoptable
-    * machine state replaces it; anything else — contended run, failed
-    * query, machine state outside the adoption band — carries the
-    * previous trusted value forward untouched. */
-  def nextTrusted(prevTrusted: Option[Double], cur: Double, quiet: Boolean, ok: Boolean): Option[Double] =
-    if (ok && quiet && cur >= 0) Some(cur) else prevTrusted
-
-  /** Sticky flag record `(preFlagTrusted, latestQuietFigure)`. A genuine
-    * regression must not self-heal out of the report after one round
-    * (round N flags, [[nextTrusted]] adopts the regressed figure, round
-    * N+1 compares against it and goes green — VERDICT r11 #2): once
-    * flagged, the PRE-flag baseline is kept until a quiet measurement
-    * returns within [[RegressionRatio]] of it. A fresh flag on an
-    * already-flagged query keeps the ORIGINAL pre-flag baseline (the
-    * regression is measured against where the query truly was); quiet
-    * still-regressed measurements refresh the current figure; contended
-    * runs, failures, and incomparable machine states carry the record
-    * untouched.
-    */
-  def nextFlag(
-      prevFlag: Option[(Double, Double)], fresh: Option[(Double, Double)],
-      cur: Double, quiet: Boolean, ok: Boolean): Option[(Double, Double)] =
-    (prevFlag, fresh) match {
-      case (Some((prev0, _)), Some((_, c))) => Some((prev0, c))
-      case (None, Some(f)) => Some(f)
-      case (Some((prev0, _)), None) if ok && quiet && cur >= 0 =>
-        if (cur <= RegressionRatio * prev0) None else Some((prev0, cur))
-      case (pf, None) => pf
-    }
-
-  /** Flag only quiet-vs-trusted comparisons on a comparable machine
-    * state: a contended current measurement is not evidence of anything
-    * (its corrected figure is a deflation estimate, not a measurement),
-    * and neither is a clean measurement on a 2× slower machine. */
-  def regression(prevTrusted: Option[Double], cur: Double, quiet: Boolean, ok: Boolean): Option[(Double, Double)] =
-    regressionFloor(prevTrusted, cur, quiet, ok, FloorSec)
-
-  /** Streaming arms are multi-second end-to-end replays with micro-batch
-    * scheduling jitter far above a batch query's — their flag floor. */
-  val StreamFloorSec = 2.0
-
-  def regressionFloor(prevTrusted: Option[Double], cur: Double, quiet: Boolean,
-      ok: Boolean, floor: Double): Option[(Double, Double)] =
-    prevTrusted.filter(prev =>
-      ok && quiet && cur >= floor && cur > RegressionRatio * prev).map(prev => (prev, cur))
-}
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract). Per-query progress goes to
   * stderr so slow queries are identifiable while the run is live.
+  *
+  * This is a measuring tool, not a regression gate: it keeps no state
+  * between runs. Regressions are gated by perfbench's paired parent/change
+  * runs (`perfbench/`, `BENCHMARK.json`).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = GraftSession.envCores
+    val spark = GraftSession.local("graft-bench", cores)
     // dev filter: SPARK_GRAFT_ONLY=comma,separated,names runs a subset
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -268,18 +82,15 @@ object Bench {
       (name, sec, n >= 0, noise, bestProbe)
     }
     // streaming throughput surface (VERDICT r12 #6): MemoryStream replays
-    // through the reference pipelines, reported beside the batch figures
-    // so a streaming regression is visible per round. Arms carry their
-    // own bracketing probes (StreamBench noise accounting) feeding the
-    // per-arm trusted-baseline gate below (VERDICT r14 #2).
-    val streamArrJson =
-      if (sys.env.get("SPARK_GRAFT_STREAM_BENCH").contains("0")) None
+    // through the reference pipelines, reported beside the batch figures.
+    // Arms carry their own bracketing probes (StreamBench noise accounting).
+    val streamingJson =
+      if (sys.env.get("SPARK_GRAFT_STREAM_BENCH").contains("0")) ""
       else {
         val j = graft.streaming.StreamBench.run(spark, probe = () => probe())
         System.err.println(s"[bench] streaming: $j")
-        Some(j)
+        s""","streaming":$j"""
       }
-    val streamingJson = streamArrJson.map(j => s""","streaming":$j""").getOrElse("")
     // Locale.ROOT: the default-locale f"" interpolator emits comma decimals
     // under e.g. de_DE, which breaks the JSON contract
     def num2(d: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(d))
@@ -291,282 +102,38 @@ object Bench {
     // by ITS OWN probe's load factor vs the final (global quietest) base —
     // what the query would have cost on the quiet machine every run was
     // calibrated against. The probe has jitter of its own (~2× on a 0.1 s
-    // micro-probe), so a DEAD-BAND applies: below 1.3× — the verdict's own
-    // "quiet" stratum — the raw min stands and corrected ≡ raw; only real
-    // contention deflates. Makes cross-round diffs contention-proof by
-    // construction (r9: 148/287 queries at noise ≥ 1.8 read as a 1.87×
-    // "regression" that wasn't).
+    // micro-probe), so a DEAD-BAND applies: below 1.3× the raw min stands
+    // and corrected ≡ raw; only real contention deflates. A deflated figure
+    // is an estimate, not a measurement: read it beside `noise`.
     val corrected = results.map { case (k, sec, okQ, _, pBest) =>
       val factor = if (pBest > 0) pBest / probeBase else 1.0
       (k, if (!okQ) -1.0 else if (factor < 1.3) sec else sec / factor)
     }
     val correctedTotal = corrected.collect { case (_, v) if v >= 0 => v }.sum
-    // Per-CORE-COUNT detail file (VERDICT r15 #2/#3): the driver benches
-    // at two core counts, and a single shared detail file made the runs
-    // clobber each other's per-query breakdown AND cross-contaminate the
-    // regression gate — the probe is scheduling-overhead-bound, so its
-    // base barely moves with the core count (0.0425 at 32 vs 0.0465 at
-    // 8), while parallel-heavy queries legitimately run 1.5–2× slower at
-    // 8 cores. r15's one "regression" flag (txt_span_dup_profile
-    // 0.58 → 0.90) was exactly an 8-core quiet measurement compared
-    // against a 32-core trusted baseline. Keying the gate state by cpus
-    // gives each machine shape its own honest baseline history.
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", s"BENCH_DETAIL_c$cpus.json")
-    // regression gate (report, not a suite failure): read the PREVIOUS
-    // detail file before overwriting it and flag any query whose QUIET
-    // current measurement grew >1.5× vs its per-query TRUSTED baseline
-    // (BenchGate scaladoc has the r10 phantom-flag story). Pre-`trusted`
-    // detail files seed via the dead-band-mirrored fallback.
-    val (prevTrusted0: Map[String, Double], prevTpb0: Double,
-        prevFlagged0: Map[String, (Double, Double)], prevDormant: Int) = {
-      val f = new java.io.File(detailPath)
-      if (!f.exists()) (Map.empty[String, Double], -1.0, Map.empty[String, (Double, Double)], 0)
-      else try {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-        import scala.jdk.CollectionConverters._
-        val qsN = root.path("queries"); val czN = root.path("corrected")
-        val nzN = root.path("noise"); val trN = root.path("trusted")
-        // the fallback is ONLY for whole files that predate the trusted
-        // field. Once the field exists, a query absent from it is absent
-        // BECAUSE it has never measured quiet — seeding it per-key from
-        // its corrected figure would resurrect exactly the noise-deflated
-        // contended baseline this gate exists to refuse (a query
-        // contended in round N would flag phantom in round N+1).
-        val hasTrusted = !trN.isMissingNode && trN.fieldNames().hasNext
-        val m = (qsN.fieldNames().asScala ++ trN.fieldNames().asScala).toSet.flatMap { (k: String) =>
-          BenchGate.seedKey(trN.path(k).asDouble(-1.0), hasTrusted,
-            qsN.path(k).asDouble(-1.0), czN.path(k).asDouble(-1.0), nzN.path(k).asDouble(1.0))
-            .map(k -> _)
-        }.toMap
-        // sticky flag records: {"k":[preFlagTrusted, latestQuietCur]}
-        val flN = root.path("flagged")
-        val fl = flN.fieldNames().asScala.map { k =>
-          k -> (flN.path(k).path(0).asDouble(-1.0), flN.path(k).path(1).asDouble(-1.0))
-        }.toMap.filter(_._2._1 > 0)
-        // baselines carry the machine state they were measured at; a
-        // pre-`trusted_probe_base` file anchors to its own probe base
-        (m, root.path("trusted_probe_base").asDouble(root.path("probe_base_sec").asDouble(-1.0)),
-          fl, root.path("dormant_slow_runs").asInt(0))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] previous detail unreadable, gate skipped: $e")
-        (Map.empty[String, Double], -1.0, Map.empty[String, (Double, Double)], 0) }
-    }
-    // whole-run machine-state comparability vs the baseline's probe base
-    // (first-ever run: nothing to compare against, seed freely). A run
-    // incomparable in the slow direction bumps the dormancy counter; at
-    // DormantRecoveryRuns consecutive the state is durable, not a spike:
-    // RE-ANCHOR to it and drop the old-state baselines and flags (their
-    // absolute seconds would mint phantom flags at the new state) —
-    // queries re-earn baselines from this run's own quiet measurements.
-    val comparable0 = prevTpb0 <= 0 || BenchGate.comparable(probeBase, prevTpb0)
-    val dormantRuns = if (comparable0) 0 else prevDormant + 1
-    val reanchored = !comparable0 && dormantRuns >= BenchGate.DormantRecoveryRuns
-    if (reanchored)
-      System.err.println(f"[bench] $dormantRuns consecutive runs on a slower machine state " +
-        f"(probe_base $probeBase%.4f vs anchor $prevTpb0%.4f) — durable state move: " +
-        "re-anchoring, old-state baselines and flags dropped, queries re-earn from this run")
-    val prevTrusted = if (reanchored) Map.empty[String, Double] else prevTrusted0
-    val prevFlagged = if (reanchored) Map.empty[String, (Double, Double)] else prevFlagged0
-    val prevTpb = if (reanchored) -1.0 else prevTpb0
-    val comparableState = reanchored || comparable0
-    val dormantOut = if (reanchored) 0 else dormantRuns
-    if (!comparableState)
-      System.err.println(f"[bench] machine state not comparable to trusted baselines " +
-        f"(probe_base $probeBase%.4f vs trusted $prevTpb%.4f) — gate dormant " +
-        f"($dormantOut/${BenchGate.DormantRecoveryRuns} runs), baselines carried")
-    val walkedTpb = BenchGate.nextProbeBase(prevTpb, probeBase, comparableState)
-    // comparable-but-not-adoptable in the SLOW direction: the 1.15–1.3×
-    // band where neither the dormancy counter nor the min-ratchet anchor
-    // can recover — count consecutive runs and step the anchor UP once
-    // durable (BenchGate.stepUpAnchor scaladoc)
-    val prevStale = {
-      val f = new java.io.File(detailPath)
-      if (!f.exists()) 0
-      else try new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-        .path("stale_adopt_runs").asInt(0)
-      catch { case _: Throwable => 0 }
-    }
-    val slowUnadoptable = comparableState && walkedTpb > 0 &&
-      probeBase > BenchGate.AnchorStep * walkedTpb
-    val staleRuns = if (slowUnadoptable) prevStale + 1 else 0
-    val newTpb = BenchGate.stepUpAnchor(walkedTpb, probeBase, staleRuns)
-    // once the anchor has stepped, the excursion is resolved — a LATER
-    // drift must re-earn its own consecutive-run evidence
-    val staleOut = if (newTpb > walkedTpb) 0 else staleRuns
-    if (newTpb > walkedTpb)
-      System.err.println(f"[bench] $staleRuns consecutive comparable runs above the " +
-        f"adoption band (probe_base $probeBase%.4f vs anchor $walkedTpb%.4f) — " +
-        f"durable mid-band state: anchor stepped up to $newTpb%.4f")
-    // adoption is TWO-sided vs the post-walk anchor: a faster state can
-    // flag nothing (one-sided comparable) but must not plant deflated
-    // baselines either — BenchGate.adoptable has the band arithmetic
-    val adoptableState = BenchGate.adoptable(probeBase, newTpb)
-    // per-query quietness of the WINNING run (its own probe vs global
-    // base), AND the run's machine state comparable/adoptable
-    def quietRun(okQ: Boolean, pBest: Double): Boolean =
-      okQ && pBest > 0 && pBest / probeBase < BenchGate.QuietFactor
-    val quietByQuery = results.map { case (k, _, okQ, _, pBest) =>
-      k -> (comparableState && quietRun(okQ, pBest))
-    }.toMap
-    val adoptByQuery = results.map { case (k, _, okQ, _, pBest) =>
-      k -> (adoptableState && quietRun(okQ, pBest))
-    }.toMap
-    val okByQuery = results.map { case (k, _, okQ, _, _) => k -> okQ }.toMap
-    val freshRegressions = corrected.flatMap { case (k, cur) =>
-      BenchGate.regression(prevTrusted.get(k), cur, quietByQuery(k), okByQuery(k))
-        .map { case (prev, c) => (k, prev, c) }
-    }
-    // union with prev: a SPARK_GRAFT_ONLY subset run must not wipe the
-    // baselines of unselected queries when it overwrites the detail file
-    val trustedNow: Map[String, Double] = prevTrusted ++ corrected.flatMap { case (k, cur) =>
-      BenchGate.nextTrusted(prevTrusted.get(k), cur, adoptByQuery(k), okByQuery(k)).map(k -> _)
-    }
-    // sticky flags: a flagged query keeps its PRE-flag baseline on record
-    // until a quiet measurement returns within 1.5x of it — a genuine
-    // regression cannot self-heal out of the report after one round.
-    // Unselected queries (subset runs) carry their records untouched.
-    val freshByKey = freshRegressions.map { case (k, p, c) => k -> (p, c) }.toMap
-    val curByKey = corrected.toMap
-    val flaggedNow: Map[String, (Double, Double)] =
-      (prevFlagged.keySet ++ freshByKey.keySet).flatMap { k =>
-        val selectedHere = curByKey.contains(k)
-        val next =
-          if (!selectedHere) prevFlagged.get(k)
-          else BenchGate.nextFlag(prevFlagged.get(k), freshByKey.get(k),
-            curByKey(k), quietByQuery(k), okByQuery(k))
-        next.map(k -> _)
-      }.toMap
-    flaggedNow.toSeq.sortBy(_._1).foreach { case (k, (prev, cur)) =>
-      val tag = if (freshByKey.contains(k)) "REGRESSION >1.5x vs trusted"
-                else "STILL REGRESSED vs pre-flag trusted"
-      System.err.println(f"[bench] $tag: $k%-28s ${num2(prev)}s -> ${num2(cur)}s")
-    }
-    prevFlagged.keysIterator.filterNot(flaggedNow.contains)
-      .filter(curByKey.contains).toSeq.sorted.foreach { k =>
-        System.err.println(f"[bench] recovered (quiet within 1.5x of pre-flag trusted): $k")
-      }
-    // ---- streaming per-arm trusted baselines (VERDICT r14 #2): the batch
-    // gate's exact treatment — adopt an arm's wall only from a quiet
-    // measurement (its own bracketing probe inside the dead-band) on an
-    // adoptable machine state; flag quiet measurements >1.5× trusted on a
-    // comparable state; sticky flags keep the pre-flag baseline. A
-    // re-anchor drops streaming baselines with the batch ones (absolute
-    // seconds from the old machine state would mint phantom arm flags).
-    val (prevStreamTrusted0, prevStreamFlagged0) = {
-      val f = new java.io.File(detailPath)
-      if (!f.exists()) (Map.empty[String, Double], Map.empty[String, (Double, Double)])
-      else try {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-        import scala.jdk.CollectionConverters._
-        val tN = root.path("streaming_trusted")
-        val t = tN.fieldNames().asScala.map(k => k -> tN.path(k).asDouble(-1.0))
-          .toMap.filter(_._2 > 0)
-        val fN = root.path("streaming_flagged")
-        val fl = fN.fieldNames().asScala.map { k =>
-          k -> (fN.path(k).path(0).asDouble(-1.0), fN.path(k).path(1).asDouble(-1.0))
-        }.toMap.filter(_._2._1 > 0)
-        (t, fl)
-      } catch { case _: Throwable =>
-        (Map.empty[String, Double], Map.empty[String, (Double, Double)]) }
-    }
-    val prevStreamTrusted = if (reanchored) Map.empty[String, Double] else prevStreamTrusted0
-    val prevStreamFlagged = if (reanchored) Map.empty[String, (Double, Double)] else prevStreamFlagged0
-    // parse the arms back out of the JSON the streaming bench emitted:
-    // (arm, wall, ok, probe); an "error" arm is ok=false
-    val arms: Seq[(String, Double, Boolean, Double)] = streamArrJson.toSeq.flatMap { j =>
-      try {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(j)
-        import scala.jdk.CollectionConverters._
-        root.elements().asScala.map { a =>
-          (a.path("pipeline").asText(""),
-            a.path("wall_sec").asDouble(-1.0),
-            !a.has("error") && a.path("wall_sec").asDouble(-1.0) >= 0,
-            a.path("probe_sec").asDouble(-1.0))
-        }.toSeq
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] streaming JSON unparseable, arm gate skipped: $e")
-        Seq.empty }
-    }
-    def quietArm(okA: Boolean, p: Double): Boolean =
-      okA && p > 0 && p / probeBase < BenchGate.QuietFactor
-    val streamFreshByKey = arms.flatMap { case (k, wall, okA, p) =>
-      BenchGate.regressionFloor(prevStreamTrusted.get(k), wall,
-        comparableState && quietArm(okA, p), okA, BenchGate.StreamFloorSec)
-        .map(k -> _)
-    }.toMap
-    val streamTrustedNow: Map[String, Double] =
-      prevStreamTrusted ++ arms.flatMap { case (k, wall, okA, p) =>
-        BenchGate.nextTrusted(prevStreamTrusted.get(k), wall,
-          adoptableState && quietArm(okA, p), okA).map(k -> _)
-      }
-    val armByKey = arms.map(a => a._1 -> a).toMap
-    val streamFlaggedNow: Map[String, (Double, Double)] =
-      (prevStreamFlagged.keySet ++ streamFreshByKey.keySet).flatMap { k =>
-        val next = armByKey.get(k) match {
-          case None => prevStreamFlagged.get(k)
-          case Some((_, wall, okA, p)) =>
-            BenchGate.nextFlag(prevStreamFlagged.get(k), streamFreshByKey.get(k),
-              wall, comparableState && quietArm(okA, p), okA)
-        }
-        next.map(k -> _)
-      }.toMap
-    streamFlaggedNow.toSeq.sortBy(_._1).foreach { case (k, (prev, cur)) =>
-      val tag = if (streamFreshByKey.contains(k)) "STREAM REGRESSION >1.5x vs trusted"
-                else "STREAM STILL REGRESSED vs pre-flag trusted"
-      System.err.println(f"[bench] $tag: $k%-22s ${num2(prev)}s -> ${num2(cur)}s")
-    }
-    val streamTrustedJson = streamTrustedNow.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + num2(v) }.mkString("{", ",", "}")
-    val streamFlaggedJson = streamFlaggedNow.toSeq.sortBy(_._1)
-      .map { case (k, (p, c)) => "\"" + k + "\":[" + num2(p) + "," + num2(c) + "]" }
-      .mkString("{", ",", "}")
-    val regJson = if (flaggedNow.isEmpty) "" else
-      s""","regressions":${flaggedNow.toSeq.sortBy(_._1).map { case (k, (p, c)) =>
-        "\"" + k + "\":[" + num2(p) + "," + num2(c) + "]" }.mkString("{", ",", "}")}"""
     // full per-query detail goes to a file: at 200+ queries the flat map is
     // ~8 KB and the driver keeps only a ~2 KB tail of stdout, which left
     // BENCH_r04/r05 unparseable ("parsed": null). Stdout gets a compact
-    // primary line (total, failures, slowest-10) that always fits.
+    // primary line (total, failures, slowest-10) that always fits. The file
+    // is keyed by core count so runs at two core counts keep both maps.
+    val detailPath = s"BENCH_DETAIL_c$cores.json"
     val qs = results.map { case (k, v, okQ, _, _) => "\"" + k + "\":" + (if (okQ) v.toString else "-1") }
       .mkString("{", ",", "}")
     val noiseJson = results.map { case (k, _, _, nz, _) => "\"" + k + "\":" + num2(nz) }
       .mkString("{", ",", "}")
     val corrJson = corrected.map { case (k, v) => "\"" + k + "\":" + (if (v >= 0) num2(v) else "-1") }
       .mkString("{", ",", "}")
-    val trustedJson = trustedNow.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + num2(v) }.mkString("{", ",", "}")
-    val flaggedJson = flaggedNow.toSeq.sortBy(_._1)
-      .map { case (k, (p, c)) => "\"" + k + "\":[" + num2(p) + "," + num2(c) + "]" }
-      .mkString("{", ",", "}")
-    val tpbStr = String.format(java.util.Locale.ROOT, "%.4f", Double.box(newTpb))
-    val gateDormant = !comparableState
     val detail = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
       s""""corrected_total":${num2(correctedTotal)},""" +
-      s""""queries":$qs$failedJson,"noise":$noiseJson,"corrected":$corrJson,""" +
-      s""""trusted":$trustedJson,"trusted_probe_base":$tpbStr,""" +
-      s""""flagged":$flaggedJson,"gate_dormant":$gateDormant,""" +
-      s""""dormant_slow_runs":$dormantOut,"stale_adopt_runs":$staleOut$regJson$streamingJson,""" +
-      s""""streaming_trusted":$streamTrustedJson,"streaming_flagged":$streamFlaggedJson,""" +
+      s""""queries":$qs$failedJson,"noise":$noiseJson,"corrected":$corrJson$streamingJson,""" +
       s""""probe_base_sec":$probeBaseStr,"sf":"$sfDir"}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get(detailPath),
       detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // legacy mirror for readers that expect the old fixed name (write-only:
-    // the gate reads ONLY the per-cpus file, so a different-core-count run
-    // overwriting this mirror can no longer contaminate baselines)
-    if (!sys.env.contains("SPARK_GRAFT_BENCH_DETAIL"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_DETAIL.json"),
-        detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val slowest = results.filter(_._3).sortBy(-_._2).take(10)
       .map { case (k, v, _, _, _) => "\"" + k + "\":" + num2(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-      s""""corrected_total":${num2(correctedTotal)},"n_regressions":${flaggedNow.size},""" +
-      s""""n_new_regressions":${freshRegressions.size},"gate_dormant":$gateDormant,""" +
-      s""""n_trusted":${trustedNow.size},""" +
-      s""""n_stream_regressions":${streamFlaggedNow.size},""" +
-      s""""n_stream_trusted":${streamTrustedNow.size},""" +
+      s""""corrected_total":${num2(correctedTotal)},""" +
       s""""slowest":$slowest$failedJson$streamingJson,"probe_base_sec":$probeBaseStr,""" +
       s""""detail_file":"$detailPath","sf":"$sfDir"}""")
     spark.stop()

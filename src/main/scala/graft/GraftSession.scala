@@ -46,6 +46,14 @@ object GraftSession {
     spark
   }
 
+  /** Core count for the dev mains (Bench, Verify, PlanDump, ...), from
+    * `SPARK_GRAFT_CPUS`: a number is used as given; unset or anything
+    * else (e.g. `*`) means every available processor. Resolved once, so a
+    * run's `local[n]` master and its file names agree.
+    */
+  lazy val envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Build a local session for tests/benchmarks. Shuffle partitions follow
     * the core count, not the 200 default (right-sizing partitions is the
     * single biggest local-mode win; on a cluster this would be set to

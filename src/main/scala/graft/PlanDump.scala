@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (optimization rounds): dump `.explain("formatted")` for a set
   * of registered queries to files, so plan claims in OPTIMIZATION_r*.md are
   * checkable without running Spark.
@@ -18,13 +16,7 @@ object PlanDump {
     val suffix = args(1)
     val only = if (args.length > 2) Some(args(2).split(",").toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-plandump", GraftSession.envCores)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only job/stage profiler for optimization rounds: runs selected
   * registered queries once (after a warmup) and prints per-job wall times
@@ -15,13 +14,7 @@ object ProfileScratch {
     val names = args(0).split(",").toSeq
     val repeats = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-profile", GraftSession.envCores)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     @volatile var lines = List.empty[String]
     @volatile var stageTask = 0L

@@ -1217,8 +1217,9 @@ object SparkEntry {
           unix_millis(col("w.start")).as("win_start_ms"),
           col("event_type"), col("n_events"), col("sum_value"))),
     // the Spark-native session_window operator (the streaming path) run in
-    // batch mode — same oracle semantics as the gap-island formulation,
-    // proving the two sessionizers agree
+    // batch mode — same oracle as the gap-island formulation, which splits
+    // at a gap of exactly 12 h where session_window merges; the testdata
+    // holds no such tie, so the two agree here
     "cs_sessionize_native" -> ((s, dir) =>
       graft.streaming.ClickstreamStreams.sessions(
         Tables.events(s, dir).withColumn("ts", timestamp_millis(col("ts_ms"))),

@@ -542,13 +542,15 @@ object Analytics {
       .filter(size(col("__items")) <= maxSize)
 
   /** All `item_a < item_b` pairs of a SORTED distinct array, as structs —
-    * the in-row form of the grp-keyed pair self-join. Callers MUST
-    * pre-filter `size(items) >= 2`: `sequence(1, 0)` infers step -1 (the
-    * [[graft.Cols.charGramsOfChars]] contract note).
+    * the in-row form of the grp-keyed pair self-join. Total: an array of
+    * fewer than two items gives no pairs. `sequence(1, n - 1)` alone would
+    * count DOWN for n < 2 (it infers step -1, the
+    * [[graft.Cols.charGramsOfChars]] contract note), so the outer index
+    * range is `sequence(1, n)` with `i < n` kept.
     */
-  private[ops] def sortedPairs(items: Column): Column =
+  private[graft] def sortedPairs(items: Column): Column =
     flatten(transform(
-      sequence(lit(1), size(items) - 1),
+      filter(sequence(lit(1), size(items)), i => i < size(items)),
       i => transform(
         sequence(i + 1, size(items)),
         j => struct(
@@ -567,7 +569,7 @@ object Analytics {
     val itemCounts = gi.groupBy(col("item")).agg(count(lit(1)).as("n"))
     val total = grouped.agg(count(lit(1)).as("__n_groups"))
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    grouped.filter(size(col("__items")) >= 2)
+    grouped
       .select(explode(sortedPairs(col("__items"))).as("__p"))
       .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
       .groupBy(col("item_a"), col("item_b"))
@@ -1034,7 +1036,6 @@ object Analytics {
     val commonBuyers = frequent
       .groupBy(col("cust"))
       .agg(sort_array(collect_set(col("item"))).as("__fi"))
-      .filter(size(col("__fi")) >= 2)
       .select(explode(sortedPairs(col("__fi"))).as("__p"))
       .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
       .groupBy(col("item_a"), col("item_b"))
@@ -1043,7 +1044,6 @@ object Analytics {
     val together = groupedItemSets(
       lineitem.select(col("l_orderkey").as("grp"), col("l_partkey").as("item")),
       col("grp"), col("item"), maxGroupSize)
-      .filter(size(col("__items")) >= 2)
       .select(explode(sortedPairs(col("__items"))).as("__p"))
       .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
       .distinct()
@@ -3049,7 +3049,7 @@ object Analytics {
       .agg(sort_array(collect_list(col("nbr"))).as("__nbrs"))
     val deg = nbrSets.select(col("node"), size(col("__nbrs")).cast("long").as("d"))
     val cand = nbrSets
-      .filter(size(col("__nbrs")).between(2, maxDeg))
+      .filter(size(col("__nbrs")) <= maxDeg)
       .select(explode(sortedPairs(col("__nbrs"))).as("__p"))
       .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
       .filter(col("item_a") < col("item_b"))
@@ -3100,12 +3100,12 @@ object Analytics {
       .union(e.select(col("dst").as("node"), col("src").as("nbr")))
     val centers = adj.groupBy(col("node"))
       .agg(sort_array(collect_list(col("nbr"))).as("__nbrs"))
-      // degree-1 nodes can't center a wedge; the ≥2 bound also keeps
-      // the weight's ln(d) ≥ ln 2 > 0 on every surviving row
-      .filter(size(col("__nbrs")).between(2, maxDeg))
+      .filter(size(col("__nbrs")) <= maxDeg)
       .withColumn("d", size(col("__nbrs")).cast("long"))
-      .withColumn("__w",
-        Cols.floorDiv(lit(10000000000L), round(log(col("d")) * 1e6).cast("long")))
+      // a degree-1 node centers no wedge (sortedPairs yields nothing), so
+      // its weight is never read; null it rather than divide by ln 1 = 0
+      .withColumn("__w", when(col("d") >= 2,
+        Cols.floorDiv(lit(10000000000L), round(log(col("d")) * 1e6).cast("long"))))
     val cand = centers
       .select(col("__w"), explode(sortedPairs(col("__nbrs"))).as("__p"))
       .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"), col("__w"))

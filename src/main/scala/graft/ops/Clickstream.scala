@@ -54,9 +54,12 @@ object Clickstream {
   def qualifying: Column = col("event_type") =!= CheckoutEventType
 
   /** Assign a per-user session sequence number with gap-based islands:
-    * a new session starts when the gap to the previous event is >= gapMs
-    * (session_window merge semantics: windows [t, t+gap) merge only on
-    * strict overlap). Adds `session_seq` (1-based per user).
+    * a new session starts when the gap to the previous event is >= gapMs.
+    * This is NOT `session_window`'s rule at the tie: the streaming
+    * sessionizers merge two events exactly `gapMs` apart (touching windows
+    * [t, t+gap) and [t+gap, t+2·gap) merge, as in Flink), so the batch form
+    * equals them only on data without an exact-gap tie; pass `gapMs + 1`
+    * for the merging rule. Adds `session_seq` (1-based per user).
     *
     * Requires columns `user_id`, `ts_ms`, `event_id` (sort tie-break).
     * One hash shuffle on user_id + per-partition sort — the scalable

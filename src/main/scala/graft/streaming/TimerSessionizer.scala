@@ -10,17 +10,17 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
   * with a gap trigger; the Flink runtime arms an event-time timer at
   * window end and fires the pane when the watermark passes it).
   *
-  * Three formulations of the same sessionization now coexist, from most
-  * declarative to most explicit:
+  * Two formulations of the same sessionization coexist:
   *  1. `session_window` aggregation ([[ClickstreamStreams.sessions]]) —
   *     the default; Spark owns state AND timing.
-  *  2. `flatMapGroupsWithState` ([[CustomStateSessionizer]]) — custom
-  *     state, timing via a single timeout timestamp.
-  *  3. this operator — custom state AND custom timer management
+  *  2. this operator — custom state AND custom timer management
   *     (register/delete/re-arm), the full Flink-style state machine on
   *     the arbitrary-state API.
-  * All three emit identical sessions ([[graft.streaming]] specs pin 1≡2
-  * and 1≡3 on golden sequences and a real-event replay).
+  * Both emit identical sessions (`TimerSessionizerSpec` pins them on
+  * golden sequences, an exact-gap tie and a real-event replay). Both
+  * merge two events exactly one gap apart, as Flink's
+  * `TimeWindow.intersects` does: windows `[t, t+gap)` and
+  * `[t+gap, t+2·gap)` touch and merge.
   *
   * Mechanics: events buffer into a per-user [[ListState]]; every input
   * batch re-arms ONE timer per user at `max(event ts) + gap` (delete old,
@@ -37,7 +37,55 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
   */
 object TimerSessionizer {
 
-  import CustomStateSessionizer.{Ev, Session, finish, split}
+  /** `ts` stays a Timestamp: the watermark tag must survive into the
+    * typed Dataset for event-time timers to resolve.
+    */
+  final case class Ev(user_id: Long, ts: java.sql.Timestamp, event_type: String, product_type: String) {
+    def ts_ms: Long = ts.getTime
+  }
+
+  final case class Session(
+      user_id: Long,
+      event_count: Long,
+      checkout_event_count: Long,
+      dept_list: String,
+      win_begin_ms: Long,
+      win_end_ms: Long)
+
+  private def qualifying(e: Ev): Boolean =
+    e.product_type != null && e.product_type.nonEmpty && e.product_type != "N/A"
+
+  /** Split a sorted buffer into gap-delimited sessions: an event joins the
+    * open session when it is at most `gapMs` after the session's latest
+    * event (`session_window`'s merge rule, touching windows included).
+    */
+  private[streaming] def split(sorted: List[Ev], gapMs: Long): List[List[Ev]] =
+    sorted.foldLeft(List.empty[List[Ev]]) {
+      case (Nil, e) => List(List(e))
+      case (cur :: done, e) if e.ts_ms - cur.head.ts_ms <= gapMs => (e :: cur) :: done
+      case (acc, e) => List(e) :: acc
+    }.map(_.reverse).reverse
+
+  private[streaming] def finish(events: List[Ev], gapMs: Long): Session = {
+    var count = 0L
+    var snapshot = 0L
+    val depts = scala.collection.mutable.SortedSet.empty[String]
+    // inclusive tie rule shared with UserAggregateTyped.finish and the
+    // declarative sessionizers: the snapshot counts qualifying events with
+    // ts <= the LAST checkout's ts, regardless of sort position at ties
+    val lastCheckoutTs = events.iterator
+      .filter(_.event_type == "order_checkout").map(_.ts_ms)
+      .foldLeft(Long.MinValue)(math.max)
+    events.foreach { e =>
+      if (qualifying(e)) {
+        count += 1; depts += e.product_type
+        if (e.ts_ms <= lastCheckoutTs) snapshot += 1
+      }
+    }
+    Session(
+      events.head.user_id, count, snapshot, depts.mkString(","),
+      events.head.ts_ms, events.last.ts_ms + gapMs)
+  }
 
   /** The keyed state machine: event buffer + the armed timer's expiry. */
   class Processor(gapMs: Long) extends StatefulProcessor[Long, Ev, Session] {

@@ -1409,6 +1409,23 @@ class AnalyticsSpec extends SparkSpec {
     assert(full.size === 10 && full.forall(r => r._3 == 1L && r._6 == 10000L))
   }
 
+  test("sortedPairs: total on empty, singleton and two-item arrays") {
+    import org.apache.spark.sql.functions.{col, explode}
+    // sequence(1, n - 1) counts DOWN for n < 2; the helper must still
+    // give no pairs there, with no caller-side size filter
+    val arrays = Seq((0, Seq.empty[Long]), (1, Seq(7L)), (2, Seq(3L, 9L)))
+      .toDF("id", "items")
+    val got = arrays
+      .select(col("id"), explode(Analytics.sortedPairs(col("items"))).as("p"))
+      .select(col("id"), col("p.item_a"), col("p.item_b"))
+      .as[(Int, Long, Long)].collect().toList
+    assert(got === List((2, 3L, 9L)))
+    val sizes = arrays
+      .select(col("id"), org.apache.spark.sql.functions.size(Analytics.sortedPairs(col("items"))))
+      .as[(Int, Int)].collect().toMap
+    assert(sizes === Map(0 -> 0, 1 -> 0, 2 -> 1))
+  }
+
   test("assortativity: a star is perfectly disassortative, a cycle degenerate") {
     import graft.ops.Analytics
     // K1,3: every oriented edge pairs degree 3 with degree 1 →

@@ -46,7 +46,7 @@ class UserAggregateTypedSpec extends SparkSpec {
   test("tie rule: qualifying event sharing the last checkout's ts is counted") {
     // same-timestamp pin (ADVICE r2): the snapshot is "qualifying events
     // with ts <= last checkout ts", shared with the declarative sessionize
-    // and CustomStateSessionizer — NOT a running count at the checkout's
+    // and TimerSessionizer — NOT a running count at the checkout's
     // sort position
     val out = run(Seq(
       ce(4, 1000, "browse", "A"),

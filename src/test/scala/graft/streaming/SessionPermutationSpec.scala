@@ -22,10 +22,12 @@ case class PEv(event_id: Long, user_id: Long, event_type: String, ts_ms: Long)
   * reordering can drop events — then flushed with far-future ticks.
   *
   * This strengthens the shared cs_sessionize ≡ cs_sessionize_native
-  * oracle from fixed data to a property: the §2.4 merge rule (new
-  * session at gap ≥ gapMs, window end = last event + gap — the base the
-  * end−1ms bucketing convention builds on) is pinned under reordering,
-  * same-timestamp ties, and checkout-position shuffles.
+  * oracle from fixed data to a property: the session rule (window end =
+  * last event + gap — the base the end−1ms bucketing convention builds
+  * on) is pinned under reordering, same-timestamp ties, and
+  * checkout-position shuffles. The two paths differ at an exact-gap tie
+  * (batch splits at gap ≥ gapMs, session_window merges touching
+  * windows); the seeded samples below hold no such tie.
   */
 class SessionPermutationSpec extends SparkSpec {
   import spark.implicits._

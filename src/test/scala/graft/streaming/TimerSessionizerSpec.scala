@@ -1,12 +1,12 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** The timer-driven transformWithState sessionizer must agree with the
-  * declarative session_window pipeline and the batch sessionizer —
-  * completing the 1≡2≡3 equivalence across all three formulations.
+  * declarative session_window pipeline and the batch sessionizer.
   * Requires the RocksDB state store provider — set per test, restored.
   */
 class TimerSessionizerSpec extends SparkSpec {
@@ -124,5 +124,73 @@ class TimerSessionizerSpec extends SparkSpec {
         .as[(Long, Long, Long, String, Long, Long)].collect().toSet
       assert(streamed === batch)
     }
+  }
+
+  test("exact-gap tie merges as session_window does") {
+    withRocksDb {
+      implicit val sqlCtx = spark.sqlContext
+      // t well above 0: the first batch's watermark is 0, so nothing here
+      // can be late; the two events are exactly one gap (1 s) apart
+      val t = 5_000_000L
+      val events = Seq(
+        ce(7, t, "browse", "Kitchen"),
+        ce(7, t + 1000L, "browse", "Garden"))
+      val flush = ce(99, t + 10_000_000L, "browse", "N/A")
+      def run(name: String, sessions: DataFrame => DataFrame) = {
+        val input = MemoryStream[CE]
+        val q = sessions(input.toDF())
+          .writeStream.format("memory").queryName(name).outputMode("append").start()
+        try {
+          input.addData(events)
+          q.processAllAvailable()
+          input.addData(flush)
+          q.processAllAvailable()
+          input.addData(flush.copy(eventtimestamp = t + 20_000_000L))
+          q.processAllAvailable()
+        } finally q.stop()
+        spark.table(name)
+          .filter(col("user_id") === 7)
+          .select("user_id", "event_count", "checkout_event_count", "dept_list",
+            "win_begin_ms", "win_end_ms")
+          .as[(Long, Long, Long, String, Long, Long)].collect().toSet
+      }
+      val declarative = run("cs_tie_window", ClickstreamStreams.clickEventSessions(_))
+      val timer = run("cs_tie_timer",
+        df => TimerSessionizer.sessions(spark, ClickstreamStreams.fromClickEvents(df)).toDF())
+      val one = Set((7L, 2L, 0L, "Garden,Kitchen", t, t + 2000L))
+      assert(declarative === one)
+      assert(timer === one)
+    }
+  }
+
+  test("tie rule: event tied to last checkout counts") {
+    import TimerSessionizer.{finish, Ev}
+    def ev(t: Long, et: String, pt: String) = Ev(1, new java.sql.Timestamp(t), et, pt)
+    // the browse at ts=1300 shares the checkout's timestamp: it must be in
+    // the snapshot regardless of buffer order (ADVICE r2 pin, shared with
+    // UserAggregateTyped)
+    val s = finish(List(
+      ev(1000, "browse", "A"),
+      ev(1300, "order_checkout", "N/A"),
+      ev(1300, "browse", "B"),
+      ev(1400, "browse", "C")), gapMs = 1000L)
+    assert(s.event_count === 3L)
+    assert(s.checkout_event_count === 2L) // A and the tied B; not C
+  }
+
+  test("split: exactly one gap apart merges") {
+    import TimerSessionizer.{split, Ev}
+    def ev(t: Long) = Ev(1, new java.sql.Timestamp(t), "a", "A")
+    val evs = List(ev(1000), ev(1500), ev(2499), ev(5000))
+    // 2499-1500=999 < 1000 merges; 5000-2499 > 1000 splits
+    assert(split(evs, 1000L).map(_.map(_.ts_ms)) ===
+      List(List(1000L, 1500L, 2499L), List(5000L)))
+    // exactly-at-gap merges: windows [1000, 2000) and [2000, 3000) touch,
+    // and session_window (like Flink's TimeWindow.intersects) merges them
+    assert(split(List(ev(1000), ev(2000)), 1000L).map(_.map(_.ts_ms)) ===
+      List(List(1000L, 2000L)))
+    // one millisecond past the gap splits
+    assert(split(List(ev(1000), ev(2001)), 1000L).map(_.map(_.ts_ms)) ===
+      List(List(1000L), List(2001L)))
   }
 }
