@@ -6,7 +6,8 @@ package graft
   *
   * This is a measuring tool, not a regression gate: it keeps no state
   * between runs. Regressions are gated by perfbench's paired parent/change
-  * runs (`perfbench/`, `BENCHMARK.json`).
+  * runs (`perfbench/`, `BENCHMARK.json`), whose `stream_bulk` workload is
+  * also where the streaming topology is measured.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -81,16 +82,6 @@ object Bench {
       System.err.println(f"[bench] $name%-28s $sec%8.2fs  ($n rows, noise $noise%.2f)")
       (name, sec, n >= 0, noise, bestProbe)
     }
-    // streaming throughput surface (VERDICT r12 #6): MemoryStream replays
-    // through the reference pipelines, reported beside the batch figures.
-    // Arms carry their own bracketing probes (StreamBench noise accounting).
-    val streamingJson =
-      if (sys.env.get("SPARK_GRAFT_STREAM_BENCH").contains("0")) ""
-      else {
-        val j = graft.streaming.StreamBench.run(spark, probe = () => probe())
-        System.err.println(s"[bench] streaming: $j")
-        s""","streaming":$j"""
-      }
     // Locale.ROOT: the default-locale f"" interpolator emits comma decimals
     // under e.g. de_DE, which breaks the JSON contract
     def num2(d: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(d))
@@ -124,7 +115,7 @@ object Bench {
       .mkString("{", ",", "}")
     val detail = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
       s""""corrected_total":${num2(correctedTotal)},""" +
-      s""""queries":$qs$failedJson,"noise":$noiseJson,"corrected":$corrJson$streamingJson,""" +
+      s""""queries":$qs$failedJson,"noise":$noiseJson,"corrected":$corrJson,""" +
       s""""probe_base_sec":$probeBaseStr,"sf":"$sfDir"}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get(detailPath),
@@ -134,7 +125,7 @@ object Bench {
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
       s""""corrected_total":${num2(correctedTotal)},""" +
-      s""""slowest":$slowest$failedJson$streamingJson,"probe_base_sec":$probeBaseStr,""" +
+      s""""slowest":$slowest$failedJson,"probe_base_sec":$probeBaseStr,""" +
       s""""detail_file":"$detailPath","sf":"$sfDir"}""")
     spark.stop()
   }

@@ -970,21 +970,13 @@ object Analytics {
     val buyers = sets
       .select(explode(col("__bi")).as("__e"))
       .groupBy(col("__e.item").as("item")).agg(count(lit(1)).as("n"))
-    val bi = col("__bi")
-    val orderedPairs = flatten(transform(
-      sequence(lit(1), size(bi) - 1),
-      i => filter(
-        transform(
-          sequence(i + 1, size(bi)),
-          j => struct(
-            element_at(bi, i).getField("d").as("d_a"),
-            element_at(bi, i).getField("item").as("item_a"),
-            element_at(bi, j).getField("d").as("d_b"),
-            element_at(bi, j).getField("item").as("item_b"))),
-        p => p.getField("d_a") < p.getField("d_b"))))
-    sets.filter(size(bi) >= 2)
+    // `__bi` is sorted by (d, item), so every index pair (i < j) has
+    // d_i <= d_j; the in-row filter keeps the strict d_i < d_j ones
+    val orderedPairs = filter(sortedPairs(col("__bi")),
+      p => p.getField("item_a").getField("d") < p.getField("item_b").getField("d"))
+    sets
       .select(explode(orderedPairs).as("__p"))
-      .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
+      .select(col("__p.item_a.item").as("item_a"), col("__p.item_b.item").as("item_b"))
       .groupBy(col("item_a"), col("item_b"))
       .agg(count(lit(1)).as("n_ab"))
       .filter(col("n_ab") >= minPairCount)
@@ -2557,8 +2549,6 @@ object Analytics {
           .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
           .localCheckpoint()
         val nextN = next.count()
-        if (sys.env.contains("GRAFT_CORE_DEBUG"))
-          System.err.println(s"[core] k=$k cur=$curN next=$nextN")
         if (nextN == curN) {
           graft.LocalCheckpoints.free(next)
           converged = true
@@ -3279,8 +3269,6 @@ object Analytics {
           .filter(col("support") >= (k - 2).toLong)
           .select(col("item_a"), col("item_b"))
         val nextN = nextE.count()
-        if (sys.env.contains("GRAFT_TRUSS_DEBUG"))
-          System.err.println(s"[truss] k=$k cur=$curN next=$nextN")
         if (nextN == curN) {
           converged = true
         } else {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Clickstream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -69,11 +70,10 @@ object ClickstreamApp {
   def pipelines(events: DataFrame, cfg: Config): Map[String, DataFrame] = {
     val sessions = ClickstreamStreams.clickEventSessions(events, cfg.sessionGap)
     Map(
-      "buy_sessions" -> ClickstreamStreams.sessionsJson(
-        ClickstreamStreams.buySessions(sessions)),
-      "user_kpis" -> ClickstreamStreams.userKpisJson(
+      "buy_sessions" -> Clickstream.sessionsJson(Clickstream.buySessions(sessions)),
+      "user_kpis" -> Clickstream.userKpisJson(
         ClickstreamStreams.userKpis(sessions, cfg.kpiWindow)),
-      "departments" -> ClickstreamStreams.departmentsJson(
+      "departments" -> Clickstream.departmentsJson(
         ClickstreamStreams.departments(sessions, cfg.kpiWindow)))
   }
 

@@ -95,10 +95,6 @@ object ClickstreamStreams {
         unix_millis(col("session_window.end")).as("win_end_ms"))
   }
 
-  /** Pipeline A tail: buy sessions only (ClickstreamProcessor.java:133-134). */
-  def buySessions(sessions: DataFrame): DataFrame =
-    sessions.filter(col("checkout_event_count") =!= 0)
-
   /** Pipeline B: global KPIs over tumbling windows of session records —
     * a second stateful aggregation chained on the session window column
     * (Spark ≥3.4), bucketing on session end − 1 ms.
@@ -176,17 +172,6 @@ object ClickstreamStreams {
       .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
 
   // ------------------------------------------------------------------ sinks
-
-  /** JSON-encoded session records (reference field names/order — Gson
-    * parity, SURVEY.md §1.3).
-    */
-  def sessionsJson(sessions: DataFrame): DataFrame =
-    Clickstream.sessionsJson(sessions.drop("session_window"))
-
-  def userKpisJson(kpis: DataFrame): DataFrame = Clickstream.userKpisJson(kpis)
-
-  def departmentsJson(depts: DataFrame): DataFrame =
-    Clickstream.departmentsJson(depts)
 
   /** Kafka sink wiring (the reference's three output topics,
     * ClickstreamProcessor.java:208-251). `format("kafka")` needs the

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.ops.Clickstream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -338,14 +339,46 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("session state plateaus at the in-flight sessions, then drains after the flusher") {
+    // 6 users × 12 sequential sessions (5 events 200 ms apart, 2 s of
+    // silence between sessions), fed two sessions per user per micro-batch
+    implicit val sqlCtx = spark.sqlContext
+    val (nUsers, perBatch, nBatches) = (6, 2, 6)
+    val input = MemoryStream[CE]
+    val q = ClickstreamStreams.clickEventSessions(input.toDF())
+      .writeStream.format("memory").queryName("s_state").outputMode("append").start()
+    def stateRows(): Seq[Long] =
+      q.recentProgress.toSeq.map(_.stateOperators.map(_.numRowsTotal).sum)
+    try {
+      (0 until nBatches).foreach { b =>
+        input.addData(for {
+          u <- 0 until nUsers
+          s <- b * perBatch until (b + 1) * perBatch
+          e <- 0 until 5
+        } yield ce(u, s * 3000L + e * 200L, "browse", "Kitchen"))
+        q.processAllAvailable()
+      }
+      // the watermark trails the previous batch's max event time, so each
+      // user holds at most its newest earlier session plus this batch's
+      val fed = stateRows()
+      assert(fed.max <= nUsers * (perBatch + 1L), fed)
+      input.addData(ce(999, 1_000_000_000L, "browse", "N/A"))
+      q.processAllAvailable()
+      // only the flusher's own session is still open
+      val drained = stateRows()
+      assert(drained.last <= 1L, drained)
+    } finally q.stop()
+    assert(spark.table("s_state").count() === nUsers * perBatch * nBatches)
+  }
+
   test("JSON sink encoding matches the reference's Gson field order") {
     val out = runStream(
       Seq(Seq(
         ce(7, 1000L, "browse", "Kitchen"),
         ce(7, 1100L, "order_checkout", "N/A"))),
       "s_json")(df =>
-      ClickstreamStreams.sessionsJson(
-        ClickstreamStreams.buySessions(ClickstreamStreams.clickEventSessions(df))))
+      Clickstream.sessionsJson(
+        Clickstream.buySessions(ClickstreamStreams.clickEventSessions(df))))
     val js = out.as[String].collect().filter(_.contains("\"userId\":7"))
     assert(js.length === 1)
     assert(js.head ===
