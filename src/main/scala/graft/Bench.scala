@@ -7,7 +7,10 @@ package graft
   * This is a measuring tool, not a regression gate: it keeps no state
   * between runs. Regressions are gated by perfbench's paired parent/change
   * runs (`perfbench/`, `BENCHMARK.json`), whose `stream_bulk` workload is
-  * also where the streaming topology is measured.
+  * also where the streaming topology is measured. `corrected` and
+  * `probe_base_sec` compare only within one run: the base is that run's
+  * quietest probe, and it moved 1.66× between two back-to-back runs of the
+  * same code on a 4-core host.
   */
 object Bench {
   def main(args: Array[String]): Unit = {

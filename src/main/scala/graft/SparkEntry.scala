@@ -228,9 +228,9 @@ object SparkEntry {
         .filter(col("n_events") * 200 >= col("__total"))
         .select(col("user_id"), col("n_events"))
     }),
-    // incremental heavy hitters — the streaming CountLedger's batch twin:
-    // per simulated ingest batch, the users holding ≥ 0.5% of everything
-    // seen SO FAR (cumulative partial-count merge, the batch ≤ id cut)
+    // incremental heavy hitters: per simulated ingest batch, the users
+    // holding ≥ 0.5% of everything seen SO FAR (cumulative partial-count
+    // merge, the batch ≤ id cut)
     "ev_heavy_incr" -> ((s, dir) => {
       val per = Tables.events(s, dir)
         .select(col("user_id"),
@@ -1031,7 +1031,7 @@ object SparkEntry {
         "event_type", "decile")
     }),
     // CDC compaction: latest observation per user (one hash aggregate,
-    // struct-ordered max — the batch twin of the streaming upsert sink)
+    // struct-ordered max)
     "ev_cdc_compact" -> ((s, dir) =>
       graft.ops.TimeSeries.latestState(
         Tables.events(s, dir), "user_id", "ts_ms", "event_id",

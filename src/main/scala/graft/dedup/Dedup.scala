@@ -582,10 +582,10 @@ object Dedup {
 
   /** (doc_id, sig, band, bucket) rows for a signature table — the LSH
     * bucket index grain shared by [[minhashLsh]] (self-join within one
-    * corpus) and [[ledgerFlags]]/the streaming ledger (probe of incoming
-    * docs against the persisted historical index).
+    * corpus) and [[ledgerFlags]] (probe of incoming docs against the
+    * historical index).
     */
-  private[graft] def bandRows(sigs: DataFrame): DataFrame = {
+  private def bandRows(sigs: DataFrame): DataFrame = {
     val nBands = NumPerms / BandRows
     sigs.select(
       col("doc_id"),
@@ -644,14 +644,13 @@ object Dedup {
     * matching-position Jaccard estimate as [[minhashLsh]]. No doc-id
     * inequality — the sides are disjoint corpora by construction, and a
     * re-ingested doc_id flagging its own previous version is precisely
-    * the ledger's job. Shared by the batch twin [[ledgerFlags]] and the
-    * streaming [[graft.streaming.DedupLedger]] foreachBatch step.
+    * the ledger's job. The probe step of [[ledgerFlags]].
     *
     * Scale: work ∝ bucket collisions between the BATCH and the ledger —
-    * the batch side is a micro-batch (orders below the ledger), so this
-    * is a posting-probe of the persisted index, never corpus×corpus.
+    * the batch side is an ingest increment (orders below the ledger), so
+    * this is a posting-probe of the index, never corpus×corpus.
     */
-  private[graft] def flagAgainstBands(
+  private def flagAgainstBands(
       newBands: DataFrame, ledger: DataFrame, estThreshold: Double): DataFrame = {
     val cand = newBands.as("a")
       .join(
@@ -679,9 +678,7 @@ object Dedup {
     * scored exactly like [[minhashLsh]] but joining ONLY across the two
     * corpora — the production shape for continuously-ingested corpora,
     * where each increment probes the persisted bucket index instead of
-    * re-pairing the whole corpus. The streaming formulation with an
-    * on-disk ledger is [[graft.streaming.DedupLedger]]; this twin is the
-    * oracle surface proving the flag semantics.
+    * re-pairing the whole corpus.
     */
   def ledgerFlags(
       newDocs: DataFrame, oldDocs: DataFrame,
@@ -691,19 +688,15 @@ object Dedup {
       bandRows(minhashSignatures(oldDocs)),
       estThreshold)
 
-  /** Ledger-health readout — the batch twin of the `batch=` layout the
-    * streaming [[graft.streaming.DedupLedger]] accumulates (same
-    * simulated-batch device as [[ledgerFlags]], widened to `nBatches`):
+  /** Ledger-health readout over simulated ingest batches (the
+    * simulated-batch device of [[ledgerFlags]], widened to `nBatches`):
     * per ingest batch, what its partition holds (docs, band rows,
     * distinct buckets) AND what a probe arriving at that batch id has
     * to scan — partitions, total ledger rows, and the worst per-bucket
     * collision list (`probe_bucket_max`, the longest posting list one
     * incoming band row can meet). The three probe columns are the
-    * when-to-compact curve: partitions grow one per batch until
-    * [[graft.streaming.DedupLedger.compact]] folds them (the
-    * filesystem-grain view of the same numbers is
-    * [[graft.streaming.DedupLedger.ledgerHealth]], spec-verified
-    * against a real on-disk ledger before and after compaction).
+    * when-to-compact curve: partitions grow one per batch until a
+    * compaction folds them.
     *
     * Scale: the banding is the [[ledgerFlags]] pipeline; the probe view
     * is a bounded ×nBatches unfold (each band row visible to the ≤
@@ -1584,7 +1577,7 @@ object Dedup {
     "dedup_minhash_lsh" -> ((s, d) => minhashLsh(Tables.documents(s, d))),
     // incremental-dedup ledger, batch twin: hash-split "today's ingest"
     // probes the "already-ingested" half's bucket index — cross-corpus
-    // pairs only (the streaming foreachBatch ledger's oracle surface)
+    // pairs only
     "dedup_ledger" -> ((s, d) => {
       val b = pmod(
         Cols.hash60(concat(lit("batch:"), col("doc_id").cast("string"))), lit(2L))

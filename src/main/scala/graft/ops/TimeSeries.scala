@@ -423,11 +423,11 @@ object TimeSeries {
 
   /** CDC last-state compaction: collapse a change/event stream to one
     * row per key holding the LATEST observation's payload — the "apply
-    * the changelog to a snapshot" batch primitive (the batch twin of the
-    * streaming upsert sink). The winner is picked by a struct-ordered
-    * max on (ts, tieCol, payload...): the (ts, tie) prefix is unique, so
-    * the pick is deterministic and needs ONE map-side-combined hash
-    * aggregate — no window pass, no per-key sort, no self-join.
+    * the changelog to a snapshot" batch primitive. The winner is picked
+    * by a struct-ordered max on (ts, tieCol, payload...): the (ts, tie)
+    * prefix is unique, so the pick is deterministic and needs ONE
+    * map-side-combined hash aggregate — no window pass, no per-key sort,
+    * no self-join.
     */
   def latestState(
       events: DataFrame, keyCol: String, tsMsCol: String, tieCol: String,

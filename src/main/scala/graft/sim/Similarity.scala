@@ -2568,11 +2568,9 @@ object Similarity {
   /** The three frozen pieces of a PSI reference: per-dim bin ranges,
     * per-(dim, bin) reference counts, per-dim reference totals — each an
     * aggregate bounded by dim (≤ 64) × bins (literal ≤ 10), safely
-    * broadcastable. Shared by the incremental batch twin
-    * ([[embPsiIncremental]], in-plan) and the streaming monitor
-    * ([[graft.streaming.DriftMonitor]], checkpointed once).
+    * broadcastable. The frozen reference of [[embPsiIncremental]].
     */
-  private[graft] def psiReferenceParts(
+  private def psiReferenceParts(
       refQ: DataFrame, bins: Int): (DataFrame, DataFrame, DataFrame) = {
     val base = refQ
       .select(posexplode(col("qv")))
@@ -2599,7 +2597,7 @@ object Similarity {
     * carries (batch, qv); every aggregate downstream of the bin
     * assignment is bounded by batches × dim × bins.
     */
-  private[graft] def psiVsReference(
+  private def psiVsReference(
       ranges: DataFrame, refCounts: DataFrame, refTot: DataFrame,
       cur: DataFrame, bins: Int = 10, alertE4: Long = 2000L): DataFrame = {
     val base = cur
@@ -2628,13 +2626,13 @@ object Similarity {
       .withColumn("drift_flag", when(col("psi_e4") > alertE4, 1L).otherwise(0L))
   }
 
-  /** Incremental PSI drift — the batch twin of the streaming monitor
-    * ([[graft.streaming.DriftMonitor]]), completing the incremental
-    * triple next to the dedup ledger and the decontamination screen:
-    * the reference half's per-dim histogram is FROZEN (ranges, bin
-    * counts, totals — the artifact a production monitor persists once),
-    * and the current half arrives as two hash-assigned ingest batches,
-    * each scored independently against that same frozen reference.
+  /** Incremental PSI drift, next to the dedup ledger
+    * ([[graft.dedup.Dedup.ledgerFlags]]) and the incremental
+    * decontamination screen: the reference half's per-dim histogram is
+    * FROZEN (ranges, bin counts, totals — the artifact a production
+    * monitor persists once), and the current half arrives as two
+    * hash-assigned ingest batches, each scored independently against
+    * that same frozen reference.
     * Unlike [[embPsi]] (one pooled current window), the trace shows
     * drift PER BATCH — the shape that catches a drift that starts
     * mid-stream and would be diluted in the pooled view.
@@ -2975,8 +2973,7 @@ object Similarity {
     // per-dimension PSI between hash-split halves — the embedding-drift
     // monitor (ev_psi lifted to vector space), bounded by dims × bins
     "emb_psi" -> ((s, d) => embPsi(Tables.embeddings(s, d))),
-    // per-ingest-batch PSI against the frozen reference histogram — the
-    // streaming DriftMonitor's oracle surface
+    // per-ingest-batch PSI against the frozen reference histogram
     "emb_psi_incr" -> ((s, d) => embPsiIncremental(Tables.embeddings(s, d))),
     "emb_power_iter" -> ((s, d) => powerIterStep(Tables.embeddings(s, d))),
     "ann_recall_ivf" -> ((s, d) => ivfRecall(Tables.embeddings(s, d))),

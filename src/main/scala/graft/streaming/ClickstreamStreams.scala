@@ -128,49 +128,6 @@ object ClickstreamStreams {
         unix_millis(col("window.start")).as("win_start_ms"),
         unix_millis(col("window.end")).as("win_end_ms"))
 
-  /** Stream-stream inner join within an event-time bound — the streaming
-    * twin of the batch as-of enrichment ([[graft.ops.AsOfJoin]]): each
-    * left event pairs with the right-side events at most `bound` older on
-    * the same key (`r.ts` in `[l.ts − bound, l.ts]`, both ends inclusive).
-    *
-    * Both sides are watermarked and the join carries the time-range
-    * condition Spark needs to bound and evict join state — without it a
-    * stream-stream join buffers forever; with it state is GC'd past
-    * `watermark + bound`, the 100 TB-safe shape.
-    *
-    * Both inputs must carry `key` and an event-time `ts: Timestamp`.
-    */
-  def intervalJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String = "user_id",
-      bound: String = "5 seconds",
-      watermark: String = "0 seconds",
-      joinType: String = "inner"): DataFrame = {
-    val l = left.withWatermark("ts", watermark).alias("l")
-    val r = right.withWatermark("ts", watermark).alias("r")
-    // leftOuter: an unmatched left row is held in state until the watermark
-    // passes its join bound, then emitted null-padded exactly once — the
-    // streaming twin of a batch left join, same state GC bound as inner
-    l.join(
-      r,
-      expr(s"l.$key = r.$key AND r.ts BETWEEN l.ts - interval $bound AND l.ts"),
-      joinType)
-  }
-
-  /** Streaming exact deduplication: drop events whose id was already seen
-    * within the watermark horizon (state is GC'd past it — the streaming
-    * flavor of the training-pipeline exact dedup; unbounded-state dedup is
-    * a deliberate non-feature at 100 TB).
-    */
-  def dedupEvents(
-      events: DataFrame,
-      idCols: Seq[String],
-      watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
-
   // ------------------------------------------------------------------ sinks
 
   /** Kafka sink wiring (the reference's three output topics,

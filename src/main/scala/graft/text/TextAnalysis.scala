@@ -662,11 +662,10 @@ object TextAnalysis {
   /** The benchmark suite's POSITIONAL winnow index — every k=4/w=4
     * selected window with its character position (the distinct-set view
     * of [[winnowFingerprints]] cannot produce spans). Small and static
-    * by definition (eval suites are thousands of docs): this is the
-    * index the streaming screen ([[graft.streaming.DecontamScreen]])
-    * precomputes once and probes every ingest micro-batch against.
+    * by definition (eval suites are thousands of docs): the one-shot and
+    * incremental screens both probe the corpus vocabulary against it.
     */
-  private[graft] def benchmarkPositionalIndex(benchmark: DataFrame): DataFrame = {
+  private def benchmarkPositionalIndex(benchmark: DataFrame): DataFrame = {
     val k = 4; val w = 4
     graft.Tables.fanOutScan(benchmark)
       .select(col("doc_id"), Cols.normalizeText(col("text")).as("__norm"))
@@ -689,10 +688,10 @@ object TextAnalysis {
     * doc); a run of R windows covers R + 6 characters (k=4, w=4 winnow
     * coverage), so `max_span_chars` is a lower bound on the longest
     * verbatim overlap. Shared by the one-shot screen
-    * ([[decontaminationScreen]]), its incremental batch twin
-    * ([[decontaminationIncremental]]), and the streaming report.
+    * ([[decontaminationScreen]]) and its incremental twin
+    * ([[decontaminationIncremental]]).
     */
-  private[graft] def contaminationReport(pos: DataFrame, hits: DataFrame): DataFrame = {
+  private def contaminationReport(pos: DataFrame, hits: DataFrame): DataFrame = {
     val perDoc = pos.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_windows"))
     val hitCounts = hits.groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
@@ -719,9 +718,8 @@ object TextAnalysis {
           .otherwise(col("__maxrun") + lit(6L)).as("max_span_chars"))
   }
 
-  /** Incremental decontamination — the batch twin of the streaming
-    * screen ([[graft.streaming.DecontamScreen]]), exactly the way
-    * [[graft.dedup.Dedup.ledgerFlags]] twins the dedup ledger: the
+  /** Incremental decontamination, modelled the way
+    * [[graft.dedup.Dedup.ledgerFlags]] models the dedup ledger: the
     * corpus arrives as `nBatches` ingest batches (deterministic
     * pmod(doc_id) assignment here; micro-batches in production), each
     * batch's fingerprint vocabulary is pruned to the benchmark's

@@ -1,6 +1,7 @@
 package graft
 
 import graft.dedup.Dedup
+import org.apache.spark.sql.DataFrame
 
 /** Invocation-scoped index hygiene for the dedup calibration readouts.
   *
@@ -23,27 +24,35 @@ class CheckpointHygieneSpec extends SparkSpec {
   private val b = "completely different words entirely unrelated to anything else here now"
   private val corpus = docs((1L, a), (2L, a), (3L, b))
 
-  private def newPersisted(op: => Unit): Int = {
+  /** Persisted RDDs that building and collecting `frame` leaves behind.
+    * `getPersistentRDDs` holds its RDDs weakly, and the kept checkpoints
+    * are reachable only through the frame's plan, so the frame stays
+    * strongly reachable until after the second read: a GC in between
+    * would otherwise drop kept RDDs from the count.
+    */
+  private def newPersisted(frame: => DataFrame): Int = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    op
+    val df = frame
+    df.collect()
     val after = spark.sparkContext.getPersistentRDDs.keySet
+    java.lang.ref.Reference.reachabilityFence(df)
     (after -- before).size
   }
 
   test("lshPrCurve frees its shingle and signature indexes; only the readout stays") {
-    assert(newPersisted(Dedup.lshPrCurve(corpus).collect()) === 1)
+    assert(newPersisted(Dedup.lshPrCurve(corpus)) === 1)
   }
 
   test("methodAgreement frees its shingle and signature indexes; only the readout stays") {
-    assert(newPersisted(Dedup.methodAgreement(corpus).collect()) === 1)
+    assert(newPersisted(Dedup.methodAgreement(corpus)) === 1)
   }
 
   test("ensembleImpact frees its shingle and signature indexes; only the readout stays") {
-    assert(newPersisted(Dedup.ensembleImpact(corpus).collect()) === 1)
+    assert(newPersisted(Dedup.ensembleImpact(corpus)) === 1)
   }
 
   test("lshBandDesign frees its shingle and signature indexes; only the readout stays") {
-    assert(newPersisted(Dedup.lshBandDesign(corpus).collect()) === 1)
+    assert(newPersisted(Dedup.lshBandDesign(corpus)) === 1)
   }
 
   test("pqTrainConverge frees seed and retired codebooks; one readout per round stays") {
@@ -55,8 +64,8 @@ class CheckpointHygieneSpec extends SparkSpec {
     val emb = ((0 until 8).map(i => (i.toLong, const((i + 1) * 0.1f), 0)) ++
       Seq((8L, 0.103f +: const(0.1f).tail, 0)))
       .toDF("vec_id", "embedding", "label")
-    assert(newPersisted(graft.sim.Similarity.pqTrainConverge(emb, rounds = 2).collect()) === 2)
-    assert(newPersisted(graft.sim.Similarity.pqTrainConverge(emb, rounds = 3).collect()) === 3)
+    assert(newPersisted(graft.sim.Similarity.pqTrainConverge(emb, rounds = 2)) === 2)
+    assert(newPersisted(graft.sim.Similarity.pqTrainConverge(emb, rounds = 3)) === 3)
   }
 
   test("trussPeel frees retired peel rounds; only the edge table, supports and fixpoints stay") {
@@ -67,7 +76,7 @@ class CheckpointHygieneSpec extends SparkSpec {
     import graft.ops.Analytics
     val chain = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
       .toDF("src", "dst")
-    assert(newPersisted(Analytics.trussPeel(chain, kMax = 4, rounds = 5).collect()) === 3)
+    assert(newPersisted(Analytics.trussPeel(chain, kMax = 4, rounds = 5)) === 3)
   }
 
   test("coreNumbers frees the edge sets; only the node table and level sets stay") {
@@ -76,6 +85,6 @@ class CheckpointHygieneSpec extends SparkSpec {
     import graft.ops.Analytics
     val g = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (5L, 6L)).toDF("src", "dst")
-    assert(newPersisted(Analytics.coreNumbers(g, kMax = 4, rounds = 6).collect()) === 4)
+    assert(newPersisted(Analytics.coreNumbers(g, kMax = 4, rounds = 6)) === 4)
   }
 }

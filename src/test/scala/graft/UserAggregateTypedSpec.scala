@@ -45,9 +45,8 @@ class UserAggregateTypedSpec extends SparkSpec {
 
   test("tie rule: qualifying event sharing the last checkout's ts is counted") {
     // same-timestamp pin (ADVICE r2): the snapshot is "qualifying events
-    // with ts <= last checkout ts", shared with the declarative sessionize
-    // and TimerSessionizer — NOT a running count at the checkout's
-    // sort position
+    // with ts <= last checkout ts", shared with the declarative
+    // sessionizers — NOT a running count at the checkout's sort position
     val out = run(Seq(
       ce(4, 1000, "browse", "A"),
       ce(4, 1300, "order_checkout", "N/A"),

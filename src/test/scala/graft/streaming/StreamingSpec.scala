@@ -80,6 +80,24 @@ class StreamingSpec extends SparkSpec {
       (1L, 0L, "Garden", 3000L, 4000L)))
   }
 
+  test("exact-gap tie: events exactly one gap apart merge into one session") {
+    // windows [t, t+gap) and [t+gap, t+2·gap) touch; session_window merges
+    // them, as Flink's TimeWindow.intersects does. The batch sessionizer
+    // splits at exactly the gap instead (Clickstream.withSessionIds).
+    // t well above 0: the first batch's watermark is 0, so nothing is late.
+    val t = 5_000_000L
+    val out = runStream(
+      Seq(Seq(
+        ce(7, t, "browse", "Kitchen"),
+        ce(7, t + 1000L, "browse", "Garden"))),
+      "s_tie")(df => ClickstreamStreams.clickEventSessions(df).drop("session_window"))
+    val rows = out.filter(col("user_id") === 7)
+      .select("user_id", "event_count", "checkout_event_count", "dept_list",
+        "win_begin_ms", "win_end_ms")
+      .as[(Long, Long, Long, String, Long, Long)].collect().toSet
+    assert(rows === Set((7L, 2L, 0L, "Garden,Kitchen", t, t + 2000L)))
+  }
+
   test("post-checkout browse and multi-checkout last-wins snapshot") {
     val out = runStream(
       Seq(Seq(
@@ -166,20 +184,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows === Map(-5000L -> 1L, 0L -> 2L, 5000L -> 1L))
   }
 
-  test("streaming dedup drops re-delivered events within the watermark") {
-    val out = runStream(
-      Seq(
-        Seq(ce(21, 1000L, "browse", "A"), ce(21, 1000L, "browse", "A")), // dup in-batch
-        Seq(ce(21, 1000L, "browse", "A"))),                              // redelivery
-      "s_dedup") { df =>
-      ClickstreamStreams.dedupEvents(
-        ClickstreamStreams.fromClickEvents(df),
-        idCols = Seq("user_id", "eventtimestamp", "event_type"))
-        .select(col("user_id"), col("eventtimestamp"))
-    }
-    assert(out.filter(col("user_id") === 21).count() === 1L)
-  }
-
   test("stream-static join enriches sessions with a broadcast dimension") {
     val userDim = Seq((31L, "gold"), (32L, "basic")).toDF("user_id", "tier")
     val out = runStream(
@@ -194,73 +198,6 @@ class StreamingSpec extends SparkSpec {
       .select("user_id", "tier", "dept_list")
       .as[(Long, String, String)].collect().toSet
     assert(rows === Set((31L, "gold", "Kitchen"), (32L, "basic", "Garden")))
-  }
-
-  test("stream-stream interval join: statuses within the bound, state GC'd") {
-    implicit val sqlCtx = spark.sqlContext
-    val purchases = MemoryStream[(Long, Long)] // (user_id, ts_ms)
-    val statuses = MemoryStream[(Long, Long, String)] // (user_id, ts_ms, status)
-    val p = purchases.toDF().toDF("user_id", "ts_ms")
-      .withColumn("ts", timestamp_millis(col("ts_ms")))
-    val s = statuses.toDF().toDF("user_id", "status_ts_ms", "status")
-      .withColumn("ts", timestamp_millis(col("status_ts_ms")))
-    val joined = ClickstreamStreams.intervalJoin(p, s, bound = "5 seconds")
-      .select(col("l.user_id"), col("ts_ms"), col("status"), col("status_ts_ms"))
-    val q = joined.writeStream.format("memory").queryName("s_ssjoin")
-      .outputMode("append").start()
-    try {
-      statuses.addData(
-        (1L, 8_000L, "signup"), // within 5 s of u1's purchase
-        (1L, 2_000L, "error"),  // outside the bound → no pair
-        (2L, 9_000L, "signup")) // same instant as u2's purchase → inclusive
-      purchases.addData((1L, 10_000L), (2L, 9_000L))
-      q.processAllAvailable()
-      // advance both watermarks so join state is evictable
-      purchases.addData((99L, 10_000_000L))
-      statuses.addData((98L, 10_000_000L, "noise"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("s_ssjoin")
-      .filter(col("user_id").isin(1, 2))
-      .as[(Long, Long, String, Long)].collect().toSet
-    assert(rows === Set(
-      (1L, 10_000L, "signup", 8_000L),
-      (2L, 9_000L, "signup", 9_000L)))
-  }
-
-  test("stream-stream LEFT OUTER interval join: unmatched rows null-pad after watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val purchases = MemoryStream[(Long, Long)]
-    val statuses = MemoryStream[(Long, Long, String)]
-    val p = purchases.toDF().toDF("user_id", "ts_ms")
-      .withColumn("ts", timestamp_millis(col("ts_ms")))
-    val s = statuses.toDF().toDF("user_id", "status_ts_ms", "status")
-      .withColumn("ts", timestamp_millis(col("status_ts_ms")))
-    val joined = ClickstreamStreams
-      .intervalJoin(p, s, bound = "5 seconds", joinType = "leftOuter")
-      .select(col("l.user_id"), col("ts_ms"), col("status"), col("status_ts_ms"))
-    val q = joined.writeStream.format("memory").queryName("s_ssjoin_lo")
-      .outputMode("append").start()
-    try {
-      statuses.addData((1L, 8_000L, "signup"))
-      purchases.addData(
-        (1L, 10_000L), // matched within bound
-        (3L, 11_000L)) // no status at all → must still emit, null-padded
-      q.processAllAvailable()
-      // the unmatched row emits only once the watermark passes its bound
-      purchases.addData((99L, 10_000_000L))
-      statuses.addData((98L, 10_000_000L, "noise"))
-      q.processAllAvailable()
-      purchases.addData((99L, 20_000_000L))
-      statuses.addData((98L, 20_000_000L, "noise"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("s_ssjoin_lo")
-      .filter(col("user_id").isin(1, 3))
-      .as[(Long, Long, Option[String], Option[Long])].collect().toSet
-    assert(rows === Set(
-      (1L, 10_000L, Some("signup"), Some(8_000L)),
-      (3L, 11_000L, None, None))) // the left-outer null-padded emission
   }
 
   test("checkpoint recovery: restart loses no state, duplicates no output") {
