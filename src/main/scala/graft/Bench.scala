@@ -43,7 +43,7 @@ object Bench {
     // absorb JVM startup (hash/codegen/parquet paths get hot once), then
     // calibrate: the baseline is the quietest probe ever observed
     spark.range(100000).selectExpr("sum(conv(substr(md5(cast(id as string)),1,15),16,10))").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    Tables.table(spark, sfDir, "region").count()
     var probeBase = (1 to 5).map(_ => probe()).min
     val maxExtraRuns = 2
     val results = selected.map { case (name, fn) =>

@@ -1047,7 +1047,9 @@ object SparkEntry {
         Tables.events(s, dir).filter(col("event_type").isin("signup", "error")),
         "user_id", "event_type", "ts_ms", "event_id")),
     // weighted PageRank over the event-type transition graph — exact
-    // integer e9, 3 fixed iterations, one lazy plan
+    // integer e9, 3 fixed iterations. Not lazy: building the frame runs
+    // eager localCheckpoints (edges, nodes, out-weights, initial ranks,
+    // then one per iteration), so most of its time is build-time jobs
     "ev_pagerank" -> ((s, dir) =>
       graft.ops.Analytics.pageRank(
         graft.ops.Analytics.transitions(Tables.events(s, dir))

@@ -1,20 +1,62 @@
 package graft
 
 import graft.Cols
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
-  * Every loader goes through `spark.read.parquet` so Catalyst's parquet
-  * scan handles column pruning and predicate pushdown — downstream
-  * operators should `.select`/`.filter` early and let the scan prune.
+  * Every loader goes through [[table]], a parquet scan, so Catalyst
+  * handles column pruning and predicate pushdown — downstream operators
+  * should `.select`/`.filter` early and let the scan prune.
+  *
+  * [[table]] caches each file's inferred schema and reads with it
+  * (`spark.read.schema(s).parquet`): a bare `spark.read.parquet` runs one
+  * Spark job per call just to read the footer, and on sub-second queries
+  * that job is a large share of plan-building time. The cache key is the
+  * file's qualified path, length and modification time plus the parquet
+  * confs that change inference (`InferenceConfs`), so a regenerated file
+  * or a toggled `nanosAsLong` is inferred again. The cache keeps at most
+  * one entry per path: a changed key replaces its path's entry. A path
+  * that is a directory, or missing, bypasses the cache, so its schema is
+  * never served stale.
   */
 object Tables {
 
+  /** Session confs that change the schema parquet inference resolves. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** Qualified file path → ((length, mtime, inference confs), schema). */
+  private[graft] val schemas = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Long, Long, Seq[Option[String]]), StructType)]()
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     GraftSession.tune(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val file =
+      try Some(fs.getFileStatus(p)).filter(_.isFile)
+      catch { case _: java.io.FileNotFoundException => None }
+    file match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val qualified = fs.makeQualified(p).toString
+        val key = (st.getLen, st.getModificationTime, InferenceConfs.map(spark.conf.getOption))
+        val schema = Option(schemas.get(qualified)).collect { case (k, s) if k == key => s }
+          .getOrElse {
+            val s = spark.read.parquet(path).schema
+            schemas.put(qualified, (key, s))
+            s
+          }
+        spark.read.schema(schema).parquet(path)
+    }
   }
 
   /** Fan an UNDER-SPLIT scan out to the session's parallelism.

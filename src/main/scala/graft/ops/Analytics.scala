@@ -3255,6 +3255,9 @@ object Analytics {
         .na.fill(0L, Seq("support"))
         .localCheckpoint()
     val sup0 = withSupport(all)
+    // sup0 is materialized and carries every column the peel reads, so
+    // the edge table is dead here; unfreed it stays pinned until a GC
+    graft.LocalCheckpoints.free(all)
     // invariant: `cur` always carries the support of each edge WITHIN the
     // current survivor set, so a peel round is a filter + recount, and
     // the expensive triangle enumeration reruns only when edges dropped

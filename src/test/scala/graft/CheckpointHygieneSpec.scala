@@ -69,14 +69,14 @@ class CheckpointHygieneSpec extends SparkSpec {
   }
 
   test("trussPeel frees retired peel rounds; only the edge table, supports and fixpoints stay") {
-    // kept: the canonical edge table, its support table (backs the
-    // returned join) and each level's fixpoint survivor table; every
-    // non-fixpoint intermediate round is freed. On the two-triangle
-    // chain: all = sup0 (k=3 fixpoint, shared) + the k=4 fixpoint = 3
+    // kept: the support table (backs the returned join) and each
+    // level's fixpoint survivor table; the canonical edge table and every
+    // non-fixpoint intermediate round are freed. On the two-triangle
+    // chain: sup0 (k=3 fixpoint, shared) + the k=4 fixpoint = 2
     import graft.ops.Analytics
     val chain = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
       .toDF("src", "dst")
-    assert(newPersisted(Analytics.trussPeel(chain, kMax = 4, rounds = 5)) === 3)
+    assert(newPersisted(Analytics.trussPeel(chain, kMax = 4, rounds = 5)) === 2)
   }
 
   test("coreNumbers frees the edge sets; only the node table and level sets stay") {
