@@ -311,7 +311,7 @@ object SparkEntry {
     // integer Benjamini-Hochberg step-up at q=5% across types
     // fan the single-split scan out first (guide §2.5): the ×64-replicate
     // hash explode is the map-heavy case — it ran as ONE 4.3 s task on
-    // the single-row-group scan (ProfileScratch r16), vs ~0.4 s spread
+    // the single-row-group scan (measured per stage in r16), vs ~0.4 s spread
     "ev_perm_fdr" -> ((s, dir) =>
       graft.ops.Stats.permFdr(Tables.fanOutScan(Tables.events(s, dir)))),
     // sequential member of the arm-test family: Wald SPRT daily LLR
