@@ -22,6 +22,19 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- queries
 
+  /** The co-purchase pair table every basket-graph query reads: parts
+    * bought together in one order, with counts and lift
+    * ([[graft.ops.Analytics.coOccurrence]]).
+    */
+  private def basketPairs(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
+
+  /** [[basketPairs]] as the undirected `(src, dst)` edge list the graph
+    * operators take; `src < dst` on every row.
+    */
+  private def basketEdges(s: SparkSession, dir: String): DataFrame =
+    basketPairs(s, dir).select(col("item_a").as("src"), col("item_b").as("dst"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     clickstreamQueries ++
       graft.relational.RelationalQueries.queries ++
@@ -787,22 +800,16 @@ object SparkEntry {
     // co-purchase graph structure: triangles and clustering coefficient
     // over the basket-pair edges (canonical a<b<c join chain)
     "li_graph_stats" -> ((s, dir) =>
-      graft.ops.Analytics.triangleStats(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.triangleStats(basketEdges(s, dir))),
     // do hub parts co-purchase with hub parts: Newman degree
     // assortativity over the same basket-pair edges, exact decimal
     // moments, one rounded-double division
     "li_assortativity" -> ((s, dir) =>
-      graft.ops.Analytics.assortativity(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.assortativity(basketEdges(s, dir))),
     // power-law screen: log2-bucketed degree distribution of the same
     // basket-pair graph, integer bit-length buckets
     "li_degree_hist" -> ((s, dir) =>
-      graft.ops.Analytics.degreeHistogram(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.degreeHistogram(basketEdges(s, dir))),
     // absorbing-chain removal-effect attribution over the event-type
     // journey graph, exact e9 fixed-point iteration
     "cs_markov_attribution" -> ((s, dir) =>
@@ -811,91 +818,65 @@ object SparkEntry {
     // rounds=10 is the measured sf0.01 fixpoint (AnalyticsSpec pins
     // rounds=10 ≡ rounds=11; 5 rounds stopped 30 nodes short)
     "li_kcore" -> ((s, dir) =>
-      graft.ops.Analytics.kCore(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")), rounds = 10)),
+      graft.ops.Analytics.kCore(basketEdges(s, dir), rounds = 10)),
     // connected components of the basket graph: fixed-round HashMin with
     // pointer jumping; rounds=6 is the measured fixpoint at BOTH sf0.01
     // and sf0.1 (plain flooding needed 10) — spec pins rounds=6 ≡ 7
     // (sf0.01: 9 components, largest 1860 nodes)
     "li_components" -> ((s, dir) =>
-      graft.ops.Analytics.components(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")), rounds = 6)),
+      graft.ops.Analytics.components(basketEdges(s, dir), rounds = 6)),
     // common-neighbor link prediction: top distance-2 non-edges of the
     // basket graph, hub centers capped before the wedge join
     "li_link_pred" -> ((s, dir) =>
-      graft.ops.Analytics.linkPrediction(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.linkPrediction(basketEdges(s, dir))),
     // per-node local clustering coefficient distribution: exact triangle
     // credit via degree orientation (fan-out O(|E|^1.5), no caps)
     "li_local_cc" -> ((s, dir) =>
-      graft.ops.Analytics.localClustering(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.localClustering(basketEdges(s, dir))),
     // per-edge triangle support + 3/4-truss membership over the same
     // co-occurrence graph — the edge-grain view of li_local_cc
     "li_edge_support" -> ((s, dir) =>
-      graft.ops.Analytics.edgeSupport(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.edgeSupport(basketEdges(s, dir))),
     // full k-truss peel over the same graph: per edge the max k whose
     // truss it survives — the iterative completion of li_edge_support's
     // one-shot flags (a chain triangle's shared edge flags in_4truss
     // but peels out at trussness 3)
     "li_truss_peel" -> ((s, dir) =>
-      graft.ops.Analytics.trussPeel(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.trussPeel(basketEdges(s, dir))),
     // per-k truss census (surviving edges/nodes per level) off the peel
     "li_truss_summary" -> ((s, dir) =>
-      graft.ops.Analytics.trussSummary(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.trussSummary(basketEdges(s, dir))),
     // per-node core number (full k-core decomposition) — the degeneracy
     // feature at node grain, the kCore fixed-k readout generalized
     "li_core_number" -> ((s, dir) =>
-      graft.ops.Analytics.coreNumbers(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.coreNumbers(basketEdges(s, dir))),
     // multi-source frontier BFS from the 3 hub items: exact min hop
     // distance <= 3 per (source, node) — landmark-distance features
     "li_bfs_hops" -> ((s, dir) =>
-      graft.ops.Analytics.bfsHops(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.bfsHops(basketEdges(s, dir))),
     // sampled Brandes betweenness from the same 3 hub landmarks: forward
     // sigma BFS + backward e6 dependency accumulation, hop-bounded
     "li_betweenness_sample" -> ((s, dir) =>
-      graft.ops.Analytics.betweennessSample(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.betweennessSample(basketEdges(s, dir))),
     // bounded Bellman-Ford from the same hubs: min inverse-support path
     // cost — strong-pair chains undercut weak direct edges
     "li_cheapest_path" -> ((s, dir) =>
       graft.ops.Analytics.cheapestPath(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a"), col("item_b"), col("n_ab")))),
+        basketPairs(s, dir).select(col("item_a"), col("item_b"), col("n_ab")))),
     // WEIGHTED sampled betweenness: Brandes dependency accumulation over
     // the cheapest-path (inverse-support) DAGs from the same hubs — a
     // bridge of strong ties outranks a weak-tie hub
     "li_betweenness_weighted" -> ((s, dir) =>
       graft.ops.Analytics.betweennessWeighted(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a"), col("item_b"), col("n_ab")))),
+        basketPairs(s, dir).select(col("item_a"), col("item_b"), col("n_ab")))),
     // landmark closeness/harmonic centrality: the per-node readout of the
     // bfsHops distance table (sum hops + harmonic e6 over reaching hubs)
     "li_closeness" -> ((s, dir) =>
-      graft.ops.Analytics.closeness(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.closeness(basketEdges(s, dir))),
     // Adamic–Adar link prediction: the link_pred wedges with rare-neighbor
     // 1/ln(deg) weights — niche co-stocking outranks super-hub sharing
     "li_adamic_adar" -> ((s, dir) =>
-      graft.ops.Analytics.adamicAdar(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.adamicAdar(basketEdges(s, dir))),
     // supplier concentration per part: supplier count, dominant share,
     // HHI over supplier quantities, single-source sourcing-risk flag
     "sup_concentration" -> ((s, dir) =>
@@ -903,9 +884,7 @@ object SparkEntry {
     // landmark eccentricity: per hub the ball size, deepest hop (diameter
     // lower bound) and mean hop depth
     "li_eccentricity" -> ((s, dir) =>
-      graft.ops.Analytics.eccentricity(
-        graft.ops.Analytics.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-          .select(col("item_a").as("src"), col("item_b").as("dst")))),
+      graft.ops.Analytics.eccentricity(basketEdges(s, dir))),
     // supplier share drift across the calendar-midpoint split: early/late
     // quantity shares e4 and the shift — who gains the book of business
     "sup_share_shift" -> ((s, dir) =>
@@ -1105,9 +1084,7 @@ object SparkEntry {
         "user_id", "event_type", "ts_ms", "event_id")),
     // market-basket co-occurrence over order line items: pair counts and
     // exact-integer lift, group total and item counts broadcast
-    "li_basket_pairs" -> ((s, dir) =>
-      graft.ops.Analytics.coOccurrence(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")),
+    "li_basket_pairs" -> ((s, dir) => basketPairs(s, dir)),
     // directed A→B rules over the same capped pair table: confidence,
     // conviction (null on exact rules), shared lift
     "li_basket_rules" -> ((s, dir) =>
@@ -1128,14 +1105,11 @@ object SparkEntry {
     // one LPA step over the basket graph: heaviest-neighbor label from
     // singleton init, the community seed for basket clustering
     "li_label_prop_step" -> ((s, dir) =>
-      graft.ops.Analytics.labelPropStep(
-        graft.ops.Analytics.coOccurrence(
-          Tables.lineitem(s, dir), "l_orderkey", "l_partkey"))),
+      graft.ops.Analytics.labelPropStep(basketPairs(s, dir))),
     // LPA iteration 2: the step's labels fed back through the general
     // weighted-majority iterate — the composition the step documents
     "li_label_prop2" -> ((s, dir) => {
-      val pairs = graft.ops.Analytics.coOccurrence(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
+      val pairs = basketPairs(s, dir)
       graft.ops.Analytics.labelPropIterate(
         pairs, graft.ops.Analytics.labelPropStep(pairs))
     }),
@@ -1145,8 +1119,7 @@ object SparkEntry {
     // sym + modularity's edges/degrees/within), past the break-even the
     // coOccurrence design note measured for its usual 4 — checkpoint it
     "li_modularity" -> ((s, dir) => {
-      val pairs = graft.ops.Analytics.coOccurrence(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
+      val pairs = basketPairs(s, dir).localCheckpoint()
       graft.ops.Analytics.modularity(
         pairs,
         graft.ops.Analytics.labelPropIterate(
@@ -1162,9 +1135,7 @@ object SparkEntry {
       val userItems = Tables.orders(s, dir)
         .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("usr"), col("l_partkey").as("item"))
-      val pairs = graft.ops.Analytics.coOccurrence(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-      graft.ops.Analytics.recommendFromCoOccurrence(userItems, pairs)
+      graft.ops.Analytics.recommendFromCoOccurrence(userItems, basketPairs(s, dir))
     }),
     // MinHash audience-overlap sketch + exact-vs-estimate accuracy
     // readout per segment pair (deterministic seeded hashes → oracled)
@@ -5450,9 +5421,9 @@ object SparkEntry {
           |  (SELECT count(*) FROM e10)::BIGINT AS n_core_edges""".stripMargin
     },
     // distance-2 link prediction on the same basket edges: hub centers
-    // capped (QUALIFY ≡ Spark's capGroups), candidates anti-joined
-    // against existing edges; cn and the union-size divisor are positive,
-    // so the Jaccard // is exact floor
+    // capped (QUALIFY ≡ the maxDeg size filter in Analytics.wedges),
+    // candidates anti-joined against existing edges; cn and the
+    // union-size divisor are positive, so the Jaccard // is exact floor
     "li_link_pred" ->
       """WITH gi0 AS (SELECT DISTINCT l_orderkey AS grp, l_partkey AS item FROM lineitem),
         |gi AS (SELECT grp, item FROM gi0

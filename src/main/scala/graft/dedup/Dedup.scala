@@ -876,10 +876,10 @@ object Dedup {
     * to a band layout: wide-band configs (16×1) recall everything and
     * drown in false candidates; tall ones (1×16) are near-exact-match.
     *
-    * Buckets above `maxBucket` members are dropped WHOLE (the capGroups
-    * convention, mirrored in the oracle's QUALIFY): a bucket at that
-    * size carries no discriminative value and its |bucket|² pair fan-out
-    * is exactly what a production index refuses to enumerate.
+    * Buckets above `maxBucket` members are dropped WHOLE (the basket
+    * family's group-size cap, mirrored in the oracle's QUALIFY): a bucket
+    * at that size carries no discriminative value and its |bucket|² pair
+    * fan-out is exactly what a production index refuses to enumerate.
     *
     * Scale: one cached signature table (16 longs/doc) feeds all five
     * configs; the config fan-out is Σb = 31 bands per doc; every
@@ -1224,9 +1224,9 @@ object Dedup {
     * exists to validate: the pair join is label-equality (hash join, no
     * BNLJ), so the quadratic is bounded per cell — |cell|² instead of
     * |corpus|². Cells larger than `maxCellSize` are dropped in-plan (the
-    * capGroups idiom, mirrored in the oracle): at 100 TB an oversized
-    * cell means the coarse quantizer needs more centroids, not a bigger
-    * join. Cross-cluster near-dups are by construction the quantizer's
+    * basket family's group-size cap, mirrored in the oracle): at 100 TB
+    * an oversized cell means the coarse quantizer needs more centroids,
+    * not a bigger join. Cross-cluster near-dups are by construction the quantizer's
     * misses — the SemDeDup contract.
     */
   def semanticDedup(
@@ -1526,23 +1526,17 @@ object Dedup {
     * exchange depends on the CONSUMER's per-row work — the registry
     * wraps the embeddings table in [[graft.Tables.fanOutScan]] for the
     * measured-heavy pair/rerank queries and leaves the ~40 sub-second
-    * readout consumers on the plain scan (VERDICT r15 #1: the blanket
-    * `fanOut = true` default taxed them 1.2–2.0×).
+    * readout consumers on the plain scan (VERDICT r15 #1: a blanket
+    * fan-out default taxed them 1.2–2.0×). Beyond that tail tax, a
+    * STRIDED query batch (corpus/QueryStride rows) must never fan out:
+    * a repartition below the stride filter buys nothing and costs the
+    * broadcast its bound — with the exchange in the subtree the
+    * optimizer prunes/moves the pmod filter off the broadcast side and
+    * the build side degenerates to the full corpus (BroadcastBoundSpec
+    * caught exactly this on ann_range_lsh, r15).
     */
-  private[graft] def quantized(embeddings: DataFrame): DataFrame =
-    quantized(embeddings, fanOut = false)
-
-  /** `fanOut = false` (the default) skips the scan fan-out. Beyond the
-    * tail tax above, a STRIDED query batch (corpus/QueryStride rows)
-    * must never fan out: the repartition below the stride filter buys
-    * nothing and costs the broadcast its bound — with the exchange in
-    * the subtree the optimizer prunes/moves the pmod filter off the
-    * broadcast side and the build side degenerates to the full corpus
-    * (BroadcastBoundSpec caught exactly this on ann_range_lsh, r15).
-    */
-  private[graft] def quantized(embeddings: DataFrame, fanOut: Boolean): DataFrame = {
-    val src = if (fanOut) graft.Tables.fanOutScan(embeddings) else embeddings
-    val q = src.select(
+  private[graft] def quantized(embeddings: DataFrame): DataFrame = {
+    val q = embeddings.select(
       col("vec_id"),
       // int64 from the start: the parquet int32 would otherwise leak into
       // result schemas, where DuckDB answers BIGINT (type-contract spec)
@@ -2244,7 +2238,7 @@ object Dedup {
          |ORDER BY theta_e4""".stripMargin,
     // the pr_curve signature/truth CTEs, banding parametrized by the
     // 5-row config table; oversized buckets dropped whole via QUALIFY
-    // (the capGroups convention); thresholds are shared literals
+    // (the basket family's group-size cap); thresholds are shared literals
     "dedup_lsh_band_design" ->
       s"""$tokCte, h AS (
          |  SELECT doc_id, p.perm AS perm, min(${h60("p.perm || ':' || shingle")}) AS v

@@ -487,44 +487,12 @@ object Analytics {
         (col("est_jaccard_e4") - coalesce(col("__exact"), lit(0L))).as("err_e4"))
   }
 
-  /** Generic co-occurrence mining (market-basket pairs): for every pair
-    * of distinct items sharing a group (an order, a session, a document),
-    * the pair count, each item's group count, and the exact integer-e4
-    * lift `P(ab) / (P(a)·P(b)) = n_ab·N / (n_a·n_b)`. Pairs below
-    * `minPairCount` are dropped — the long random-co-occurrence tail is
-    * noise and would dominate the output.
-    *
-    * Scale: the distinct (group, item) table shuffles once on group; the
-    * per-group fan-out is C(basket, 2), so `maxGroupSize` DROPS groups
-    * above the cap (one 10⁵-item reseller basket is a 10¹⁰-row explode)
-    * BEFORE any counting — item counts, the group total, and the pair
-    * counts all see the same capped universe, and every oracle mirrors
-    * the cap (the `maxShingleDf` discipline). The cap rides a window
-    * partitioned by group on the same shuffle the pair join needs — no
-    * extra pass. The item-count table is vocabulary-sized, so it joins
-    * PLAIN (AQE broadcasts it exactly when it fits — a hard hint here
-    * would OOM on a 10⁷-item vocabulary); only the 1-row group total
-    * carries a broadcast hint. Lift arithmetic runs in 38-digit decimals:
-    * `n_ab · N · 10⁴` exceeds 2⁶³ once groups reach ~10¹⁰, where a
-    * silent Long wrap would emit garbage AND diverge from the oracle's
-    * HUGEINT.
-    */
-  /** Drops rows of groups whose row count exceeds `maxSize` — the shared
-    * fan-out cap of the basket/sequence family ([[coOccurrence]],
-    * [[seqPairs]], [[substitutes]]): one 10⁵-member group is a 10¹⁰-row
-    * pair explode. The count window rides the group-keyed shuffle the
-    * downstream pair self-joins need anyway; every registered caller
-    * mirrors the cap in its oracle as a QUALIFY filter.
-    */
-  private[ops] def capGroups(df: DataFrame, group: Column, maxSize: Int): DataFrame =
-    df.withColumn("__gsz", count(lit(1)).over(Window.partitionBy(group)))
-      .filter(col("__gsz") <= maxSize)
-      .drop("__gsz")
-
   /** The size-capped DISTINCT item set per group as ONE group-keyed
     * aggregate: `(grp, __items sorted distinct array)`, groups over
-    * `maxSize` distinct items dropped whole — semantically identical to
-    * `capGroups(df.select(grp, item).distinct(), grp, maxSize)` but ONE
+    * `maxSize` distinct items dropped whole. Items must be non-null:
+    * `collect_set` drops nulls before the size cap, while the oracles'
+    * `QUALIFY count(*) OVER (PARTITION BY grp)` counts them, so a group
+    * with null items could pass the cap here and be dropped there. ONE
     * exchange instead of three plan layers (the r15 shape paid a
     * (grp,item)-keyed distinct exchange, then a grp-keyed window
     * sort+count, then fed a grp-keyed self-join; `collect_set` dedups in
@@ -557,6 +525,38 @@ object Analytics {
           element_at(items, i).as("item_a"),
           element_at(items, j).as("item_b")))))
 
+  /** One `(item_a, item_b)` row per pair of the sorted distinct array
+    * `items` ([[sortedPairs]] exploded), each row keeping its source
+    * row's `carry` columns.
+    */
+  private[ops] def pairRows(df: DataFrame, items: Column, carry: String*): DataFrame =
+    df.select(carry.map(col) :+ explode(sortedPairs(items)).as("__p"): _*)
+      .select(Seq(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b")) ++
+        carry.map(col): _*)
+
+  /** Generic co-occurrence mining (market-basket pairs): for every pair
+    * of distinct items sharing a group (an order, a session, a document),
+    * the pair count, each item's group count, and the exact integer-e4
+    * lift `P(ab) / (P(a)·P(b)) = n_ab·N / (n_a·n_b)`. Pairs below
+    * `minPairCount` are dropped — the long random-co-occurrence tail is
+    * noise and would dominate the output.
+    *
+    * Scale: ONE group-keyed aggregate ([[groupedItemSets]]) collects each
+    * group's sorted distinct item set. The per-group fan-out is
+    * C(basket, 2), so `maxGroupSize` DROPS groups above the cap (one
+    * 10⁵-item reseller basket is a 10¹⁰-row explode) BEFORE any counting
+    * — item counts, the group total, and the pair counts all see the
+    * same capped universe, and every oracle mirrors the cap as a
+    * `QUALIFY` filter (the `maxShingleDf` discipline). Pairs explode
+    * in-row from each set ([[pairRows]]), so no group-keyed self-join
+    * runs. The item-count table is vocabulary-sized, so it joins
+    * PLAIN (AQE broadcasts it exactly when it fits — a hard hint here
+    * would OOM on a 10⁷-item vocabulary); only the 1-row group total
+    * carries a broadcast hint. Lift arithmetic runs in 38-digit decimals:
+    * `n_ab · N · 10⁴` exceeds 2⁶³ once groups reach ~10¹⁰, where a
+    * silent Long wrap would emit garbage AND diverge from the oracle's
+    * HUGEINT.
+    */
   def coOccurrence(
       df: DataFrame, groupCol: String, itemCol: String, minPairCount: Long = 2L,
       maxGroupSize: Int = 1000): DataFrame = {
@@ -569,9 +569,7 @@ object Analytics {
     val itemCounts = gi.groupBy(col("item")).agg(count(lit(1)).as("n"))
     val total = grouped.agg(count(lit(1)).as("__n_groups"))
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    grouped
-      .select(explode(sortedPairs(col("__items"))).as("__p"))
-      .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
+    pairRows(grouped, col("__items"))
       .groupBy(col("item_a"), col("item_b"))
       .agg(count(lit(1)).as("n_ab"))
       .filter(col("n_ab") >= minPairCount)
@@ -600,9 +598,7 @@ object Analytics {
     */
   def recommendFromCoOccurrence(
       userItems: DataFrame, pairs: DataFrame, k: Int = 3): DataFrame = {
-    val sym = pairs
-      .select(col("item_a").as("item"), col("item_b").as("cand"), col("lift_e4"))
-      .union(pairs.select(col("item_b").as("item"), col("item_a").as("cand"), col("lift_e4")))
+    val sym = bothWays(pairs, "item_a", "item_b", "item", "cand", col("lift_e4"))
     val owned = userItems.select(col("usr"), col("item")).distinct()
     val scored = owned
       .join(sym, "item")
@@ -797,6 +793,37 @@ object Analytics {
         graft.Cols.floorDiv(col("top_cents") * 10000, col("__total")).as("value_share_e4"))
   }
 
+  /** The canonical undirected edge set of a `(src, dst)` table, named
+    * `(a, b)`: each edge once with `a < b` (least/greatest), self-loops
+    * dropped, duplicate and reversed rows collapsed.
+    */
+  private[ops] def canonicalEdges(
+      edges: DataFrame, a: String = "src", b: String = "dst"): DataFrame =
+    edges
+      .select(least(col("src"), col("dst")).as(a), greatest(col("src"), col("dst")).as(b))
+      .filter(col(a) < col(b)).distinct()
+
+  /** Both endpoints of every edge `(a, b)` in one column `node`: a node
+    * appears once per incident edge.
+    */
+  private[ops] def endpoints(
+      e: DataFrame, a: String = "src", b: String = "dst", node: String = "node"): DataFrame =
+    e.select(col(a).as(node)).union(e.select(col(b).as(node)))
+
+  /** `(node, __d)`: each node's degree in a distinct undirected edge table. */
+  private[ops] def degrees(
+      e: DataFrame, a: String = "src", b: String = "dst", node: String = "node"): DataFrame =
+    endpoints(e, a, b, node).groupBy(col(node)).agg(count(lit(1)).as("__d"))
+
+  /** Both orientations of every row of an undirected pair table: `(a, b)`
+    * as `(from, to)` and again as `(to, from)`, each row carrying `rest`.
+    */
+  private[ops] def bothWays(
+      pairs: DataFrame, a: String, b: String, from: String, to: String,
+      rest: Column*): DataFrame =
+    pairs.select(Seq(col(a).as(from), col(b).as(to)) ++ rest: _*)
+      .union(pairs.select(Seq(col(b).as(from), col(a).as(to)) ++ rest: _*))
+
   /** Undirected-graph structure report: node/edge/wedge/triangle counts
     * and the global clustering coefficient (3·triangles / wedges, exact
     * integer e4) — "is this co-occurrence graph cliquey or stringy", the
@@ -813,14 +840,8 @@ object Analytics {
     * Wedges are Σ d(d−1)/2 over the degree table — exact integers.
     */
   def triangleStats(edges: DataFrame): DataFrame = {
-    val e = edges
-      .select(
-        least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") < col("dst")).distinct()
-    val deg = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("__d"))
+    val e = canonicalEdges(edges)
+    val deg = degrees(e)
     val wedges = deg.agg(
       count(lit(1)).as("n_nodes"),
       graft.Cols.floorDiv(sum(col("__d") * (col("__d") - 1)), 2L).as("n_wedges"))
@@ -871,14 +892,8 @@ object Analytics {
   def assortativity(edges: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
     def d(c: Column): Column = c.cast(dec)
-    val e = edges
-      .select(
-        least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") < col("dst")).distinct()
-    val deg = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("__d"))
+    val e = canonicalEdges(edges)
+    val deg = degrees(e)
     val degMoments = deg.agg(
       count(lit(1)).as("n_nodes"),
       sum(col("__d")).as("m"),
@@ -910,14 +925,7 @@ object Analytics {
     * buckets. Nothing sorts; nothing exceeds the degree table.
     */
   def degreeHistogram(edges: DataFrame): DataFrame = {
-    val e = edges
-      .select(
-        least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") < col("dst")).distinct()
-    e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("__d"))
+    degrees(canonicalEdges(edges))
       .groupBy((length(bin(col("__d"))) - 1).cast("long").as("log2_degree"))
       .agg(
         count(lit(1)).as("n_nodes"),
@@ -1025,19 +1033,18 @@ object Analytics {
     // bought core. n_a/n_b still report the UNfiltered buyer counts.
     val frequent = owned.join(
       buyers.filter(col("n") >= minCommon).select(col("item")), "item")
-    val commonBuyers = frequent
+    val frequentSets = frequent
       .groupBy(col("cust"))
       .agg(sort_array(collect_set(col("item"))).as("__fi"))
-      .select(explode(sortedPairs(col("__fi"))).as("__p"))
-      .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
+    val commonBuyers = pairRows(frequentSets, col("__fi"))
       .groupBy(col("item_a"), col("item_b"))
       .agg(count(lit(1)).as("n_common"))
       .filter(col("n_common") >= minCommon)
-    val together = groupedItemSets(
-      lineitem.select(col("l_orderkey").as("grp"), col("l_partkey").as("item")),
-      col("grp"), col("item"), maxGroupSize)
-      .select(explode(sortedPairs(col("__items"))).as("__p"))
-      .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
+    val together = pairRows(
+      groupedItemSets(
+        lineitem.select(col("l_orderkey").as("grp"), col("l_partkey").as("item")),
+        col("grp"), col("item"), maxGroupSize),
+      col("__items"))
       .distinct()
     commonBuyers
       .join(together, Seq("item_a", "item_b"), "left_anti")
@@ -1064,10 +1071,7 @@ object Analytics {
     * [[coOccurrence]] already thresholds; no |nodes|² anywhere.
     */
   def labelPropStep(pairs: DataFrame): DataFrame = {
-    val sym = pairs
-      .select(col("item_a").as("item"), col("item_b").as("nbr"), col("n_ab"))
-      .union(pairs
-        .select(col("item_b").as("item"), col("item_a").as("nbr"), col("n_ab")))
+    val sym = bothWays(pairs, "item_a", "item_b", "item", "nbr", col("n_ab"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("item")).orderBy(col("n_ab").desc, col("nbr"))
     sym
@@ -1091,10 +1095,7 @@ object Analytics {
     * degree, which the [[coOccurrence]] caps already bound.
     */
   def labelPropIterate(pairs: DataFrame, labels: DataFrame): DataFrame = {
-    val sym = pairs
-      .select(col("item_a").as("item"), col("item_b").as("nbr"), col("n_ab"))
-      .union(pairs
-        .select(col("item_b").as("item"), col("item_a").as("nbr"), col("n_ab")))
+    val sym = bothWays(pairs, "item_a", "item_b", "item", "nbr", col("n_ab"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("item")).orderBy(col("label_weight").desc, col("label"))
     sym
@@ -1196,9 +1197,7 @@ object Analytics {
     def d(c: Column): Column = c.cast(dec)
     val e = pairs.select(col("item_a"), col("item_b"))
     val m = broadcast(e.agg(count(lit(1)).as("__m")))
-    val deg = e.select(col("item_a").as("item"))
-      .union(e.select(col("item_b").as("item")))
-      .groupBy(col("item")).agg(count(lit(1)).as("__d"))
+    val deg = degrees(e, "item_a", "item_b", "item")
     val lab = labels.select(col("item"), col("label"))
     val within = e
       .join(lab.select(col("item").as("item_a"), col("label").as("__la")), "item_a")
@@ -1753,9 +1752,7 @@ object Analytics {
     */
   private def weightedUndirect(pairs: DataFrame): DataFrame = {
     val w = greatest(Cols.floorDiv(lit(1000000L), col("n_ab")), lit(1L))
-    pairs
-      .select(col("item_a").as("src"), col("item_b").as("dst"), w.as("w"))
-      .unionAll(pairs.select(col("item_b").as("src"), col("item_a").as("dst"), w.as("w")))
+    bothWays(pairs, "item_a", "item_b", "src", "dst", w.as("w"))
   }
 
   def cheapestPath(pairs: DataFrame, nSources: Int = 3, maxHops: Int = 3): DataFrame = {
@@ -2488,11 +2485,9 @@ object Analytics {
     * cluster swap in reliable `checkpoint`.
     */
   def kCore(edges: DataFrame, k: Int = 3, rounds: Int = 5): DataFrame = {
-    def nodesOf(e: DataFrame) =
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
     var e = edges.select(col("src"), col("dst")).localCheckpoint()
     for (_ <- 1 to rounds) {
-      val keep = nodesOf(e).groupBy(col("node")).agg(count(lit(1)).as("d"))
+      val keep = endpoints(e).groupBy(col("node")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("node"))
       val next = e
         .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
@@ -2501,7 +2496,7 @@ object Analytics {
       graft.LocalCheckpoints.free(e)
       e = next
     }
-    val coreNodes = nodesOf(e).distinct().agg(count(lit(1)).as("n_core_nodes"))
+    val coreNodes = endpoints(e).distinct().agg(count(lit(1)).as("n_core_nodes"))
     val coreEdges = e.agg(count(lit(1)).as("n_core_edges"))
     coreNodes.crossJoin(broadcast(coreEdges))
       .select(
@@ -2529,20 +2524,15 @@ object Analytics {
     * of shipping an unconverged core.
     */
   def coreNumbers(edges: DataFrame, kMax: Int = 4, rounds: Int = 12): DataFrame = {
-    def nodesOf(e: DataFrame) =
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-    val e0 = edges.select(
-      least(col("src"), col("dst")).as("src"),
-      greatest(col("src"), col("dst")).as("dst")).distinct()
-      .localCheckpoint()
-    val allNodes = nodesOf(e0).distinct().localCheckpoint()
+    val e0 = canonicalEdges(edges).localCheckpoint()
+    val allNodes = endpoints(e0).distinct().localCheckpoint()
     var cur = e0
     var curN = cur.count()
     val levels = scala.collection.mutable.ArrayBuffer.empty[(Int, DataFrame)]
     for (k <- 2 to kMax) {
       var converged = false
       for (_ <- 1 to rounds if !converged) {
-        val keep = nodesOf(cur).groupBy(col("node")).agg(count(lit(1)).as("d"))
+        val keep = endpoints(cur).groupBy(col("node")).agg(count(lit(1)).as("d"))
           .filter(col("d") >= k.toLong).select(col("node"))
         val next = cur
           .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
@@ -2560,7 +2550,7 @@ object Analytics {
       }
       // the level's surviving NODE set is all the flag join needs; the
       // edge set stays only as the next level's peel input
-      levels += ((k, nodesOf(cur).distinct().localCheckpoint()))
+      levels += ((k, endpoints(cur).distinct().localCheckpoint()))
     }
     if (!(cur eq e0)) graft.LocalCheckpoints.free(cur)
     graft.LocalCheckpoints.free(e0)
@@ -2597,9 +2587,7 @@ object Analytics {
     * the shared first stage of every landmark walk below.
     */
   private def undirect(edges: DataFrame): DataFrame =
-    edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    bothWays(edges, "src", "dst", "src", "dst").distinct()
 
   /** The landmark rule shared by [[bfsHops]], [[betweennessSample]] and
     * [[cheapestPath]]: the `nSources` highest-degree nodes, ties by id —
@@ -2966,10 +2954,7 @@ object Analytics {
     * reliable `checkpoint`.
     */
   def components(edges: DataFrame, rounds: Int = 5): DataFrame = {
-    val sym = edges
-      .select(col("src").as("a"), col("dst").as("b"))
-      .union(edges.select(col("dst").as("a"), col("src").as("b")))
-      .localCheckpoint()
+    val sym = bothWays(edges, "src", "dst", "a", "b").localCheckpoint()
     var labels = sym.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint()
@@ -2998,6 +2983,35 @@ object Analytics {
       .agg(count(lit(1)).as("n_nodes"))
   }
 
+  /** The distance-2 wedges of an undirected `(src, dst)` edge table, the
+    * candidate generator of [[linkPrediction]] and [[adamicAdar]].
+    * Neighborhoods are ONE node-keyed list aggregate (the
+    * [[groupedItemSets]] shape): degrees fall out as `size`, the `maxDeg`
+    * center cap is a size filter, and the pair fan-out runs in-row
+    * ([[pairRows]]). `collect_list` keeps duplicate edges, and the strict
+    * `item_a < item_b` filter on the exploded pairs drops the pairs a
+    * duplicate neighbor makes with itself, so the wedge multiplicity is
+    * that of the center-keyed self-join.
+    *
+    * Returns `(deg, wedges)`: `deg` is `(node, d)` for every node, degrees
+    * uncapped; `wedges` has one `(item_a, item_b, __w)` row per wedge
+    * through a center of degree ≤ `maxDeg`, where `__w` is `weight`
+    * applied to the center's degree.
+    */
+  private[ops] def wedges(
+      edges: DataFrame, maxDeg: Int,
+      weight: Column => Column = _ => lit(1L)): (DataFrame, DataFrame) = {
+    val nbrSets = bothWays(edges, "src", "dst", "node", "nbr")
+      .groupBy(col("node"))
+      .agg(sort_array(collect_list(col("nbr"))).as("__nbrs"))
+    val deg = nbrSets.select(col("node"), size(col("__nbrs")).cast("long").as("d"))
+    val centers = nbrSets
+      .filter(size(col("__nbrs")) <= maxDeg)
+      .withColumn("d", size(col("__nbrs")).cast("long"))
+      .withColumn("__w", weight(col("d")))
+    (deg, pairRows(centers, col("__nbrs"), "__w").filter(col("item_a") < col("item_b")))
+  }
+
   /** Common-neighbor link prediction over an undirected edge table: the
     * top-`k` NON-adjacent pairs ranked by how many neighbors they share
     * — the "customers who bought these also bought..." candidate
@@ -3007,8 +3021,8 @@ object Analytics {
     * `⌊cn·10⁴ / (deg_a + deg_b − cn)⌋`.
     *
     * Candidates are exactly the distance-2 pairs: both neighbors of some
-    * shared wedge center. Centers with degree > `maxDeg` are dropped
-    * BEFORE the wedge self-join (the [[capGroups]] idiom) — a super-hub
+    * shared wedge center ([[wedges]]). Centers with degree > `maxDeg` are
+    * dropped BEFORE the pair explode — a super-hub
     * contributes deg² candidate pairs while carrying almost no linkage
     * evidence (everything is 2 hops through it), so the cap is both the
     * fan-out bound AND standard link-prediction practice. Degrees in the
@@ -3026,28 +3040,13 @@ object Analytics {
     // NOT checkpointed: measured 0.81x (r15 A/B) — exchange reuse already
     // shares the upstream pyramid across the references, and the barrier
     // costs more than it saves.
-    // Neighborhoods as ONE node-keyed list aggregate (the
-    // [[groupedItemSets]] shape): degrees fall out as `size`, the maxDeg
-    // cap is a size filter, and the wedge fan-out runs in-row — two
-    // fewer exchanges than the window-cap + self-join formulation. The
-    // strict `item_a < item_b` filter is kept on the exploded pairs so a
-    // (hypothetical) duplicate edge reproduces the join's multiplicity.
-    val e = edges.select(col("src"), col("dst"))
-    val adj = e.select(col("src").as("node"), col("dst").as("nbr"))
-      .union(e.select(col("dst").as("node"), col("src").as("nbr")))
-    val nbrSets = adj.groupBy(col("node"))
-      .agg(sort_array(collect_list(col("nbr"))).as("__nbrs"))
-    val deg = nbrSets.select(col("node"), size(col("__nbrs")).cast("long").as("d"))
-    val cand = nbrSets
-      .filter(size(col("__nbrs")) <= maxDeg)
-      .select(explode(sortedPairs(col("__nbrs"))).as("__p"))
-      .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
-      .filter(col("item_a") < col("item_b"))
+    val (deg, w) = wedges(edges, maxDeg)
+    val cand = w
       .groupBy(col("item_a"), col("item_b"))
       .agg(count(lit(1)).as("cn"))
     cand
       .join(
-        e.select(col("src").as("item_a"), col("dst").as("item_b")),
+        edges.select(col("src").as("item_a"), col("dst").as("item_b")),
         Seq("item_a", "item_b"), "left_anti")
       .join(deg.select(col("node").as("item_a"), col("d").as("deg_a")), "item_a")
       .join(deg.select(col("node").as("item_b"), col("d").as("deg_b")), "item_b")
@@ -3082,29 +3081,17 @@ object Analytics {
     * screen, TakeOrderedAndProject top-k.
     */
   def adamicAdar(edges: DataFrame, maxDeg: Int = 200, k: Int = 20): DataFrame = {
-    // not checkpointed — the [[linkPrediction]] measurement (0.87x here);
-    // same in-row wedge shape as [[linkPrediction]] r16 (degree = list
-    // size, no separate deg aggregate or self-join)
-    val e = edges.select(col("src"), col("dst"))
-    val adj = e.select(col("src").as("node"), col("dst").as("nbr"))
-      .union(e.select(col("dst").as("node"), col("src").as("nbr")))
-    val centers = adj.groupBy(col("node"))
-      .agg(sort_array(collect_list(col("nbr"))).as("__nbrs"))
-      .filter(size(col("__nbrs")) <= maxDeg)
-      .withColumn("d", size(col("__nbrs")).cast("long"))
-      // a degree-1 node centers no wedge (sortedPairs yields nothing), so
-      // its weight is never read; null it rather than divide by ln 1 = 0
-      .withColumn("__w", when(col("d") >= 2,
-        Cols.floorDiv(lit(10000000000L), round(log(col("d")) * 1e6).cast("long"))))
-    val cand = centers
-      .select(col("__w"), explode(sortedPairs(col("__nbrs"))).as("__p"))
-      .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"), col("__w"))
-      .filter(col("item_a") < col("item_b"))
+    // not checkpointed — the [[linkPrediction]] measurement (0.87x here).
+    // A degree-1 node centers no wedge (sortedPairs yields nothing), so
+    // its weight is never read; null it rather than divide by ln 1 = 0.
+    val (_, w) = wedges(edges, maxDeg, d => when(d >= 2,
+      Cols.floorDiv(lit(10000000000L), round(log(d) * 1e6).cast("long"))))
+    val cand = w
       .groupBy(col("item_a"), col("item_b"))
       .agg(count(lit(1)).as("cn"), sum(col("__w")).as("aa_e4"))
     cand
       .join(
-        e.select(col("src").as("item_a"), col("dst").as("item_b")),
+        edges.select(col("src").as("item_a"), col("dst").as("item_b")),
         Seq("item_a", "item_b"), "left_anti")
       .select(col("item_a"), col("item_b"), col("cn"), col("aa_e4"))
       .orderBy(col("aa_e4").desc, col("cn").desc, col("item_a"), col("item_b"))
@@ -3140,8 +3127,7 @@ object Analytics {
     * semi-join. Returns (degree table, (u, v, w) triangle table).
     */
   private def orientedTriangles(e: DataFrame): (DataFrame, DataFrame) = {
-    val adj = e.select(col("src").as("node"), col("dst").as("nbr"))
-      .union(e.select(col("dst").as("node"), col("src").as("nbr")))
+    val adj = bothWays(e, "src", "dst", "node", "nbr")
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("d"))
     val o = adj
       .join(deg.select(col("node"), col("d").as("__du")), "node")
@@ -3197,10 +3183,7 @@ object Analytics {
     // closing semi-join) plus the final left join — un-checkpointed,
     // each reference re-plans (and without exchange reuse re-executes)
     // the whole upstream co-occurrence pyramid
-    val e = edges.select(
-      least(col("src"), col("dst")).as("item_a"),
-      greatest(col("src"), col("dst")).as("item_b")).distinct()
-      .localCheckpoint()
+    val e = canonicalEdges(edges, "item_a", "item_b").localCheckpoint()
     e.join(supportOf(e), Seq("item_a", "item_b"), "left")
       .na.fill(0L, Seq("support"))
       .select(
@@ -3246,10 +3229,7 @@ object Analytics {
     * reliable `checkpoint`.
     */
   def trussPeel(edges: DataFrame, kMax: Int = 4, rounds: Int = 8): DataFrame = {
-    val all = edges.select(
-      least(col("src"), col("dst")).as("item_a"),
-      greatest(col("src"), col("dst")).as("item_b")).distinct()
-      .localCheckpoint()
+    val all = canonicalEdges(edges, "item_a", "item_b").localCheckpoint()
     def withSupport(e: DataFrame): DataFrame =
       e.join(supportOf(e), Seq("item_a", "item_b"), "left")
         .na.fill(0L, Seq("support"))

@@ -508,7 +508,7 @@ object Similarity {
     // corpus (BroadcastBoundSpec, r15) — and a corpus/stride-row batch
     // gains nothing from a repartition anyway.
     val scored = cand
-      .join(broadcast(queryBatch(Dedup.quantized(embeddings, fanOut = false)).select(
+      .join(broadcast(queryBatch(Dedup.quantized(embeddings)).select(
         col("vec_id").as("query_id"), col("qv").as("q_qv"), col("norm2").as("q_norm2"))),
         "query_id")
       .join(q.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
@@ -713,23 +713,31 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Recall of the int8-code ranking [[sqTopK]] against the exact
-    * [[bruteForceTopK]] — the [[ivfRecall]] readout for the scalar
-    * quantizer: how much ranking fidelity the 4× compression costs.
-    * Both constituents are deterministic, so fully oracled.
+  /** Per-query recall of an approximate top-k `(query_id, neighbor_id)`
+    * frame against the exact [[bruteForceTopK]]: each query's true
+    * top-`k` left-joined to the approximate one, giving `k` (true
+    * neighbors), `n_hit` (of those, the ones the approximate side found)
+    * and `recall_e4`. The shared readout of every `*Recall` below.
     */
-  def sqRecall(embeddings: DataFrame, k: Int = TopK): DataFrame = {
-    val sq = sqTopK(embeddings, k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit"))
+  private def recallVsBrute(embeddings: DataFrame, approx: DataFrame, k: Int): DataFrame =
     bruteForceTopK(embeddings, k)
       .select(col("query_id"), col("neighbor_id"))
-      .join(sq, Seq("query_id", "neighbor_id"), "left")
+      .join(
+        approx.select(col("query_id"), col("neighbor_id"), lit(1).as("__hit")),
+        Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
       .agg(count(lit(1)).as("k"), count(col("__hit")).as("n_hit"))
       .select(
         col("query_id"), col("k"), col("n_hit"),
         graft.Cols.floorDiv(col("n_hit") * 10000, col("k")).as("recall_e4"))
-  }
+
+  /** Recall of the int8-code ranking [[sqTopK]] against the exact
+    * [[bruteForceTopK]] — the [[ivfRecall]] readout for the scalar
+    * quantizer: how much ranking fidelity the 4× compression costs.
+    * Both constituents are deterministic, so fully oracled.
+    */
+  def sqRecall(embeddings: DataFrame, k: Int = TopK): DataFrame =
+    recallVsBrute(embeddings, sqTopK(embeddings, k), k)
 
   /** IVF quantizer health: the cell-size balance of the coarse partition
     * every `ann_topk_ivf*` probe depends on. One row: cell/vector
@@ -1225,18 +1233,8 @@ object Similarity {
     * that is the readout's job: it quantifies why [[rqRerank]]'s
     * precision stage is not optional for a coarse additive index.
     */
-  def rqRecall(embeddings: DataFrame, k: Int = TopK): DataFrame = {
-    val rq = rqTopK(embeddings, k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit"))
-    bruteForceTopK(embeddings, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(rq, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("k"), count(col("__hit")).as("n_hit"))
-      .select(
-        col("query_id"), col("k"), col("n_hit"),
-        graft.Cols.floorDiv(col("n_hit") * 10000, col("k")).as("recall_e4"))
-  }
+  def rqRecall(embeddings: DataFrame, k: Int = TopK): DataFrame =
+    recallVsBrute(embeddings, rqTopK(embeddings, k), k)
 
   /** ADC (asymmetric distance computation) top-k over the PQ codes —
     * the search half of the [[productQuantize]] compression: the corpus
@@ -2325,18 +2323,8 @@ object Similarity {
     * (query, neighbor) over query-sized tables.
     */
   def ivfRecall(
-      embeddings: DataFrame, k: Int = TopK, nprobe: Int = 2, dim: Int = 64): DataFrame = {
-    val ivf = ivfTopK(embeddings, k, nprobe, dim)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit"))
-    bruteForceTopK(embeddings, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(ivf, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("k"), count(col("__hit")).as("n_hit"))
-      .select(
-        col("query_id"), col("k"), col("n_hit"),
-        graft.Cols.floorDiv(col("n_hit") * 10000, col("k")).as("recall_e4"))
-  }
+      embeddings: DataFrame, k: Int = TopK, nprobe: Int = 2, dim: Int = 64): DataFrame =
+    recallVsBrute(embeddings, ivfTopK(embeddings, k, nprobe, dim), k)
 
   /** LSH recall CURVE — recall@k for k ∈ `ks` from ONE pair of rankings:
     * brute and LSH top-k tables are built once, the membership join fans
@@ -2381,18 +2369,8 @@ object Similarity {
     * Scale: the two constituents keep their own plans; scoring is a
     * membership join on (query, neighbor) over query-sized tables.
     */
-  def pqRecall(embeddings: DataFrame, k: Int = TopK): DataFrame = {
-    val pq = adcTopK(embeddings, k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit"))
-    bruteForceTopK(embeddings, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(pq, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("k"), count(col("__hit")).as("n_hit"))
-      .select(
-        col("query_id"), col("k"), col("n_hit"),
-        graft.Cols.floorDiv(col("n_hit") * 10000, col("k")).as("recall_e4"))
-  }
+  def pqRecall(embeddings: DataFrame, k: Int = TopK): DataFrame =
+    recallVsBrute(embeddings, adcTopK(embeddings, k), k)
 
   /** IVF-PQ recall@k vs nprobe — the [[lshRecallCurve]] readout for the
     * composed production index ([[ivfPqTopK]]): one row per probe width,
@@ -2867,18 +2845,8 @@ object Similarity {
     * constituents deterministic → fully oracled.
     */
   def binaryRecall(embeddings: DataFrame, k: Int = TopK,
-                   overfetch: Int = 4): DataFrame = {
-    val bin = binaryTopK(embeddings, k, overfetch)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit"))
-    bruteForceTopK(embeddings, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(bin, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("k"), count(col("__hit")).as("n_hit"))
-      .select(
-        col("query_id"), col("k"), col("n_hit"),
-        graft.Cols.floorDiv(col("n_hit") * 10000, col("k")).as("recall_e4"))
-  }
+                   overfetch: Int = 4): DataFrame =
+    recallVsBrute(embeddings, binaryTopK(embeddings, k, overfetch), k)
 
   // Per-QUERY opt-in fan-out of the single-split embeddings scan (guide
   // §2.5): only the pair/rerank queries whose per-row vector math

@@ -11,55 +11,50 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Config parity: property names and defaults mirror the reference's
   * KDAApplicationProperties (ClickstreamProcessor.java:64-119; mandatory
   * BootstrapServers check at :92-98). A reference user can carry their
-  * config over unchanged — including the wire format: the default decode
-  * path is Glue-framed binary Avro (ClickstreamProcessor.java:114-119),
-  * with JSON as the dev/generator alternative.
+  * config over unchanged — including the wire format: events arrive as
+  * Glue-framed binary Avro (ClickstreamProcessor.java:114-119).
   */
 object ClickstreamApp {
 
-  /** Reference property names (KDAApplicationProperties.json:1-18).
-    * `format`: "avro" (the reference's wire format, registry framing
-    * auto-detected per record) or "json" (dev/generator path).
-    */
+  /** Reference property names (KDAApplicationProperties.json:1-18). */
   final case class Config(
       bootstrapServers: String,
       inputTopic: String = ClickstreamStreams.Topics.Input,
       departmentsTopic: String = ClickstreamStreams.Topics.Departments,
       userKpisTopic: String = ClickstreamStreams.Topics.UserKpis,
       buySessionsTopic: String = ClickstreamStreams.Topics.BuySessions,
-      format: String = "avro",
       sessionGap: String = "1 second",
       kpiWindow: String = "10 seconds",
       checkpointRoot: String = "/tmp/graft-checkpoints",
       elasticsearchEndpoint: Option[String] = None)
 
   object Config {
-    /** Mandatory-parameter validation (ClickstreamProcessor.java:92-98). */
+    /** Mandatory-parameter validation (ClickstreamProcessor.java:92-98).
+      * `Format`, when present, must be `avro`: binary Avro is the only
+      * wire format the app decodes.
+      */
     def fromProperties(props: Map[String, String]): Config = {
       val servers = props.getOrElse(
         "BootstrapServers",
         throw new IllegalArgumentException(
           "Missing mandatory parameter: BootstrapServers"))
+      props.get("Format").filter(_ != "avro").foreach { other =>
+        throw new IllegalArgumentException(s"unknown wire format: $other (want avro)")
+      }
       Config(
         bootstrapServers = servers,
         inputTopic = props.getOrElse("Topic", ClickstreamStreams.Topics.Input),
-        format = props.getOrElse("Format", "avro"),
         elasticsearchEndpoint = props.get("ElasticsearchEndpoint"))
     }
   }
 
   /** Wire-format decode: raw Kafka frame (`value: binary`) → typed
-    * ClickEvent columns. The Avro path is the production default
-    * (registry-framed binary, AvroClickEvents.decode); JSON is the
-    * generator/dev path.
+    * ClickEvent columns (registry-framed binary Avro,
+    * AvroClickEvents.decode). No `cfg` field affects the decode; perfbench's
+    * stream workload calls this three-argument form.
     */
   def decodeEvents(spark: SparkSession, raw: DataFrame, cfg: Config): DataFrame =
-    cfg.format match {
-      case "avro" => AvroClickEvents.decode(spark, raw).toDF()
-      case "json" => ClickstreamStreams.decodeJsonEvents(raw)
-      case other =>
-        throw new IllegalArgumentException(s"unknown wire format: $other (want avro|json)")
-    }
+    AvroClickEvents.decode(spark, raw).toDF()
 
   /** The three pipelines from one decoded ClickEvent frame to their
     * JSON-encoded output frames, keyed by the reference's sink names.

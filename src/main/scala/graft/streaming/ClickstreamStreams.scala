@@ -208,18 +208,4 @@ object ClickstreamStreams {
         col("product_type") =!= "" && col("product_type") =!= "N/A",
       isCheckoutCol = col("event_type") === "order_checkout",
       dept = col("product_type"))
-
-  /** Decode a JSON-encoded ClickEvent stream (test/generator path) into
-    * the typed event columns + event-time `ts`.
-    */
-  def decodeJsonEvents(raw: DataFrame): DataFrame = {
-    val schema = "ip STRING, eventtimestamp BIGINT, devicetype STRING, " +
-      "event_type STRING, product_type STRING, userid INT, globalseq BIGINT, prevglobalseq BIGINT"
-    raw
-      .select(from_json(
-        col("value").cast("string"),
-        org.apache.spark.sql.types.StructType.fromDDL(schema)).as("e"))
-      .select(col("e.*"))
-      .withColumn("ts", timestamp_millis(col("eventtimestamp")))
-  }
 }

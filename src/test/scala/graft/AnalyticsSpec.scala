@@ -1465,5 +1465,21 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("src", "dst")
     val got = Analytics.assortativity(messy).as[(Long, Long, Option[Double])].collect().head
     assert(got === ((4L, 3L, Some(-1.0))))
+    // every canonical-edge consumer applies the same rule: a self-loop
+    // and a reversed duplicate leave its result exactly as without them
+    // (a 4-clique, a triangle hanging off it, and a pendant edge)
+    val clean = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (5L, 6L), (4L, 6L), (6L, 7L)).toDF("src", "dst")
+    val noisy = clean.union(Seq((2L, 2L), (3L, 1L)).toDF("src", "dst"))
+    Seq[(String, DataFrame => DataFrame)](
+      "triangleStats" -> (Analytics.triangleStats(_)),
+      "assortativity" -> (Analytics.assortativity(_)),
+      "degreeHistogram" -> (Analytics.degreeHistogram(_)),
+      "coreNumbers" -> (Analytics.coreNumbers(_)),
+      "edgeSupport" -> (Analytics.edgeSupport(_)),
+      "trussPeel" -> (Analytics.trussPeel(_))
+    ).foreach { case (name, op) =>
+      assert(op(noisy).collect().toSet === op(clean).collect().toSet, name)
+    }
   }
 }

@@ -40,6 +40,16 @@ class AvroClickEventsSpec extends SparkSpec {
     assert(got.toSet === fixture.toSet)
   }
 
+  test("config: Format may only name avro, the one wire format decoded") {
+    val base = Map("BootstrapServers" -> "b:9092")
+    assert(ClickstreamApp.Config.fromProperties(base).bootstrapServers === "b:9092")
+    assert(ClickstreamApp.Config.fromProperties(base + ("Format" -> "avro"))
+      === ClickstreamApp.Config.fromProperties(base))
+    val err = intercept[IllegalArgumentException](
+      ClickstreamApp.Config.fromProperties(base + ("Format" -> "json")))
+    assert(err.getMessage.contains("json"))
+  }
+
   test("app wiring: Glue-framed Avro bytes drive all three pipelines") {
     implicit val sqlCtx = spark.sqlContext
     val cfg = ClickstreamApp.Config(bootstrapServers = "unused")
