@@ -1455,7 +1455,6 @@ object SparkEntry {
     val sCols = (0 to 6).map(i => s"s$i")
     val seedS = sCols.map(c => s"0::BIGINT AS $c").mkString(", ")
     val carryS = sCols.map(c => s"w.$c AS $c").mkString(", ")
-    val passS = sCols.mkString(", ")
     val sdow = (0 to 6).map(i => s"WHEN dow = $i THEN s$i").mkString("CASE ", " ", " END")
     val newS = (0 to 6).map(i =>
       s"(CASE WHEN dow = $i THEN ${fd2(s"y4 - l2 + s$i")} ELSE s$i END)::BIGINT AS s$i")

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    shingle (stop-phrase) would skew this join at 100 TB: AQE skew-join
   *    handles moderate skew, and a df-cap filter (drop shingles appearing
   *    in > X% of docs) is the standard mitigation, applied here via
-  *    `maxShingleDf`.
+  *    [[MaxShingleDf]].
   *  - SimHash is a narrow scan + one aggregate (60 algebraic sums).
   *  - Embedding near-dup quantizes to 64-bit ints so dot products are
   *    exact; the brute-force pair scan is the correctness baseline, the
@@ -47,6 +47,39 @@ object Dedup {
     * cap ON, and the DuckDB oracle applies the identical filter.
     */
   val MaxShingleDf = 50
+
+  /** Posting-list df-cap for [[charGramNamePairs]]: character 3-grams
+    * appearing in more than this many distinct names are dropped before
+    * the pair join ([[dfCapped]]), as [[MaxShingleDf]] does for shingles.
+    */
+  val MaxGramDf = 1000
+
+  /** The rows of `rows` whose `key` occurs in at most `maxDf` rows — the
+    * df-cap every posting-list join here applies before its self-join, so
+    * a stop-shingle's |posting|² never enters the pair space.
+    */
+  private def dfCapped(rows: DataFrame, key: String, maxDf: Int): DataFrame = {
+    val rare = rows.groupBy(col(key)).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxDf).select(col(key))
+    rows.join(rare, key)
+  }
+
+  /** The df-capped shingle posting overlap shared by the n-gram pair
+    * operators: for every doc pair sharing a kept shingle, `n_common`
+    * (shared kept shingles) with each side's kept-shingle count as
+    * `ca.n_shingles` and `cb.n_shingles`. Quadratic only within a kept
+    * shingle's posting list, so the pair space is Σmin(df, cap)².
+    */
+  private def postingOverlap(sh0: DataFrame): DataFrame = {
+    val sh = dfCapped(sh0, "shingle", MaxShingleDf)
+    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
+    sh.as("a")
+      .join(sh.as("b"), col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_id_1"), col("b.doc_id").as("doc_id_2"))
+      .agg(count(lit(1)).as("n_common"))
+      .join(counts.as("ca"), col("doc_id_1") === col("ca.doc_id"))
+      .join(counts.as("cb"), col("doc_id_2") === col("cb.doc_id"))
+  }
 
   /** Exact dedup on normalized content: groups of byte-identical documents
     * keep the lowest doc_id (the canonical survivor).
@@ -105,42 +138,20 @@ object Dedup {
       .select(col("doc_id"), explode(Cols.shinglesOfTokens(col("toks"), 3)).as("shingle"))
 
   /** n-gram Jaccard near-dup pairs: candidate pairs share ≥1 shingle
-    * (posting-list join), similarity = |∩| / |∪| over distinct shingle
-    * sets, thresholded.
-    *
-    * @param maxShingleDf drop shingles appearing in more than this many
-    *   documents before the join — bounds posting-list skew
-    *   ([[MaxShingleDf]], the registered default; the DuckDB oracle
-    *   applies the identical filter so the query stays hash-checked).
-    *   Pass Int.MaxValue to disable for an exact all-shingles baseline.
+    * (posting-list join, [[postingOverlap]]), similarity = |∩| / |∪| over
+    * distinct shingle sets, thresholded. Shingles appearing in more than
+    * [[MaxShingleDf]] documents are dropped before the join; the DuckDB
+    * oracle applies the identical filter, so the query stays hash-checked.
     */
-  def ngramJaccard(
-      docs: DataFrame,
-      threshold: Double = JaccardThreshold,
-      maxShingleDf: Int = MaxShingleDf): DataFrame =
-    ngramJaccardFrom(shingleRows(docs), threshold, maxShingleDf)
+  def ngramJaccard(docs: DataFrame, threshold: Double = JaccardThreshold): DataFrame =
+    ngramJaccardFrom(shingleRows(docs), threshold)
 
   /** [[ngramJaccard]] over an already-built shingle table (the
     * [[taggedMethodPairs]] shared-index seam). */
   private[graft] def ngramJaccardFrom(
       sh0: DataFrame,
-      threshold: Double = JaccardThreshold,
-      maxShingleDf: Int = MaxShingleDf): DataFrame = {
-    val sh =
-      if (maxShingleDf == Int.MaxValue) sh0
-      else {
-        val rare = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxShingleDf).select(col("shingle"))
-        sh0.join(rare, "shingle")
-      }
-    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val inter = sh.as("a")
-      .join(sh.as("b"), col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_id_1"), col("b.doc_id").as("doc_id_2"))
-      .agg(count(lit(1)).as("n_common"))
-    inter
-      .join(counts.as("ca"), col("doc_id_1") === col("ca.doc_id"))
-      .join(counts.as("cb"), col("doc_id_2") === col("cb.doc_id"))
+      threshold: Double = JaccardThreshold): DataFrame =
+    postingOverlap(sh0)
       .select(
         col("doc_id_1"),
         col("doc_id_2"),
@@ -149,7 +160,6 @@ object Dedup {
             (col("ca.n_shingles") + col("cb.n_shingles") - col("n_common")).cast("double"),
           4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
 
   /** Jaccard threshold sensitivity sweep: surviving pair count and
     * affected-document count at every candidate threshold in ONE pass
@@ -165,20 +175,9 @@ object Dedup {
     */
   def thresholdSweep(
       docs: DataFrame,
-      thresholdsE4: Seq[Long] = Seq(3000L, 4000L, 5000L, 6000L, 7000L, 8000L, 9000L),
-      maxShingleDf: Int = MaxShingleDf): DataFrame = {
+      thresholdsE4: Seq[Long] = Seq(3000L, 4000L, 5000L, 6000L, 7000L, 8000L, 9000L)): DataFrame = {
     import docs.sparkSession.implicits._
-    val sh0 = shingleRows(docs)
-    val rare = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxShingleDf).select(col("shingle"))
-    val sh = sh0.join(rare, "shingle")
-    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val pairs = sh.as("a")
-      .join(sh.as("b"), col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_id_1"), col("b.doc_id").as("doc_id_2"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(counts.as("ca"), col("doc_id_1") === col("ca.doc_id"))
-      .join(counts.as("cb"), col("doc_id_2") === col("cb.doc_id"))
+    val pairs = postingOverlap(shingleRows(docs))
       .select(
         col("doc_id_1"), col("doc_id_2"),
         Cols.floorDiv(
@@ -212,26 +211,8 @@ object Dedup {
     * posting-list-bounded at 100 TB; only the scoring arithmetic differs
     * (all-integer here, no doubles at all).
     */
-  def containment(
-      docs: DataFrame,
-      thresholdE4: Long = 5000L,
-      maxShingleDf: Int = MaxShingleDf): DataFrame = {
-    val sh0 = shingleRows(docs)
-    val sh =
-      if (maxShingleDf == Int.MaxValue) sh0
-      else {
-        val rare = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxShingleDf).select(col("shingle"))
-        sh0.join(rare, "shingle")
-      }
-    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val inter = sh.as("a")
-      .join(sh.as("b"), col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_id_1"), col("b.doc_id").as("doc_id_2"))
-      .agg(count(lit(1)).as("n_common"))
-    inter
-      .join(counts.as("ca"), col("doc_id_1") === col("ca.doc_id"))
-      .join(counts.as("cb"), col("doc_id_2") === col("cb.doc_id"))
+  def containment(docs: DataFrame, thresholdE4: Long = 5000L): DataFrame =
+    postingOverlap(shingleRows(docs))
       .select(
         col("doc_id_1"),
         col("doc_id_2"),
@@ -240,7 +221,6 @@ object Dedup {
         graft.Cols.floorDiv(col("n_common") * 10000, col("cb.n_shingles"))
           .as("containment_2_e4"))
       .filter(greatest(col("containment_1_e4"), col("containment_2_e4")) >= thresholdE4)
-  }
 
   /** Exact shingle-set Jaccard join via PREFIX FILTERING (the
     * SSJoin/PPJoin family): identical output to the un-capped all-shingles
@@ -351,27 +331,18 @@ object Dedup {
     *
     * Scale: names repeat — the vocabulary is orders below the row count,
     * so the pair space is |distinct names|², not |rows|², and the df-cap
-    * on grams (`maxGramDf`) bounds posting-list skew from stop-grams
+    * on grams ([[MaxGramDf]]) bounds posting-list skew from stop-grams
     * exactly like the word-shingle operators. Match the vocabulary once,
     * then join match groups back to rows by name.
     */
-  def charGramNamePairs(
-      df: DataFrame,
-      nameCol: String,
-      thresholdE4: Long = 4000L,
-      maxGramDf: Int = 1000): DataFrame = {
+  def charGramNamePairs(df: DataFrame, nameCol: String, thresholdE4: Long = 4000L): DataFrame = {
     val names = df.select(graft.Cols.normalizeText(col(nameCol)).as("norm")).distinct()
     val n = col("norm")
     val gramArr = when(
       length(n) >= 3,
       array_distinct(transform(sequence(lit(1), length(n) - 2), i => n.substr(i, lit(3)))))
       .otherwise(array().cast("array<string>"))
-    val grams0 = names.select(n, explode(gramArr).as("gram"))
-    val grams = {
-      val rare = grams0.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxGramDf).select(col("gram"))
-      grams0.join(rare, "gram")
-    }
+    val grams = dfCapped(names.select(n, explode(gramArr).as("gram")), "gram", MaxGramDf)
     val counts = grams.groupBy(col("norm")).agg(count(lit(1)).as("n_grams"))
     grams.select(col("norm").as("name_a"), col("gram"))
       .join(grams.select(col("norm").as("name_b"), col("gram")), "gram")
@@ -402,9 +373,8 @@ object Dedup {
       df: DataFrame,
       nameCol: String,
       thresholdE4: Long = 4000L,
-      maxGramDf: Int = 1000,
       maxEdits: Int = 3): DataFrame =
-    charGramNamePairs(df, nameCol, thresholdE4, maxGramDf)
+    charGramNamePairs(df, nameCol, thresholdE4)
       .withColumn("edit_distance", levenshtein(col("name_a"), col("name_b")).cast("long"))
       .filter(col("edit_distance") <= maxEdits)
 
@@ -424,12 +394,11 @@ object Dedup {
       df: DataFrame,
       nameCol: String,
       thresholdE4: Long = 4000L,
-      maxGramDf: Int = 1000,
       maxEdits: Int = 3): DataFrame = {
     val vocab = df
       .select(graft.Cols.normalizeText(col(nameCol)).as("name")).distinct()
       .select(col("name"), graft.Cols.hash60(col("name")).as("doc_id"))
-    val pairs = charGramNamePairsVerified(df, nameCol, thresholdE4, maxGramDf, maxEdits)
+    val pairs = charGramNamePairsVerified(df, nameCol, thresholdE4, maxEdits)
       .select(
         graft.Cols.hash60(col("name_a")).as("doc_id_1"),
         graft.Cols.hash60(col("name_b")).as("doc_id_2"))
@@ -798,8 +767,7 @@ object Dedup {
   def lshPrCurve(
       docs: DataFrame,
       thresholdsE4: Seq[Long] = Seq(2500L, 3750L, 5000L, 6250L, 7500L, 8750L),
-      truthThetaE4: Long = 5000L,
-      maxShingleDf: Int = MaxShingleDf): DataFrame = {
+      truthThetaE4: Long = 5000L): DataFrame = {
     import docs.sparkSession.implicits._
     // ONE materialized shingle index feeds the prediction side's minhash
     // signatures AND the truth side's df-cap + posting join + counts —
@@ -811,17 +779,7 @@ object Dedup {
     val pred = lshFromSigs(sigs, 0.0)
       .select(col("doc_id_1"), col("doc_id_2"),
         round(col("est_jaccard") * 10000).cast("long").as("est_e4"))
-    val rare = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxShingleDf).select(col("shingle"))
-    val sh = sh0.join(rare, "shingle")
-    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val truth = sh.as("a")
-      .join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_id_1"), col("b.doc_id").as("doc_id_2"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(counts.as("ca"), col("doc_id_1") === col("ca.doc_id"))
-      .join(counts.as("cb"), col("doc_id_2") === col("cb.doc_id"))
+    val truth = postingOverlap(sh0)
       .filter(Cols.floorDiv(col("n_common") * 10000L,
         col("ca.n_shingles") + col("cb.n_shingles") - col("n_common")) >= truthThetaE4)
       .select(col("doc_id_1"), col("doc_id_2"), lit(1L).as("__true"))
@@ -890,7 +848,6 @@ object Dedup {
   def lshBandDesign(
       docs: DataFrame,
       truthThetaE4: Long = 5000L,
-      maxShingleDf: Int = MaxShingleDf,
       maxBucket: Int = 1000): DataFrame = {
     import docs.sparkSession.implicits._
     // (bands, rowsPerBand, s-curve midpoint e4 as a shared literal)
@@ -930,17 +887,7 @@ object Dedup {
           lit(thr).as("threshold_e4"), col("doc_id_1"), col("doc_id_2"))
     }.reduce(_ unionAll _)
     // exact ground truth: df-capped shingle Jaccard ≥ truthThetaE4
-    val rare = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxShingleDf).select(col("shingle"))
-    val sh = sh0.join(rare, "shingle")
-    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val truth = sh.as("a")
-      .join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_id_1"), col("b.doc_id").as("doc_id_2"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(counts.as("ca"), col("doc_id_1") === col("ca.doc_id"))
-      .join(counts.as("cb"), col("doc_id_2") === col("cb.doc_id"))
+    val truth = postingOverlap(sh0)
       .filter(Cols.floorDiv(col("n_common") * 10000L,
         col("ca.n_shingles") + col("cb.n_shingles") - col("n_common")) >= truthThetaE4)
       .select(col("doc_id_1"), col("doc_id_2"), lit(1L).as("__t"))

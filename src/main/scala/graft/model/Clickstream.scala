@@ -1,6 +1,6 @@
 package graft.model
 
-/** Record types mirroring the reference's data model (SURVEY.md §1.2).
+/** The input record type of the reference's data model (SURVEY.md §1.2).
   *
   * Input schema from the reference's Avro declaration
   * (reference: src/main/resources/avro/ClickEvent.avsc:1-14):
@@ -15,37 +15,3 @@ final case class ClickEvent(
     userid: Int,
     globalseq: Long,
     prevglobalseq: Long)
-
-/** Per-session output (reference: UserIdSessionEvent.java:5-12). `userId` is
-  * widened long (the reference widens int -> long); `deptList` is the
-  * distinct set of qualifying product_types, kept sorted for determinism
-  * (the reference's HashSet is unordered).
-  */
-final case class UserIdSessionEvent(
-    userId: Long,
-    eventCount: Int,
-    orderCheckoutEventCount: Int,
-    deptList: Seq[String],
-    eventKey: Int,
-    windowBeginTime: Long,
-    windowEndTime: Long)
-
-/** Global session KPIs per tumbling window (reference: UserIdAggEvent.java:3-8).
-  * `percentSessionswithBuy` is integer division widened to double —
-  * bug-for-bug with the reference (UserSessionAggregates.java:28).
-  */
-final case class UserIdAggEvent(
-    userSessionCount: Int,
-    userSessionCountWithOrderCheckout: Int,
-    percentSessionswithBuy: Double,
-    windowBeginTime: Long,
-    windowEndTime: Long)
-
-/** Per-department session counts per tumbling window
-  * (reference: DepartmentsAggEvent.java:3-7).
-  */
-final case class DepartmentsAggEvent(
-    departmentName: String,
-    departmentCount: Int,
-    windowBeginTime: Long,
-    windowEndTime: Long)

@@ -1,23 +1,22 @@
 package graft.multimodal
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal-column plumbing: media payloads as opaque `binary` columns
-  * with typed metadata, decoded/feature-extracted in batched
-  * `mapPartitions` stages.
+  * with typed metadata, read by codecs in batched `mapPartitions` stages.
   *
-  * Decode comes in two tiers. [[Codecs]] REALLY decodes the formats whose
-  * decode is pure header arithmetic (binary PPM and 24-bit BMP images,
-  * PCM WAV audio) —
-  * no native libraries needed, verified byte-exactly in MultimodalSpec.
-  * Formats that need libjpeg/ffmpeg (absent in this environment) fall
-  * back to [[DecodeStub.decode]], which derives deterministic fake
-  * dimensions from the payload bytes; the registered oracle queries run
-  * on the stub path because the testdata payloads are synthetic. The
-  * plumbing — schema, binary column handling, partition-batched typed
-  * pipeline, Encoder wiring — is identical for both tiers.
+  * [[Codecs]] holds one pure-JVM reader per media format whose layout is
+  * header arithmetic: binary PPM (P6) images, concatenated-P6 video clips
+  * and 16-bit PCM WAV audio. No native library is needed, and each probe
+  * is pinned byte-exactly in MultimodalSpec. The registered queries build
+  * those payloads from the document text ([[asPpmImages]],
+  * [[asVideoClips]], [[asWavAudio]]), so the SQL oracle can replay them.
+  * `mm_decode_features` and `mm_type_stats` run [[DecodeStub]] instead,
+  * which derives deterministic fake features from any payload's size and
+  * hash.
   *
   * Scale notes: media blobs ride in their own column so parquet column
   * pruning keeps metadata-only queries from ever reading the bytes;
@@ -61,44 +60,29 @@ object Multimodal {
     }
   }
 
-  /** Decoded media properties from a REAL codec ([[Codecs]]) or the stub
-    * fallback for formats this environment can't decode.
-    */
-  final case class DecodedMedia(
-      doc_id: Long,
-      format: String, // "ppm" | "wav" | "bmp" | "stub"
-      width: Long, // pixels (images) / 0 (audio)
-      height: Long,
-      channels: Long, // audio channels / 3 for RGB images
-      sample_rate: Long, // Hz (audio) / 0 (images)
-      n_frames: Long, // samples per channel (audio) / 1 (still images)
-      mean_value: Double) // mean sample/pixel value — the "feature"
-
-  /** Real pure-JVM codecs for formats whose decode is header arithmetic +
-    * byte math: binary PPM (P6) images and PCM WAV audio. These prove the
-    * decode stage on genuine media bytes with no native codec libraries;
-    * formats that need libjpeg/ffmpeg stay behind [[DecodeStub]] in this
-    * environment (the documented stub), with exactly this seam to plug
-    * them into.
+  /** Pure-JVM readers for the formats whose layout is header arithmetic
+    * plus byte math: binary PPM (P6) images, concatenated-P6 clips and
+    * 16-bit PCM WAV audio. Each building block has one definition here:
+    * the little-endian reads, the P6 header, the gray read, the clamped
+    * RIFF walk, the PCM sample load, DC removal and the multi-frame walk.
+    * Every probe is total: a truncated or crafted payload reads as a
+    * defined result, never a task failure, because one corrupt record
+    * must never fail the job.
     */
   object Codecs {
 
-    def sniff(payload: Array[Byte]): String =
-      if (payload.length >= 3 && payload(0) == 'P' && payload(1) == '6' &&
-        Character.isWhitespace(payload(2))) "ppm"
-      else if (payload.length >= 44 &&
-        new String(payload, 0, 4, "US-ASCII") == "RIFF" &&
-        new String(payload, 8, 4, "US-ASCII") == "WAVE") "wav"
-      // only the 24-bit BI_RGB form is "bmp" here — palette/compressed
-      // variants fall through to the stub tier rather than erroring a task
-      else if (payload.length >= 54 && payload(0) == 'B' && payload(1) == 'M' &&
-        ((payload(28) & 0xff) | ((payload(29) & 0xff) << 8)) == 24 &&
-        (payload(30) | payload(31) | payload(32) | payload(33)) == 0) "bmp"
-      else "unknown"
+    private def le16(b: Array[Byte], o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
 
-    /** Parsed P6 header: (width, height, maxval, pixel-data offset). */
-    private[multimodal] def ppmHeader(bytes: Array[Byte]): (Long, Long, Long, Int) = {
-      var i = 2
+    private def le32(b: Array[Byte], o: Int): Long =
+      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
+        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
+
+    /** Parsed P6 header of the frame at `start`: (width, height, maxval,
+      * absolute pixel-data offset).
+      */
+    private[multimodal] def ppmHeader(
+        bytes: Array[Byte], start: Int = 0): (Long, Long, Long, Int) = {
+      var i = start + 2
       def skipSpace(): Unit = {
         while (i < bytes.length &&
           (Character.isWhitespace(bytes(i)) || bytes(i) == '#')) {
@@ -119,99 +103,19 @@ object Multimodal {
       (w, h, maxval, i)
     }
 
-    /** Binary PPM (P6): "P6" <w> <h> <maxval> then w*h RGB triples.
-      * Feature = mean over all RGB samples.
+    /** Integer gray `(r+g+b)/3` of the RGB triple at byte offset `o`. A
+      * pixel the payload does not fully back reads as black (0), like
+      * [[resizePpm]]'s missing pixels.
       */
-    def decodePpm(doc_id: Long, bytes: Array[Byte]): DecodedMedia = {
-      val (w, h, _, off) = ppmHeader(bytes)
-      var sum = 0L
-      val n = (w * h * 3).toInt
-      var j = 0
-      while (j < n && off + j < bytes.length) { sum += bytes(off + j) & 0xff; j += 1 }
-      DecodedMedia(doc_id, "ppm", w, h, channels = 3, sample_rate = 0,
-        n_frames = 1, mean_value = if (n == 0) 0.0 else sum.toDouble / n)
-    }
-
-    /** Parsed BMP header: (width, height, topDown, pixel-data offset,
-      * padded row stride). Only the 24-bit uncompressed (BI_RGB) form —
-      * the one whose decode is pure header arithmetic. BMP rows are
-      * bottom-up unless height is negative, and each row pads to 4 bytes.
-      */
-    private[multimodal] def bmpHeader(bytes: Array[Byte]): (Int, Int, Boolean, Int, Int) = {
-      def le16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      def le32(o: Int): Int =
-        (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-          ((bytes(o + 2) & 0xff) << 16) | ((bytes(o + 3) & 0xff) << 24)
-      val dataOff = le32(10)
-      val w = le32(18)
-      val hRaw = le32(22)
-      val bpp = le16(28)
-      val compression = le32(30)
-      require(bpp == 24 && compression == 0,
-        s"only 24-bit BI_RGB BMP is a real codec here (bpp=$bpp, compression=$compression)")
-      val stride = (w * 3 + 3) / 4 * 4
-      (w, math.abs(hRaw), hRaw < 0, dataOff, stride)
-    }
-
-    /** 24-bit uncompressed BMP: feature = mean over the BGR samples,
-      * skipping each row's alignment padding.
-      */
-    def decodeBmp(doc_id: Long, bytes: Array[Byte]): DecodedMedia = {
-      val (w, h, _, off, stride) = bmpHeader(bytes)
-      var sum = 0L
-      var row = 0
-      while (row < h) {
-        val base = off + row * stride
-        var jj = 0
-        val rowEnd = math.min(w * 3, math.max(0, bytes.length - base))
-        while (jj < rowEnd) { sum += bytes(base + jj) & 0xff; jj += 1 }
-        row += 1
-      }
-      val n = w.toLong * h * 3
-      DecodedMedia(doc_id, "bmp", w, h, channels = 3, sample_rate = 0,
-        n_frames = 1, mean_value = if (n == 0) 0.0 else sum.toDouble / n)
-    }
-
-    /** REAL nearest-neighbor resize for 24-bit BMP — emits a valid
-      * minimal bottom-up BMP (54-byte header, BI_RGB, padded rows) whose
-      * pixel (x, y) is the source pixel (x·w/newW, y·h/newH). Handles
-      * both bottom-up and top-down sources.
-      */
-    def resizeBmp(bytes: Array[Byte], newW: Int, newH: Int): Array[Byte] = {
-      val (w, h, topDown, off, stride) = bmpHeader(bytes)
-      val outStride = (newW * 3 + 3) / 4 * 4
-      val out = java.nio.ByteBuffer.allocate(54 + outStride * newH)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      out.put('B'.toByte).put('M'.toByte).putInt(54 + outStride * newH)
-        .putInt(0).putInt(54)
-        .putInt(40).putInt(newW).putInt(newH).putShort(1).putShort(24)
-        .putInt(0).putInt(outStride * newH).putInt(2835).putInt(2835)
-        .putInt(0).putInt(0)
-      val arr = out.array()
-      var y = 0
-      while (y < newH) {
-        // both buffers in STORAGE order; map through visual space so
-        // top-down sources resize correctly into the bottom-up output
-        val visY = newH - 1 - y // visual row of output storage row y
-        val srcVis = (visY.toLong * h / newH).toInt
-        val srcRow = if (topDown) srcVis else h - 1 - srcVis
-        var x = 0
-        while (x < newW) {
-          val sx = (x.toLong * w / newW).toInt
-          val src = off + srcRow * stride + sx * 3
-          val dst = 54 + y * outStride + x * 3
-          arr(dst) = bytes(src); arr(dst + 1) = bytes(src + 1); arr(dst + 2) = bytes(src + 2)
-          x += 1
-        }
-        y += 1
-      }
-      arr
-    }
+    private def gray(b: Array[Byte], o: Long): Int =
+      if (o >= 0 && o + 2 < b.length) {
+        val i = o.toInt
+        ((b(i) & 0xff) + (b(i + 1) & 0xff) + (b(i + 2) & 0xff)) / 3
+      } else 0
 
     /** REAL nearest-neighbor image resize for binary PPM — emits a valid
       * P6 whose pixel (x, y) is the source pixel (x·w/newW, y·h/newH).
-      * Pure byte gather; the resize stage of an image pipeline with no
-      * native libraries.
+      * Pure byte gather; the resize step of [[aHashPpm]] and [[dHashPpm]].
       */
     def resizePpm(bytes: Array[Byte], newW: Int, newH: Int): Array[Byte] = {
       val (w, h, maxval, off) = ppmHeader(bytes)
@@ -227,8 +131,7 @@ object Multimodal {
           // Long index + bounds guard: a truncated payload (header claims
           // more pixels than the bytes carry) or a >715M-pixel image
           // (Int overflow in the offset math) must yield black pixels for
-          // the missing range, not crash the executor — one corrupt
-          // record must never fail the job (decodePpm guards the same way)
+          // the missing range, not crash the executor
           val so = off.toLong + (sy * w + sx) * 3
           if (so >= 0 && so + 2 < bytes.length) {
             out(o) = bytes(so.toInt); out(o + 1) = bytes(so.toInt + 1)
@@ -261,8 +164,7 @@ object Multimodal {
       var i = 0
       var sum = 0L
       while (i < 64) {
-        val o = off + i * 3
-        val g = ((small(o) & 0xff) + (small(o + 1) & 0xff) + (small(o + 2) & 0xff)) / 3
+        val g = gray(small, off + i * 3)
         grays(i) = g
         sum += g
         i += 1
@@ -292,8 +194,7 @@ object Multimodal {
       val grays = new Array[Long](72)
       var i = 0
       while (i < 72) {
-        val o = off + i * 3
-        grays(i) = ((small(o) & 0xff) + (small(o + 1) & 0xff) + (small(o + 2) & 0xff)) / 3
+        grays(i) = gray(small, off + i * 3)
         i += 1
       }
       val sb = new java.lang.StringBuilder(64)
@@ -314,96 +215,64 @@ object Multimodal {
       * actually exist. The clamp is the corrupt-input guard every walker
       * needs: a chunk length ≥ 2³¹ turns `len.toInt` negative and steps
       * the cursor BACKWARDS (an executor spinning forever on one
-      * record), and an over-claiming length walks reads past the buffer
-      * — both violate the "one corrupt record must never fail the job"
-      * rule [[resizePpm]] follows. Clamped, the cursor advances ≥ 8
-      * bytes per chunk, so the walk always terminates.
+      * record), and an over-claiming length walks reads past the buffer.
+      * Clamped, the cursor advances ≥ 8 bytes per chunk, so the walk
+      * always terminates.
       */
     private def walkRiff(bytes: Array[Byte])(f: (String, Int, Long) => Unit): Unit = {
-      def le32(o: Int): Long =
-        (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-          ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
       var o = 12
       while (o + 8 <= bytes.length) {
         val id = new String(bytes, o, 4, "US-ASCII")
-        val len = math.min(le32(o + 4), (bytes.length - o - 8).toLong)
+        val len = math.min(le32(bytes, o + 4), (bytes.length - o - 8).toLong)
         f(id, o + 8, len)
         o += 8 + len.toInt + (len.toInt & 1)
       }
     }
 
-    /** REAL frame sampling for 16-bit PCM WAV — keeps every `everyK`-th
-      * frame (all channels) and re-emits a valid minimal RIFF/WAVE
-      * container with patched sizes. The frame-sample stage of an
-      * audio/video pipeline (video frame-sampling is byte-for-byte the
-      * same shape: stride over fixed-size frames, rewrite the container).
+    /** The signed 16-bit samples of a PCM WAV, read over [[walkRiff]]: the
+      * fmt chunk gives the bits per sample (a clip with no fmt chunk is
+      * read as 16-bit), the LAST data chunk holds the samples, and only
+      * the samples whose bytes exist are loaded. A non-16-bit clip or a
+      * missing data chunk gives no samples.
       */
-    def sampleWavFrames(bytes: Array[Byte], everyK: Int): Array[Byte] = {
-      val d = decodeWav(0L, bytes)
-      val channels = d.channels.toInt
-      val rate = d.sample_rate.toInt
-      // re-locate the data chunk with decodeWav's EXACT walk — i.e. keep
-      // the LAST data chunk, since that is the one n_frames was sized
-      // from (stopping at the first would copy from the wrong offset when
-      // a stray/empty data chunk precedes the real one)
-      var dataOff = -1
-      walkRiff(bytes) { (id, off, _) => if (id == "data") dataOff = off }
-      val frameBytes = channels * 2
-      // keep only frames whose bytes actually exist: a missing data chunk
-      // (dataOff = -1) or a header that over-claims yields an empty/short
-      // sample, never an out-of-bounds read
-      val kept =
-        if (dataOff < 0 || frameBytes == 0) Array.empty[Long]
-        else (0L until d.n_frames by everyK)
-          .filter(f => dataOff + (f + 1) * frameBytes <= bytes.length).toArray
-      val dataLen = kept.length * frameBytes
-      val outBuf = java.nio.ByteBuffer
-        .allocate(44 + dataLen).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      outBuf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-        .put("WAVE".getBytes("US-ASCII"))
-        .put("fmt ".getBytes("US-ASCII")).putInt(16)
-        .putShort(1.toShort).putShort(channels.toShort).putInt(rate)
-        .putInt(rate * frameBytes).putShort(frameBytes.toShort).putShort(16.toShort)
-        .put("data".getBytes("US-ASCII")).putInt(dataLen)
-      kept.foreach { f =>
-        outBuf.put(bytes, (dataOff + f * frameBytes).toInt, frameBytes)
-      }
-      outBuf.array()
-    }
-
-    /** PCM WAV: RIFF/WAVE container; reads the fmt chunk (channels, rate,
-      * bits) and averages the 16-bit samples of the data chunk.
-      */
-    def decodeWav(doc_id: Long, bytes: Array[Byte]): DecodedMedia = {
-      def le16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      def le32(o: Int): Long =
-        (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-          ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
-      var channels = 0L; var rate = 0L; var bits = 16
+    def pcm16(bytes: Array[Byte]): Array[Long] = {
+      var bits = 16
       var dataOff = -1; var dataLen = 0L
       walkRiff(bytes) { (id, off, len) =>
-        if (id == "fmt " && len >= 16) {
-          channels = le16(off + 2); rate = le32(off + 4); bits = le16(off + 14)
-        } else if (id == "data") { dataOff = off; dataLen = len }
+        if (id == "fmt " && len >= 16) bits = le16(bytes, off + 14)
+        else if (id == "data") { dataOff = off; dataLen = len }
       }
-      val bytesPerSample = bits / 8
-      val nSamples = if (dataOff < 0 || bytesPerSample == 0) 0L else dataLen / bytesPerSample
+      val n =
+        if (dataOff < 0 || bits != 16) 0
+        else math.min(dataLen / 2, (bytes.length - dataOff).toLong / 2).toInt
+      val s = new Array[Long](n)
+      var i = 0
+      while (i < n) { s(i) = le16(bytes, dataOff + 2 * i).toShort.toLong; i += 1 }
+      s
+    }
+
+    /** DC removal in exact integers: over the n samples the CENTERED
+      * signal is `n·sᵢ − Σs` (scaling by n keeps it integral; its sign
+      * pattern equals that of sᵢ − mean). Returns (Σs, max |n·sᵢ − Σs|).
+      */
+    private def centered(s: Array[Long]): (Long, Long) = {
+      val n = s.length.toLong
       var sum = 0L
-      var j = 0
-      while (j < nSamples && bits == 16) {
-        val s = le16(dataOff + j.toInt * 2).toShort
-        sum += s; j += 1
+      var i = 0
+      while (i < s.length) { sum += s(i); i += 1 }
+      var peak = 0L
+      i = 0
+      while (i < s.length) {
+        val c = math.abs(n * s(i) - sum)
+        if (c > peak) peak = c
+        i += 1
       }
-      DecodedMedia(doc_id, "wav", width = 0, height = 0, channels = channels,
-        sample_rate = rate,
-        n_frames = if (channels == 0) 0 else nSamples / channels,
-        mean_value = if (nSamples == 0) 0.0 else sum.toDouble / nSamples)
+      (sum, peak)
     }
 
     /** Energy fingerprint of a 16-bit PCM WAV — the audio twin of
-      * [[aHashPpm]]: the container is walked exactly like [[decodeWav]],
-      * the raw 16-bit signed sample stream is split into `windows` equal
-      * windows (tail samples beyond an even split are ignored), each
+      * [[aHashPpm]]: the [[pcm16]] sample stream is split into `windows`
+      * equal windows (tail samples beyond an even split are ignored), each
       * window's energy is the exact integer Σ s², and bit w is set iff
       * `windows·E_w > ΣE` — strictly above the mean energy. Emitted as a
       * `windows`-char bitstring: a loudness *shape* signature, invariant
@@ -412,17 +281,8 @@ object Multimodal {
       * matches speech.
       */
     def fingerprintWav(bytes: Array[Byte], windows: Int = 64): String = {
-      def le16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      var bits16 = 16
-      var dataOff = -1; var dataLen = 0L
-      walkRiff(bytes) { (id, off, len) =>
-        if (id == "fmt " && len >= 16) bits16 = le16(off + 14)
-        else if (id == "data") { dataOff = off; dataLen = len }
-      }
-      val nSamples =
-        if (dataOff < 0 || bits16 != 16) 0L
-        else math.min(dataLen / 2, (bytes.length - dataOff) / 2)
-      val per = nSamples / windows
+      val s = pcm16(bytes)
+      val per = s.length / windows
       val sb = new java.lang.StringBuilder(windows)
       if (per == 0) { // too short for the window grid: all-silent signature
         var w = 0
@@ -436,8 +296,8 @@ object Multimodal {
         var e = 0L
         var k = 0
         while (k < per) {
-          val s = le16(dataOff + ((w * per + k) * 2).toInt).toShort.toLong
-          e += s * s
+          val x = s(w * per + k)
+          e += x * x
           k += 1
         }
         energies(w) = e
@@ -452,32 +312,21 @@ object Multimodal {
       sb.toString
     }
 
-    /** Exact integer autocorrelation of a 16-bit PCM WAV: the container
-      * walk of [[fingerprintWav]], then `R(L) = Σ s[i]·s[i+L]` for
-      * L = 1..maxLag with `R(0)` as the energy reference. Returns
-      * (bestLag, rBest, r0) where bestLag is the SMALLEST lag attaining
-      * the max (first-occurrence argmax, the deterministic tie-break) —
-      * the classic dominant-period probe behind pitch detection and
-      * buzz/hum QA, kept in pure integer math so every engine agrees
-      * bit-for-bit. An empty or non-16-bit clip reports (0, 0, 0).
+    /** Exact integer autocorrelation of a 16-bit PCM WAV: over the
+      * [[pcm16]] samples, `R(L) = Σ s[i]·s[i+L]` for L = 1..maxLag with
+      * `R(0)` as the energy reference. Returns (bestLag, rBest, r0) where
+      * bestLag is the SMALLEST lag attaining the max (first-occurrence
+      * argmax, the deterministic tie-break) — the classic dominant-period
+      * probe behind pitch detection and buzz/hum QA, kept in pure integer
+      * math so every engine agrees bit-for-bit. An empty or non-16-bit
+      * clip reports (0, 0, 0).
       */
     def autocorrWav(bytes: Array[Byte], maxLag: Int = 32): (Int, Long, Long) = {
-      def le16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      var bits16 = 16
-      var dataOff = -1; var dataLen = 0L
-      walkRiff(bytes) { (id, off, len) =>
-        if (id == "fmt " && len >= 16) bits16 = le16(off + 14)
-        else if (id == "data") { dataOff = off; dataLen = len }
-      }
-      val n =
-        if (dataOff < 0 || bits16 != 16) 0
-        else math.min(dataLen / 2, (bytes.length - dataOff).toLong / 2).toInt
+      val s = pcm16(bytes)
+      val n = s.length
       if (n == 0) return (0, 0L, 0L)
-      val s = new Array[Long](n)
-      var i = 0
-      while (i < n) { s(i) = le16(dataOff + 2 * i).toShort.toLong; i += 1 }
       var r0 = 0L
-      i = 0
+      var i = 0
       while (i < n) { r0 += s(i) * s(i); i += 1 }
       var bestLag = 0; var rBest = Long.MinValue
       var lag = 1
@@ -491,111 +340,87 @@ object Multimodal {
       (bestLag, rBest, r0)
     }
 
+    /** Gray-level histogram of a binary PPM plane: 256 counts over the
+      * declared w·h pixels, and that pixel count. Only the pixels the
+      * payload backs are read; the rest count as black (level 0)
+      * arithmetically, so a header that claims more pixels than the bytes
+      * carry costs no more than the bytes do. A zero dimension, or a w·h
+      * that overflows a Long, is an empty plane.
+      */
+    private def grayLevels(bytes: Array[Byte]): (Array[Long], Long) = {
+      val (w, h, _, off) = ppmHeader(bytes)
+      val n = if (w <= 0 || h <= 0 || w > Long.MaxValue / h) 0L else w * h
+      val counts = new Array[Long](256)
+      val backed = math.min(n, math.max(0L, (bytes.length - off).toLong) / 3)
+      var i = 0L
+      while (i < backed) { counts(gray(bytes, off + 3 * i)) += 1; i += 1 }
+      counts(0) += n - backed
+      (counts, n)
+    }
+
     /** 4-bin gray histogram + exact integer mean over a binary PPM's
-      * full pixel plane — the exposure/contrast QA probe (everything in
-      * bin 0 = black frame, everything in one bin = flat/synthetic
-      * image). Bins are gray>>6 (0–63, 64–127, 128–191, 192–255);
-      * gray = (r+g+b)/3 integer, same as the hash codecs.
+      * full pixel plane ([[grayLevels]]) — the exposure/contrast QA probe
+      * (everything in bin 0 = black frame, everything in one bin =
+      * flat/synthetic image). Bins are gray>>6 (0–63, 64–127, 128–191,
+      * 192–255); gray = (r+g+b)/3 integer, same as the hash codecs.
       */
     def grayHistPpm(bytes: Array[Byte]): (Long, Long, Long, Long, Long) = {
-      val (w, h, _, off) = ppmHeader(bytes)
-      val n = (w * h).toInt
+      val (counts, n) = grayLevels(bytes)
       val bins = new Array[Long](4)
       var sum = 0L
-      var i = 0
-      while (i < n) {
-        val o = off + i * 3
-        val g =
-          if (o + 2 < bytes.length)
-            ((bytes(o) & 0xff) + (bytes(o + 1) & 0xff) + (bytes(o + 2) & 0xff)) / 3
-          else 0 // truncated payloads read as black, like resizePpm
-        bins(g >> 6) += 1
-        sum += g
-        i += 1
+      var g = 0
+      while (g < 256) {
+        bins(g >> 6) += counts(g)
+        sum += g * counts(g)
+        g += 1
       }
       (bins(0), bins(1), bins(2), bins(3), if (n == 0) 0L else sum / n)
     }
 
-    /** Gray-level entropy over a binary PPM plane — the image twin of
-      * the per-document character entropy (flat synthetic fills and
-      * single-color frames score near 0; busy natural planes approach
-      * ln of the distinct-level count): per gray level g present,
+    /** Gray-level entropy over a binary PPM plane ([[grayLevels]]) — the
+      * image twin of the per-document character entropy (flat synthetic
+      * fills and single-color frames score near 0; busy natural planes
+      * approach ln of the distinct-level count): per gray level g present,
       * `round(−(cnt/n)·ln(cnt/n)·10⁴)` summed in ascending gray order
       * (quantize-then-sum — identical terms in both engines). Returns
       * (n_gray_levels, entropy_e4); truncated payloads read as black
       * like the other plane walks.
       */
     def entropyPpm(bytes: Array[Byte]): (Long, Long) = {
-      val (w, h, _, off) = ppmHeader(bytes)
-      if (w <= 0 || h <= 0) return (0L, 0L)
-      val n = (w * h).toInt
-      val counts = new Array[Long](256)
-      var i = 0
-      while (i < n) {
-        val o = off + i * 3
-        val g =
-          if (o + 2 < bytes.length)
-            ((bytes(o) & 0xff) + (bytes(o + 1) & 0xff) + (bytes(o + 2) & 0xff)) / 3
-          else 0
-        counts(g) += 1
-        i += 1
-      }
+      val (counts, n) = grayLevels(bytes)
+      if (n == 0) return (0L, 0L)
       var levels = 0L
       var ent = 0L
-      var gIdx = 0
-      while (gIdx < 256) {
-        val c = counts(gIdx)
+      var g = 0
+      while (g < 256) {
+        val c = counts(g)
         if (c > 0) {
           levels += 1
           val p = c.toDouble / n
           ent += math.round(-p * math.log(p) * 10000)
         }
-        gIdx += 1
+        g += 1
       }
       (levels, ent)
     }
 
     /** DC-removed zero-crossing and quiet-fraction probe for 16-bit PCM
-      * WAV — the container walk of [[fingerprintWav]], then over the n
-      * samples the CENTERED signal `s'ᵢ = n·sᵢ − Σs` (scaling by n keeps
-      * the DC removal in exact integers; the sign pattern equals that of
-      * sᵢ − mean): `n_crossings` counts adjacent sign flips (the
+      * WAV — over the n [[pcm16]] samples and their [[centered]] signal
+      * `s'ᵢ = n·sᵢ − Σs`: `n_crossings` counts adjacent sign flips (the
       * voiced/unvoiced + buzz frequency probe) and `n_quiet` counts
       * samples with `10·|s'ᵢ| < max|s'|` (below 10% of peak amplitude —
       * the silence-trim readout). An empty or non-16-bit clip reports
       * (0, 0, 0).
       */
     def zcrWav(bytes: Array[Byte]): (Long, Long, Long) = {
-      def le16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      var bits16 = 16
-      var dataOff = -1; var dataLen = 0L
-      walkRiff(bytes) { (id, off, len) =>
-        if (id == "fmt " && len >= 16) bits16 = le16(off + 14)
-        else if (id == "data") { dataOff = off; dataLen = len }
-      }
-      val n =
-        if (dataOff < 0 || bits16 != 16) 0L
-        else math.min(dataLen / 2, (bytes.length - dataOff) / 2)
-      if (n == 0) return (0L, 0L, 0L)
-      val s = new Array[Long](n.toInt)
-      var sum = 0L
-      var i = 0
-      while (i < n) {
-        s(i) = le16(dataOff + i * 2).toShort.toLong
-        sum += s(i)
-        i += 1
-      }
-      var peak = 0L
-      i = 0
-      while (i < n) {
-        val c = math.abs(n * s(i) - sum)
-        if (c > peak) peak = c
-        i += 1
-      }
+      val s = pcm16(bytes)
+      if (s.isEmpty) return (0L, 0L, 0L)
+      val n = s.length.toLong
+      val (sum, peak) = centered(s)
       var crossings = 0L
       var quiet = 0L
-      i = 0
-      while (i < n) {
+      var i = 0
+      while (i < s.length) {
         val c = n * s(i) - sum
         if (i > 0 && ((c >= 0) != ((n * s(i - 1) - sum) >= 0))) crossings += 1
         if (10L * math.abs(c) < peak) quiet += 1
@@ -612,36 +437,14 @@ object Multimodal {
       * separates "one long dropout" from "choppy dropouts".
       */
     def silenceWav(bytes: Array[Byte]): (Long, Long, Long, Long, Long, Long) = {
-      def le16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      var bits16 = 16
-      var dataOff = -1; var dataLen = 0L
-      walkRiff(bytes) { (id, off, len) =>
-        if (id == "fmt " && len >= 16) bits16 = le16(off + 14)
-        else if (id == "data") { dataOff = off; dataLen = len }
-      }
-      val n =
-        if (dataOff < 0 || bits16 != 16) 0L
-        else math.min(dataLen / 2, (bytes.length - dataOff) / 2)
-      if (n == 0) return (0L, 0L, 0L, 0L, 0L, 0L)
-      val s = new Array[Long](n.toInt)
-      var sum = 0L
-      var i = 0
-      while (i < n) {
-        s(i) = le16(dataOff + i * 2).toShort.toLong
-        sum += s(i)
-        i += 1
-      }
-      var peak = 0L
-      i = 0
-      while (i < n) {
-        val c = math.abs(n * s(i) - sum)
-        if (c > peak) peak = c
-        i += 1
-      }
+      val s = pcm16(bytes)
+      if (s.isEmpty) return (0L, 0L, 0L, 0L, 0L, 0L)
+      val n = s.length.toLong
+      val (sum, peak) = centered(s)
       var nQuiet = 0L; var nRuns = 0L; var longest = 0L; var cur = 0L
       var firstLoud = -1L; var lastLoud = -1L
-      i = 0
-      while (i < n) {
+      var i = 0
+      while (i < s.length) {
         if (10L * math.abs(n * s(i) - sum) < peak) {
           cur += 1
           if (cur == 1) nRuns += 1
@@ -660,7 +463,7 @@ object Multimodal {
     }
 
     /** Clipping / limiter-plateau probe over the real WAV path — the
-      * same DC-removed container walk as [[zcrWav]], read at the TOP of
+      * same DC-removed samples as [[zcrWav]], read at the TOP of
       * the amplitude range: a sample is HOT when `10·|n·x − Σx| ≥ 9·peak`
       * (within 10 % of the clip's own peak — relative, so it detects
       * post-normalization clipping where a fixed full-scale test reads
@@ -674,35 +477,13 @@ object Multimodal {
       * twin of [[silenceWav]]'s all-quiet. Empty/non-16-bit → zeros.
       */
     def clippingWav(bytes: Array[Byte]): (Long, Long, Long, Long, Long) = {
-      def le16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      var bits16 = 16
-      var dataOff = -1; var dataLen = 0L
-      walkRiff(bytes) { (id, off, len) =>
-        if (id == "fmt " && len >= 16) bits16 = le16(off + 14)
-        else if (id == "data") { dataOff = off; dataLen = len }
-      }
-      val n =
-        if (dataOff < 0 || bits16 != 16) 0L
-        else math.min(dataLen / 2, (bytes.length - dataOff) / 2)
-      if (n == 0) return (0L, 0L, 0L, 0L, 0L)
-      val s = new Array[Long](n.toInt)
-      var sum = 0L
-      var i = 0
-      while (i < n) {
-        s(i) = le16(dataOff + i * 2).toShort.toLong
-        sum += s(i)
-        i += 1
-      }
-      var peak = 0L
-      i = 0
-      while (i < n) {
-        val c = math.abs(n * s(i) - sum)
-        if (c > peak) peak = c
-        i += 1
-      }
+      val s = pcm16(bytes)
+      if (s.isEmpty) return (0L, 0L, 0L, 0L, 0L)
+      val n = s.length.toLong
+      val (sum, peak) = centered(s)
       var nHot = 0L; var runs = 0L; var longest = 0L; var cur = 0L
-      i = 0
-      while (i < n) {
+      var i = 0
+      while (i < s.length) {
         if (10L * math.abs(n * s(i) - sum) >= 9L * peak) {
           cur += 1
           if (cur == 1) runs += 1
@@ -714,112 +495,90 @@ object Multimodal {
       (n, peak, nHot, runs, longest)
     }
 
-    /** REAL multi-frame walk over a concatenated-PPM "video" container:
-      * parse each frame's P6 header, step over its plane, keep every
-      * `everyK`-th frame — the frame-sampling stage
-      * [[sampleWavFrames]]'s scaladoc promises for video, on an actual
-      * frame container instead of by analogy. Returns (n_frames,
-      * frames_kept, kept_gray_sum, bytes_total, bytes_kept); a malformed
-      * header stops the walk at the frames parsed so far (the clamped
-      * RIFF-walk discipline — never an out-of-bounds read). Truncated
-      * final planes read as black, like [[grayHistPpm]].
+    /** Multi-frame walk over a concatenated-PPM "video" container: parses
+      * each frame's P6 header in place and calls `frame(index, bytes,
+      * pixelOffset, pixels)`, where `bytes` is the part of the frame the
+      * payload holds and `pixels` the plane pixels it backs (a final
+      * partial pixel counts, and reads black through [[gray]]). Returns
+      * the frame count. A header that is not P6 (a garbage tail) or whose
+      * dimensions are not positive or exceed the payload length stops
+      * the walk at the frames parsed so far: a real frame needs ≥ 3
+      * bytes per pixel, and the bound keeps w·h·3 inside Long.
       */
-    def videoFrameStats(bytes: Array[Byte], everyK: Int): (Long, Long, Long, Long, Long) = {
+    private def walkP6Frames(bytes: Array[Byte])(frame: (Long, Long, Int, Int) => Unit): Long = {
       var pos = 0
       var f = 0L
-      var kept = 0L
-      var keptGray = 0L
-      var keptBytes = 0L
       while (pos + 2 <= bytes.length &&
         bytes(pos) == 'P'.toByte && bytes(pos + 1) == '6'.toByte) {
-        val slice = java.util.Arrays.copyOfRange(bytes, pos, bytes.length)
-        val (w, h, _, off) = ppmHeader(slice)
-        // dims above the payload length are unconditionally crafted (a real
-        // frame needs ≥3 bytes/pixel), and bounding them here keeps
-        // w*h*3 inside Long — the unchecked Int cast used to wrap a
-        // "46341 46341" header negative and stall or crash the walk
+        val (w, h, _, off) = ppmHeader(bytes, pos)
         if (w <= 0 || h <= 0 || w > bytes.length || h > bytes.length) {
-          pos = bytes.length // malformed dimensions: stop the walk
+          pos = bytes.length
         } else {
-          val frameLen = off.toLong + w * h * 3L
+          val frameLen = (off - pos).toLong + w * h * 3L
           val remain = (bytes.length - pos).toLong
-          if (f % everyK == 0) {
-            kept += 1
-            keptBytes += math.min(frameLen, remain)
-            // pixels past the payload read as black and contribute 0, so
-            // the scan is bounded by what the payload can back, not by the
-            // header's declared plane size
-            val n = math.min(w * h, math.max(0L, remain - off + 2) / 3).toInt
-            var i = 0
-            while (i < n) {
-              val o = pos + off + i * 3
-              keptGray +=
-                (if (o + 2 < bytes.length)
-                  ((bytes(o) & 0xff) + (bytes(o + 1) & 0xff) + (bytes(o + 2) & 0xff)) / 3
-                else 0)
-              i += 1
-            }
-          }
+          frame(f, math.min(frameLen, remain), off,
+            math.min(w * h, math.max(0L, bytes.length.toLong - off + 2) / 3).toInt)
           f += 1
           if (frameLen >= remain) pos = bytes.length else pos += frameLen.toInt
         }
       }
-      (f, kept, keptGray, bytes.length.toLong, keptBytes)
+      f
     }
 
-    /** Scene-change keyframes over the same multi-frame P6 container walk
-      * as [[videoFrameStats]]: per frame the integer mean gray of the
-      * payload-backed pixels, a frame is a KEYFRAME when it is the first
-      * frame or its mean shifted by ≥ `threshold` gray levels from the
-      * previous frame — the shot-boundary heuristic a frame-sampling
-      * stage upgrades to when uniform striding wastes budget on static
-      * shots. Returns (n_frames, n_keyframes, max_delta,
-      * first_change_frame or −1). Same malformed-header and
-      * garbage-tail stops as the stats walk.
+    /** Σ gray over `n` pixels starting at byte offset `off`. */
+    private def graySum(bytes: Array[Byte], off: Int, n: Int): Long = {
+      var sum = 0L
+      var i = 0
+      while (i < n) { sum += gray(bytes, off + 3L * i); i += 1 }
+      sum
+    }
+
+    /** Frame-sampling stats over [[walkP6Frames]]: keeps every
+      * `everyK`-th frame. Returns (n_frames, frames_kept, kept_gray_sum,
+      * bytes_total, bytes_kept); truncated final planes read as black,
+      * like [[grayHistPpm]].
+      */
+    def videoFrameStats(bytes: Array[Byte], everyK: Int): (Long, Long, Long, Long, Long) = {
+      var kept = 0L
+      var keptGray = 0L
+      var keptBytes = 0L
+      val n = walkP6Frames(bytes) { (f, frameBytes, off, pixels) =>
+        if (f % everyK == 0) {
+          kept += 1
+          keptBytes += frameBytes
+          keptGray += graySum(bytes, off, pixels)
+        }
+      }
+      (n, kept, keptGray, bytes.length.toLong, keptBytes)
+    }
+
+    /** Scene-change keyframes over [[walkP6Frames]]: per frame the
+      * integer mean gray of the payload-backed pixels, a frame is a
+      * KEYFRAME when it is the first frame or its mean shifted by
+      * ≥ `threshold` gray levels from the previous frame — the
+      * shot-boundary heuristic a frame-sampling stage upgrades to when
+      * uniform striding wastes budget on static shots. Returns (n_frames,
+      * n_keyframes, max_delta, first_change_frame or −1).
       */
     def videoKeyframes(bytes: Array[Byte], threshold: Long): (Long, Long, Long, Long) = {
-      var pos = 0
-      var f = 0L
       var prev = 0L
       var keyframes = 0L
       var maxDelta = 0L
       var firstChange = -1L
-      while (pos + 2 <= bytes.length &&
-        bytes(pos) == 'P'.toByte && bytes(pos + 1) == '6'.toByte) {
-        val slice = java.util.Arrays.copyOfRange(bytes, pos, bytes.length)
-        val (w, h, _, off) = ppmHeader(slice)
-        if (w <= 0 || h <= 0 || w > bytes.length || h > bytes.length) {
-          pos = bytes.length
-        } else {
-          val frameLen = off.toLong + w * h * 3L
-          val remain = (bytes.length - pos).toLong
-          val n = math.min(w * h, math.max(0L, remain - off + 2) / 3).toInt
-          var sum = 0L
-          var i = 0
-          while (i < n) {
-            val o = pos + off + i * 3
-            sum +=
-              (if (o + 2 < bytes.length)
-                ((bytes(o) & 0xff) + (bytes(o + 1) & 0xff) + (bytes(o + 2) & 0xff)) / 3
-              else 0)
-            i += 1
+      val n = walkP6Frames(bytes) { (f, _, off, pixels) =>
+        val mean = if (pixels > 0) graySum(bytes, off, pixels) / pixels else 0L
+        if (f == 0L) keyframes += 1
+        else {
+          val d = math.abs(mean - prev)
+          if (d > maxDelta) maxDelta = d
+          if (d >= threshold) {
+            keyframes += 1
+            if (firstChange < 0) firstChange = f
           }
-          val mean = if (n > 0) sum / n else 0L
-          if (f == 0L) keyframes += 1
-          else {
-            val d = math.abs(mean - prev)
-            if (d > maxDelta) maxDelta = d
-            if (d >= threshold) {
-              keyframes += 1
-              if (firstChange < 0) firstChange = f
-            }
-          }
-          prev = mean
-          f += 1
-          if (frameLen >= remain) pos = bytes.length else pos += frameLen.toInt
         }
+        prev = mean
       }
-      (f, keyframes, maxDelta, firstChange)
+      (n, keyframes, maxDelta, firstChange)
     }
 
     /** Letterbox/border detection over a binary PPM — the image twin of
@@ -853,11 +612,7 @@ object Multimodal {
       while (y < h) {
         var x = 0
         while (x < w) {
-          val o = off + (y * w + x) * 3
-          val g =
-            if (o + 2 < bytes.length)
-              ((bytes(o) & 0xff) + (bytes(o + 1) & 0xff) + (bytes(o + 2) & 0xff)) / 3
-            else 0
+          val g = gray(bytes, off + (y * w + x) * 3L)
           rowSum(y) += g; colSum(x) += g; total += g
           x += 1
         }
@@ -876,82 +631,29 @@ object Multimodal {
       val (lc, tc) = trims(colSum, w)
       (w0, h0, lr, tr, lc, tc)
     }
-
-    def decode(doc_id: Long, payload: Array[Byte]): Option[DecodedMedia] =
-      sniff(payload) match {
-        case "ppm" => Some(decodePpm(doc_id, payload))
-        case "wav" => Some(decodeWav(doc_id, payload))
-        case "bmp" => Some(decodeBmp(doc_id, payload))
-        case _ => None
-      }
   }
 
-  /** The real-codec decode stage: PPM/WAV payloads decode for real;
-    * anything else falls back to the stub's deterministic fake mapped into
-    * the same schema (format "stub"). Batched per partition like every
-    * codec stage here.
+  /** The codec stage every real-codec query runs: each `(doc_id,
+    * payload)` row maps through `f` in a batched `mapPartitions`, and the
+    * result columns are named `names`. Map-only, so the payloads never
+    * shuffle.
     */
-  def decodeMedia(spark: SparkSession, media: DataFrame): Dataset[DecodedMedia] = {
+  private def codecMap[T <: Product : TypeTag](
+      spark: SparkSession, media: DataFrame, names: String*)(
+      f: (Long, Array[Byte]) => T): DataFrame = {
     import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.map { r =>
-        Codecs.decode(r.doc_id, r.payload).getOrElse {
-          val f = DecodeStub.decode(r)
-          DecodedMedia(r.doc_id, "stub", f.width, f.height, channels = 0,
-            sample_rate = 0, n_frames = f.frames, mean_value = f.n_bytes.toDouble)
-        }
-      }
-    }
+    media
+      .as[(Long, Array[Byte])]
+      .mapPartitions(it => it.map { case (id, bytes) => f(id, bytes) })
+      .toDF(names: _*)
   }
 
-  /** A binary-in/binary-out transform stage result: media payloads after
-    * resize / frame-sample, with a flag for formats the stage passed
-    * through untouched.
+  /** The document text repeated and cut to exactly `n` characters: the
+    * byte plane every synthetic payload below is built from, replayable
+    * by the SQL oracle as `substr(repeat(text, …), 1, n)`.
     */
-  final case class TransformedMedia(
-      doc_id: Long, format: String, payload: Array[Byte], transformed: Boolean)
-
-  /** The image-resize stage: PPM payloads are REALLY resized
-    * (nearest-neighbor, [[Codecs.resizePpm]]); other formats pass through
-    * unchanged. Binary column in, binary column out — payloads never
-    * shuffle (the stage is a map), and the output re-decodes with
-    * [[decodeMedia]] like any other media column.
-    */
-  def resizeImages(
-      spark: SparkSession, media: DataFrame, newW: Int, newH: Int): Dataset[TransformedMedia] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.map { r =>
-        Codecs.sniff(r.payload) match {
-          case "ppm" =>
-            TransformedMedia(r.doc_id, "ppm", Codecs.resizePpm(r.payload, newW, newH), true)
-          case "bmp" =>
-            TransformedMedia(r.doc_id, "bmp", Codecs.resizeBmp(r.payload, newW, newH), true)
-          case f => TransformedMedia(r.doc_id, f, r.payload, false)
-        }
-      }
-    }
-  }
-
-  /** The frame-sample stage: 16-bit PCM WAV payloads keep every
-    * `everyK`-th frame ([[Codecs.sampleWavFrames]]); other formats pass
-    * through. Same map-only, binary-in/binary-out shape as
-    * [[resizeImages]] — which is exactly the video frame-sampling shape
-    * too (stride over fixed-size frames, rewrite the container).
-    */
-  def sampleFrames(
-      spark: SparkSession, media: DataFrame, everyK: Int): Dataset[TransformedMedia] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.map { r =>
-        Codecs.sniff(r.payload) match {
-          case "wav" =>
-            TransformedMedia(r.doc_id, "wav", Codecs.sampleWavFrames(r.payload, everyK), true)
-          case f => TransformedMedia(r.doc_id, f, r.payload, false)
-        }
-      }
-    }
-  }
+  private def textPlane(n: Int): Column =
+    expr(s"substring(repeat(text, cast($n / length(text) as int) + 1), 1, $n)")
 
   /** Documents as 4-frame concatenated-PPM "video" clips: frame f's
     * 16×16 plane reads the repeated text stream at a 37-byte stride, so
@@ -964,9 +666,7 @@ object Multimodal {
     // registry wraps docs in Tables.fanOutScan for the queries whose
     // decode stage measured heavy): doing it here taxed every single-pass
     // readout consumer with a round-robin exchange (VERDICT r15 #1).
-    val stream = expr(
-      s"substring(repeat(text, cast(${768 + (frames - 1) * 37} / length(text) as int) + 1), " +
-        s"1, ${768 + (frames - 1) * 37})")
+    val stream = textPlane(768 + (frames - 1) * 37)
     val frameCols = (0 until frames).map { f =>
       concat(lit("P6\n16 16\n255\n"), substring(stream, 1 + f * 37, 768))
     }
@@ -979,20 +679,14 @@ object Multimodal {
     * ([[Codecs.videoFrameStats]]): per clip the frame count, frames kept
     * at stride `everyK`, the kept frames' exact floor mean gray, and the
     * byte savings — the frame-sample + cheap-feature stage of a video
-    * ingest pipeline, with the same mapPartitions codec tier and
-    * map-only shape as [[phash]].
+    * ingest pipeline.
     */
-  def videoFrames(spark: SparkSession, docs: DataFrame, everyK: Int = 2): DataFrame = {
-    import spark.implicits._
-    asVideoClips(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) =>
-        val (n, k, g, bt, bk) = Codecs.videoFrameStats(bytes, everyK)
-        (id, n, k, if (k > 0) g / (k * 256L) else 0L, bt, bk)
-      })
-      .toDF("doc_id", "n_frames", "frames_kept", "kept_mean_gray",
-        "bytes_total", "bytes_kept")
-  }
+  def videoFrames(spark: SparkSession, docs: DataFrame, everyK: Int = 2): DataFrame =
+    codecMap(spark, asVideoClips(docs), "doc_id", "n_frames", "frames_kept", "kept_mean_gray",
+      "bytes_total", "bytes_kept") { (id, bytes) =>
+      val (n, k, g, bt, bk) = Codecs.videoFrameStats(bytes, everyK)
+      (id, n, k, if (k > 0) g / (k * 256L) else 0L, bt, bk)
+    }
 
   /** Gray-level entropy table over the real PPM path: per image the
     * distinct gray-level count and the e4 entropy of the gray
@@ -1000,18 +694,13 @@ object Multimodal {
     * frame screen [[grayHist]]'s 4 coarse bins can't resolve (a plane
     * alternating between two levels in one bin looks "concentrated"
     * there but scores near-ln 2 here, while a true single-color fill
-    * scores 0). Same mapPartitions codec tier, map-only.
+    * scores 0).
     */
-  def imageEntropy(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    asPpmImages(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) =>
-        val (levels, ent) = Codecs.entropyPpm(bytes)
-        (id, levels, ent)
-      })
-      .toDF("doc_id", "n_gray_levels", "entropy_e4")
-  }
+  def imageEntropy(spark: SparkSession, docs: DataFrame): DataFrame =
+    codecMap(spark, asPpmImages(docs), "doc_id", "n_gray_levels", "entropy_e4") { (id, bytes) =>
+      val (levels, ent) = Codecs.entropyPpm(bytes)
+      (id, levels, ent)
+    }
 
   /** Scene-change keyframe table over the real multi-frame container
     * walk ([[Codecs.videoKeyframes]]): per clip the frame count, the
@@ -1019,19 +708,14 @@ object Multimodal {
     * mean-gray shift ≥ 1 level), the largest inter-frame shift, and the
     * first change frame — the content-aware upgrade of
     * [[videoFrames]]'s uniform stride (static shots stop wasting the
-    * frame budget). Same mapPartitions codec tier, map-only: the clip
-    * bytes never shuffle.
+    * frame budget).
     */
-  def videoKeyframes(spark: SparkSession, docs: DataFrame, threshold: Long = 1L): DataFrame = {
-    import spark.implicits._
-    asVideoClips(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) =>
-        val (n, k, d, fc) = Codecs.videoKeyframes(bytes, threshold)
-        (id, n, k, d, if (fc < 0) None else Some(fc))
-      })
-      .toDF("doc_id", "n_frames", "n_keyframes", "max_delta", "first_change_frame")
-  }
+  def videoKeyframes(spark: SparkSession, docs: DataFrame, threshold: Long = 1L): DataFrame =
+    codecMap(spark, asVideoClips(docs),
+      "doc_id", "n_frames", "n_keyframes", "max_delta", "first_change_frame") { (id, bytes) =>
+      val (n, k, d, fc) = Codecs.videoKeyframes(bytes, threshold)
+      (id, n, k, d, if (fc < 0) None else Some(fc))
+    }
 
   /** Documents as media records: the UTF-8 text bytes stand in for a real
     * payload (same plumbing, fake codec). Media type fans out
@@ -1087,66 +771,59 @@ object Multimodal {
   def asPpmImages(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
-      encode(concat(lit("P6\n16 16\n255\n"), expr(
-        "substring(repeat(text, cast(768 / length(text) as int) + 1), 1, 768)")),
-        "UTF-8").as("payload"))
+      encode(concat(lit("P6\n16 16\n255\n"), textPlane(768)), "UTF-8").as("payload"))
 
-  /** Perceptual-hash table: REAL PPM decode + nearest-neighbor resize +
-    * aHash per image, then the duplicate-cluster size per signature —
+  /** Per-image perceptual signature `(doc_id, <name>)` from `hash` over
+    * the [[asPpmImages]] payloads.
+    */
+  private def imageSigs(spark: SparkSession, docs: DataFrame, name: String)(
+      hash: Array[Byte] => String): DataFrame =
+    codecMap(spark, asPpmImages(docs), "doc_id", name)((id, bytes) => (id, hash(bytes)))
+
+  /** Per-image signature plus the duplicate-cluster size per signature —
     * image-level dedup with the same grouping shape as exact text dedup.
     *
-    * Scale: the codec runs in `mapPartitions` (the justified tier for
-    * binary decode), map-only; the window is partitioned BY HASH (no
-    * global sort), so cluster counting shuffles once on the signature —
-    * identical to the exact-dedup aggregate at 100 TB.
+    * Scale: the codec runs map-only; the window is partitioned BY HASH
+    * (no global sort), so cluster counting shuffles once on the
+    * signature — identical to the exact-dedup aggregate at 100 TB.
     */
-  def phash(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val hashed = asPpmImages(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) => (id, Codecs.aHashPpm(bytes)) })
-      .toDF("doc_id", "phash")
-    hashed.select(
-      col("doc_id"), col("phash"),
+  private def hashClusters(spark: SparkSession, docs: DataFrame, name: String)(
+      hash: Array[Byte] => String): DataFrame =
+    imageSigs(spark, docs, name)(hash).select(
+      col("doc_id"), col(name),
       count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("phash")))
+        org.apache.spark.sql.expressions.Window.partitionBy(col(name)))
         .as("n_same_hash"))
-  }
 
-  /** Image near-duplicate pairs: aHash signatures within `maxHamming`
-    * bits, found by exact pigeonhole blocking — the 64-bit hash splits
-    * into `maxHamming + 1` chunks, any pair within the threshold must
-    * agree exactly on at least one chunk (complete recall, no
-    * probabilistic miss), and exact Hamming verification runs on the
-    * blocked candidates only. The [[graft.dedup.Dedup.simhashNearDups]]
-    * pairing discipline applied to the REAL-codec image signatures —
-    * near-dup image detection as a first-class dedup operator.
+  /** Near-duplicate pairs over the 64-character bitstring column `sig`:
+    * signatures within `maxHamming` bits, found by exact pigeonhole
+    * blocking — the 64-bit signature splits into `maxHamming + 1` chunks,
+    * any pair within the threshold must agree exactly on at least one
+    * chunk (complete recall, no probabilistic miss), and exact Hamming
+    * verification runs on the blocked candidates only. The
+    * [[graft.dedup.Dedup.simhashNearDups]] pairing discipline applied to
+    * the real-codec signatures.
     *
     * Scale: candidates are bounded by chunk-bucket sizes (Σ df² over
-    * 13 small buckets), never |images|²; verification is two XOR +
-    * popcounts per candidate on the pre-parsed 32-bit halves.
+    * `maxHamming + 1` small buckets), never |docs|²; verification is two
+    * XOR + popcounts per candidate on the pre-parsed 32-bit halves.
     */
-  def imageNearDups(spark: SparkSession, docs: DataFrame, maxHamming: Int = 12): DataFrame = {
-    import spark.implicits._
+  private def hammingPairs(sigs: DataFrame, sig: String, maxHamming: Int): DataFrame = {
     val chunks = maxHamming + 1
-    val hashed = asPpmImages(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) => (id, Codecs.aHashPpm(bytes)) })
-      .toDF("doc_id", "phash")
-    val sigs = hashed.select(
+    val halves = sigs.select(
       col("doc_id"),
-      col("phash"),
-      conv(substring(col("phash"), 1, 32), 2, 10).cast("long").as("__hi"),
-      conv(substring(col("phash"), 33, 32), 2, 10).cast("long").as("__lo"))
+      col(sig),
+      conv(substring(col(sig), 1, 32), 2, 10).cast("long").as("__hi"),
+      conv(substring(col(sig), 33, 32), 2, 10).cast("long").as("__lo"))
     val bounds = (0 until chunks).map(c => (c * 64 / chunks, (c + 1) * 64 / chunks))
     // the parsed halves ride along through the chunk explode (16 bytes per
     // row), so each chunk collision verifies inline with two XOR+popcounts
     // — no candidate-pair distinct, no back-joins; only the (tiny)
     // verified output deduplicates across chunks
-    val ch = sigs.select(
+    val ch = halves.select(
       col("doc_id"), col("__hi"), col("__lo"),
       posexplode(array(bounds.map { case (s0, e0) =>
-        substring(col("phash"), s0 + 1, e0 - s0)
+        substring(col(sig), s0 + 1, e0 - s0)
       }: _*)).as(Seq("c", "chunk")))
     ch.as("a")
       .join(ch.as("b"),
@@ -1159,6 +836,20 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
+
+  /** Perceptual-hash table: REAL PPM decode + nearest-neighbor resize +
+    * aHash per image ([[Codecs.aHashPpm]]), then the duplicate-cluster
+    * size per signature ([[hashClusters]]).
+    */
+  def phash(spark: SparkSession, docs: DataFrame): DataFrame =
+    hashClusters(spark, docs, "phash")(Codecs.aHashPpm)
+
+  /** Image near-duplicate pairs: aHash signatures within `maxHamming`
+    * bits ([[hammingPairs]], 13 chunks at the default 12) — near-dup
+    * image detection as a first-class dedup operator.
+    */
+  def imageNearDups(spark: SparkSession, docs: DataFrame, maxHamming: Int = 12): DataFrame =
+    hammingPairs(imageSigs(spark, docs, "phash")(Codecs.aHashPpm), "phash", maxHamming)
 
   /** Documents as deterministic mono 16-bit PCM WAVs (8 kHz, 512 samples):
     * the ASCII text bytes, repeated/truncated to the 1024-byte PCM plane,
@@ -1179,137 +870,81 @@ object Multimodal {
       .put("data".getBytes("US-ASCII")).putInt(dataLen)
     docs.select(
       col("doc_id"),
-      concat(lit(bb.array()), encode(expr(
-        "substring(repeat(text, cast(1024 / length(text) as int) + 1), 1, 1024)"),
-        "UTF-8")).as("payload"))
+      concat(lit(bb.array()), encode(textPlane(1024), "UTF-8")).as("payload"))
   }
+
+  /** Per-clip 64-window energy signature `(doc_id, audio_fp)`
+    * ([[Codecs.fingerprintWav]]) over the [[asWavAudio]] payloads.
+    */
+  private def audioSigs(spark: SparkSession, docs: DataFrame): DataFrame =
+    codecMap(spark, asWavAudio(docs), "doc_id", "audio_fp") { (id, bytes) =>
+      (id, Codecs.fingerprintWav(bytes))
+    }
 
   /** Audio fingerprint table: REAL WAV container walk + integer energy
     * signature per clip, plus the set-bit count (how much of the clip is
-    * above mean loudness). Same mapPartitions codec tier and map-only
-    * shape as [[phash]].
+    * above mean loudness).
     */
-  def audioFingerprint(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    asWavAudio(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) => (id, Codecs.fingerprintWav(bytes)) })
-      .toDF("doc_id", "audio_fp")
+  def audioFingerprint(spark: SparkSession, docs: DataFrame): DataFrame =
+    audioSigs(spark, docs)
       .select(
         col("doc_id"), col("audio_fp"),
         length(regexp_replace(col("audio_fp"), "0", "")).cast("long").as("n_set"))
-  }
 
   /** Audio near-duplicate pairs — the audio tier of the near-dup family
     * ([[imageNearDups]] for images, simhash for text): clips whose
     * 64-window energy signatures ([[audioFingerprint]]) sit within
-    * `maxHamming` bits, surfaced by the exact pigeonhole: a pair at
-    * Hamming ≤ h must agree on at least one of h+1 signature chunks, so
-    * candidates come from chunk-equality buckets only, each verified
-    * inline with two XOR+popcounts — never clip×clip. Same banding,
-    * carry-the-halves, verify-in-the-join shape as [[imageNearDups]];
-    * re-encoded or level-shifted copies of a clip keep their energy
+    * `maxHamming` bits ([[hammingPairs]], 7 chunks at the default 6).
+    * Re-encoded or level-shifted copies of a clip keep their energy
     * SHAPE (the signature thresholds on the clip's own mean), which is
     * exactly what makes this the audio dedup screen.
     */
-  def audioNearDups(spark: SparkSession, docs: DataFrame, maxHamming: Int = 6): DataFrame = {
-    import spark.implicits._
-    val chunks = maxHamming + 1
-    val fps = asWavAudio(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) => (id, Codecs.fingerprintWav(bytes)) })
-      .toDF("doc_id", "audio_fp")
-    val sigs = fps.select(
-      col("doc_id"),
-      col("audio_fp"),
-      conv(substring(col("audio_fp"), 1, 32), 2, 10).cast("long").as("__hi"),
-      conv(substring(col("audio_fp"), 33, 32), 2, 10).cast("long").as("__lo"))
-    val bounds = (0 until chunks).map(c => (c * 64 / chunks, (c + 1) * 64 / chunks))
-    val ch = sigs.select(
-      col("doc_id"), col("__hi"), col("__lo"),
-      posexplode(array(bounds.map { case (s0, e0) =>
-        substring(col("audio_fp"), s0 + 1, e0 - s0)
-      }: _*)).as(Seq("c", "chunk")))
-    ch.as("a")
-      .join(ch.as("b"),
-        col("a.c") === col("b.c") && col("a.chunk") === col("b.chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_id_1"), col("b.doc_id").as("doc_id_2"),
-        (bit_count(col("a.__hi").bitwiseXOR(col("b.__hi"))) +
-          bit_count(col("a.__lo").bitwiseXOR(col("b.__lo")))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+  def audioNearDups(spark: SparkSession, docs: DataFrame, maxHamming: Int = 6): DataFrame =
+    hammingPairs(audioSigs(spark, docs), "audio_fp", maxHamming)
 
   /** Dominant-period table: exact integer autocorrelation over the real
     * WAV path — per clip the smallest lag (1..32 samples) maximizing
-    * `R(L)`, its value, and the `R(0)` energy. Same mapPartitions codec
-    * tier and map-only shape as [[audioFingerprint]]; the O(maxLag·N)
-    * inner loop is per-clip CPU, no shuffle grows with it.
+    * `R(L)`, its value, and the `R(0)` energy. The O(maxLag·N) inner
+    * loop is per-clip CPU, no shuffle grows with it.
     */
-  def audioAutocorr(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    asWavAudio(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) =>
-        val (lag, rBest, r0) = Codecs.autocorrWav(bytes)
-        (id, lag.toLong, rBest, r0)
-      })
-      .toDF("doc_id", "best_lag", "r_best", "r0")
-  }
+  def audioAutocorr(spark: SparkSession, docs: DataFrame): DataFrame =
+    codecMap(spark, asWavAudio(docs), "doc_id", "best_lag", "r_best", "r0") { (id, bytes) =>
+      val (lag, rBest, r0) = Codecs.autocorrWav(bytes)
+      (id, lag.toLong, rBest, r0)
+    }
 
   /** Difference-hash table: REAL PPM decode + 9×8 nearest-neighbor
-    * resize + horizontal-gradient dHash per image, with the duplicate
-    * cluster size per signature — [[phash]]'s gradient-keyed partner
-    * (invariant to monotone brightness changes where aHash is not).
-    * Same mapPartitions codec tier, same hash-partitioned window shape.
+    * resize + horizontal-gradient dHash per image ([[Codecs.dHashPpm]]),
+    * with the duplicate cluster size per signature — [[phash]]'s
+    * gradient-keyed partner (invariant to monotone brightness changes
+    * where aHash is not).
     */
-  def dhash(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val hashed = asPpmImages(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) => (id, Codecs.dHashPpm(bytes)) })
-      .toDF("doc_id", "dhash")
-    hashed.select(
-      col("doc_id"), col("dhash"),
-      count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("dhash")))
-        .as("n_same_hash"))
-  }
+  def dhash(spark: SparkSession, docs: DataFrame): DataFrame =
+    hashClusters(spark, docs, "dhash")(Codecs.dHashPpm)
 
   /** Gray-histogram table over the real PPM path: per image the 4-bin
     * brightness distribution and exact integer mean gray — the
     * exposure/contrast QA screen (black frames, blown highlights, flat
-    * synthetic fills all show as mass collapsing into one bin). Same
-    * mapPartitions codec tier and map-only shape as [[phash]].
+    * synthetic fills all show as mass collapsing into one bin).
     */
-  def grayHist(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    asPpmImages(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) =>
-        val (b0, b1, b2, b3, mean) = Codecs.grayHistPpm(bytes)
-        (id, b0, b1, b2, b3, mean)
-      })
-      .toDF("doc_id", "bin0", "bin1", "bin2", "bin3", "mean_gray")
-  }
+  def grayHist(spark: SparkSession, docs: DataFrame): DataFrame =
+    codecMap(spark, asPpmImages(docs),
+      "doc_id", "bin0", "bin1", "bin2", "bin3", "mean_gray") { (id, bytes) =>
+      val (b0, b1, b2, b3, mean) = Codecs.grayHistPpm(bytes)
+      (id, b0, b1, b2, b3, mean)
+    }
 
   /** Zero-crossing / quiet-fraction table over the real WAV path: per
     * clip the sample count, DC-removed adjacent sign flips, the e4
     * crossing rate (per adjacent pair), and the below-10%-of-peak quiet
-    * fraction — the voiced/unvoiced + silence-trim QA screen. Same
-    * mapPartitions codec tier and map-only shape as [[audioFingerprint]].
+    * fraction — the voiced/unvoiced + silence-trim QA screen.
     */
-  def audioZcr(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    asWavAudio(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) =>
+  def audioZcr(spark: SparkSession, docs: DataFrame): DataFrame =
+    codecMap(spark, asWavAudio(docs), "doc_id", "n_samples", "n_crossings", "n_quiet") {
+      (id, bytes) =>
         val (n, crossings, quiet) = Codecs.zcrWav(bytes)
         (id, n, crossings, quiet)
-      })
-      .toDF("doc_id", "n_samples", "n_crossings", "n_quiet")
+    }
       .select(
         col("doc_id"), col("n_samples"), col("n_crossings"),
         when(col("n_samples") > 1,
@@ -1319,7 +954,6 @@ object Multimodal {
         when(col("n_samples") > 0,
           graft.Cols.floorDiv(col("n_quiet") * 10000L, col("n_samples")))
           .otherwise(lit(0L)).as("quiet_e4"))
-  }
 
   /** Silence-segmentation table over the real WAV path: per clip the
     * quiet-sample mass read as RUNS — run count, longest run, and the
@@ -1327,20 +961,14 @@ object Multimodal {
     * ([[Codecs.silenceWav]]; same DC-removed 10 %-of-peak quiet test as
     * [[audioZcr]]). Separates "one long dropout" (one run, long) from
     * "choppy audio" (many short runs) — the segmentation QA screen next
-    * to audioZcr's aggregate quiet fraction. Same mapPartitions codec
-    * tier and map-only shape as [[audioFingerprint]].
+    * to audioZcr's aggregate quiet fraction.
     */
-  def audioSilence(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    asWavAudio(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) =>
-        val (n, q, r, lg, ld, tl) = Codecs.silenceWav(bytes)
-        (id, n, q, r, lg, ld, tl)
-      })
-      .toDF("doc_id", "n_samples", "n_quiet", "n_runs", "longest_run",
-        "lead_quiet", "tail_quiet")
-  }
+  def audioSilence(spark: SparkSession, docs: DataFrame): DataFrame =
+    codecMap(spark, asWavAudio(docs), "doc_id", "n_samples", "n_quiet", "n_runs",
+      "longest_run", "lead_quiet", "tail_quiet") { (id, bytes) =>
+      val (n, q, r, lg, ld, tl) = Codecs.silenceWav(bytes)
+      (id, n, q, r, lg, ld, tl)
+    }
 
   /** Clipping QC table over the real WAV path: per clip the near-peak
     * sample mass read as RUNS ([[Codecs.clippingWav]] — DC-removed,
@@ -1348,43 +976,31 @@ object Multimodal {
     * [[audioSilence]]'s quiet runs). `longest_hot_run` is the number a
     * loudness-QC gate thresholds: flat-top plateaus mean the recording
     * or a limiter clipped, many 1-sample runs are healthy transients.
-    * Same mapPartitions codec tier and map-only shape as
-    * [[audioFingerprint]] — clip bytes never shuffle.
     */
-  def audioClipping(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    asWavAudio(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) =>
-        val (n, peak, hot, runs, longest) = Codecs.clippingWav(bytes)
-        (id, n, peak, hot, runs, longest)
-      })
-      .toDF("doc_id", "n_samples", "peak_abs", "n_hot", "hot_runs", "longest_hot_run")
+  def audioClipping(spark: SparkSession, docs: DataFrame): DataFrame =
+    codecMap(spark, asWavAudio(docs),
+      "doc_id", "n_samples", "peak_abs", "n_hot", "hot_runs", "longest_hot_run") { (id, bytes) =>
+      val (n, peak, hot, runs, longest) = Codecs.clippingWav(bytes)
+      (id, n, peak, hot, runs, longest)
+    }
       .withColumn(
         "hot_e4",
         when(col("n_samples") > 0,
           graft.Cols.floorDiv(col("n_hot") * 10000L, col("n_samples")))
           .otherwise(lit(0L)))
-  }
 
   /** Letterbox/border-trim table over the real PPM path: per image the
     * head/tail dark-row and dark-column counts under the relative
     * half-of-global-mean threshold ([[Codecs.bordersPpm]]) — what a
     * letterbox-crop preprocessing stage would cut, the image twin of
-    * [[audioSilence]]'s lead/tail quiet trims. Same mapPartitions codec
-    * tier and map-only shape as [[phash]].
+    * [[audioSilence]]'s lead/tail quiet trims.
     */
-  def imageBorders(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    asPpmImages(docs)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => it.map { case (id, bytes) =>
-        val (w, h, lr, tr, lc, tc) = Codecs.bordersPpm(bytes)
-        (id, w, h, lr, tr, lc, tc)
-      })
-      .toDF("doc_id", "w", "h", "lead_rows", "tail_rows",
-        "lead_cols", "tail_cols")
-  }
+  def imageBorders(spark: SparkSession, docs: DataFrame): DataFrame =
+    codecMap(spark, asPpmImages(docs), "doc_id", "w", "h", "lead_rows", "tail_rows",
+      "lead_cols", "tail_cols") { (id, bytes) =>
+      val (w, h, lr, tr, lc, tc) = Codecs.bordersPpm(bytes)
+      (id, w, h, lr, tr, lc, tc)
+    }
 
   /** Image near-dup CLUSTERS: connected components over the
     * [[imageNearDups]] pair set via the shared dedup machinery

@@ -547,7 +547,7 @@ object Analytics {
     * 10⁵-item reseller basket is a 10¹⁰-row explode) BEFORE any counting
     * — item counts, the group total, and the pair counts all see the
     * same capped universe, and every oracle mirrors the cap as a
-    * `QUALIFY` filter (the `maxShingleDf` discipline). Pairs explode
+    * `QUALIFY` filter (the `Dedup.MaxShingleDf` discipline). Pairs explode
     * in-row from each set ([[pairRows]]), so no group-keyed self-join
     * runs. The item-count table is vocabulary-sized, so it joins
     * PLAIN (AQE broadcasts it exactly when it fits — a hard hint here

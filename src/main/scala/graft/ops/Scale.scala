@@ -46,31 +46,6 @@ object Scale {
       .groupBy(col(keyCol))
       .agg(sum(col("__n")).as("n"), sum(col("__s")).as("sum_value"))
 
-  /** Hive-style partitioned corpus write with small-file control — the
-    * output half of a 100 TB pipeline (a cleaned corpus is written back
-    * partitioned by e.g. language/source so downstream readers
-    * partition-prune instead of scanning everything).
-    *
-    * The repartition BEFORE the write is the small-files fix: without it,
-    * every write task emits one file into every partition directory it
-    * happens to hold rows for (tasks × partitions files — the classic
-    * metadata killer); hashing on the partition columns first routes each
-    * directory's rows to one task → exactly one file per directory.
-    * `filesPerDir > 1` adds a deterministic row-hash salt to the
-    * distribution key for directories too large for a single file/task.
-    */
-  def writePartitioned(
-      df: DataFrame,
-      path: String,
-      partitionCols: Seq[String],
-      filesPerDir: Int = 1): Unit = {
-    val keys = partitionCols.map(col)
-    val distributed =
-      if (filesPerDir <= 1) df.repartition(keys: _*)
-      else df.repartition(keys :+ salt(filesPerDir, df.columns.map(col).toSeq: _*): _*)
-    distributed.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-  }
-
   /** Key-skew diagnostic: the one-row report that answers "should this key
     * be salted / is this join AQE-skew territory" BEFORE a job ships —
     * total rows, distinct keys, the hottest key's row count, its share in
@@ -278,7 +253,8 @@ object Scale {
     * (key, day) space — which is the whole trick: files clustered by Z
     * carry tight min/max stats on two columns simultaneously, so scans
     * filtered on EITHER dimension prune, where single-column range
-    * clustering ([[clusteredWrite]]) prunes only its sort key.
+    * clustering (`repartitionByRange` + `sortWithinPartitions`) prunes
+    * only its sort key.
     *
     * Pure integer bit math (no UDF, codegen'd), one hash aggregate to
     * 16 rows. At 100 TB this Z-value is the clustering/sort key of the
@@ -420,26 +396,6 @@ object Scale {
       .orderBy(graft.Cols.hash60(col(idCol)), col(idCol))
     df.withColumn("sample_rank", row_number().over(w).cast("long"))
       .filter(col("sample_rank") <= k)
-  }
-
-  /** Range-clustered parquet write: rows are range-partitioned on
-    * `clusterCols` and sorted within each task, so every output file
-    * covers a NARROW, essentially disjoint key range. Parquet row-group
-    * min/max statistics then prune point/range scans to a handful of
-    * files — the data-layout lever (a Z-order lite for a single sort
-    * axis) that turns a 100 TB full scan into a bounded read without any
-    * index infrastructure. Deterministic apart from range-sampling's
-    * partition boundaries, which affect layout only, never content.
-    */
-  def clusteredWrite(
-      df: DataFrame,
-      path: String,
-      clusterCols: Seq[String],
-      partitions: Int): Unit = {
-    val keys = clusterCols.map(col)
-    df.repartitionByRange(partitions, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .write.mode("overwrite").parquet(path)
   }
 
   /** t-closeness audit — the third leg of the release-privacy trio

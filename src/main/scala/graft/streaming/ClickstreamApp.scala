@@ -25,13 +25,15 @@ object ClickstreamApp {
       buySessionsTopic: String = ClickstreamStreams.Topics.BuySessions,
       sessionGap: String = "1 second",
       kpiWindow: String = "10 seconds",
-      checkpointRoot: String = "/tmp/graft-checkpoints",
-      elasticsearchEndpoint: Option[String] = None)
+      checkpointRoot: String = "/tmp/graft-checkpoints")
 
   object Config {
     /** Mandatory-parameter validation (ClickstreamProcessor.java:92-98).
       * `Format`, when present, must be `avro`: binary Avro is the only
-      * wire format the app decodes.
+      * wire format the app decodes. `ElasticsearchEndpoint` is refused:
+      * [[start]] wires the three Kafka sinks only, so an endpoint here
+      * would be silently ignored. Index into Elasticsearch with
+      * [[bulkIndexSink]] and a caller-supplied [[BulkClient]].
       */
     def fromProperties(props: Map[String, String]): Config = {
       val servers = props.getOrElse(
@@ -41,10 +43,14 @@ object ClickstreamApp {
       props.get("Format").filter(_ != "avro").foreach { other =>
         throw new IllegalArgumentException(s"unknown wire format: $other (want avro)")
       }
+      props.get("ElasticsearchEndpoint").foreach { endpoint =>
+        throw new IllegalArgumentException(
+          s"ElasticsearchEndpoint ($endpoint) is not wired by start(): index with " +
+            "ClickstreamApp.bulkIndexSink and a caller-supplied BulkClient")
+      }
       Config(
         bootstrapServers = servers,
-        inputTopic = props.getOrElse("Topic", ClickstreamStreams.Topics.Input),
-        elasticsearchEndpoint = props.get("ElasticsearchEndpoint"))
+        inputTopic = props.getOrElse("Topic", ClickstreamStreams.Topics.Input))
     }
   }
 

@@ -50,41 +50,41 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("real PPM codec: exact dimensions and mean pixel from genuine bytes") {
-    // 2x1 P6 image, maxval 255, pixels (10,20,30) and (40,50,60)
-    val header = "P6\n# a comment\n2 1\n255\n".getBytes("US-ASCII")
-    val pixels = Array[Byte](10, 20, 30, 40, 50, 60)
-    val media = Seq((7L, "image", header ++ pixels))
-      .toDF("doc_id", "media_type", "payload")
-    val d = Multimodal.decodeMedia(spark, media).collect().head
-    assert(d.format === "ppm")
-    assert(d.width === 2L && d.height === 1L && d.channels === 3L)
-    assert(d.n_frames === 1L)
-    assert(d.mean_value === (10 + 20 + 30 + 40 + 50 + 60) / 6.0)
+    // 2x1 P6 image behind a header comment, pixels (10,20,30) and
+    // (40,50,60): grays 20 and 50, mean gray 35
+    val img = "P6\n# a comment\n2 1\n255\n".getBytes("US-ASCII") ++
+      Array[Byte](10, 20, 30, 40, 50, 60)
+    assert(Multimodal.Codecs.bordersPpm(img) === ((2L, 1L, 0L, 0L, 0L, 0L)))
+    assert(Multimodal.Codecs.grayHistPpm(img) === ((2L, 0L, 0L, 0L, 35L)))
   }
 
   test("real WAV codec: fmt-chunk fields and 16-bit sample mean") {
     // minimal PCM WAV: mono, 8000 Hz, 16-bit, 4 samples {100, -100, 300, 500}
     val samples = Seq[Short](100, -100, 300, 500)
-    val bb = java.nio.ByteBuffer
-      .allocate(44 + samples.length * 2)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + samples.length * 2)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1) // PCM
-      .putShort(1) // channels
-      .putInt(8000) // sample rate
-      .putInt(8000 * 2) // byte rate
-      .putShort(2) // block align
-      .putShort(16) // bits per sample
-      .put("data".getBytes("US-ASCII")).putInt(samples.length * 2)
-    samples.foreach(bb.putShort)
-    val media = Seq((8L, "audio", bb.array())).toDF("doc_id", "media_type", "payload")
-    val d = Multimodal.decodeMedia(spark, media).collect().head
-    assert(d.format === "wav")
-    assert(d.channels === 1L && d.sample_rate === 8000L)
-    assert(d.n_frames === 4L)
-    assert(d.mean_value === (100 - 100 + 300 + 500) / 4.0)
+    def wav(bits: Short): Array[Byte] = {
+      val bb = java.nio.ByteBuffer
+        .allocate(44 + samples.length * 2)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + samples.length * 2)
+        .put("WAVE".getBytes("US-ASCII"))
+        .put("fmt ".getBytes("US-ASCII")).putInt(16)
+        .putShort(1) // PCM
+        .putShort(1) // channels
+        .putInt(8000) // sample rate
+        .putInt(8000 * 2) // byte rate
+        .putShort(2) // block align
+        .putShort(bits) // bits per sample
+        .put("data".getBytes("US-ASCII")).putInt(samples.length * 2)
+      samples.foreach(bb.putShort)
+      bb.array()
+    }
+    val s = Multimodal.Codecs.pcm16(wav(16))
+    assert(s.toSeq === samples.map(_.toLong))
+    assert(s.sum / s.length === (100 - 100 + 300 + 500) / 4)
+    // the fmt chunk's bits field gates the read: an 8-bit clip has no
+    // 16-bit samples
+    assert(Multimodal.Codecs.pcm16(wav(8)).isEmpty)
+    assert(Multimodal.Codecs.zcrWav(wav(8)) === ((0L, 0L, 0L)))
   }
 
   test("RIFF walk survives corrupt chunk lengths: terminates, never reads out of bounds") {
@@ -102,11 +102,10 @@ class MultimodalSpec extends SparkSpec {
     }
     // the poisoned chunk clamps to the rest of the file, so the buried
     // data chunk is unreachable — every probe reports the safe default
-    assert(Multimodal.Codecs.decodeWav(1L, poison).n_frames === 0L)
+    assert(Multimodal.Codecs.pcm16(poison).isEmpty)
     assert(Multimodal.Codecs.zcrWav(poison) === ((0L, 0L, 0L)))
     assert(Multimodal.Codecs.autocorrWav(poison) === ((0, 0L, 0L)))
     assert(Multimodal.Codecs.fingerprintWav(poison).forall(_ == '0'))
-    assert(Multimodal.Codecs.sampleWavFrames(poison, 2).length >= 44)
     // an over-claiming data length (says 2^31-8 bytes, has 4): the clamp
     // reads only the samples that exist instead of throwing
     val overClaim = {
@@ -119,99 +118,20 @@ class MultimodalSpec extends SparkSpec {
         .putShort(100).putShort(-100)
       bb.array()
     }
-    val d = Multimodal.Codecs.decodeWav(2L, overClaim)
-    assert(d.channels === 1L && d.sample_rate === 8000L)
-    assert(d.n_frames === 2L && d.mean_value === 0.0)
+    assert(Multimodal.Codecs.pcm16(overClaim).toSeq === Seq(100L, -100L))
+    // two samples, one sign flip, none below 10% of the peak
+    assert(Multimodal.Codecs.zcrWav(overClaim) === ((2L, 1L, 0L)))
   }
 
-  /** Minimal bottom-up 24-bit BI_RGB BMP; `rows` are VISUAL rows (top
-    * first), each a seq of (b, g, r) triples.
-    */
-  private def bmp(rows: Seq[Seq[(Int, Int, Int)]], topDown: Boolean = false): Array[Byte] = {
-    val h = rows.length
-    val w = rows.head.length
-    val stride = (w * 3 + 3) / 4 * 4
-    val bb = java.nio.ByteBuffer.allocate(54 + stride * h)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put('B'.toByte).put('M'.toByte).putInt(54 + stride * h).putInt(0).putInt(54)
-      .putInt(40).putInt(w).putInt(if (topDown) -h else h).putShort(1).putShort(24)
-      .putInt(0).putInt(stride * h).putInt(2835).putInt(2835).putInt(0).putInt(0)
-    val storageRows = if (topDown) rows else rows.reverse
-    storageRows.foreach { row =>
-      row.foreach { case (b, g, r) =>
-        bb.put(b.toByte).put(g.toByte).put(r.toByte)
-      }
-      (w * 3 until stride).foreach(_ => bb.put(0.toByte))
-    }
-    bb.array()
-  }
-
-  test("real BMP codec: padded rows skipped, exact mean over BGR samples") {
-    // 3x2: width 3 → 9 data bytes/row + 3 padding bytes (stride 12); the
-    // padding must NOT leak into the mean
-    val img = bmp(Seq(
-      Seq((10, 20, 30), (40, 50, 60), (70, 80, 90)),
-      Seq((1, 2, 3), (4, 5, 6), (7, 8, 9))))
-    val media = Seq((9L, "image", img)).toDF("doc_id", "media_type", "payload")
-    val d = Multimodal.decodeMedia(spark, media).collect().head
-    assert(d.format === "bmp")
-    assert(d.width === 3L && d.height === 2L && d.channels === 3L)
-    assert(d.mean_value === (10 + 20 + 30 + 40 + 50 + 60 + 70 + 80 + 90 + 45) / 18.0)
-  }
-
-  test("real BMP resize: bottom-up and top-down sources agree visually") {
-    // 4x2 image, visual pixel (x,y) = (10x+y, 100+10x+y, 200+x)
-    val rows = (0 until 2).map(y => (0 until 4).map(x =>
-      (10 * x + y, 100 + 10 * x + y, 200 + x)))
-    val up = bmp(rows); val down = bmp(rows, topDown = true)
-    for (src <- Seq(up, down)) {
-      val out = Multimodal.Codecs.resizeBmp(src, 2, 1)
-      val d = Multimodal.Codecs.decodeBmp(1L, out)
-      assert(d.width === 2L && d.height === 1L)
-      // visual row 0 of a 2x1 target samples source visual row 0 (y·2/1
-      // floor), columns 0 and 2 — same pixels the PPM resize test keeps
-      val kept = Seq(0, 100, 200, 20, 120, 202)
-      assert(d.mean_value === kept.sum / 6.0, s"topDown=${src eq down}")
-    }
-  }
-
-  test("resize stage routes BMP through the real BMP codec") {
-    val img = bmp(Seq(Seq((5, 5, 5), (9, 9, 9)), Seq((1, 1, 1), (3, 3, 3))))
-    val media = Seq((3L, "image", img)).toDF("doc_id", "media_type", "payload")
-    val out = Multimodal.resizeImages(spark, media, newW = 1, newH = 1).collect().head
-    assert(out.transformed && out.format === "bmp")
-    val d = Multimodal.Codecs.decodeBmp(3L, out.payload)
-    assert(d.width === 1L && d.height === 1L)
-    assert(d.mean_value === 5.0) // visual (0,0) survives
-  }
-
-  test("unsupported BMP variants (8-bpp) fall to the stub tier, no task error") {
-    val img = bmp(Seq(Seq((1, 2, 3))))
-    img(28) = 8 // rewrite bpp to 8 (palette form we don't decode)
-    val media = Seq((4L, "image", img)).toDF("doc_id", "media_type", "payload")
-    val d = Multimodal.decodeMedia(spark, media).collect().head
-    assert(d.format === "stub")
-  }
-
-  test("resize stage: PPM really resized nearest-neighbor; re-decodes; others pass through") {
+  test("resizePpm: nearest-neighbor gather emits a valid P6 of the source pixels") {
     // 4x2 image whose pixels encode their (x, y) position
     val header = "P6\n4 2\n255\n".getBytes("US-ASCII")
     val pixels = (0 until 2).flatMap(y => (0 until 4).flatMap(x =>
       Seq((10 * x + y).toByte, (100 + 10 * x + y).toByte, (200 + x).toByte))).toArray
-    val media = Seq(
-      (1L, "image", header ++ pixels),
-      (2L, "other", "plain text".getBytes("UTF-8")))
-      .toDF("doc_id", "media_type", "payload")
-    val out = Multimodal.resizeImages(spark, media, newW = 2, newH = 1)
-      .collect().map(t => t.doc_id -> t).toMap
-    assert(out(1L).transformed && out(1L).format === "ppm")
-    assert(!out(2L).transformed) // pass-through untouched
-    assert(out(2L).payload === "plain text".getBytes("UTF-8"))
     // nearest-neighbor: target (0,0)→source (0,0); target (1,0)→source (2,0)
-    val d = Multimodal.Codecs.decodePpm(1L, out(1L).payload)
-    assert(d.width === 2L && d.height === 1L)
-    val kept = Seq(0, 100, 200, 20, 120, 202) // pixels (0,0) and (2,0)
-    assert(d.mean_value === kept.sum / 6.0)
+    val kept = Seq(0, 100, 200, 20, 120, 202).map(_.toByte)
+    assert(Multimodal.Codecs.resizePpm(header ++ pixels, 2, 1).toSeq ===
+      ("P6\n2 1\n255\n".getBytes("US-ASCII") ++ kept).toSeq)
   }
 
   test("aHash: quadrant image hashes to the hand-computed bitstring") {
@@ -260,6 +180,17 @@ class MultimodalSpec extends SparkSpec {
     // truncated payload: missing pixels read black (bin 0), no crash
     val cut = "P6\n2 2\n255\n".getBytes("US-ASCII") ++ gray(210).toArray
     assert(Multimodal.Codecs.grayHistPpm(cut) === ((3L, 0L, 0L, 1L, 52L)))
+    // crafted headers over one pixel (10,20,30): every declared pixel
+    // counts, the unbacked ones as black, in Long — the pixel count
+    // neither wraps (65536² = 2³²) nor overflows a byte offset
+    def crafted(w: Int, h: Int) =
+      s"P6\n$w $h\n255\n".getBytes("US-ASCII") ++ Array[Byte](10, 20, 30)
+    assert(Multimodal.Codecs.grayHistPpm(crafted(100000, 100000)) ===
+      ((10000000000L, 0L, 0L, 0L, 0L)))
+    assert(Multimodal.Codecs.grayHistPpm(crafted(30000, 30000)) ===
+      ((900000000L, 0L, 0L, 0L, 0L)))
+    assert(Multimodal.Codecs.grayHistPpm(crafted(65536, 65536)) ===
+      ((4294967296L, 0L, 0L, 0L, 0L)))
   }
 
   test("dHash: gradient direction sets bits; invariant to brightness shift") {
@@ -352,6 +283,12 @@ class MultimodalSpec extends SparkSpec {
       ((2L, 2L * math.round(0.5 * math.log(2.0) * 10000))))
     // malformed header: nothing to scan
     assert(Multimodal.Codecs.entropyPpm("XX".getBytes("US-ASCII")) === ((0L, 0L)))
+    // crafted headers over one pixel (10,20,30): gray 20 once, black for
+    // the rest of the declared plane — two levels, each term rounds to 0
+    for ((w, h) <- Seq((100000, 100000), (30000, 30000), (65536, 65536))) {
+      val crafted = s"P6\n$w $h\n255\n".getBytes("US-ASCII") ++ Array[Byte](10, 20, 30)
+      assert(Multimodal.Codecs.entropyPpm(crafted) === ((2L, 0L)), s"${w}x$h")
+    }
   }
 
   test("bordersPpm: letterbox trims under the relative threshold; flat plane trims nothing") {
@@ -475,41 +412,17 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.Codecs.autocorrWav(wav(Seq.empty), maxLag = 3) === ((0, 0L, 0L)))
   }
 
-  test("frame-sample stage: WAV keeps every k-th frame in a valid container") {
-    // stereo, 8 frames: frame i = (L=i*10, R=-i*10)
-    val frames = (0 until 8).map(i => ((i * 10).toShort, (-i * 10).toShort))
-    val bb = java.nio.ByteBuffer
-      .allocate(44 + frames.length * 4)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + frames.length * 4)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(2).putInt(16000).putInt(16000 * 4)
-      .putShort(4).putShort(16)
-      .put("data".getBytes("US-ASCII")).putInt(frames.length * 4)
-    frames.foreach { case (l, r) => bb.putShort(l); bb.putShort(r) }
-    val media = Seq((5L, "audio", bb.array())).toDF("doc_id", "media_type", "payload")
-    val out = Multimodal.sampleFrames(spark, media, everyK = 4).collect().head
-    assert(out.transformed && out.format === "wav")
-    // the sampled container re-decodes: frames 0 and 4 survive
-    val d = Multimodal.Codecs.decodeWav(5L, out.payload)
-    assert(d.channels === 2L && d.sample_rate === 16000L)
-    assert(d.n_frames === 2L)
-    assert(d.mean_value === (0 + 0 + 40 - 40) / 4.0)
-  }
-
   test("resize of a truncated PPM yields black for missing pixels, not a crash") {
     // header claims 4x2 but only one pixel of data follows
     val truncated = "P6\n4 2\n255\n".getBytes("US-ASCII") ++ Array[Byte](10, 20, 30)
-    val media = Seq((1L, "image", truncated)).toDF("doc_id", "media_type", "payload")
-    val out = Multimodal.resizeImages(spark, media, newW = 2, newH = 2).collect().head
-    val d = Multimodal.Codecs.decodePpm(1L, out.payload)
-    assert(d.width === 2L && d.height === 2L)
+    val out = Multimodal.Codecs.resizePpm(truncated, 2, 2)
     // only target (0,0) maps to the one existing source pixel; rest black
-    assert(d.mean_value === (10 + 20 + 30) / 12.0)
+    assert(out.toSeq ===
+      ("P6\n2 2\n255\n".getBytes("US-ASCII") ++ Array[Byte](10, 20, 30) ++
+        Array.fill[Byte](9)(0)).toSeq)
   }
 
-  test("frame-sample handles a stray empty data chunk and a missing one") {
+  test("pcm16: the last data chunk wins; a missing one gives no samples") {
     def wav(extraEmptyData: Boolean, withData: Boolean): Array[Byte] = {
       val frames = (0 until 4).map(i => (i * 100).toShort)
       val dataBytes = if (withData) frames.length * 2 else 0
@@ -528,23 +441,16 @@ class MultimodalSpec extends SparkSpec {
       }
       bb.array()
     }
-    // stray zero-length data chunk precedes the real one: decodeWav sizes
-    // from the LAST chunk, and the sampler must copy from the same one
-    val sampled = Multimodal.Codecs.sampleWavFrames(wav(extraEmptyData = true, withData = true), 2)
-    val d = Multimodal.Codecs.decodeWav(0L, sampled)
-    assert(d.n_frames === 2L)
-    assert(d.mean_value === (0 + 200) / 2.0) // frames 0 and 2 survive
-    // no data chunk at all: valid empty container, not a crash
-    val empty = Multimodal.Codecs.sampleWavFrames(wav(extraEmptyData = false, withData = false), 2)
-    assert(Multimodal.Codecs.decodeWav(0L, empty).n_frames === 0L)
-  }
-
-  test("unknown payloads fall back to the stub tier in the same schema") {
-    val media = Seq((9L, "image", "not media bytes".getBytes("UTF-8")))
-      .toDF("doc_id", "media_type", "payload")
-    val d = Multimodal.decodeMedia(spark, media).collect().head
-    assert(d.format === "stub")
-    assert(d.mean_value === 15.0) // stub feature: payload byte count
+    // a stray zero-length data chunk precedes the real one: the samples
+    // come from the LAST chunk, for the reader and for every probe on it
+    val stray = wav(extraEmptyData = true, withData = true)
+    assert(Multimodal.Codecs.pcm16(stray).toSeq === Seq(0L, 100L, 200L, 300L))
+    // centered 4·s − 600 = (−600, −200, 200, 600): one sign flip, peak 600
+    assert(Multimodal.Codecs.zcrWav(stray) === ((4L, 1L, 0L)))
+    // no data chunk at all: no samples, not a crash
+    val missing = wav(extraEmptyData = false, withData = false)
+    assert(Multimodal.Codecs.pcm16(missing).isEmpty)
+    assert(Multimodal.Codecs.zcrWav(missing) === ((0L, 0L, 0L)))
   }
 
   test("decode stub: deterministic features from payload bytes") {

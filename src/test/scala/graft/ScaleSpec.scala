@@ -83,32 +83,6 @@ class ScaleSpec extends SparkSpec {
       s"join keys lost the salt:\n$plan")
   }
 
-  test("partitioned write: one file per directory; read-back partition-prunes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_write").toString
-    try {
-      val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      Scale.writePartitioned(docs, dir, Seq("lang"))
-      // small-file control: each lang directory holds exactly ONE parquet
-      // file (without the pre-write repartition it would be one per task)
-      val langDirs = new java.io.File(dir).listFiles().filter(_.getName.startsWith("lang="))
-      assert(langDirs.nonEmpty)
-      langDirs.foreach { d =>
-        val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
-        assert(files.length === 1, s"expected 1 file in ${d.getName}, got ${files.length}")
-      }
-      // read-back with a partition filter must prune at the partition
-      // level (PartitionFilters in the scan), not post-filter a full scan
-      val back = spark.read.parquet(dir).filter(col("lang") === "en")
-      val plan = back.queryExecution.executedPlan.toString()
-      assert(plan.contains("PartitionFilters: [isnotnull(lang"),
-        s"partition pruning missing in:\n$plan")
-      val expected = docs.filter(col("lang") === "en").count()
-      assert(back.count() === expected)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
-  }
-
   test("key skew diagnostic: exact counts, hottest-key share, exact-rank p99") {
     // key 1: 60 rows of 100 total → top_share = 600000 ppm; keys 2..9 get
     // 5 rows each, so the ascending count list is [5×8, 60] and the exact
@@ -235,31 +209,6 @@ class ScaleSpec extends SparkSpec {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS graft_bucket_a")
       spark.sql("DROP TABLE IF EXISTS graft_bucket_b")
-    }
-  }
-
-  test("clustered write: files cover disjoint key ranges, content intact") {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min, sum}
-    val dir = java.nio.file.Files.createTempDirectory("graft_clustered").toString
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select(col("event_id"), col("user_id"), col("ts_ms"))
-    Scale.clusteredWrite(events, dir, Seq("ts_ms"), partitions = 8)
-    val back = spark.read.parquet(dir)
-    // content round-trips exactly
-    assert(back.count() === events.count())
-    assert(back.agg(sum(col("event_id"))).as[Long].head() ===
-      events.agg(sum(col("event_id"))).as[Long].head())
-    // each file holds a narrow range; ranges must not overlap — this is
-    // what lets parquet min/max stats prune a ts filter to ~one file
-    val ranges = back
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("ts_ms")).as("lo"), max(col("ts_ms")).as("hi"))
-      .as[(String, Long, Long)].collect().sortBy(_._2)
-    assert(ranges.length >= 2, "expected multiple range files")
-    ranges.sliding(2).foreach {
-      case Array((_, _, hiA), (_, loB, _)) =>
-        assert(hiA <= loB, s"file ranges overlap: $hiA > $loB")
-      case _ =>
     }
   }
 

@@ -48,6 +48,11 @@ class AvroClickEventsSpec extends SparkSpec {
     val err = intercept[IllegalArgumentException](
       ClickstreamApp.Config.fromProperties(base + ("Format" -> "json")))
     assert(err.getMessage.contains("json"))
+    // an Elasticsearch endpoint would be ignored by start(): refused,
+    // pointing at the bulk-index sink that does index
+    val es = intercept[IllegalArgumentException](
+      ClickstreamApp.Config.fromProperties(base + ("ElasticsearchEndpoint" -> "https://es:443")))
+    assert(es.getMessage.contains("bulkIndexSink") && es.getMessage.contains("BulkClient"))
   }
 
   test("app wiring: Glue-framed Avro bytes drive all three pipelines") {
