@@ -28,6 +28,13 @@ object Cols {
     // (1.7e18 > 2^53). The pmod pre-subtraction makes it exact floor.
     call_function("div", c - pmod(c, d), d)
 
+  /** The exact wide integer type: moments and products of longs widen to
+    * it before they can pass 2⁶³ (DuckDB: `HUGEINT` in the oracles). */
+  val Dec38 = "decimal(38,0)"
+
+  /** `c` widened to [[Dec38]]; `dec38(lit(v))` for a widened literal. */
+  def dec38(c: Column): Column = c.cast(Dec38)
+
   /** Exact LOWER median as an aggregate: element ⌈n/2⌉ of the sorted
     * collected values — no midpoint averaging, no floats, so the result
     * is always one of the inputs and hashes identically cross-engine

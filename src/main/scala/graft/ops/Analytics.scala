@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Cols
+import graft.Cols.dec38
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -130,15 +131,13 @@ object Analytics {
         .agg(
           sum(when(col("__arm") === 0, 1L).otherwise(0L)).as("n_a"),
           sum(when(col("__arm") === 1, 1L).otherwise(0L)).as("n_b")))
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val k = col("k_a") + col("k_b")
     val n = col("n_a") + col("n_b")
     val num = {
-      val diff = d(col("k_a")) * d(col("n_b")) - d(col("k_b")) * d(col("n_a"))
-      diff * diff * d(n) * d(lit(10000L))
+      val diff = dec38(col("k_a")) * dec38(col("n_b")) - dec38(col("k_b")) * dec38(col("n_a"))
+      diff * diff * dec38(n) * dec38(lit(10000L))
     }
-    val den = d(col("n_a")) * d(col("n_b")) * d(k) * d(n - k)
+    val den = dec38(col("n_a")) * dec38(col("n_b")) * dec38(k) * dec38(n - k)
     events.select(col("event_type"), col("user_id")).distinct()
       .select(col("event_type"), arm.as("__arm"))
       .groupBy(col("event_type"))
@@ -181,8 +180,6 @@ object Analytics {
     val day = Cols.floorDiv(col("ts_ms"), TimeSeries.DayMs)
     val cut = broadcast(events.agg(
       Cols.floorDiv(min(day) + max(day), 2L).as("__cut")))
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val ux = events
       .crossJoin(cut)
       .select(
@@ -200,12 +197,12 @@ object Analytics {
       count(lit(1)).as("n"),
       sum(col("x")).as("sx"),
       sum(col("y")).as("sy"),
-      sum(d(col("x")) * d(col("y"))).as("sxy"),
-      sum(d(col("x")) * d(col("x"))).as("sxx")))
-    val sxxc = d(col("n")) * col("sxx") - d(col("sx")) * d(col("sx"))
+      sum(dec38(col("x")) * dec38(col("y"))).as("sxy"),
+      sum(dec38(col("x")) * dec38(col("x"))).as("sxx")))
+    val sxxc = dec38(col("n")) * col("sxx") - dec38(col("sx")) * dec38(col("sx"))
     val thetaE6 = when(sxxc =!= 0,
       Cols.floorDiv(
-        (d(col("n")) * col("sxy") - d(col("sx")) * d(col("sy"))) * d(lit(1000000L)),
+        (dec38(col("n")) * col("sxy") - dec38(col("sx")) * dec38(col("sy"))) * dec38(lit(1000000L)),
         sxxc).cast("long"))
     val xMeanE4 = Cols.floorDiv(col("sxa") * 10000L, col("n_users"))
     val dxE4 = xMeanE4 - Cols.floorDiv(col("sx") * 10000L, col("n"))
@@ -224,7 +221,7 @@ object Analytics {
           // theta_e6 * dx_e4 can exceed int64 for a pathological slope
           // (tiny Sxx under a large Sxy): widen to decimal(38,0) like the
           // moment sums so the product can't wrap before the final floor.
-          - Cols.floorDiv(d(thetaE6) * d(dxE4), d(lit(1000000L)))).as("adj_mean_e4"))
+          - Cols.floorDiv(dec38(thetaE6) * dec38(dxE4), dec38(lit(1000000L)))).as("adj_mean_e4"))
   }
 
   /** Cohort retention: users grouped by the day of their first-ever event
@@ -568,7 +565,6 @@ object Analytics {
     val gi = grouped.select(col("grp"), explode(col("__items")).as("item"))
     val itemCounts = gi.groupBy(col("item")).agg(count(lit(1)).as("n"))
     val total = grouped.agg(count(lit(1)).as("__n_groups"))
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     pairRows(grouped, col("__items"))
       .groupBy(col("item_a"), col("item_b"))
       .agg(count(lit(1)).as("n_ab"))
@@ -579,8 +575,8 @@ object Analytics {
       .select(
         col("item_a"), col("item_b"), col("n_ab"), col("n_a"), col("n_b"),
         Cols.floorDiv(
-          col("n_ab").cast(dec) * col("__n_groups") * 10000,
-          col("n_a").cast(dec) * col("n_b"))
+          dec38(col("n_ab")) * col("__n_groups") * 10000,
+          dec38(col("n_a")) * col("n_b"))
           .cast("long").as("lift_e4"))
   }
 
@@ -890,21 +886,19 @@ object Analytics {
     * broadcast scalars. Output is one row.
     */
   def assortativity(edges: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val e = canonicalEdges(edges)
     val deg = degrees(e)
     val degMoments = deg.agg(
       count(lit(1)).as("n_nodes"),
       sum(col("__d")).as("m"),
-      sum(d(col("__d")) * d(col("__d"))).as("__sx"),
-      sum(d(col("__d")) * d(col("__d")) * d(col("__d"))).as("__sxx"))
+      sum(dec38(col("__d")) * dec38(col("__d"))).as("__sx"),
+      sum(dec38(col("__d")) * dec38(col("__d")) * dec38(col("__d"))).as("__sxx"))
     val sxy = e
       .join(deg.select(col("node").as("src"), col("__d").as("__dx")), Seq("src"))
       .join(deg.select(col("node").as("dst"), col("__d").as("__dy")), Seq("dst"))
-      .agg((d(lit(2L)) * sum(d(col("__dx")) * d(col("__dy")))).as("__sxy"))
-    val num = d(col("m")) * col("__sxy") - col("__sx") * col("__sx")
-    val den = d(col("m")) * col("__sxx") - col("__sx") * col("__sx")
+      .agg((dec38(lit(2L)) * sum(dec38(col("__dx")) * dec38(col("__dy")))).as("__sxy"))
+    val num = dec38(col("m")) * col("__sxy") - col("__sx") * col("__sx")
+    val den = dec38(col("m")) * col("__sxx") - col("__sx") * col("__sx")
     degMoments
       .crossJoin(broadcast(sxy))
       .select(
@@ -1193,8 +1187,6 @@ object Analytics {
     * exceeds the edge table itself.
     */
   def modularity(pairs: DataFrame, labels: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val e = pairs.select(col("item_a"), col("item_b"))
     val m = broadcast(e.agg(count(lit(1)).as("__m")))
     val deg = degrees(e, "item_a", "item_b", "item")
@@ -1212,8 +1204,8 @@ object Analytics {
     val nNodes = broadcast(deg.agg(count(lit(1)).as("n_nodes")))
     perComm.crossJoin(m)
       .select(
-        (d(lit(4L)) * d(col("__m")) * d(col("__lc"))
-          - d(col("__dc")) * d(col("__dc"))).as("__num"),
+        (dec38(lit(4L)) * dec38(col("__m")) * dec38(col("__lc"))
+          - dec38(col("__dc")) * dec38(col("__dc"))).as("__num"),
         col("__nc"))
       .agg(
         count(lit(1)).as("n_communities"),
@@ -1223,8 +1215,8 @@ object Analytics {
       .select(
         col("n_communities"), col("n_nodes"), col("__m").as("n_edges"),
         when(col("__m") > 0,
-          Cols.floorDiv(col("__sn") * d(lit(1000000L)),
-            d(lit(4L)) * d(col("__m")) * d(col("__m"))).cast("long")).as("q_e6"),
+          Cols.floorDiv(col("__sn") * dec38(lit(1000000L)),
+            dec38(lit(4L)) * dec38(col("__m")) * dec38(col("__m"))).cast("long")).as("q_e6"),
         col("largest_community"))
   }
 
@@ -1430,8 +1422,6 @@ object Analytics {
     * rows, one segment-grain rollup. No sort wider than a partition.
     */
   def segmentConcentration(orders: DataFrame, customer: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val rev = orders
       .join(customer.select(col("c_custkey"), col("c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
@@ -1445,13 +1435,13 @@ object Analytics {
       .agg(
         count(lit(1)).as("n_customers"),
         sum(col("__rev")).as("total_cents"),
-        sum(d(col("__rev")) * d(col("__rev"))).as("__ssq"),
+        sum(dec38(col("__rev")) * dec38(col("__rev"))).as("__ssq"),
         sum(when(col("__rn") <= 4, col("__rev")).otherwise(0L)).as("__top4"))
       .select(
         col("c_mktsegment"), col("n_customers"), col("total_cents"),
         Cols.floorDiv(col("__top4") * 10000L, col("total_cents")).as("cr4_e4"),
-        Cols.floorDiv(col("__ssq") * d(lit(1000000L)),
-          d(col("total_cents")) * d(col("total_cents"))).cast("long").as("hhi_e6"))
+        Cols.floorDiv(col("__ssq") * dec38(lit(1000000L)),
+          dec38(col("total_cents")) * dec38(col("total_cents"))).cast("long").as("hhi_e6"))
   }
 
   def revenueCohorts(orders: DataFrame): DataFrame = {
@@ -1581,8 +1571,6 @@ object Analytics {
     * sigma grids can never drift apart.
     */
   private def dailyDemandSigma(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val day = Cols.floorDiv(
       unix_millis(col("l_shipdate").cast("timestamp")), TimeSeries.DayMs)
     val mom = lineitem
@@ -1591,21 +1579,20 @@ object Analytics {
       .groupBy(col("l_partkey"))
       .agg(
         min(col("day")).as("__d0"), max(col("day")).as("__d1"),
-        sum(col("__q")).as("__s"), sum(d(col("__q")) * d(col("__q"))).as("__q2"))
-    val n = d(col("__d1") - col("__d0") + 1L)
+        sum(col("__q")).as("__s"), sum(dec38(col("__q")) * dec38(col("__q"))).as("__q2"))
+    val n = dec38(col("__d1") - col("__d0") + 1L)
     val varE8 = Cols.floorDiv(
-      (n * col("__q2") - d(col("__s")) * d(col("__s"))) * d(lit(100000000L)), n * n)
+      (n * col("__q2") - dec38(col("__s")) * dec38(col("__s"))) * dec38(lit(100000000L)), n * n)
     mom.select(
       col("l_partkey"), col("__d0"), col("__d1"), col("__s"),
       round(sqrt(varE8.cast("double"))).cast("long").as("__sigma_e4"))
   }
 
   def abcXyz(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
-    val n = d(col("__d1") - col("__d0") + 1L)
+    val n = dec38(col("__d1") - col("__d0") + 1L)
     val xyz = dailyDemandSigma(lineitem)
-      .withColumn("__mean_e4", Cols.floorDiv(d(col("__s")) * d(lit(10000L)), n).cast("long"))
+      .withColumn("__mean_e4",
+        Cols.floorDiv(dec38(col("__s")) * dec38(lit(10000L)), n).cast("long"))
       .withColumn("__cv_e4",
         Cols.floorDiv(col("__sigma_e4") * 10000L, greatest(col("__mean_e4"), lit(1L))))
       .select(col("l_partkey"), col("__cv_e4"),
@@ -1636,8 +1623,6 @@ object Analytics {
     * decimal(38,0).
     */
   def demandSeasonality(lineitem: DataFrame, minQty: Long = 12L): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val mc = lineitem
       .groupBy(col("l_partkey"),
         month(col("l_shipdate").cast("timestamp")).cast("long").as("__m"))
@@ -1649,15 +1634,15 @@ object Analytics {
       .agg(
         count(lit(1)).as("n_months"),
         sum(col("__q")).as("total_qty"),
-        sum(d(col("__q")) * d(col("__q"))).as("__ssq"),
+        sum(dec38(col("__q")) * dec38(col("__q"))).as("__ssq"),
         max(when(col("__rn") === 1, col("__m"))).as("peak_month"),
         max(when(col("__rn") === 1, col("__q"))).as("__peak"))
       .filter(col("total_qty") >= minQty)
       .select(
         col("l_partkey"), col("n_months"), col("total_qty"), col("peak_month"),
         Cols.floorDiv(col("__peak") * 10000L, col("total_qty")).as("peak_share_e4"),
-        Cols.floorDiv(col("__ssq") * d(lit(10000L)),
-          d(col("total_qty")) * d(col("total_qty"))).cast("long").as("hhi_e4"))
+        Cols.floorDiv(col("__ssq") * dec38(lit(10000L)),
+          dec38(col("total_qty")) * dec38(col("total_qty"))).cast("long").as("hhi_e4"))
   }
 
   /** Supplier concentration per part — the sourcing-risk axis beside
@@ -1674,8 +1659,6 @@ object Analytics {
     * the supplier axis.
     */
   def supplierConcentration(lineitem: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val ps = lineitem
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(sum(round(col("l_quantity")).cast("long")).as("__q"))
@@ -1686,15 +1669,15 @@ object Analytics {
       .agg(
         count(lit(1)).as("n_suppliers"),
         sum(col("__q")).as("total_qty"),
-        sum(d(col("__q")) * d(col("__q"))).as("__ssq"),
+        sum(dec38(col("__q")) * dec38(col("__q"))).as("__ssq"),
         max(when(col("__rn") === 1, col("l_suppkey"))).as("top_suppkey"),
         max(when(col("__rn") === 1, col("__q"))).as("__top_q"))
       .select(
         col("l_partkey"), col("n_suppliers"), col("total_qty"), col("top_suppkey"),
         Cols.floorDiv(col("__top_q") * 10000L, greatest(col("total_qty"), lit(1L)))
           .as("top_share_e4"),
-        Cols.floorDiv(col("__ssq") * d(lit(10000L)),
-          greatest(d(col("total_qty")) * d(col("total_qty")), d(lit(1L))))
+        Cols.floorDiv(col("__ssq") * dec38(lit(10000L)),
+          greatest(dec38(col("total_qty")) * dec38(col("total_qty")), dec38(lit(1L))))
           .cast("long").as("hhi_e4"),
         (col("n_suppliers") === 1L).cast("long").as("single_source"))
   }
@@ -2728,8 +2711,6 @@ object Analytics {
     * decimal(38,0) before summing. Never node², never corpus².
     */
   def betweennessSample(edges: DataFrame, nSources: Int = 3, maxHops: Int = 3): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val und = undirect(edges).localCheckpoint()
     val sources = hubSources(und, nSources)
     // forward: levels(r) = nodes at exact distance r with σ = number of
@@ -2739,7 +2720,7 @@ object Analytics {
     // long-narrowed level on a pathologically dense graph would
     // silently null under the non-ANSI cast instead of matching
     val level0 = sources
-      .select(col("source"), col("source").as("node"), d(lit(1L)).as("sigma"))
+      .select(col("source"), col("source").as("node"), dec38(lit(1L)).as("sigma"))
       .localCheckpoint()
     val levels = scala.collection.mutable.ArrayBuffer(level0)
     var settled = level0.select(col("source"), col("node"))
@@ -2756,7 +2737,7 @@ object Analytics {
     }
     // backward: deepest level seeds δ = 0; each shallower level folds its
     // successor terms (nodes with no DAG successor keep δ = 0)
-    var cur = levels(maxHops).withColumn("delta_e6", d(lit(0L))).localCheckpoint()
+    var cur = levels(maxHops).withColumn("delta_e6", dec38(lit(0L))).localCheckpoint()
     val deltas = scala.collection.mutable.ArrayBuffer(cur)
     for (r <- (maxHops - 1) to 1 by -1) {
       val succ = cur.select(
@@ -2768,14 +2749,14 @@ object Analytics {
         .select(
           levels(r)("source").as("source"), col("node"),
           Cols.floorDiv(
-            d(col("sigma")) * (d(col("__dw")) + d(lit(1000000L))),
-            d(col("__sw"))).as("__t"))
+            dec38(col("sigma")) * (dec38(col("__dw")) + dec38(lit(1000000L))),
+            dec38(col("__sw"))).as("__t"))
         .groupBy(col("source"), col("node"))
-        .agg(sum(d(col("__t"))).as("__d"))
+        .agg(sum(dec38(col("__t"))).as("__d"))
       cur = levels(r)
         .join(terms, Seq("source", "node"), "left")
         .select(col("source"), col("node"), col("sigma"),
-          coalesce(col("__d"), d(lit(0L))).as("delta_e6"))
+          coalesce(col("__d"), dec38(lit(0L))).as("delta_e6"))
         .localCheckpoint()
       deltas += cur
     }
@@ -2832,8 +2813,6 @@ object Analytics {
     * corpus².
     */
   def betweennessWeighted(pairs: DataFrame, nSources: Int = 3, maxHops: Int = 3): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val und = weightedUndirect(pairs).localCheckpoint()
     val sources = hubSources(und, nSources)
     // phase 1: bounded Bellman-Ford distances (the cheapestPath loop).
@@ -2869,8 +2848,8 @@ object Analytics {
     val nodes = dist.select(col("source"), col("node"))
     var sigma0 = nodes
       .select(col("source"), col("node"),
-        when(col("node") === col("source"), d(lit(1L)))
-          .otherwise(d(lit(0L))).as("sigma"))
+        when(col("node") === col("source"), dec38(lit(1L)))
+          .otherwise(dec38(lit(0L))).as("sigma"))
     for (_ <- 1 to maxHops) {
       val inc = dag
         .join(
@@ -2882,14 +2861,14 @@ object Analytics {
       sigma0 = nodes
         .join(inc, Seq("source", "node"), "left")
         .select(col("source"), col("node"),
-          when(col("node") === col("source"), d(lit(1L)))
-            .otherwise(coalesce(col("__inc"), d(lit(0L)))).as("sigma"))
+          when(col("node") === col("source"), dec38(lit(1L)))
+            .otherwise(coalesce(col("__inc"), dec38(lit(0L)))).as("sigma"))
     }
     val sigma = sigma0.localCheckpoint()
     // phase 3: delta by successor-fold iteration from delta = 0; rounds
     // reference their predecessor once, so the fold stays one lazy plan
     // until the final checkpoint that lets the blocks below be freed
-    var delta0 = nodes.withColumn("delta_e6", d(lit(0L)))
+    var delta0 = nodes.withColumn("delta_e6", dec38(lit(0L)))
     for (_ <- 1 to maxHops) {
       val wside = sigma
         .join(delta0, Seq("source", "node"))
@@ -2904,13 +2883,13 @@ object Analytics {
         .join(wside, col("source") === col("__ws") && col("v") === col("__w"))
         .select(col("source"), col("u").as("node"),
           Cols.floorDiv(
-            col("__su") * (col("__dw") + d(lit(1000000L))), col("__sw")).as("__t"))
+            col("__su") * (col("__dw") + dec38(lit(1000000L))), col("__sw")).as("__t"))
         .groupBy(col("source"), col("node"))
-        .agg(sum(d(col("__t"))).as("__d"))
+        .agg(sum(dec38(col("__t"))).as("__d"))
       delta0 = nodes
         .join(terms, Seq("source", "node"), "left")
         .select(col("source"), col("node"),
-          coalesce(col("__d"), d(lit(0L))).as("delta_e6"))
+          coalesce(col("__d"), dec38(lit(0L))).as("delta_e6"))
     }
     val delta = delta0.localCheckpoint()
     // the source's own row is excluded, as in [[betweennessSample]]

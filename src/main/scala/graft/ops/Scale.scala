@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Cols.dec38
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -143,14 +144,14 @@ object Scale {
       .withColumn(
         "m_bits",
         graft.Cols.floorDiv(
-          col("n_keys").cast("decimal(38,0)") * BitsPerKeyE6 + 999999L,
-          lit(1000000L).cast("decimal(38,0)")).cast("long"))
+          dec38(col("n_keys")) * BitsPerKeyE6 + 999999L,
+          dec38(lit(1000000L))).cast("long"))
       // k = round((m/n)·ln2), via the reduced e6 ratio r = floor(m·1e6/n)
       .withColumn(
         "__r_e6",
         graft.Cols.floorDiv(
-          col("m_bits").cast("decimal(38,0)") * 1000000L,
-          col("n_keys").cast("decimal(38,0)")).cast("long"))
+          dec38(col("m_bits")) * 1000000L,
+          dec38(col("n_keys"))).cast("long"))
       .withColumn(
         "k_hashes",
         graft.Cols.floorDiv(
@@ -426,7 +427,6 @@ object Scale {
       df: DataFrame, quasiIds: Seq[String], sensitive: String,
       nBuckets: Int = 16, tE6Threshold: Long = 200000L): DataFrame = {
     require(nBuckets >= 2, "EMD needs at least two grid points")
-    val dec = "decimal(38,0)"
     val cents = round(col(sensitive) * 100).cast("long")
     val bounds = broadcast(df.agg(
       min(cents).as("__lo"), (max(cents) - min(cents) + 1L).as("__w")))
@@ -456,11 +456,11 @@ object Scale {
       .filter(col("__b") < nBuckets - 1)
       .groupBy(quasiIds.map(col) :+ col("n_rows") :+ col("__n"): _*)
       .agg(sum(abs(
-        col("__n").cast(dec) * col("__cumg").cast(dec)
-          - col("n_rows").cast(dec) * col("__cum").cast(dec))).as("__s"))
+        dec38(col("__n")) * dec38(col("__cumg"))
+          - dec38(col("n_rows")) * dec38(col("__cum")))).as("__s"))
     val tE6 = graft.Cols.floorDiv(
-      col("__s") * lit(1000000L).cast(dec),
-      (col("n_rows") * col("__n") * (nBuckets - 1L)).cast(dec)).cast("long")
+      col("__s") * dec38(lit(1000000L)),
+      dec38(col("n_rows") * col("__n") * (nBuckets - 1L))).cast("long")
     summed.select(quasiIds.map(col) :+ col("n_rows") :+ tE6.as("t_e6") :+
       when(tE6 > tE6Threshold, 1L).otherwise(0L).as("not_close"): _*)
   }

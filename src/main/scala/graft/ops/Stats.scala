@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Cols
+import graft.Cols.dec38
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -729,8 +730,6 @@ object Stats {
   }
 
   def welchScreen(events: DataFrame, t2E4Threshold: Long = 38416L): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val arm = pmod(Cols.hash60(concat(lit("ab:"), col("user_id"))), lit(2L))
     val cents = round(col("value") * 100).cast("long")
     val g = events
@@ -741,10 +740,12 @@ object Stats {
         sum(when(col("__arm") === 1, 1L).otherwise(0L)).as("n1"),
         sum(when(col("__arm") === 0, col("__c")).otherwise(0L)).as("s0"),
         sum(when(col("__arm") === 1, col("__c")).otherwise(0L)).as("s1"),
-        sum(when(col("__arm") === 0, d(col("__c")) * d(col("__c"))).otherwise(d(lit(0L)))).as("q0"),
-        sum(when(col("__arm") === 1, d(col("__c")) * d(col("__c"))).otherwise(d(lit(0L)))).as("q1"))
+        sum(when(col("__arm") === 0, dec38(col("__c")) * dec38(col("__c")))
+          .otherwise(dec38(lit(0L)))).as("q0"),
+        sum(when(col("__arm") === 1, dec38(col("__c")) * dec38(col("__c")))
+          .otherwise(dec38(lit(0L)))).as("q1"))
     def varOf(n: Column, s: Column, q: Column): Column =
-      Cols.floorDiv(d(n) * q - d(s) * d(s), d(n) * d(n - 1L)).cast("long")
+      Cols.floorDiv(dec38(n) * q - dec38(s) * dec38(s), dec38(n) * dec38(n - 1L)).cast("long")
     val withVar = g
       .filter(col("n0") > 1 && col("n1") > 1)
       .select(
@@ -756,11 +757,11 @@ object Stats {
       .withColumn("se2_e8",
         // var·10⁸ widened to decimal(38,0): a cents² variance near 10¹⁰
         // would put the int64 product within a factor of 10 of wrapping
-        Cols.floorDiv(d(col("__v0")) * d(lit(100000000L)), d(col("n0")))
-          + Cols.floorDiv(d(col("__v1")) * d(lit(100000000L)), d(col("n1"))))
+        Cols.floorDiv(dec38(col("__v0")) * dec38(lit(100000000L)), dec38(col("n0")))
+          + Cols.floorDiv(dec38(col("__v1")) * dec38(lit(100000000L)), dec38(col("n1"))))
     val dd = col("mean0_e4") - col("mean1_e4")
     val t2 = when(col("se2_e8") > 0,
-      Cols.floorDiv(d(dd) * d(dd) * d(lit(10000L)), d(col("se2_e8"))).cast("long"))
+      Cols.floorDiv(dec38(dd) * dec38(dd) * dec38(lit(10000L)), dec38(col("se2_e8"))).cast("long"))
     withVar.select(
       col("event_type"), col("n0"), col("n1"),
       col("mean0_e4"), col("mean1_e4"), col("se2_e8"),
@@ -822,8 +823,6 @@ object Stats {
     * [[welchScreen]]; output is |event_type| rows.
     */
   def powerMde(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val arm = pmod(Cols.hash60(concat(lit("ab:"), col("user_id"))), lit(2L))
     val cents = round(col("value") * 100).cast("long")
     val g = events
@@ -834,10 +833,12 @@ object Stats {
         sum(when(col("__arm") === 1, 1L).otherwise(0L)).as("n1"),
         sum(when(col("__arm") === 0, col("__c")).otherwise(0L)).as("s0"),
         sum(when(col("__arm") === 1, col("__c")).otherwise(0L)).as("s1"),
-        sum(when(col("__arm") === 0, d(col("__c")) * d(col("__c"))).otherwise(d(lit(0L)))).as("q0"),
-        sum(when(col("__arm") === 1, d(col("__c")) * d(col("__c"))).otherwise(d(lit(0L)))).as("q1"))
+        sum(when(col("__arm") === 0, dec38(col("__c")) * dec38(col("__c")))
+          .otherwise(dec38(lit(0L)))).as("q0"),
+        sum(when(col("__arm") === 1, dec38(col("__c")) * dec38(col("__c")))
+          .otherwise(dec38(lit(0L)))).as("q1"))
     def varOf(n: Column, s: Column, q: Column): Column =
-      Cols.floorDiv(d(n) * q - d(s) * d(s), d(n) * d(n - 1L)).cast("long")
+      Cols.floorDiv(dec38(n) * q - dec38(s) * dec38(s), dec38(n) * dec38(n - 1L)).cast("long")
     val withVar = g
       .filter(col("n0") > 1 && col("n1") > 1)
       .select(
@@ -846,21 +847,21 @@ object Stats {
         varOf(col("n1"), col("s1"), col("q1")).as("__v1"))
       .withColumn("var_pooled",
         Cols.floorDiv(
-          d(col("n0") - 1L) * d(col("__v0")) + d(col("n1") - 1L) * d(col("__v1")),
-          d(col("n0") + col("n1") - 2L)).cast("long"))
+          dec38(col("n0") - 1L) * dec38(col("__v0")) + dec38(col("n1") - 1L) * dec38(col("__v1")),
+          dec38(col("n0") + col("n1") - 2L)).cast("long"))
       .withColumn("__mean",
         Cols.floorDiv(col("s0") + col("s1"), col("n0") + col("n1")))
     val mde2 = Cols.floorDiv(
-      d(lit(PowerZ2E4)) * d(col("var_pooled")) * d(col("n0") + col("n1")),
-      d(col("n0")) * d(col("n1"))).cast("long")
+      dec38(lit(PowerZ2E4)) * dec38(col("var_pooled")) * dec38(col("n0") + col("n1")),
+      dec38(col("n0")) * dec38(col("n1"))).cast("long")
     withVar.select(
       col("event_type"), col("n0"), col("n1"), col("var_pooled"),
       mde2.as("mde2_cents2_e4"),
       round(sqrt(mde2.cast("double") / 10000.0), 4).as("mde_cents"),
       when(col("__mean") =!= 0,
         (Cols.floorDiv(
-          d(lit(2L)) * d(col("var_pooled")) * d(lit(PowerZ2E4)) * d(lit(400L)),
-          d(col("__mean")) * d(col("__mean")) * d(lit(10000L))).cast("long")
+          dec38(lit(2L)) * dec38(col("var_pooled")) * dec38(lit(PowerZ2E4)) * dec38(lit(400L)),
+          dec38(col("__mean")) * dec38(col("__mean")) * dec38(lit(10000L))).cast("long")
           + 1L)).as("n_per_arm_5pct"))
   }
 
@@ -954,8 +955,6 @@ object Stats {
     * No per-replicate pass, no driver-side RNG, no collect.
     */
   def bootstrapCi(events: DataFrame, reps: Int = 32): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val cents = round(col("value") * 100).cast("long")
     val point = events
       .select(col("event_type"), cents.as("__c"))
@@ -983,13 +982,13 @@ object Stats {
         min(col("__m")).as("boot_lo_e4"),
         max(col("__m")).as("boot_hi_e4"),
         sum(col("__m")).as("__sm"),
-        sum(d(col("__m")) * d(col("__m"))).as("__qm"))
+        sum(dec38(col("__m")) * dec38(col("__m"))).as("__qm"))
       .select(col("event_type"), col("replicates"),
         col("boot_lo_e4"), col("boot_hi_e4"),
         when(col("replicates") > 1,
           Cols.floorDiv(
-            d(col("replicates")) * col("__qm") - d(col("__sm")) * d(col("__sm")),
-            d(col("replicates")) * d(col("replicates") - 1L)).cast("long"))
+            dec38(col("replicates")) * col("__qm") - dec38(col("__sm")) * dec38(col("__sm")),
+            dec38(col("replicates")) * dec38(col("replicates") - 1L)).cast("long"))
           .as("boot_var_e8"))
     point.join(boot, Seq("event_type"))
   }
@@ -1163,8 +1162,6 @@ object Stats {
     * [[didScreen]]; output is |event_type| rows.
     */
   def growthDecomposition(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val cents = round(col("value") * 100).cast("long")
     val mid = events.agg(
       Cols.floorDiv(min(col("ts_ms")) + max(col("ts_ms")), lit(2L)).as("__mid"))
@@ -1180,10 +1177,10 @@ object Stats {
         sum(when(col("__cur") === 0, col("__c")).otherwise(0L)).as("sum_ref_cents"),
         sum(when(col("__cur") === 1, col("__c")).otherwise(0L)).as("sum_cur_cents"))
       .filter(col("n_ref") > 0 && col("n_cur") > 0)
-    val deltaE4 = d(col("sum_cur_cents") - col("sum_ref_cents")) * d(lit(10000L))
+    val deltaE4 = dec38(col("sum_cur_cents") - col("sum_ref_cents")) * dec38(lit(10000L))
     val volE4 = Cols.floorDiv(
-      d(col("n_cur") - col("n_ref")) * d(col("sum_ref_cents")) * d(lit(10000L)),
-      d(col("n_ref")))
+      dec38(col("n_cur") - col("n_ref")) * dec38(col("sum_ref_cents")) * dec38(lit(10000L)),
+      dec38(col("n_ref")))
     g.select(
       col("event_type"), col("n_ref"), col("n_cur"),
       col("sum_ref_cents"), col("sum_cur_cents"),
@@ -1211,8 +1208,6 @@ object Stats {
     * windows only over the 7-row weekday grid.
     */
   def seasonalityStrength(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val daily = events
       .groupBy(col("event_type"),
         Cols.floorDiv(col("ts_ms"), TimeSeries.DayMs).as("__day"))
@@ -1236,13 +1231,15 @@ object Stats {
         max(when(col("__rt") === 1, col("__mean_e4"))).as("trough_mean_e4"))
     val moments = daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"), sum(col("__x")).as("__s"),
-        sum(d(col("__x")) * d(col("__x"))).as("__q"))
+        sum(dec38(col("__x")) * dec38(col("__x"))).as("__q"))
     val groupTerm = perDow.groupBy(col("event_type"))
       .agg(sum(Cols.floorDiv(
-        d(col("__sg")) * d(col("__sg")) * d(lit(1000000L)), d(col("__ng"))))
+        dec38(col("__sg")) * dec38(col("__sg")) * dec38(lit(1000000L)), dec38(col("__ng"))))
         .as("__a"))
-    val num = col("__a") * d(col("n_days")) - d(col("__s")) * d(col("__s")) * d(lit(1000000L))
-    val den = (d(col("n_days")) * col("__q") - d(col("__s")) * d(col("__s"))) * d(lit(1000000L))
+    val num = col("__a") * dec38(col("n_days")) -
+      dec38(col("__s")) * dec38(col("__s")) * dec38(lit(1000000L))
+    val den = (dec38(col("n_days")) * col("__q") - dec38(col("__s")) * dec38(col("__s"))) *
+      dec38(lit(1000000L))
     moments.join(groupTerm, "event_type").join(peaks, "event_type")
       .select(
         col("event_type"), col("n_days"),
@@ -1251,7 +1248,7 @@ object Stats {
         // NUMERATOR keeps the division positive (plain floor in any
         // engine — no negative-// mirror hazard)
         when(den > 0,
-          Cols.floorDiv(greatest(num, d(lit(0L))) * d(lit(10000L)), den)
+          Cols.floorDiv(greatest(num, dec38(lit(0L))) * dec38(lit(10000L)), den)
             .cast("long")).as("eta2_e4"),
         col("peak_dow"), col("peak_mean_e4"),
         col("trough_dow"), col("trough_mean_e4"))
@@ -1279,7 +1276,6 @@ object Stats {
     * rank-pass posture. Output is |event_type| rows.
     */
   def ksTest(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val arm = pmod(Cols.hash60(concat(lit("ab:"), col("user_id"))), lit(2L))
     val perValue = events
       .select(
@@ -1302,15 +1298,15 @@ object Stats {
         max(col("__na")).as("n_a"),
         max(col("__nb")).as("n_b"),
         max(abs(
-          col("__cuma").cast(dec) * col("__nb").cast(dec)
-            - col("__cumb").cast(dec) * col("__na").cast(dec))).as("__dn"))
+          dec38(col("__cuma")) * dec38(col("__nb"))
+            - dec38(col("__cumb")) * dec38(col("__na")))).as("__dn"))
       .select(
         col("event_type"), col("n_a"), col("n_b"),
         when(
           col("n_a") * col("n_b") > 0,
           Cols.floorDiv(
-            col("__dn") * lit(1000000L).cast(dec),
-            (col("n_a") * col("n_b")).cast(dec)).cast("long")).as("d_e6"))
+            col("__dn") * dec38(lit(1000000L)),
+            dec38(col("n_a") * col("n_b"))).cast("long")).as("d_e6"))
   }
 
   /** Discrete-time churn hazard curve — the survival-analysis readout

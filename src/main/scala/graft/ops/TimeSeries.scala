@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Cols
+import graft.Cols.dec38
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -552,7 +553,6 @@ object TimeSeries {
       .groupBy(col(keyCol), day.as("__day"))
       .agg(count(lit(1)).as("__y"))
     val base = events.agg(min(day).as("__d0"))
-    val dec = "decimal(38,0)"
     val sums = daily
       .crossJoin(broadcast(base))
       .select(col(keyCol), (col("__day") - col("__d0")).as("__x"), col("__y"))
@@ -563,10 +563,10 @@ object TimeSeries {
         sum(col("__x")).as("__sx"),
         sum(col("__x") * col("__y")).as("__sxy"),
         sum(col("__x") * col("__x")).as("__sxx"))
-    val num = (col("n_days").cast(dec) * col("__sxy").cast(dec)
-      - col("__sx").cast(dec) * col("sum_y").cast(dec)) * lit(10000).cast(dec)
-    val den = (col("n_days").cast(dec) * col("__sxx").cast(dec)
-      - col("__sx").cast(dec) * col("__sx").cast(dec))
+    val num = (dec38(col("n_days")) * dec38(col("__sxy"))
+      - dec38(col("__sx")) * dec38(col("sum_y"))) * dec38(lit(10000))
+    val den = (dec38(col("n_days")) * dec38(col("__sxx"))
+      - dec38(col("__sx")) * dec38(col("__sx")))
     sums.select(
       col(keyCol), col("n_days"), col("sum_y"),
       // a single-day key has zero x-variance — no trend is defined
@@ -710,7 +710,6 @@ object TimeSeries {
   def autocorrDaily(
       events: DataFrame, keyCol: String, tsMsCol: String, maxLag: Int = 3): DataFrame = {
     require(maxLag >= 1)
-    val dec = "decimal(38,0)"
     val day = Cols.floorDiv(col(tsMsCol), DayMs)
     val daily = events
       .groupBy(col(keyCol), day.as("day"))
@@ -732,9 +731,9 @@ object TimeSeries {
     val aggs =
       Seq(
         first(col("__n")).as("n_days"),
-        sum(col("__dev").cast(dec) * col("__dev").cast(dec)).as("__den")) ++
+        sum(dec38(col("__dev")) * dec38(col("__dev"))).as("__den")) ++
         (1 to maxLag).map(k =>
-          sum(col("__dev").cast(dec) * col(s"__dev$k").cast(dec)).as(s"__num$k"))
+          sum(dec38(col("__dev")) * dec38(col(s"__dev$k"))).as(s"__num$k"))
     val moments = withLeads.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
     moments
       .select(
@@ -745,7 +744,7 @@ object TimeSeries {
             // constant series (den = 0): autocorrelation undefined → null
             when(
               col("__den") =!= 0,
-              Cols.floorDiv(col(s"__num$k") * lit(10000).cast(dec), col("__den")))
+              Cols.floorDiv(col(s"__num$k") * dec38(lit(10000)), col("__den")))
               .cast("long").as("r_e4"))): _*)).as("__x"))
       .select(col(keyCol), col("__x.lag"), col("n_days"), col("__x.r_e4"))
   }
@@ -771,7 +770,6 @@ object TimeSeries {
       events: DataFrame, typeA: String, typeB: String,
       tsMsCol: String = "ts_ms", maxLag: Int = 3): DataFrame = {
     require(maxLag >= 1)
-    val dec = "decimal(38,0)"
     val day = Cols.floorDiv(col(tsMsCol), DayMs)
     val daily = events
       .filter(col("event_type").isin(typeA, typeB))
@@ -805,10 +803,10 @@ object TimeSeries {
         // still emits one row, and the oracle's count(*) says 0 there —
         // first() would say NULL and diverge
         count(lit(1)).as("n_days"),
-        sum(col("__da").cast(dec) * col("__da").cast(dec)).as("__dena"),
-        sum(col("__db").cast(dec) * col("__db").cast(dec)).as("__denb")) ++
+        sum(dec38(col("__da")) * dec38(col("__da"))).as("__dena"),
+        sum(dec38(col("__db")) * dec38(col("__db"))).as("__denb")) ++
         lags.map(k =>
-          sum(col("__da").cast(dec) * col(s"__dbs$k").cast(dec)).as(s"__num$k"))
+          sum(dec38(col("__da")) * dec38(col(s"__dbs$k"))).as(s"__num$k"))
     val moments = withLeads.agg(aggs.head, aggs.tail: _*)
     moments
       .select(
@@ -1053,8 +1051,6 @@ object TimeSeries {
     * moment table — no windows, no collects.
     */
   def fanoFactor(events: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val mom = events
       .groupBy(col("event_type"), Cols.floorDiv(col("ts_ms"), DayMs).as("day"))
       .agg(count(lit(1)).as("__c"))
@@ -1063,17 +1059,17 @@ object TimeSeries {
         min(col("day")).as("__d0"), max(col("day")).as("__d1"),
         count(lit(1)).as("n_active_days"),
         sum(col("__c")).as("n_events"),
-        sum(d(col("__c")) * d(col("__c"))).as("__q2"))
-    val n = d(col("__d1") - col("__d0") + 1L)
+        sum(dec38(col("__c")) * dec38(col("__c"))).as("__q2"))
+    val n = dec38(col("__d1") - col("__d0") + 1L)
     val varE8 = Cols.floorDiv(
-      (n * col("__q2") - d(col("n_events")) * d(col("n_events"))) * d(lit(100000000L)),
+      (n * col("__q2") - dec38(col("n_events")) * dec38(col("n_events"))) * dec38(lit(100000000L)),
       n * n)
     mom
       // var_e8 stays decimal(38,0) through the division (the oracle keeps
       // HUGEINT until the readout — the betweennessSample narrowing rule)
       .withColumn("__var_e8", varE8)
       .withColumn("mean_e4",
-        Cols.floorDiv(d(col("n_events")) * d(lit(10000L)), n).cast("long"))
+        Cols.floorDiv(dec38(col("n_events")) * dec38(lit(10000L)), n).cast("long"))
       .select(
         col("event_type"),
         (col("__d1") - col("__d0") + 1L).as("span_days"),
@@ -1228,8 +1224,6 @@ object TimeSeries {
     * that same bounded partition.
     */
   def changepoint(events: DataFrame, keyCol: String, tsMsCol: String = "ts_ms"): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val daily = events
       .groupBy(col(keyCol), Cols.floorDiv(col(tsMsCol), DayMs).as("day"))
       .agg(count(lit(1)).as("y"))
@@ -1248,10 +1242,10 @@ object TimeSeries {
         col(keyCol), col("day"), col("n1"),
         (col("n") - col("n1")).as("n2"),
         col("s1"), (col("s") - col("s1")).as("s2"), col("n"))
-    val num = d((d(col("n2")) * d(col("s1")) - d(col("n1")) * d(col("s2"))))
+    val num = dec38(dec38(col("n2")) * dec38(col("s1")) - dec38(col("n1")) * dec38(col("s2")))
     val gain = Cols.floorDiv(
-      num * num * d(lit(10000L)),
-      d(col("n1")) * d(col("n2")) * d(col("n"))).cast("long")
+      num * num * dec38(lit(10000L)),
+      dec38(col("n1")) * dec38(col("n2")) * dec38(col("n"))).cast("long")
     val ranked = scored
       .withColumn("gain_e4", gain)
       .withColumn("__rk",

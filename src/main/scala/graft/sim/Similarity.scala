@@ -1,23 +1,29 @@
 package graft.sim
 
 import graft.{Cols, Tables}
+import graft.Cols.dec38
 import graft.dedup.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Approximate-nearest-neighbor search over the `embeddings` table.
+/** Approximate-nearest-neighbor search and embedding-health readouts
+  * over the `embeddings` table.
   *
-  * Two paths:
-  *  - [[bruteForceTopK]]: exact top-k by quantized cosine — the correctness
-  *    baseline, and still the right plan when the query set is small (the
-  *    query side is broadcast; the corpus is scanned once, no shuffle of
-  *    the corpus).
-  *  - [[lshTopK]]: hyperplane-LSH bucketed search — the 100 TB path. Each
-  *    vector is hashed to a bucket by the sign pattern of dot products
-  *    with deterministic pseudo-random hyperplanes; candidates are pairs
-  *    sharing a bucket, so the pair space shrinks from |Q|×|C| to
-  *    per-bucket products. Recall is tunable via bits/tables.
+  * Every `ann_` operator is a composition of a few shared stages, each
+  * defined once below:
+  *  - the strided query batch ([[queryBatch]], [[queryVecs]]) broadcast
+  *    against one corpus scan ([[scanPairs]]) — the corpus never
+  *    shuffles, and [[bruteForceTopK]] is that scan scored by exact cosine;
+  *  - candidate generation by an index: hyperplane-LSH buckets
+  *    ([[lshScored]]), IVF cells ([[cellCentroids]], [[probeCells]]), PQ
+  *    codes and the per-query ADC table ([[pqCodebook]], [[pqAssign]],
+  *    [[adcTable]]), residual codes ([[rqEncode]]), int8 or sign codes;
+  *  - the per-query top-k cut ([[cutTopK]] over [[queryRank]]);
+  *  - the exact-cosine rerank of a code-only shortlist ([[exactRerank]]).
+  * The clustering and whitening readouts share the integer floor centroid
+  * ([[dimSums]], [[floorMean]]) and the power-iteration steps
+  * ([[centerDeflate]], [[renormE4]]).
   *
   * Quantization (milli-unit longs, Dedup.quantized) keeps all dot products
   * exact integer sums — deterministic across engines and orders.
@@ -49,26 +55,63 @@ object Similarity {
   private[graft] def queryBatch(vecs: DataFrame): DataFrame =
     vecs.filter(pmod(col("vec_id"), lit(QueryStride)) === 0)
 
+  /** The query batch of `vecs` keyed `query_id`, carrying `extra` and
+    * then `qv`/`norm2` as `q_qv`/`q_norm2` — the query side of every
+    * exact-cosine scan, probe and rerank here.
+    */
+  private def queryVecs(vecs: DataFrame, extra: Column*): DataFrame =
+    queryBatch(vecs).select(
+      (col("vec_id").as("query_id") +: extra) ++
+        Seq(col("qv").as("q_qv"), col("norm2").as("q_norm2")): _*)
+
+  /** Exact quantized cosine between a [[queryVecs]] row and a vector's
+    * own `qv`/`norm2`, named `cosine`. */
+  private def exactCosine: Column =
+    Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("qv"), col("norm2")).as("cosine")
+
+  /** The broadcast query-batch scan: `queries` (a projection of the query
+    * batch keyed `query_id`) is broadcast against one scan of `vecs`, and
+    * every (query, other vector) pair is scored by `score`, the vector
+    * keyed `id`. The corpus is scanned once and never shuffles.
+    */
+  private def scanPairs(vecs: DataFrame, queries: DataFrame, score: Column,
+      id: String = "neighbor_id"): DataFrame =
+    vecs.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as(id), score)
+
+  /** Row number within each query by `order` — the rank behind every
+    * per-query cut, probe and shortlist here. */
+  private def queryRank(order: Column*): Column =
+    row_number().over(Window.partitionBy(col("query_id")).orderBy(order: _*))
+
+  /** The per-query top-k cut: each query's first `k` rows of `scored` by
+    * `order` (its last key breaks ties), numbered 1..k in the long
+    * column `rank`. */
+  private def cutTopK(scored: DataFrame, k: Int, rank: String, order: Column*): DataFrame =
+    scored.withColumn(rank, queryRank(order: _*).cast("long")).filter(col(rank) <= k)
+
+  /** Exact rerank of a `(query_id, neighbor_id)` shortlist over the
+    * quantized table `q`: each pair is joined to its query's and its
+    * neighbor's vectors by id, scored by exact cosine and cut to each
+    * query's top `k`. Shortlist query ids are strided by construction, so
+    * the broadcast query batch only bounds the broadcast — it cannot
+    * change the join result (r8 fix). Cost ∝ shortlist, not corpus.
+    */
+  private[graft] def exactRerank(q: DataFrame, shortlist: DataFrame, k: Int): DataFrame =
+    cutTopK(
+      shortlist.select(col("query_id"), col("neighbor_id"))
+        .join(broadcast(queryVecs(q)), "query_id")
+        .join(q.select(col("vec_id").as("neighbor_id"), col("qv"), col("norm2")), "neighbor_id")
+        .select(col("query_id"), col("neighbor_id"), exactCosine),
+      k, "rank", col("cosine").desc, col("neighbor_id"))
+
   /** Exact top-k neighbors (quantized cosine) for the query subset.
     * Query side is broadcast: the corpus never shuffles.
     */
   def bruteForceTopK(embeddings: DataFrame, k: Int = TopK): DataFrame = {
     val q = Dedup.quantized(embeddings)
-    val queries = broadcast(
-      queryBatch(q)
-        .select(
-          col("vec_id").as("query_id"),
-          col("qv").as("q_qv"),
-          col("norm2").as("q_norm2")))
-    val scored = q.join(queries, col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id").as("neighbor_id"),
-        Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("qv"), col("norm2")).as("cosine"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    cutTopK(scanPairs(q, queryVecs(q), exactCosine), k, "rank",
+      col("cosine").desc, col("neighbor_id"))
   }
 
   /** Exact top-k by integer squared EUCLIDEAN distance for the same query
@@ -84,20 +127,14 @@ object Similarity {
     */
   def bruteForceTopKL2(embeddings: DataFrame, k: Int = TopK): DataFrame = {
     val q = Dedup.quantized(embeddings)
-    val queries = broadcast(
-      queryBatch(q)
-        .select(
-          col("vec_id").as("query_id"),
-          col("qv").as("q_qv"),
-          col("norm2").as("q_norm2")))
-    val d2 = col("q_norm2") - lit(2L) * Dedup.longDot(col("q_qv"), col("qv")) + col("norm2")
-    val scored = q.join(queries, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), d2.as("d2"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    val d2 = expandedD2(col("q_norm2"), col("q_qv"), col("qv"), col("norm2"))
+    cutTopK(scanPairs(q, queryVecs(q), d2.as("d2")), k, "rank", col("d2"), col("neighbor_id"))
   }
+
+  /** Exact integer squared distance `‖v‖² − 2v·c + ‖c‖²` between `v`
+    * (norm² `vn`) and `c` (norm² `cn`) over the milli grid. */
+  private def expandedD2(vn: Column, v: Column, c: Column, cn: Column): Column =
+    vn - lit(2L) * Dedup.longDot(v, c) + cn
 
   /** Metadata-filtered vector search, and the price of post-filtering: for
     * each query, exact top-`k` cosine neighbors WITHIN the query's own
@@ -126,20 +163,12 @@ object Similarity {
   def filteredTopK(embeddings: DataFrame, k: Int = TopK,
                    overfetch: Int = 4): DataFrame = {
     val q = Dedup.quantized(embeddings)
-    val qrows = queryBatch(q)
-      .select(
-        col("vec_id").as("query_id"), col("label").as("q_label"),
-        col("qv").as("q_qv"), col("norm2").as("q_norm2"))
-    val queries = broadcast(qrows)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
+    val qrows = queryVecs(q, col("label").as("q_label"))
     // pre-filtered exact search: label equality is the join key
-    val exactTop = q
-      .join(queries, col("label") === col("q_label") && col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("qv"), col("norm2")).as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    val exactTop = cutTopK(
+      q.join(broadcast(qrows), col("label") === col("q_label") && col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), exactCosine),
+      k, "rank", col("cosine").desc, col("neighbor_id"))
     // post-filter path: the ADC index serves the unfiltered shortlist of
     // overfetch·k per query, THEN the label predicate prunes it — the
     // bounded pair table is broadcast into the two id-lookup joins
@@ -200,26 +229,23 @@ object Similarity {
   def hardNegatives(embeddings: DataFrame, k: Int = TopK,
                     overfetch: Int = 4): DataFrame = {
     val q = Dedup.quantized(embeddings)
-    val qrows = queryBatch(q)
-      .select(
-        col("vec_id").as("query_id"), col("label").as("q_label"),
-        col("qv").as("q_qv"), col("norm2").as("q_norm2"))
+    val qrows = queryVecs(q, col("label").as("q_label"))
     val shortIds = adcTopK(embeddings, k = k * overfetch)
       .select(col("query_id"), col("neighbor_id"))
-    val negs = broadcast(shortIds)
-      .join(q.select(col("vec_id").as("neighbor_id"),
-        col("label").as("n_label"), col("qv").as("n_qv"),
-        col("norm2").as("n_norm2")), "neighbor_id")
-      .join(broadcast(qrows), "query_id")
-      .filter(col("n_label") =!= col("q_label"))
-      .select(col("query_id"), col("neighbor_id"),
-        col("n_label").cast("long").as("neg_label"),
-        Dedup.cosineQ(col("q_qv"), col("q_norm2"),
-          col("n_qv"), col("n_norm2")).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))).cast("long"))
-      .filter(col("rank") <= k)
+    // the [[exactRerank]] lookups, neighbor side first, with the label
+    // filter between the lookups and the scoring
+    val negs = cutTopK(
+      broadcast(shortIds)
+        .join(q.select(col("vec_id").as("neighbor_id"),
+          col("label").as("n_label"), col("qv").as("n_qv"),
+          col("norm2").as("n_norm2")), "neighbor_id")
+        .join(broadcast(qrows), "query_id")
+        .filter(col("n_label") =!= col("q_label"))
+        .select(col("query_id"), col("neighbor_id"),
+          col("n_label").cast("long").as("neg_label"),
+          Dedup.cosineQ(col("q_qv"), col("q_norm2"),
+            col("n_qv"), col("n_norm2")).as("cosine")),
+      k, "rank", col("cosine").desc, col("neighbor_id"))
     val posTop = q
       .join(broadcast(qrows),
         col("label") === col("q_label") && col("vec_id") =!= col("query_id"))
@@ -272,13 +298,9 @@ object Similarity {
     */
   def lshTopK(spark: SparkSession, embeddings: DataFrame, k: Int = TopK,
               dim: Int = 64, tables: Int = Dedup.LshTables,
-              bits: Int = Dedup.LshBitsPerTable): DataFrame = {
-    val scored = lshScored(embeddings, dim, tables, bits)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+              bits: Int = Dedup.LshBitsPerTable): DataFrame =
+    cutTopK(lshScored(embeddings, dim, tables, bits), k, "rank",
+      col("cosine").desc, col("neighbor_id"))
 
   /** Threshold (range) retrieval over the same multi-table hyperplane
     * index as [[lshTopK]]: every candidate pair the buckets surface with
@@ -507,16 +529,10 @@ object Similarity {
     // filter off this build side and the broadcast degenerates to the
     // corpus (BroadcastBoundSpec, r15) — and a corpus/stride-row batch
     // gains nothing from a repartition anyway.
-    val scored = cand
-      .join(broadcast(queryBatch(Dedup.quantized(embeddings)).select(
-        col("vec_id").as("query_id"), col("qv").as("q_qv"), col("norm2").as("q_norm2"))),
-        "query_id")
+    cand
+      .join(broadcast(queryVecs(Dedup.quantized(embeddings))), "query_id")
       .join(q.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-      .select(
-        col("query_id"),
-        col("neighbor_id"),
-        Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("qv"), col("norm2")).as("cosine"))
-    scored
+      .select(col("query_id"), col("neighbor_id"), exactCosine)
   }
 
   /** IVF (inverted-file) ANN with the `label` column as the coarse
@@ -532,47 +548,52 @@ object Similarity {
     */
   def ivfTopK(embeddings: DataFrame, k: Int = TopK, nprobe: Int = 2, dim: Int = 64): DataFrame = {
     val q = Dedup.quantized(embeddings)
-    val centroids = cellCentroids(q, dim)
-    val queries = queryBatch(q)
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"), col("norm2").as("q_norm2"))
-    // rank cells per query by centroid cosine; deterministic tie-break on label
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("cv"), col("cnorm2")).desc, col("label"))
-    val probed = broadcast(
-      queries.crossJoin(broadcast(centroids))
-        .withColumn("cell_rank", row_number().over(probeW))
-        .filter(col("cell_rank") <= nprobe)
-        .select(col("query_id"), col("q_qv"), col("q_norm2"), col("label")))
+    val probed = broadcast(probeCells(q, nprobe, dim)
+      .select(col("query_id"), col("q_qv"), col("q_norm2"), col("label")))
     // exact search within probed cells only
-    val scored = q.join(probed, Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id").as("neighbor_id"),
-        Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("qv"), col("norm2")).as("cosine"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    cutTopK(
+      q.join(probed, Seq("label"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), exactCosine),
+      k, "rank", col("cosine").desc, col("neighbor_id"))
   }
+
+  /** The IVF probe: the query batch ([[queryVecs]]) crossed with the
+    * broadcast |cells|-row [[cellCentroids]] table, cut to each query's
+    * `nprobe` nearest cells by centroid cosine (ties to the smaller
+    * label). Shared by [[ivfTopK]] and [[ivfPqTopK]].
+    */
+  private def probeCells(q: DataFrame, nprobe: Int, dim: Int): DataFrame =
+    queryVecs(q).crossJoin(broadcast(cellCentroids(q, dim)))
+      .withColumn("cell_rank", queryRank(
+        Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("cv"), col("cnorm2")).desc, col("label")))
+      .filter(col("cell_rank") <= nprobe)
 
   /** Exact integer centroids per quantizer cell — dim positional sums +
     * count, then FLOOR division (DuckDB `//` semantics: sums can be
     * negative, where Spark's `div` would truncate toward zero instead).
-    * Shared by [[ivfTopK]] (probe ranking) and [[ivfAppend]] (frozen-
+    * Shared by [[probeCells]] (the IVF probe) and [[ivfAppend]] (frozen-
     * index assignment); output is |cells| rows, safely broadcastable.
     */
-  private[graft] def cellCentroids(q: DataFrame, dim: Int): DataFrame = {
-    val sums = (0 until dim).map(i => sum(element_at(col("qv"), i + 1)).as(s"s$i"))
-    q.groupBy(col("label"))
-      .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-      .select(
-        col("label"),
-        array((0 until dim).map(i =>
-          call_function("div", col(s"s$i") - pmod(col(s"s$i"), col("n")), col("n"))): _*)
-          .as("cv"))
+  private[graft] def cellCentroids(q: DataFrame, dim: Int): DataFrame =
+    dimSums(q, Seq(col("label")), "qv", "s", "n", dim)
+      .select(col("label"), array(floorMean("s", "n", dim): _*).as("cv"))
       .withColumn("cnorm2", Dedup.longDot(col("cv"), col("cv")))
+
+  /** Per-group positional sums `{p}0 … {p}{dim−1}` of the array column
+    * `v`, then the group count as `n`, then `extra` — the one aggregate
+    * every integer centroid here is built from (all algebraic, map-side
+    * combined; no rows×dim explode).
+    */
+  private def dimSums(df: DataFrame, keys: Seq[Column], v: String, p: String, n: String,
+      dim: Int, extra: Column*): DataFrame = {
+    val sums = (0 until dim).map(i => sum(element_at(col(v), i + 1)).as(s"$p$i"))
+    df.groupBy(keys: _*).agg(sums.head, (sums.tail ++ (count(lit(1)).as(n) +: extra)): _*)
   }
+
+  /** The exact floor centroid of [[dimSums]]' sums, `⌊{p}i / n⌋` per dim. */
+  private def floorMean(p: String, n: String, dim: Int): Seq[Column] =
+    (0 until dim).map(i => Cols.floorDiv(col(s"$p$i"), col(n)))
 
   /** Incremental IVF maintenance — the piece between building the index
     * ([[ivfTopK]]'s centroids) and trusting it forever: a new-vector
@@ -695,22 +716,11 @@ object Similarity {
     */
   def sqTopK(embeddings: DataFrame, k: Int = TopK): DataFrame = {
     val c = int8Codes(embeddings)
-    val queries = broadcast(
-      queryBatch(c)
-        .select(
-          col("vec_id").as("query_id"),
-          col("c8").as("q_c8"),
-          col("cnorm2_8").as("q_cnorm2")))
-    val scored = c.join(queries, col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("vec_id").as("neighbor_id"),
-        Dedup.cosineQ(col("q_c8"), col("q_cnorm2"), col("c8"), col("cnorm2_8"))
-          .as("cosine8"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine8").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    val queries = queryBatch(c).select(
+      col("vec_id").as("query_id"), col("c8").as("q_c8"), col("cnorm2_8").as("q_cnorm2"))
+    val cosine8 = Dedup.cosineQ(col("q_c8"), col("q_cnorm2"), col("c8"), col("cnorm2_8"))
+    cutTopK(scanPairs(c, queries, cosine8.as("cosine8")), k, "rank",
+      col("cosine8").desc, col("neighbor_id"))
   }
 
   /** Per-query recall of an approximate top-k `(query_id, neighbor_id)`
@@ -785,18 +795,8 @@ object Similarity {
     */
   def maxSimTopK(embeddings: DataFrame, k: Int = TopK): DataFrame = {
     val sub = subvectors(embeddings)
-    val queries = broadcast(
-      queryBatch(sub)
-        .select(col("vec_id").as("query_id"), col("subs").as("q_subs")))
-    val scored = sub.join(queries, col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        maxSimScore(col("q_subs"), col("subs")).as("maxsim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("maxsim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    cutTopK(scanPairs(sub, subQueries(sub), maxSimScore.as("maxsim")), k, "rank",
+      col("maxsim").desc, col("neighbor_id"))
   }
 
   /** The 4×16 milli-quantized "token" subvector table shared by
@@ -804,14 +804,18 @@ object Similarity {
   private def subvectors(embeddings: DataFrame): DataFrame =
     Dedup.quantized(embeddings).select(
       col("vec_id"),
-      array((0 until 4).map(t => slice(col("qv"), t * 16 + 1, 16)): _*).as("subs"))
+      array((0 until 4).map(t => subvec(col("qv"), t)): _*).as("subs"))
 
-  /** `Σ_{q-subvec} max_{d-subvec} dot(q, d)` over two 4-element
-    * subvector arrays — sixteen codegen'd `graft_long_dot` calls. */
-  private def maxSimScore(qSubs: Column, dSubs: Column): Column =
+  /** The query batch of [[subvectors]], its `subs` as `q_subs`. */
+  private def subQueries(sub: DataFrame): DataFrame =
+    queryBatch(sub).select(col("vec_id").as("query_id"), col("subs").as("q_subs"))
+
+  /** `Σ_{q-subvec} max_{d-subvec} dot(q, d)` between the query's `q_subs`
+    * and the document's `subs` — sixteen codegen'd `graft_long_dot` calls. */
+  private def maxSimScore: Column =
     (0 until 4).map(qt =>
       greatest((0 until 4).map(dt =>
-        Dedup.longDot(element_at(qSubs, qt + 1), element_at(dSubs, dt + 1))): _*))
+        Dedup.longDot(element_at(col("q_subs"), qt + 1), element_at(col("subs"), dt + 1))): _*))
       .reduce(_ + _)
 
   /** The production MaxSim shape: [[adcTopK]]'s code-only ADC scan
@@ -831,23 +835,128 @@ object Similarity {
     val sub = subvectors(embeddings)
     val short = adcTopK(embeddings, k = shortlist)
       .select(col("query_id"), col("neighbor_id"))
-    // broadcast side is the QUERY BATCH, never the corpus: shortlist
-    // query_ids are strided by construction, so the stride filter only
-    // bounds the broadcast — it cannot change the join result (r8 fix)
-    val queries = broadcast(
-      queryBatch(sub).select(col("vec_id").as("query_id"), col("subs").as("q_subs")))
-    val rescored = short
-      .join(queries, "query_id")
-      .join(sub.select(col("vec_id").as("neighbor_id"), col("subs")), "neighbor_id")
-      .select(
-        col("query_id"), col("neighbor_id"),
-        maxSimScore(col("q_subs"), col("subs")).as("maxsim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("maxsim").desc, col("neighbor_id"))
-    rescored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    // the [[exactRerank]] lookups with the MaxSim score; the strided
+    // query side only bounds the broadcast (r8 fix)
+    cutTopK(
+      short
+        .join(broadcast(subQueries(sub)), "query_id")
+        .join(sub.select(col("vec_id").as("neighbor_id"), col("subs")), "neighbor_id")
+        .select(col("query_id"), col("neighbor_id"), maxSimScore.as("maxsim")),
+      k, "rank", col("maxsim").desc, col("neighbor_id"))
   }
+
+  /** Subvector width of the PQ family: 4 × 16 dims tile the 64-dim
+    * embedding (also the MaxSim "token" width). */
+  private val SubLen = 16
+
+  /** Subvector `j` of the array `v` — `SubLen` elements from j·SubLen. */
+  private def subvec(v: Column, j: Int): Column = slice(v, j * SubLen + 1, SubLen)
+
+  /** [[subvec]] at a per-row subspace column `j`. */
+  private def subvec(v: Column, j: Column): Column =
+    slice(v, (j * SubLen + 1).cast("int"), lit(SubLen))
+
+  /** Exact squared L2 distance between two integer arrays. */
+  private def sqL2(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
+
+  /** `explode` of 0 … n−1 as longs — the literal grid fan-out. */
+  private def upTo(n: Int): Column = explode(sequence(lit(0L), lit((n - 1).toLong)))
+
+  /** The deterministic seed codebook `(cid, cqv)`: the vectors of the `k`
+    * lowest vec_ids, so both engines derive it from the data with no RNG
+    * and no trained artifact (PQ and the RQ stage-1 codebook). */
+  private def seedCodebook(q: DataFrame, k: Int): DataFrame =
+    q.filter(col("vec_id") < k).select(col("vec_id").as("cid"), col("qv").as("cqv"))
+
+  /** The PQ [[seedCodebook]]. `subspaces` 16-dim subvectors must tile the
+    * 64-dim embedding exactly: any other count slices past the array
+    * (slice → empty, element_at → null), every code ties to cid 0, and
+    * the operator would return garbage instead of failing.
+    */
+  private def pqCodebook(q: DataFrame, subspaces: Int, codebookK: Int): DataFrame = {
+    require(subspaces * SubLen == 64,
+      s"subspaces × $SubLen must equal the 64-dim embedding (got $subspaces)")
+    seedCodebook(q, codebookK)
+  }
+
+  /** Exact squared L2 from each subvector of `v` to the same subvector of
+    * the codebook row's `cqv`, as a `subspaces`-element array. */
+  private def subDists(v: Column, subspaces: Int): Column =
+    array((0 until subspaces).map(j => sqL2(subvec(v, j), subvec(col("cqv"), j))): _*)
+
+  /** PQ encode: every vector (with its `keys`) against the broadcast
+    * `codebook`, keeping per (vec_id, keys…, subspace `j`) the nearest
+    * entry as `m = (dist, cid)` — exact integer squared L2, ties to the
+    * smallest cid. The corpus explodes to |corpus|·k·subspaces narrow
+    * rows folded by one hash aggregate.
+    */
+  private def pqAssign(q: DataFrame, codebook: DataFrame, subspaces: Int,
+      keys: String*): DataFrame = {
+    val id = col("vec_id") +: keys.map(col)
+    q.select(id :+ col("qv"): _*)
+      .crossJoin(codebook)
+      .select(id ++ Seq(col("cid"),
+        posexplode(subDists(col("qv"), subspaces)).as(Seq("j", "dist"))): _*)
+      .groupBy(id :+ col("j"): _*)
+      .agg(min(struct(col("dist"), col("cid"))).as("m"))
+  }
+
+  /** The per-query ADC lookup table `(query_id, a_cid, a_j, d2)`: exact d²
+    * from each query's own subvectors to every codebook subvector —
+    * |queries|·codebookK·subspaces rows, broadcast. */
+  private def adcTable(q: DataFrame, codebook: DataFrame, subspaces: Int): DataFrame =
+    broadcast(
+      queryBatch(q)
+        .select(col("vec_id").as("query_id"), col("qv"))
+        .crossJoin(codebook)
+        .select(col("query_id"), col("cid").as("a_cid"),
+          posexplode(subDists(col("qv"), subspaces)).as(Seq("a_j", "d2"))))
+
+  /** Sums each (query, vector) pair's looked-up ADC distances and cuts
+    * each query's top `k` by (adc_d2, neighbor_id). */
+  private def adcCut(lookups: DataFrame, k: Int): DataFrame =
+    cutTopK(
+      lookups
+        .groupBy(col("query_id"), col("vec_id"))
+        .agg(sum(col("d2")).as("adc_d2"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adc_d2")),
+      k, "rank", col("adc_d2"), col("neighbor_id"))
+
+  /** Lloyd refit of PQ assignments `asg` (vec_id, j, code, dist) joined to
+    * `q` (vec_id, qv): per (j, code) the count `n`, the summed assignment
+    * error `err`, the per-dim sums `__s1…`, the squared-sum `__qq` and
+    * the new floor centroid `__c1…`. [[refitErr]] and [[refitCentroid]]
+    * read the refit off these same sums — never a second corpus pass.
+    */
+  private def pqRefit(asg: DataFrame, q: DataFrame, n: String, err: String): DataFrame = {
+    // sub-element i of the assigned subspace: qv[j·16 + i]
+    def el(i: Int): Column = element_at(col("qv"), (col("j") * SubLen + i).cast("int"))
+    val dims = 1 to SubLen
+    asg.join(q, "vec_id")
+      .groupBy(col("j"), col("code"))
+      .agg(
+        count(lit(1)).as(n),
+        Seq(sum(col("dist")).as(err)) ++
+          dims.map(i => sum(el(i)).as(s"__s$i")) ++
+          Seq(sum(dims.map(i => el(i) * el(i)).reduce(_ + _)).as("__qq")): _*)
+      .select(
+        col("j") +: col("code") +: col(n) +: col(err) +: col("__qq") +:
+          dims.map(i => Cols.floorDiv(col(s"__s$i"), col(n)).as(s"__c$i")) ++:
+          dims.map(i => col(s"__s$i")): _*)
+  }
+
+  /** The error after a [[pqRefit]] move, `Σ‖x−c‖² = Q − 2Σᵢcᵢsᵢ + nΣᵢcᵢ²`
+    * with per-dim sums `sᵢ`, squared sum `Q`, count `n`, new centroid `cᵢ`. */
+  private def refitErr(n: String): Column = {
+    val dims = 1 to SubLen
+    col("__qq") -
+      dims.map(i => lit(2L) * col(s"__c$i") * col(s"__s$i")).reduce(_ + _) +
+      col(n) * dims.map(i => col(s"__c$i") * col(s"__c$i")).reduce(_ + _)
+  }
+
+  /** The [[pqRefit]] centroid as one array. */
+  private def refitCentroid: Column = array((1 to SubLen).map(i => col(s"__c$i")): _*)
 
   /** Product quantization (PQ): the 64-dim milli-quantized vector splits
     * into `subspaces` contiguous 16-dim subvectors; each is assigned to
@@ -867,22 +976,7 @@ object Similarity {
     */
   def productQuantize(embeddings: DataFrame, subspaces: Int = 4, k: Int = 8): DataFrame = {
     val q = Dedup.quantized(embeddings)
-    val subLen = 16
-    val codebook = broadcast(
-      q.filter(col("vec_id") < k).select(col("vec_id").as("cid"), col("qv").as("cqv")))
-    val dists = array((0 until subspaces).map { j =>
-      aggregate(
-        zip_with(
-          slice(col("qv"), j * subLen + 1, subLen),
-          slice(col("cqv"), j * subLen + 1, subLen),
-          (a, b) => (a - b) * (a - b)),
-        lit(0L), _ + _)
-    }: _*)
-    q.select(col("vec_id"), col("qv"))
-      .crossJoin(codebook)
-      .select(col("vec_id"), col("cid"), posexplode(dists).as(Seq("j", "dist")))
-      .groupBy(col("vec_id"), col("j"))
-      .agg(min(struct(col("dist"), col("cid"))).as("m"))
+    pqAssign(q, broadcast(pqCodebook(q, subspaces, k)), subspaces)
       .groupBy(col("vec_id"))
       .agg(
         max(when(col("j") === 0, col("m.cid"))).as("code_0"),
@@ -920,68 +1014,24 @@ object Similarity {
     */
   def pqTrainStep(embeddings: DataFrame, subspaces: Int = 4,
       codebookK: Int = 8): DataFrame = {
-    val subLen = 16
-    // the 16-dim subvector grid must tile the 64-dim vectors exactly —
-    // a wider subspaces silently reads past the array (slice → empty,
-    // element_at → null) and refits garbage instead of failing
-    require(subspaces * subLen == 64,
-      s"subspaces × $subLen must equal the 64-dim embedding (got $subspaces)")
     val q = Dedup.quantized(embeddings)
-    val codebook = broadcast(
-      q.filter(col("vec_id") < codebookK)
-        .select(col("vec_id").as("cid"), col("qv").as("cqv")))
-    def subDists(vCol: Column): Column = array((0 until subspaces).map { j =>
-      aggregate(
-        zip_with(
-          slice(vCol, j * subLen + 1, subLen),
-          slice(col("cqv"), j * subLen + 1, subLen),
-          (a, b) => (a - b) * (a - b)),
-        lit(0L), _ + _)
-    }: _*)
-    val codes = q.select(col("vec_id"), col("qv"))
-      .crossJoin(codebook)
-      .select(col("vec_id"), col("cid"), posexplode(subDists(col("qv"))).as(Seq("j", "dist")))
-      .groupBy(col("vec_id"), col("j"))
-      .agg(min(struct(col("dist"), col("cid"))).as("m"))
+    val codebook = broadcast(pqCodebook(q, subspaces, codebookK))
+    val codes = pqAssign(q, codebook, subspaces)
       .select(col("vec_id"), col("j").cast("long").as("j"),
         col("m.cid").as("code"), col("m.dist").as("dist"))
-    // sub-element i of the assigned subspace: qv[j·16 + i]
-    def el(i: Int): Column = element_at(col("qv"), (col("j") * subLen + i).cast("int"))
-    val aggd = codes.join(q.select(col("vec_id"), col("qv")), "vec_id")
-      .groupBy(col("j"), col("code"))
-      .agg(
-        count(lit(1)).as("n_assigned"),
-        Seq(sum(col("dist")).as("err_before")) ++
-          (1 to subLen).map(i => sum(el(i)).as(s"__s$i")) ++
-          Seq(sum((1 to subLen).map(i => el(i) * el(i)).reduce(_ + _)).as("__qq")): _*)
-    val withCent = aggd.select(
-      col("j") +: col("code") +: col("n_assigned") +: col("err_before") +: col("__qq") +:
-        (1 to subLen).map(i =>
-          graft.Cols.floorDiv(col(s"__s$i"), col("n_assigned")).as(s"__c$i")) ++:
-        (1 to subLen).map(i => col(s"__s$i")): _*)
-    val errAfter = col("__qq") -
-      (1 to subLen).map(i => lit(2L) * col(s"__c$i") * col(s"__s$i")).reduce(_ + _) +
-      col("n_assigned") * (1 to subLen).map(i => col(s"__c$i") * col(s"__c$i")).reduce(_ + _)
-    val refit = withCent.select(
-      col("j"), col("code"), col("n_assigned"), col("err_before"),
-      errAfter.as("err_after"),
-      array((1 to subLen).map(i => col(s"__c$i")): _*).as("__nc"))
+    val refit = pqRefit(codes, q.select(col("vec_id"), col("qv")), "n_assigned", "err_before")
+      .select(col("j"), col("code"), col("n_assigned"), col("err_before"),
+        refitErr("n_assigned").as("err_after"), refitCentroid.as("__nc"))
     // full (subspace, code) grid so starved codes keep a zero row
     val grid = codebook.select(col("cid").as("code"), col("cqv"))
-      .select(col("code"), col("cqv"),
-        explode(sequence(lit(0L), lit((subspaces - 1).toLong))).as("j"))
+      .select(col("code"), col("cqv"), upTo(subspaces).as("j"))
     grid.join(refit, Seq("j", "code"), "left")
       .select(
         col("j").as("subspace"), col("code"),
         coalesce(col("n_assigned"), lit(0L)).as("n_assigned"),
         col("err_before"), col("err_after"),
-        when(col("n_assigned").isNotNull,
-          aggregate(
-            zip_with(
-              col("__nc"),
-              slice(col("cqv"), (col("j") * subLen + 1).cast("int"), lit(subLen)),
-              (a, b) => (a - b) * (a - b)),
-            lit(0L), _ + _)).as("displacement_sq"))
+        when(col("n_assigned").isNotNull, sqL2(col("__nc"), subvec(col("cqv"), col("j"))))
+          .as("displacement_sq"))
   }
 
   /** PQ codebook training to convergence — [[pqTrainStep]]'s single
@@ -1014,56 +1064,27 @@ object Similarity {
     */
   def pqTrainConverge(embeddings: DataFrame, subspaces: Int = 4,
       codebookK: Int = 8, rounds: Int = 2): DataFrame = {
-    val subLen = 16
-    require(subspaces * subLen == 64,
-      s"subspaces × $subLen must equal the 64-dim embedding (got $subspaces)")
     val q = Dedup.quantized(embeddings).select(col("vec_id"), col("qv"))
     // seed codebook at subspace grain: (j, cid, 16-dim cvec) — the
     // subvector slices of the k lowest vec_ids, k·subspaces rows
-    var cents = q.filter(col("vec_id") < codebookK)
-      .select(col("vec_id").as("cid"), col("qv").as("cqv"))
-      .select(col("cid"), col("cqv"),
-        explode(sequence(lit(0L), lit((subspaces - 1).toLong))).as("j"))
-      .select(col("j"), col("cid"),
-        slice(col("cqv"), (col("j") * subLen + 1).cast("int"), lit(subLen)).as("cvec"))
+    var cents = pqCodebook(q, subspaces, codebookK)
+      .select(col("cid"), col("cqv"), upTo(subspaces).as("j"))
+      .select(col("j"), col("cid"), subvec(col("cqv"), col("j")).as("cvec"))
       .localCheckpoint()
     val perRound = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to rounds) {
       val asg = q.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("j"), col("cid"),
-          aggregate(
-            zip_with(
-              slice(col("qv"), (col("j") * subLen + 1).cast("int"), lit(subLen)),
-              col("cvec"),
-              (a, b) => (a - b) * (a - b)),
-            lit(0L), _ + _).as("dist"))
+          sqL2(subvec(col("qv"), col("j")), col("cvec")).as("dist"))
         .groupBy(col("vec_id"), col("j"))
         .agg(min(struct(col("dist"), col("cid"))).as("m"))
         .select(col("vec_id"), col("j"),
           col("m.cid").as("code"), col("m.dist").as("dist"))
-      def el(i: Int): Column =
-        element_at(col("qv"), (col("j") * subLen + i).cast("int"))
-      val aggd = asg.join(q, "vec_id")
-        .groupBy(col("j"), col("code"))
-        .agg(
-          count(lit(1)).as("n"),
-          Seq(sum(col("dist")).as("err_assign")) ++
-            (1 to subLen).map(i => sum(el(i)).as(s"__s$i")) ++
-            Seq(sum((1 to subLen).map(i => el(i) * el(i)).reduce(_ + _)).as("__qq")): _*)
-      val withCent = aggd.select(
-        col("j") +: col("code") +: col("n") +: col("err_assign") +: col("__qq") +:
-          (1 to subLen).map(i =>
-            graft.Cols.floorDiv(col(s"__s$i"), col("n")).as(s"__c$i")) ++:
-          (1 to subLen).map(i => col(s"__s$i")): _*)
-      val errRefit = col("__qq") -
-        (1 to subLen).map(i => lit(2L) * col(s"__c$i") * col(s"__s$i")).reduce(_ + _) +
-        col("n") * (1 to subLen).map(i => col(s"__c$i") * col(s"__c$i")).reduce(_ + _)
       // (j, code) readout, checkpointed: backs BOTH the final union and
       // the next round's codebook off one corpus scan
-      val readout = withCent.select(
-        col("j"), col("code"), col("n"), col("err_assign"),
-        errRefit.as("err_refit"),
-        array((1 to subLen).map(i => col(s"__c$i")): _*).as("cvec"))
+      val readout = pqRefit(asg, q, "n", "err_assign")
+        .select(col("j"), col("code"), col("n"), col("err_assign"),
+          refitErr("n").as("err_refit"), refitCentroid.as("cvec"))
         .localCheckpoint()
       perRound += readout.groupBy(col("j"))
         .agg(
@@ -1083,6 +1104,37 @@ object Similarity {
     }
     graft.LocalCheckpoints.free(cents)
     perRound.reduce(_.unionByName(_))
+  }
+
+  /** The shared RQ encode: stage-1 assignments (with residuals), stage-2
+    * assignments, and both codebooks — [[rqTrain]] summarizes it,
+    * [[rqTopK]] searches over its codes.
+    */
+  private def rqEncode(embeddings: DataFrame, k: Int, dim: Int)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val q = Dedup.quantized(embeddings).select(col("vec_id"), col("qv"))
+    val cb1 = broadcast(seedCodebook(q, k))
+    val asg1 = q.crossJoin(cb1)
+      .select(col("vec_id"), col("qv"),
+        struct(sqL2(col("qv"), col("cqv")).as("dist"), col("cid"), col("cqv")).as("__s"))
+      .groupBy(col("vec_id"))
+      .agg(min(col("__s")).as("m"), first(col("qv")).as("qv"))
+      .select(col("vec_id"), col("m.cid").as("c1"), col("m.dist").as("d1"),
+        zip_with(col("qv"), col("m.cqv"), (a, b) => a - b).as("rv"))
+    val zeroRow = q.sparkSession.range(1L)
+      .select(lit(-1L).as("cid2"),
+        array(Seq.fill(dim)(lit(0L)): _*).as("c2v"))
+    val cb2 = broadcast(
+      asg1.filter(col("vec_id") >= k && col("vec_id") < 2L * k)
+        .select(col("vec_id").as("cid2"), col("rv").as("c2v"))
+        .unionByName(zeroRow))
+    val asg2 = asg1.crossJoin(cb2)
+      .select(col("vec_id"),
+        struct(sqL2(col("rv"), col("c2v")).as("dist"), col("cid2")).as("__s"))
+      .groupBy(col("vec_id"))
+      .agg(min(col("__s")).as("m"))
+      .select(col("vec_id"), col("m.cid2").as("c2"), col("m.dist").as("d2"))
+    (asg1, asg2, cb1, cb2)
   }
 
   /** Residual quantization (RQ) — the additive alternative to
@@ -1107,40 +1159,6 @@ object Similarity {
     * lexicographically AFTER (dist, cid), which never tie), so the
     * residual needs no second join against the codebook.
     */
-  /** The shared RQ encode: stage-1 assignments (with residuals), stage-2
-    * assignments, and both codebooks — [[rqTrain]] summarizes it,
-    * [[rqTopK]] searches over its codes.
-    */
-  private def rqEncode(embeddings: DataFrame, k: Int, dim: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val q = Dedup.quantized(embeddings).select(col("vec_id"), col("qv"))
-    val cb1 = broadcast(
-      q.filter(col("vec_id") < k).select(col("vec_id").as("cid"), col("qv").as("cqv")))
-    def l2(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
-    val asg1 = q.crossJoin(cb1)
-      .select(col("vec_id"), col("qv"),
-        struct(l2(col("qv"), col("cqv")).as("dist"), col("cid"), col("cqv")).as("__s"))
-      .groupBy(col("vec_id"))
-      .agg(min(col("__s")).as("m"), first(col("qv")).as("qv"))
-      .select(col("vec_id"), col("m.cid").as("c1"), col("m.dist").as("d1"),
-        zip_with(col("qv"), col("m.cqv"), (a, b) => a - b).as("rv"))
-    val zeroRow = q.sparkSession.range(1L)
-      .select(lit(-1L).as("cid2"),
-        array(Seq.fill(dim)(lit(0L)): _*).as("c2v"))
-    val cb2 = broadcast(
-      asg1.filter(col("vec_id") >= k && col("vec_id") < 2L * k)
-        .select(col("vec_id").as("cid2"), col("rv").as("c2v"))
-        .unionByName(zeroRow))
-    val asg2 = asg1.crossJoin(cb2)
-      .select(col("vec_id"),
-        struct(l2(col("rv"), col("c2v")).as("dist"), col("cid2")).as("__s"))
-      .groupBy(col("vec_id"))
-      .agg(min(col("__s")).as("m"))
-      .select(col("vec_id"), col("m.cid2").as("c2"), col("m.dist").as("d2"))
-    (asg1, asg2, cb1, cb2)
-  }
-
   def rqTrain(embeddings: DataFrame, k: Int = 8, dim: Int = 64): DataFrame = {
     val (asg1, asg2, _, _) = rqEncode(embeddings, k, dim)
     val s1 = asg1.agg(
@@ -1183,17 +1201,13 @@ object Similarity {
         .select(col("vec_id").as("query_id"), col("qv"))
         .crossJoin(combos)
         .select(col("query_id"), col("a_c1"), col("a_c2"),
-          aggregate(
-            zip_with(col("qv"), col("recon"), (x, y) => (x - y) * (x - y)),
-            lit(0L), _ + _).as("rq_d2")))
-    codes
-      .join(qd, col("c1") === col("a_c1") && col("c2") === col("a_c2"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rq_d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("rq_d2"), col("neighbor_id")))
-        .cast("long"))
-      .filter(col("rank") <= kTop)
+          sqL2(col("qv"), col("recon")).as("rq_d2")))
+    cutTopK(
+      codes
+        .join(qd, col("c1") === col("a_c1") && col("c2") === col("a_c2"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rq_d2")),
+      kTop, "rank", col("rq_d2"), col("neighbor_id"))
   }
 
   /** Two-stage RQ retrieval — the [[adcRerank]] sandwich over the
@@ -1209,22 +1223,7 @@ object Similarity {
     */
   def rqRerank(embeddings: DataFrame, k: Int = TopK, shortlist: Int = 50): DataFrame = {
     val q = Dedup.quantized(embeddings)
-    val short = rqTopK(embeddings, kTop = shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    val queries = broadcast(queryBatch(q).select(
-      col("vec_id").as("query_id"), col("qv").as("q_qv"), col("norm2").as("q_norm2")))
-    val rescored = short
-      .join(queries, "query_id")
-      .join(
-        q.select(col("vec_id").as("neighbor_id"), col("qv"), col("norm2")),
-        "neighbor_id")
-      .select(
-        col("query_id"), col("neighbor_id"),
-        Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("qv"), col("norm2")).as("cosine"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    rescored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    exactRerank(q, rqTopK(embeddings, kTop = shortlist), k)
   }
 
   /** RQ recall@k vs the exact [[bruteForceTopK]] — the [[pqRecall]]
@@ -1256,44 +1255,16 @@ object Similarity {
     */
   def adcTopK(embeddings: DataFrame, k: Int = TopK, subspaces: Int = 4,
       codebookK: Int = 8): DataFrame = {
-    val subLen = 16
     val q = Dedup.quantized(embeddings)
-    val codebook = broadcast(
-      q.filter(col("vec_id") < codebookK).select(col("vec_id").as("cid"), col("qv").as("cqv")))
-    def subDists(vCol: Column): Column = array((0 until subspaces).map { j =>
-      aggregate(
-        zip_with(
-          slice(vCol, j * subLen + 1, subLen),
-          slice(col("cqv"), j * subLen + 1, subLen),
-          (a, b) => (a - b) * (a - b)),
-        lit(0L), _ + _)
-    }: _*)
-    // per-vector codes — the productQuantize argmin (dist, then cid) rules
-    val codes = q.select(col("vec_id"), col("qv"))
-      .crossJoin(codebook)
-      .select(col("vec_id"), col("cid"), posexplode(subDists(col("qv"))).as(Seq("j", "dist")))
-      .groupBy(col("vec_id"), col("j"))
-      .agg(min(struct(col("dist"), col("cid"))).as("m"))
+    val codebook = broadcast(pqCodebook(q, subspaces, codebookK))
+    val codes = pqAssign(q, codebook, subspaces)
       .select(col("vec_id"), col("j"), col("m.cid").as("code"))
-    // per-query ADC lookup table: exact d² from the query's own subvector
-    // to every centroid's subvector — |queries|·codebookK·subspaces rows
-    val adc = broadcast(
-      queryBatch(q)
-        .select(col("vec_id").as("query_id"), col("qv"))
-        .crossJoin(codebook)
-        .select(col("query_id"), col("cid").as("a_cid"),
-          posexplode(subDists(col("qv"))).as(Seq("a_j", "d2"))))
-    val scored = codes
-      .join(adc, col("j") === col("a_j") && col("code") === col("a_cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("d2")).as("adc_d2"))
-    scored
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adc_d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adc_d2"), col("neighbor_id")))
-        .cast("long"))
-      .filter(col("rank") <= k)
+    val adc = adcTable(q, codebook, subspaces)
+    adcCut(
+      codes
+        .join(adc, col("j") === col("a_j") && col("code") === col("a_cid"))
+        .filter(col("vec_id") =!= col("query_id")),
+      k)
   }
 
   /** Two-stage retrieval: a cheap code-only ADC shortlist re-ranked by
@@ -1309,25 +1280,7 @@ object Similarity {
     */
   def adcRerank(embeddings: DataFrame, k: Int = TopK, shortlist: Int = 25): DataFrame = {
     val q = Dedup.quantized(embeddings)
-    val short = adcTopK(embeddings, k = shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    // broadcast side is the QUERY BATCH, never the corpus: shortlist
-    // query_ids are strided by construction, so the stride filter only
-    // bounds the broadcast — it cannot change the join result (r8 fix)
-    val queries = broadcast(queryBatch(q).select(
-      col("vec_id").as("query_id"), col("qv").as("q_qv"), col("norm2").as("q_norm2")))
-    val rescored = short
-      .join(queries, "query_id")
-      .join(
-        q.select(col("vec_id").as("neighbor_id"), col("qv"), col("norm2")),
-        "neighbor_id")
-      .select(
-        col("query_id"), col("neighbor_id"),
-        Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("qv"), col("norm2")).as("cosine"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    rescored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    exactRerank(q, adcTopK(embeddings, k = shortlist), k)
   }
 
   /** IVF-PQ: the two index stages composed the way production ANN serves
@@ -1345,66 +1298,21 @@ object Similarity {
     */
   def ivfPqTopK(embeddings: DataFrame, k: Int = TopK, nprobe: Int = 2,
       dim: Int = 64, subspaces: Int = 4, codebookK: Int = 8): DataFrame = {
-    val subLen = 16
     val q = Dedup.quantized(embeddings)
-    // IVF stage: the ivfTopK coarse quantizer, verbatim
-    val sums = (0 until dim).map(i => sum(element_at(col("qv"), i + 1)).as(s"s$i"))
-    val centroids = q.groupBy(col("label"))
-      .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-      .select(
-        col("label"),
-        array((0 until dim).map(i =>
-          call_function("div", col(s"s$i") - pmod(col(s"s$i"), col("n")), col("n"))): _*)
-          .as("cv"))
-      .withColumn("cnorm2", Dedup.longDot(col("cv"), col("cv")))
-    val queries = queryBatch(q)
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"), col("norm2").as("q_norm2"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("cv"), col("cnorm2")).desc, col("label"))
-    val probed = broadcast(
-      queries.crossJoin(broadcast(centroids))
-        .withColumn("cell_rank", row_number().over(probeW))
-        .filter(col("cell_rank") <= nprobe)
-        .select(col("query_id"), col("label")))
-    // PQ stage: the adcTopK codes + per-query distance table, verbatim
-    val codebook = broadcast(
-      q.filter(col("vec_id") < codebookK).select(col("vec_id").as("cid"), col("qv").as("cqv")))
-    def subDists(vCol: Column): Column = array((0 until subspaces).map { j =>
-      aggregate(
-        zip_with(
-          slice(vCol, j * subLen + 1, subLen),
-          slice(col("cqv"), j * subLen + 1, subLen),
-          (a, b) => (a - b) * (a - b)),
-        lit(0L), _ + _)
-    }: _*)
-    val codes = q.select(col("vec_id"), col("label"), col("qv"))
-      .crossJoin(codebook)
-      .select(col("vec_id"), col("label"), col("cid"),
-        posexplode(subDists(col("qv"))).as(Seq("j", "dist")))
-      .groupBy(col("vec_id"), col("label"), col("j"))
-      .agg(min(struct(col("dist"), col("cid"))).as("m"))
+    val probed = broadcast(probeCells(q, nprobe, dim).select(col("query_id"), col("label")))
+    val codebook = broadcast(pqCodebook(q, subspaces, codebookK))
+    val codes = pqAssign(q, codebook, subspaces, "label")
       .select(col("vec_id"), col("label"), col("j"), col("m.cid").as("code"))
-    val adc = broadcast(
-      queryBatch(q)
-        .select(col("vec_id").as("query_id"), col("qv"))
-        .crossJoin(codebook)
-        .select(col("query_id"), col("cid").as("a_cid"),
-          posexplode(subDists(col("qv"))).as(Seq("a_j", "d2"))))
+    val adc = adcTable(q, codebook, subspaces)
     // candidates = codes of vectors in the query's probed cells only
-    val scored = codes
-      .join(probed.withColumnRenamed("query_id", "p_query_id"), Seq("label"))
-      .join(adc,
-        col("j") === col("a_j") && col("code") === col("a_cid") &&
-          col("p_query_id") === col("query_id") &&
-          col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("d2")).as("adc_d2"))
-    scored
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adc_d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adc_d2"), col("neighbor_id")))
-        .cast("long"))
-      .filter(col("rank") <= k)
+    adcCut(
+      codes
+        .join(probed.withColumnRenamed("query_id", "p_query_id"), Seq("label"))
+        .join(adc,
+          col("j") === col("a_j") && col("code") === col("a_cid") &&
+            col("p_query_id") === col("query_id") &&
+            col("vec_id") =!= col("query_id")),
+      k)
   }
 
   /** Reciprocal-rank fusion (RRF) of two retrieval rankings — the
@@ -1426,33 +1334,36 @@ object Similarity {
   def rrfFusion(embeddings: DataFrame, truncDims: Int = 16, deep: Int = 20,
       k: Int = TopK, rrfK: Int = 60): DataFrame = {
     val q = Dedup.quantized(embeddings)
-    def topN(vecs: DataFrame, vCol: String, nCol: String, rankName: String): DataFrame = {
-      val queries = broadcast(
-        queryBatch(vecs)
-          .select(col("vec_id").as("query_id"), col(vCol).as("__q_v"), col(nCol).as("__q_n")))
-      val scored = vecs.join(queries, col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          Dedup.cosineQ(col("__q_v"), col("__q_n"), col(vCol), col(nCol)).as("__cos"))
-      val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id"))
-      scored.withColumn(rankName, row_number().over(w).cast("long"))
-        .filter(col(rankName) <= deep)
+    def topN(vecs: DataFrame, v: String, n: String, rankName: String): DataFrame =
+      cutTopK(prefixCosine(vecs, v, n), deep, rankName, col("__cos").desc, col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"), col(rankName))
-    }
     val full = topN(q.select(col("vec_id"), col("qv"), col("norm2")), "qv", "norm2", "rank_full")
-    val tq = q.select(col("vec_id"), slice(col("qv"), 1, truncDims).as("tv"))
-      .withColumn("tn", Dedup.longDot(col("tv"), col("tv")))
-    val trunc = topN(tq, "tv", "tn", "rank_trunc")
+    val trunc = topN(prefixVecs(q, truncDims), "tv", "tn", "rank_trunc")
     def contrib(rank: String): Column = coalesce(
       graft.Cols.floorDiv(lit(1000000L), lit(rrfK.toLong) + col(rank)), lit(0L))
     val fused = full.join(trunc, Seq("query_id", "neighbor_id"), "full_outer")
       .select(
         col("query_id"), col("neighbor_id"), col("rank_full"), col("rank_trunc"),
         (contrib("rank_full") + contrib("rank_trunc")).as("rrf_e6"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("rrf_e6").desc, col("neighbor_id"))
-    fused
-      .withColumn("fused_rank", row_number().over(w).cast("long"))
-      .filter(col("fused_rank") <= k)
+    cutTopK(fused, k, "fused_rank", col("rrf_e6").desc, col("neighbor_id"))
   }
+
+  /** The `dims`-wide prefix of every quantized vector as `tv`, with its
+    * exact squared norm `tn` — the truncated (matryoshka) index. */
+  private def prefixVecs(q: DataFrame, dims: Int): DataFrame =
+    q.select(col("vec_id"), slice(col("qv"), 1, dims).as("tv"))
+      .withColumn("tn", Dedup.longDot(col("tv"), col("tv")))
+
+  /** The [[scanPairs]] exact-cosine scan over any vector column `v` with
+    * squared norm `n` (the full `qv`/`norm2` or [[prefixVecs]]), scored `__cos`.
+    * Shared by [[rrfFusion]], [[truncationAgreement]] and
+    * [[mrlRecallCurve]].
+    */
+  private def prefixCosine(vecs: DataFrame, v: String, n: String,
+      id: String = "neighbor_id"): DataFrame =
+    scanPairs(vecs,
+      queryBatch(vecs).select(col("vec_id").as("query_id"), col(v).as("__q_v"), col(n).as("__q_n")),
+      Dedup.cosineQ(col("__q_v"), col("__q_n"), col(v), col(n)).as("__cos"), id)
 
   /** L2 normalization of the (milli-quantized) embedding, emitted per
     * dimension as exact integer e4 units of the unit vector:
@@ -1528,16 +1439,22 @@ object Similarity {
       .join(labels.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
       .groupBy(col("query_id"), col("label"))
       .agg(count(lit(1)).as("n_votes"))
-    val argmax = Window.partitionBy(col("query_id"))
-      .orderBy(col("n_votes").desc, col("label"))
     votes
-      .withColumn("__rk", row_number().over(argmax))
+      .withColumn("__rk", queryRank(col("n_votes").desc, col("label")))
       .filter(col("__rk") === 1)
       .join(labels.select(col("vec_id").as("query_id"), col("label").as("true_label")), "query_id")
       .select(
         col("query_id"), col("label").as("pred_label"),
         col("n_votes"), col("true_label"))
   }
+
+  /** Per-label integer centroid vectors (floor-divided milli-int means) —
+    * the exact-arithmetic core shared by [[centroids]] (string/report
+    * form), [[silhouette]] and [[centroidOutliers]].
+    */
+  private[graft] def centroidVectors(embeddings: DataFrame, dim: Int = 64): DataFrame =
+    dimSums(Dedup.quantized(embeddings), Seq(col("label")), "qv", "s", "n_vecs", dim)
+      .select(col("label"), col("n_vecs"), array(floorMean("s", "n_vecs", dim): _*).as("cv"))
 
   /** Per-label embedding centroids — the coarse-quantizer training step
     * [[ivfTopK]] performs inline, exposed as its own operator (cluster
@@ -1553,23 +1470,6 @@ object Similarity {
     * all algebraic, map-side combined; output is |labels| rows. The
     * posexplode alternative (rows × dim shuffle) is deliberately avoided.
     */
-  /** Per-label integer centroid vectors (floor-divided milli-int means) —
-    * the exact-arithmetic core shared by [[centroids]] (string/report
-    * form) and [[silhouette]].
-    */
-  private[graft] def centroidVectors(embeddings: DataFrame, dim: Int = 64): DataFrame = {
-    val q = Dedup.quantized(embeddings)
-    val sums = (0 until dim).map(i => sum(element_at(col("qv"), i + 1)).as(s"s$i"))
-    q.groupBy(col("label"))
-      .agg(sums.head, (sums.tail :+ count(lit(1)).as("n_vecs")): _*)
-      .select(
-        col("label"),
-        col("n_vecs"),
-        array((0 until dim).map(i =>
-          call_function("div", col(s"s$i") - pmod(col(s"s$i"), col("n_vecs")), col("n_vecs"))): _*)
-          .as("cv"))
-  }
-
   def centroids(embeddings: DataFrame, dim: Int = 64): DataFrame =
     centroidVectors(embeddings, dim)
       .select(
@@ -1577,6 +1477,13 @@ object Similarity {
         col("n_vecs"),
         concat_ws(",", transform(col("cv"), x => x.cast("string"))).as("centroid_milli"),
         Dedup.longDot(col("cv"), col("cv")).as("cnorm2"))
+
+  /** The quantized (vec_id, label, qv, __vn = ‖qv‖²) table the
+    * label-centroid readouts score against [[centroidVectors]]. */
+  private def labeledVecs(embeddings: DataFrame): DataFrame =
+    Dedup.quantized(embeddings)
+      .select(col("vec_id"), col("label"), col("qv"),
+        Dedup.longDot(col("qv"), col("qv")).as("__vn"))
 
   /** Embedding outliers against the label's own centroid: vectors whose
     * squared centroid distance exceeds `factor` × the label's MEDIAN
@@ -1591,12 +1498,10 @@ object Similarity {
     */
   def centroidOutliers(
       embeddings: DataFrame, dim: Int = 64, factor: Double = 4.0): DataFrame = {
-    val v = Dedup.quantized(embeddings)
-      .select(col("vec_id"), col("label"), col("qv"),
-        Dedup.longDot(col("qv"), col("qv")).as("__vn"))
+    val v = labeledVecs(embeddings)
     val cents = centroidVectors(embeddings, dim)
       .select(col("label"), col("cv"), Dedup.longDot(col("cv"), col("cv")).as("__cn"))
-    val d2 = col("__vn") - lit(2L) * Dedup.longDot(col("qv"), col("cv")) + col("__cn")
+    val d2 = expandedD2(col("__vn"), col("qv"), col("cv"), col("__cn"))
     val dists = v.join(broadcast(cents), "label").select(col("label"), d2.as("__d2"))
     val meds = dists.groupBy(col("label"))
       .agg(round(expr("percentile(__d2, 0.5)"), 4).as("median_d2"))
@@ -1627,13 +1532,11 @@ object Similarity {
     * map-side n × k scoring, one final hash agg — no pair joins at all.
     */
   def silhouette(embeddings: DataFrame, dim: Int = 64): DataFrame = {
-    val v = Dedup.quantized(embeddings)
-      .select(col("vec_id"), col("label"), col("qv"),
-        Dedup.longDot(col("qv"), col("qv")).as("__vn"))
+    val v = labeledVecs(embeddings)
     val cents = centroidVectors(embeddings, dim)
       .select(col("label").as("__cl"), col("cv"),
         Dedup.longDot(col("cv"), col("cv")).as("__cn"))
-    val d2 = col("__vn") - lit(2L) * Dedup.longDot(col("qv"), col("cv")) + col("__cn")
+    val d2 = expandedD2(col("__vn"), col("qv"), col("cv"), col("__cn"))
     val perVec = v.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("label"), col("__cl"), d2.as("__d2"))
       .groupBy(col("vec_id"), col("label"))
@@ -1668,25 +1571,17 @@ object Similarity {
     */
   def centroidShift(embeddings: DataFrame, dim: Int = 64): DataFrame = {
     val q = Dedup.quantized(embeddings).withColumn("half", pmod(col("vec_id"), lit(2L)))
-    val sums = (0 until dim).map(i => sum(element_at(col("qv"), i + 1)).as(s"s$i"))
-    val cents = q.groupBy(col("label"), col("half"))
-      .agg(sums.head, (sums.tail :+ count(lit(1)).as("n_vecs")): _*)
-      .select(
-        col("label"), col("half"), col("n_vecs"),
-        array((0 until dim).map(i =>
-          call_function("div", col(s"s$i") - pmod(col(s"s$i"), col("n_vecs")), col("n_vecs"))): _*)
-          .as("cv"))
+    val cents = dimSums(q, Seq(col("label"), col("half")), "qv", "s", "n_vecs", dim)
+      .select(col("label"), col("half"), col("n_vecs"),
+        array(floorMean("s", "n_vecs", dim): _*).as("cv"))
     cents.filter(col("half") === 0)
       .select(col("label"), col("n_vecs").as("n_a"), col("cv").as("cv_a"))
       .join(
         cents.filter(col("half") === 1)
           .select(col("label"), col("n_vecs").as("n_b"), col("cv").as("cv_b")),
         "label")
-      .select(
-        col("label"), col("n_a"), col("n_b"),
-        aggregate(
-          zip_with(col("cv_a"), col("cv_b"), (x, y) => (x - y) * (x - y)),
-          lit(0L), _ + _).as("shift2_milli"))
+      .select(col("label"), col("n_a"), col("n_b"),
+        sqL2(col("cv_a"), col("cv_b")).as("shift2_milli"))
   }
 
   /** One exact Lloyd (k-means) iteration with deterministic seeding:
@@ -1727,12 +1622,9 @@ object Similarity {
   def clusterPurity(embeddings: DataFrame, k: Int = 8): DataFrame = {
     val v = Dedup.quantized(embeddings)
       .select(col("vec_id"), col("label"), col("qv"), col("norm2").as("__vn"))
-    val cents = broadcast(v.filter(col("vec_id") < k)
-      .select(col("vec_id").as("__cid"), col("qv").as("__cqv"), col("__vn").as("__cn")))
-    val d2 = col("__vn") - lit(2L) * Dedup.longDot(col("qv"), col("__cqv")) + col("__cn")
-    val assigned = v.crossJoin(cents)
+    val assigned = v.crossJoin(broadcast(seedCentroids(v, k)))
       .select(col("vec_id"), col("label"),
-        struct(d2.as("d2"), col("__cid").as("cid")).as("__dc"))
+        struct(centroidD2.as("d2"), col("__cid").as("cid")).as("__dc"))
       .groupBy(col("vec_id"))
       .agg(min(col("__dc")).as("__best"), first(col("label")).as("label"))
       .select(col("__best.cid").as("cluster_id"), col("label").cast("long").as("label"))
@@ -1767,30 +1659,28 @@ object Similarity {
     v.filter(col("vec_id") < k)
       .select(col("vec_id").as("__cid"), col("qv").as("__cqv"), col("__vn").as("__cn"))
 
+  /** A vector's exact squared distance to a centroid-shape row. */
+  private def centroidD2: Column =
+    expandedD2(col("__vn"), col("qv"), col("__cqv"), col("__cn"))
+
   /** One exact Lloyd round against the given centroid table: nearest
     * assignment by integer squared distance (ties → smallest centroid
     * id), then per-cluster integer floor centroids + inertia, emitted as
     * (cluster_id, n_vecs, inertia, __cv array). */
   private def lloydRound(v: DataFrame, cents: DataFrame, dim: Int): DataFrame = {
-    val d2 = col("__vn") - lit(2L) * Dedup.longDot(col("qv"), col("__cqv")) + col("__cn")
     val assigned = v.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("qv"), struct(d2.as("d2"), col("__cid").as("cid")).as("__dc"))
+      .select(col("vec_id"), col("qv"),
+        struct(centroidD2.as("d2"), col("__cid").as("cid")).as("__dc"))
       .groupBy(col("vec_id"))
       .agg(min(col("__dc")).as("__best"), first(col("qv")).as("qv"))
       .select(
         col("qv"),
         col("__best.cid").as("cluster_id"),
         col("__best.d2").as("__d2"))
-    val sums = (0 until dim).map(i => sum(element_at(col("qv"), i + 1)).as(s"__s$i"))
-    assigned.groupBy(col("cluster_id"))
-      .agg(sums.head,
-        (sums.tail ++ Seq(count(lit(1)).as("n_vecs"), sum(col("__d2")).as("inertia"))): _*)
-      .select(
-        col("cluster_id"), col("n_vecs"), col("inertia"),
-        array((0 until dim).map(i =>
-          call_function("div",
-            col(s"__s$i") - pmod(col(s"__s$i"), col("n_vecs")), col("n_vecs"))): _*)
-          .as("__cv"))
+    dimSums(assigned, Seq(col("cluster_id")), "qv", "__s", "n_vecs", dim,
+      sum(col("__d2")).as("inertia"))
+      .select(col("cluster_id"), col("n_vecs"), col("inertia"),
+        array(floorMean("__s", "n_vecs", dim): _*).as("__cv"))
   }
 
   private def stringifyCentroid(round: DataFrame, dim: Int): DataFrame =
@@ -1836,17 +1726,13 @@ object Similarity {
         col("nv"),
         col("__best.cid").as("cluster_id"),
         (-col("__best.negdot")).as("__dot"))
-    val sums = (0 until dim).map(i => sum(element_at(col("nv"), i + 1)).as(s"__s$i"))
-    assigned.groupBy(col("cluster_id"))
-      .agg(sums.head,
-        (sums.tail ++ Seq(count(lit(1)).as("n_vecs"), sum(col("__dot")).as("__sd"))): _*)
+    dimSums(assigned, Seq(col("cluster_id")), "nv", "__s", "n_vecs", dim,
+      sum(col("__dot")).as("__sd"))
       .select(
         col("cluster_id"), col("n_vecs"),
         graft.Cols.floorDiv(col("__sd"), col("n_vecs")).as("mean_cos_e8"),
-        concat_ws(",", (0 until dim).map(i =>
-          call_function("div",
-            col(s"__s$i") - pmod(col(s"__s$i"), col("n_vecs")), col("n_vecs"))
-            .cast("string")): _*).as("centroid_e4"))
+        concat_ws(",", floorMean("__s", "n_vecs", dim).map(_.cast("string")): _*)
+          .as("centroid_e4"))
   }
 
   /** Second exact Lloyd iteration + convergence readout: re-assign every
@@ -1878,9 +1764,7 @@ object Similarity {
         "cluster_id")
       .select(
         col("cluster_id"), col("n_vecs"), col("inertia"),
-        aggregate(
-          zip_with(col("__cv1"), col("__cv"), (a, b) => (a - b) * (a - b)),
-          lit(0L), _ + _).as("shift2_milli"),
+        sqL2(col("__cv1"), col("__cv")).as("shift2_milli"),
         concat_ws(",", (0 until dim).map(i =>
           element_at(col("__cv"), i + 1).cast("string")): _*).as("centroid_milli"))
   }
@@ -1927,31 +1811,45 @@ object Similarity {
     * a billion vectors per label (the welchScreen widening).
     */
   def isotropy(embeddings: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val q = Dedup.quantized(embeddings)
     val gram = q
       .select(col("label"), posexplode(col("qv")).as(Seq("__dim", "__x")))
       .groupBy(col("label"), col("__dim"))
       .agg(sum(col("__x")).as("__s"))
       .groupBy(col("label"))
-      .agg(sum(d(col("__s")) * d(col("__s"))).as("__gram"))
+      .agg(sum(dec38(col("__s")) * dec38(col("__s"))).as("__gram"))
     q.groupBy(col("label"))
-      .agg(count(lit(1)).as("n_vecs"), sum(d(col("norm2"))).as("__sumn"))
+      .agg(count(lit(1)).as("n_vecs"), sum(dec38(col("norm2"))).as("__sumn"))
       .join(gram, "label")
       .filter(col("n_vecs") > 1)
       .select(
         col("label"), col("n_vecs"),
         Cols.floorDiv(col("__sumn"), col("n_vecs")).cast("long").as("avg_norm2"),
-        Cols.floorDiv(
-          col("__gram") - col("__sumn"),
-          d(col("n_vecs")) * d(col("n_vecs") - 1L)).cast("long").as("avg_pair_dot"),
-        when(col("__sumn") > 0,
-          Cols.floorDiv(
-            (col("__gram") - col("__sumn")) * d(lit(1000000L)),
-            d(col("n_vecs") - 1L) * col("__sumn")).cast("long"))
-          .as("aniso_e6"))
+        avgPairDot, anisoE6)
   }
+
+  /** The pair-free anisotropy readout over a group of `n_vecs` vectors
+    * with `__sumn = Σ‖v‖²` and `__gram = ‖Σv‖²`: since
+    * `Σ_{i≠j} vᵢ·vⱼ = gram − sumn`, the average pair dot and its
+    * norm-relative e6 ratio (null when every vector is zero) need no
+    * pairs. Shared by [[isotropy]], [[whitenGain]] and [[whiten2]].
+    */
+  private def avgPairDot: Column =
+    Cols.floorDiv(
+      col("__gram") - col("__sumn"),
+      dec38(col("n_vecs")) * dec38(col("n_vecs") - 1L)).cast("long").as("avg_pair_dot")
+
+  /** [[avgPairDot]] relative to the average norm², in e6. */
+  private def anisoE6: Column =
+    when(col("__sumn") > 0,
+      Cols.floorDiv(
+        (col("__gram") - col("__sumn")) * dec38(lit(1000000L)),
+        dec38(col("n_vecs") - 1L) * col("__sumn")).cast("long"))
+      .as("aniso_e6")
+
+  /** The average norm² of a whitening arm's vectors. */
+  private def armAvgNorm2: Column =
+    Cols.floorDiv(col("__sumn"), dec38(col("n_vecs"))).cast("long").as("avg_norm2")
 
   /** The action [[isotropy]] recommends, measured: per-dimension
     * standardization (diagonal whitening, `w = (x − μ_d)·1e3 / σ_d` in
@@ -1970,19 +1868,17 @@ object Similarity {
     * [[isotropy]].
     */
   def whitenGain(embeddings: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val longT = Dedup.quantized(embeddings)
       .select(col("vec_id"), posexplode(col("qv")).as(Seq("dim", "x")))
     val stats = longT.groupBy(col("dim"))
       .agg(count(lit(1)).as("__n"), sum(col("x")).as("__s"),
-        sum(d(col("x")) * d(col("x"))).as("__q2"))
+        sum(dec38(col("x")) * dec38(col("x"))).as("__q2"))
       .select(
         col("dim"),
         Cols.floorDiv(col("__s"), col("__n")).as("__mean"),
         greatest(
           round(sqrt(
-            (d(col("__n")) * col("__q2") - d(col("__s")) * d(col("__s"))).cast("double")
+            (dec38(col("__n")) * col("__q2") - dec38(col("__s")) * dec38(col("__s"))).cast("double")
               / (col("__n") * col("__n")).cast("double"))).cast("long"),
           lit(1L)).as("__sigma"))
     val armed = longT
@@ -1998,24 +1894,14 @@ object Similarity {
     val gram = armed.groupBy(col("arm"), col("dim"))
       .agg(sum(col("w")).as("__sd"))
       .groupBy(col("arm"))
-      .agg(sum(d(col("__sd")) * d(col("__sd"))).as("__gram"))
+      .agg(sum(dec38(col("__sd")) * dec38(col("__sd"))).as("__gram"))
     armed.groupBy(col("arm"))
       .agg(
         count_distinct(col("vec_id")).as("n_vecs"),
-        sum(d(col("w")) * d(col("w"))).as("__sumn"))
+        sum(dec38(col("w")) * dec38(col("w"))).as("__sumn"))
       .join(gram, "arm")
       .filter(col("n_vecs") > 1)
-      .select(
-        col("arm"), col("n_vecs"),
-        Cols.floorDiv(col("__sumn"), d(col("n_vecs"))).cast("long").as("avg_norm2"),
-        Cols.floorDiv(
-          col("__gram") - col("__sumn"),
-          d(col("n_vecs")) * d(col("n_vecs") - 1L)).cast("long").as("avg_pair_dot"),
-        when(col("__sumn") > 0,
-          Cols.floorDiv(
-            (col("__gram") - col("__sumn")) * d(lit(1000000L)),
-            d(col("n_vecs") - 1L) * col("__sumn")).cast("long"))
-          .as("aniso_e6"))
+      .select(col("arm"), col("n_vecs"), armAvgNorm2, avgPairDot, anisoE6)
   }
 
   /** Rotational whitening — the [[whitenGain]] follow-through for the
@@ -2048,9 +1934,6 @@ object Similarity {
     * readout's ×3 arm explode is bounded; nothing ever pairs.
     */
   def whiten2(embeddings: DataFrame, dim: Int = 64, steps: Int = 3): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
-    def dlit(v: Long): Column = lit(v).cast(dec)
     // NOT checkpointed: a materialize-the-quantized-corpus-once variant
     // was measured (r15) at parity-to-slower on the fanned-out scan —
     // the 2·steps+3 re-scans are cheap once parallel, and the checkpoint
@@ -2060,52 +1943,28 @@ object Similarity {
     // one scan: n, per-dim means (floor), and the per-dim centered-SS
     // seed direction n·ΣQ² − S² (positive, generically non-orthogonal to
     // the top eigendirection)
-    val mom = q
-      .agg(
-        count(lit(1)).as("__n"),
-        array((0 until dim).map(i => sum(element_at(col("qv"), i + 1))): _*).as("__s"),
-        array((0 until dim).map(i =>
-          sum(d(element_at(col("qv"), i + 1)) * d(element_at(col("qv"), i + 1)))): _*)
-          .as("__q2"))
-      .select(
-        transform(col("__s"), s => Cols.floorDiv(s, col("__n"))).as("mu"),
-        zip_with(col("__q2"), col("__s"),
-          (q2, s) => d(col("__n")) * q2 - d(s) * d(s)).as("__v0r"))
-      .select(
-        col("mu"), col("__v0r"),
-        aggregate(col("__v0r"), dlit(0L), (m, x) => greatest(m, x)).as("__m0"))
+    val mom = moments(q, dim)
+      .select(floorMu.as("mu"), seedDir.as("__v0r"))
+      .select(col("mu"), col("__v0r"), arrayMax(col("__v0r")).as("__m0"))
       .select(
         col("mu"),
         // pass-1 deflation is a no-op: p = 0 vector, ‖p‖² = 1
         array((0 until dim).map(_ => lit(0L)): _*).as("p"),
         lit(1L).as("pp"),
-        transform(col("__v0r"),
-          x => Cols.floorDiv(x * dlit(10000L), greatest(col("__m0"), dlit(1L)))).as("v"))
+        renormE4(col("__v0r"), "__m0").as("v"))
       .localCheckpoint()
     // one power step: v ← normalize_e4( Σ_rows ce·(ce·v) ) where
     // ce = (qv − mu) deflated by the carried direction p
     def step(prev: DataFrame): DataFrame =
-      q.crossJoin(broadcast(prev))
-        .select(col("mu"), col("p"), col("pp"), col("v"),
-          zip_with(col("qv"), col("mu"), (x, m) => x - m).as("__c"))
-        .select(col("mu"), col("p"), col("pp"), col("v"), col("__c"),
-          aggregate(zip_with(col("__c"), col("p"), (a, b) => a * b),
-            lit(0L), _ + _).as("__pj"))
-        .select(col("mu"), col("p"), col("pp"), col("v"),
-          zip_with(col("__c"), col("p"),
-            (ci, pi) => ci - Cols.floorDiv(col("__pj") * pi, col("pp"))).as("__ce"))
+      centerDeflate(q.crossJoin(broadcast(prev)), "mu", "p", "pp", "v")
         .select(col("mu"), col("p"), col("pp"), col("__ce"),
-          aggregate(zip_with(col("__ce"), col("v"), (a, b) => a * b),
-            lit(0L), _ + _).as("__sv"))
+          arrayDot(col("__ce"), col("v")).as("__sv"))
         .agg(
           first(col("mu")).as("mu"), first(col("p")).as("p"), first(col("pp")).as("pp"),
-          array((0 until dim).map(i =>
-            sum(d(element_at(col("__ce"), i + 1)) * d(col("__sv")))): _*).as("__u"))
+          matvec("__ce", dim).as("__u"))
         .select(col("mu"), col("p"), col("pp"), col("__u"),
-          aggregate(col("__u"), dlit(0L), (m, x) => greatest(m, abs(x))).as("__m"))
-        .select(col("mu"), col("p"), col("pp"),
-          transform(col("__u"),
-            x => Cols.floorDiv(x * dlit(10000L), greatest(col("__m"), dlit(1L)))).as("v"))
+          arrayMax(col("__u"), absolute = true).as("__m"))
+        .select(col("mu"), col("p"), col("pp"), renormE4(col("__u"), "__m").as("v"))
         .localCheckpoint()
     // every intermediate is an eagerly-materialized 1-row checkpoint
     // consumed only by the NEXT stage; once `fin` exists they are dead
@@ -2119,39 +1978,21 @@ object Similarity {
     // re-arm for pass 2: the found direction becomes the deflation
     // carrier, its centered-SS seed re-measured on the deflated corpus
     val pass2seed = {
-      val armed = v1row.select(
-        col("mu"), col("v").as("p"),
-        greatest(aggregate(zip_with(col("v"), col("v"), (a, b) => a * b),
-          lit(0L), _ + _), lit(1L)).as("pp"))
+      val armed = v1row.select(col("mu"), col("v").as("p"), normSq1(col("v")).as("pp"))
         .localCheckpoint()
       retired += armed
-      q.crossJoin(broadcast(armed))
-        .select(col("mu"), col("p"), col("pp"),
-          zip_with(col("qv"), col("mu"), (x, m) => x - m).as("__c"))
-        .select(col("mu"), col("p"), col("pp"), col("__c"),
-          aggregate(zip_with(col("__c"), col("p"), (a, b) => a * b),
-            lit(0L), _ + _).as("__pj"))
-        .select(col("mu"), col("p"), col("pp"),
-          zip_with(col("__c"), col("p"),
-            (ci, pi) => ci - Cols.floorDiv(col("__pj") * pi, col("pp"))).as("__ce"))
+      centerDeflate(q.crossJoin(broadcast(armed)), "mu", "p", "pp")
         .agg(
           first(col("mu")).as("mu"), first(col("p")).as("p"), first(col("pp")).as("pp"),
-          array((0 until dim).map(i =>
-            sum(d(element_at(col("__ce"), i + 1)) * d(element_at(col("__ce"), i + 1)))): _*)
-            .as("__r"))
-        .select(col("mu"), col("p"), col("pp"), col("__r"),
-          aggregate(col("__r"), dlit(0L), (m, x) => greatest(m, x)).as("__m0"))
-        .select(col("mu"), col("p"), col("pp"),
-          transform(col("__r"),
-            x => Cols.floorDiv(x * dlit(10000L), greatest(col("__m0"), dlit(1L)))).as("v"))
+          sqSums("__ce", dim).as("__r"))
+        .select(col("mu"), col("p"), col("pp"), col("__r"), arrayMax(col("__r")).as("__m0"))
+        .select(col("mu"), col("p"), col("pp"), renormE4(col("__r"), "__m0").as("v"))
         .localCheckpoint()
     }
     retired += pass2seed
     val v2row = (1 to steps).foldLeft(pass2seed)((acc, _) => stepR(acc))
     val fin = v2row.select(
-      col("mu"), col("p"), col("pp"), col("v").as("v2"),
-      greatest(aggregate(zip_with(col("v"), col("v"), (a, b) => a * b),
-        lit(0L), _ + _), lit(1L)).as("vv2"))
+      col("mu"), col("p"), col("pp"), col("v").as("v2"), normSq1(col("v")).as("vv2"))
       .localCheckpoint()
     retired.foreach(graft.LocalCheckpoints.free)
     // readout: the pair-free mean identity (aniso_e6 — which CENTERING
@@ -2162,58 +2003,112 @@ object Similarity {
     // on every arm while top2_share_e6 collapses ONLY on the rotated one
     // — the "centering was never going to fix this" proof.
     val armed = q.crossJoin(broadcast(fin))
-      .select(col("qv"), col("p"), col("pp"), col("v2"), col("vv2"),
-        zip_with(col("qv"), col("mu"), (x, m) => x - m).as("__c"))
+      .select(col("qv"), col("p"), col("pp"), col("v2"), col("vv2"), centered.as("__c"))
       .select(col("qv"), col("p"), col("pp"), col("v2"), col("vv2"), col("__c"),
-        aggregate(zip_with(col("__c"), col("p"), (a, b) => a * b),
-          lit(0L), _ + _).as("__pj"))
+        arrayDot(col("__c"), col("p")).as("__pj"))
       .select(col("qv"), col("p"), col("pp"), col("__c"), col("v2"), col("vv2"),
-        zip_with(col("__c"), col("p"),
-          (ci, pi) => ci - Cols.floorDiv(col("__pj") * pi, col("pp"))).as("__ce"))
+        deflate(col("__c"), col("p"), col("__pj"), col("pp")).as("__ce"))
       .select(col("qv"), col("p"), col("pp"), col("__c"), col("__ce"), col("v2"), col("vv2"),
-        aggregate(zip_with(col("__ce"), col("v2"), (a, b) => a * b),
-          lit(0L), _ + _).as("__pj2"))
+        arrayDot(col("__ce"), col("v2")).as("__pj2"))
       .select(col("p"), col("pp"), col("v2"), col("vv2"),
         explode(array(
           struct(lit("raw").as("arm"), col("qv").as("w")),
           struct(lit("centered").as("arm"), col("__c").as("w")),
           struct(lit("rotated").as("arm"),
-            zip_with(col("__ce"), col("v2"),
-              (ci, vi) => ci - Cols.floorDiv(col("__pj2") * vi, col("vv2"))).as("w"))))
+            deflate(col("__ce"), col("v2"), col("__pj2"), col("vv2")).as("w"))))
           .as("__a"))
       .select(col("__a.arm").as("arm"), col("__a.w").as("w"),
-        aggregate(zip_with(col("__a.w"), col("p"), (a, b) => a * b),
-          lit(0L), _ + _).as("__d1"),
-        aggregate(zip_with(col("__a.w"), col("v2"), (a, b) => a * b),
-          lit(0L), _ + _).as("__d2"),
+        arrayDot(col("__a.w"), col("p")).as("__d1"),
+        arrayDot(col("__a.w"), col("v2")).as("__d2"),
         col("pp"), col("vv2"))
+    // per-row floors of (w·v_k)²/‖v_k‖² — the norm²-unit mass along each
+    // measured direction
+    def along(d: String, vv: String): Column =
+      sum(dec38(Cols.floorDiv(dec38(col(d)) * dec38(col(d)), dec38(col(vv)))))
     val grouped = armed.groupBy(col("arm"))
       .agg(
         count(lit(1)).as("n_vecs"),
-        array((0 until dim).map(i => sum(d(element_at(col("w"), i + 1)))): _*).as("__sd"),
-        sum(d(Dedup.longDot(col("w"), col("w")))).as("__sumn"),
-        // per-row floors of (w·v_k)²/‖v_k‖² — the norm²-unit mass along
-        // each measured direction
-        sum(d(Cols.floorDiv(d(col("__d1")) * d(col("__d1")), d(col("pp"))))).as("__q1"),
-        sum(d(Cols.floorDiv(d(col("__d2")) * d(col("__d2")), d(col("vv2"))))).as("__q2"))
+        array((0 until dim).map(i => sum(dec38(element_at(col("w"), i + 1)))): _*).as("__sd"),
+        sum(dec38(Dedup.longDot(col("w"), col("w")))).as("__sumn"),
+        along("__d1", "pp").as("__q1"),
+        along("__d2", "vv2").as("__q2"))
       .select(col("arm"), col("n_vecs"), col("__sumn"), col("__q1"), col("__q2"),
-        aggregate(col("__sd"), dlit(0L), (acc, x) => acc + x * x).as("__gram"))
+        aggregate(col("__sd"), dec38(lit(0L)), (acc, x) => acc + x * x).as("__gram"))
     grouped
       .filter(col("n_vecs") > 1)
       .select(
-        col("arm"), col("n_vecs"),
-        Cols.floorDiv(col("__sumn"), d(col("n_vecs"))).cast("long").as("avg_norm2"),
+        col("arm"), col("n_vecs"), armAvgNorm2, anisoE6,
         when(col("__sumn") > 0,
           Cols.floorDiv(
-            (col("__gram") - col("__sumn")) * dlit(1000000L),
-            d(col("n_vecs") - 1L) * col("__sumn")).cast("long"))
-          .as("aniso_e6"),
-        when(col("__sumn") > 0,
-          Cols.floorDiv(
-            (d(col("__q1")) + d(col("__q2"))) * dlit(1000000L),
+            (dec38(col("__q1")) + dec38(col("__q2"))) * dec38(lit(1000000L)),
             col("__sumn")).cast("long"))
           .as("top2_share_e6"))
   }
+
+  /** One scan of the per-dim moments of `qv`: the count `__n`, the sums
+    * `__s` and the widened squared sums `__q2`, as arrays. The seed of
+    * [[whiten2]] and [[powerCurve]]. */
+  private def moments(q: DataFrame, dim: Int): DataFrame =
+    q.agg(
+      count(lit(1)).as("__n"),
+      array((0 until dim).map(i => sum(element_at(col("qv"), i + 1))): _*).as("__s"),
+      sqSums("qv", dim).as("__q2"))
+
+  /** Per-dim widened Σx² of the array column `c`. */
+  private def sqSums(c: String, dim: Int): Column =
+    array((0 until dim).map { i =>
+      val x = dec38(element_at(col(c), i + 1))
+      sum(x * x)
+    }: _*)
+
+  /** The floor per-dim mean `μ = ⌊__s / __n⌋` of [[moments]]. */
+  private def floorMu: Column = transform(col("__s"), s => Cols.floorDiv(s, col("__n")))
+
+  /** The per-dim centered-SS seed direction `n·ΣQ² − S²` of [[moments]]. */
+  private def seedDir: Column =
+    zip_with(col("__q2"), col("__s"), (q2, s) => dec38(col("__n")) * q2 - dec38(s) * dec38(s))
+
+  /** The largest element of a widened array (of its magnitudes when
+    * `absolute`), floored at 0. */
+  private def arrayMax(a: Column, absolute: Boolean = false): Column =
+    aggregate(a, dec38(lit(0L)), (m, x) => greatest(m, if (absolute) abs(x) else x))
+
+  /** The e4 renormalization between power steps: every component of `a`
+    * as `⌊x·10⁴ / max(m, 1)⌋` — floors, so the direction grid is
+    * deterministic. */
+  private def renormE4(a: Column, m: String): Column =
+    transform(a, x => Cols.floorDiv(x * dec38(lit(10000L)), greatest(col(m), dec38(lit(1L)))))
+
+  /** Exact integer dot of two arrays, folded in the row (the
+    * power-iteration form; the scoring joins use [[Dedup.longDot]]). */
+  private def arrayDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), _ + _)
+
+  /** `max(‖v‖², 1)` — the projection divisor of a direction. */
+  private def normSq1(v: Column): Column = greatest(arrayDot(v, v), lit(1L))
+
+  /** The row's `qv` centered on the carried mean `mu`. */
+  private def centered: Column = zip_with(col("qv"), col("mu"), (x, m) => x - m)
+
+  /** `c` with the direction `p` projected out, given the row's
+    * projection `proj = c·p` and `pp = ‖p‖²`: `cᵢ − ⌊proj·pᵢ / pp⌋`. */
+  private def deflate(c: Column, p: Column, proj: Column, pp: Column): Column =
+    zip_with(c, p, (ci, pi) => ci - Cols.floorDiv(proj * pi, pp))
+
+  /** One centered-deflation pass over corpus rows crossed with a carried
+    * 1-row state: `__c = qv − mu`, its projection `__pj` on `p`, and the
+    * deflated `__ce`, keeping the `keep` columns alongside. */
+  private def centerDeflate(rows: DataFrame, keep: String*): DataFrame = {
+    val kept = keep.map(col)
+    rows.select(kept :+ centered.as("__c"): _*)
+      .select(kept ++ Seq(col("__c"), arrayDot(col("__c"), col("p")).as("__pj")): _*)
+      .select(kept :+ deflate(col("__c"), col("p"), col("__pj"), col("pp")).as("__ce"): _*)
+  }
+
+  /** One power-iteration matvec, per dim `Σ_rows c·(c·v)` widened, over
+    * the row vector `c` and its projection `__sv`. */
+  private def matvec(c: String, dim: Int): Column =
+    array((0 until dim).map(i => sum(dec38(element_at(col(c), i + 1)) * dec38(col("__sv")))): _*)
 
   /** Power-iteration convergence curve — the measurement behind
     * [[whiten2]]'s "3 steps suffice" design choice, registered so the
@@ -2234,71 +2129,49 @@ object Similarity {
     * 1-row crossJoins of adjacent step rows; moments in decimal(38,0).
     */
   def powerCurve(embeddings: DataFrame, dim: Int = 64, steps: Int = 4): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
-    def dlit(v: Long): Column = lit(v).cast(dec)
     val q = Dedup.quantized(embeddings).select(col("vec_id"), col("qv"))
-    val mom = q
-      .agg(
-        count(lit(1)).as("__n"),
-        array((0 until dim).map(i => sum(element_at(col("qv"), i + 1))): _*).as("__s"),
-        array((0 until dim).map(i =>
-          sum(d(element_at(col("qv"), i + 1)) * d(element_at(col("qv"), i + 1)))): _*)
-          .as("__q2"))
-      .select(col("__n"), col("__s"), col("__q2"),
-        transform(col("__s"), s => Cols.floorDiv(s, col("__n"))).as("mu"))
+    val mom = moments(q, dim)
+      .select(col("__n"), col("__s"), col("__q2"), floorMu.as("mu"))
       // trace of the centered scatter: Σ_i Q2_i − 2·μ_i·S_i + n·μ_i²
       .select(col("__n"), col("__s"), col("__q2"), col("mu"),
         zip_with(col("__q2"),
-          zip_with(col("__s"), col("mu"), (s, m) => d(s) * d(m)),
-          (q2, sm) => q2 - sm * dlit(2L)).as("__t1"))
+          zip_with(col("__s"), col("mu"), (s, m) => dec38(s) * dec38(m)),
+          (q2, sm) => q2 - sm * dec38(lit(2L))).as("__t1"))
       .select(col("__n"), col("__s"), col("__q2"), col("mu"),
         zip_with(col("__t1"),
-          transform(col("mu"), m => d(m) * d(m)),
-          (t1, m2) => t1 + m2 * d(col("__n"))).as("__tr"))
+          transform(col("mu"), m => dec38(m) * dec38(m)),
+          (t1, m2) => t1 + m2 * dec38(col("__n"))).as("__tr"))
       .select(col("mu"),
-        aggregate(col("__tr"), dlit(0L), _ + _).as("trace"),
-        zip_with(col("__q2"), col("__s"),
-          (q2, s) => d(col("__n")) * q2 - d(s) * d(s)).as("__v0r"))
-      .select(col("mu"), col("trace"), col("__v0r"),
-        aggregate(col("__v0r"), dlit(0L), (m, x) => greatest(m, x)).as("__m0"))
-      .select(col("mu"), col("trace"),
-        transform(col("__v0r"),
-          x => Cols.floorDiv(x * dlit(10000L), greatest(col("__m0"), dlit(1L)))).as("v"))
+        aggregate(col("__tr"), dec38(lit(0L)), _ + _).as("trace"), seedDir.as("__v0r"))
+      .select(col("mu"), col("trace"), col("__v0r"), arrayMax(col("__v0r")).as("__m0"))
+      .select(col("mu"), col("trace"), renormE4(col("__v0r"), "__m0").as("v"))
       .localCheckpoint()
     var prev = mom
     val readouts = (1 to steps).map { k =>
       val agg1 = q.crossJoin(broadcast(prev))
-        .select(col("mu"), col("trace"), col("v"),
-          zip_with(col("qv"), col("mu"), (x, m) => x - m).as("__c"))
+        .select(col("mu"), col("trace"), col("v"), centered.as("__c"))
         .select(col("mu"), col("trace"), col("v"), col("__c"),
-          aggregate(zip_with(col("__c"), col("v"), (a, b) => a * b),
-            lit(0L), _ + _).as("__sv"))
+          arrayDot(col("__c"), col("v")).as("__sv"))
         .agg(
           first(col("mu")).as("mu"), first(col("trace")).as("trace"),
           first(col("v")).as("vprev"),
-          sum(d(col("__sv")) * d(col("__sv"))).as("__rnum"),
-          array((0 until dim).map(i =>
-            sum(d(element_at(col("__c"), i + 1)) * d(col("__sv")))): _*).as("__u"))
+          sum(dec38(col("__sv")) * dec38(col("__sv"))).as("__rnum"),
+          matvec("__c", dim).as("__u"))
         .localCheckpoint()
       val next = agg1
         .select(col("mu"), col("trace"), col("__u"),
-          aggregate(col("__u"), dlit(0L), (m, x) => greatest(m, abs(x))).as("__m"))
-        .select(col("mu"), col("trace"),
-          transform(col("__u"),
-            x => Cols.floorDiv(x * dlit(10000L), greatest(col("__m"), dlit(1L)))).as("v"))
+          arrayMax(col("__u"), absolute = true).as("__m"))
+        .select(col("mu"), col("trace"), renormE4(col("__u"), "__m").as("v"))
         .localCheckpoint()
       val readout = next.select(col("v"))
         .crossJoin(broadcast(
           agg1.select(col("vprev"), col("__rnum"), col("trace"))))
-        .withColumn("__vv",
-          greatest(aggregate(zip_with(col("vprev"), col("vprev"), (a, b) => a * b),
-            lit(0L), _ + _), lit(1L)))
+        .withColumn("__vv", normSq1(col("vprev")))
         .select(
           lit(k.toLong).as("step"),
-          Cols.floorDiv(col("__rnum"), d(col("__vv"))).cast("long").as("rayleigh"),
+          Cols.floorDiv(col("__rnum"), dec38(col("__vv"))).cast("long").as("rayleigh"),
           when(col("trace") > 0,
-            Cols.floorDiv(col("__rnum") * dlit(1000000L), d(col("__vv")) * col("trace"))
+            Cols.floorDiv(col("__rnum") * dec38(lit(1000000L)), dec38(col("__vv")) * col("trace"))
               .cast("long")).as("top_share_e6"),
           aggregate(zip_with(col("v"), col("vprev"), (a, b) => abs(a - b)),
             lit(0L), _ + _).as("drift_e4"))
@@ -2401,20 +2274,28 @@ object Similarity {
     val truth = bruteForceTopK(embeddings, k)
       .select(col("query_id"), col("neighbor_id"))
     val frames = nprobes.map { np =>
-      val approx = ivfPqTopK(embeddings, k, nprobe = np, dim = dim)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit"))
-      truth
-        .join(approx, Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"), count(col("__hit")).as("n_hit"))
-        .select(
-          lit(np.toLong).as("nprobe"),
-          col("n_truth"), col("n_hit"),
-          when(col("n_truth") > 0,
-            graft.Cols.floorDiv(col("n_hit") * 10000, col("n_truth")))
-            .otherwise(lit(null).cast("long")).as("recall_e4"))
+      recallArm(truth,
+        ivfPqTopK(embeddings, k, nprobe = np, dim = dim)
+          .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit")),
+        lit(np.toLong).as("nprobe"))
     }
     frames.reduce(_ unionAll _).orderBy(col("nprobe"))
   }
+
+  /** One arm of a recall curve: the `truth` pairs left-joined to the
+    * arm's `approx` pairs (flagged `__hit`), pooled over queries as
+    * (arm, n_truth, n_hit, recall_e4) — recall null on an empty truth.
+    * Shared by [[ivfPqRecallCurve]] and [[mrlRecallCurve]].
+    */
+  private def recallArm(truth: DataFrame, approx: DataFrame, arm: Column): DataFrame =
+    truth
+      .join(approx, Seq("query_id", "neighbor_id"), "left")
+      .agg(count(lit(1)).as("n_truth"), count(col("__hit")).as("n_hit"))
+      .select(
+        arm, col("n_truth"), col("n_hit"),
+        when(col("n_truth") > 0,
+          graft.Cols.floorDiv(col("n_hit") * 10000, col("n_truth")))
+          .otherwise(lit(null).cast("long")).as("recall_e4"))
 
   /** One EXACT power-iteration step toward the corpus' dominant principal
     * direction: `v₁ = Xᵀ(X·1)` over the milli-quantized integer matrix —
@@ -2515,32 +2396,18 @@ object Similarity {
     val range = base.filter(col("__cur") === 0)
       .groupBy(col("dim"))
       .agg(min(col("__c")).as("__lo"), max(col("__c")).as("__hi"))
-    val rawBin = Cols.floorDiv(
-      (col("__c") - col("__lo")) * bins, col("__hi") - col("__lo") + 1L)
-    val bin = least(greatest(rawBin, lit(0L)), lit((bins - 1).toLong))
     val counts = base.join(broadcast(range), "dim")
-      .select(col("dim"), col("__cur"), bin.as("__bin"))
+      .select(col("dim"), col("__cur"), psiBin(bins).as("__bin"))
       .groupBy(col("dim"), col("__bin"))
       .agg(
         sum(when(col("__cur") === 0, 1L).otherwise(0L)).as("__nr"),
         sum(when(col("__cur") === 1, 1L).otherwise(0L)).as("__nc"))
-    val grid = range.select(col("dim"),
-      explode(sequence(lit(0L), lit((bins - 1).toLong))).as("__bin"))
+    val grid = range.select(col("dim"), upTo(bins).as("__bin"))
     val filled = grid.join(counts, Seq("dim", "__bin"), "left")
       .na.fill(0L, Seq("__nr", "__nc"))
     val tot = filled.groupBy(col("dim"))
       .agg(sum(col("__nr")).as("n_ref"), sum(col("__nc")).as("n_cur"))
-    val p = (col("__nr").cast("double") + 1.0) /
-      (col("n_ref").cast("double") + bins)
-    val q = (col("__nc").cast("double") + 1.0) /
-      (col("n_cur").cast("double") + bins)
-    val term = round((p - q) * log(p / q) * 10000).cast("long")
-    filled.join(tot, "dim")
-      .filter(col("n_ref") > 0 && col("n_cur") > 0)
-      .groupBy(col("dim"), col("n_ref"), col("n_cur"))
-      .agg(sum(term).as("psi_e4"))
-      .withColumn("drift_flag",
-        when(col("psi_e4") > alertE4, 1L).otherwise(0L))
+    psiScore(filled.join(tot, "dim"), Seq(col("dim")), bins, alertE4)
   }
 
   /** The three frozen pieces of a PSI reference: per-dim bin ranges,
@@ -2587,19 +2454,30 @@ object Similarity {
     val tot = counts.groupBy(col("batch"), col("dim")).agg(sum(col("__nc")).as("n_cur"))
     // zero-filled (batch, dim, bin) grid from the totals side — a literal
     // ≤ bins fan-out, so empty bins still contribute their Laplace term
-    val grid = tot.select(col("batch"), col("dim"), col("n_cur"),
-      explode(sequence(lit(0L), lit((bins - 1).toLong))).as("__bin"))
+    val grid = tot.select(col("batch"), col("dim"), col("n_cur"), upTo(bins).as("__bin"))
     val filled = grid
       .join(counts, Seq("batch", "dim", "__bin"), "left")
       .join(broadcast(refCounts), Seq("dim", "__bin"), "left")
       .na.fill(0L, Seq("__nc", "__nr"))
       .join(broadcast(refTot), Seq("dim"))
+    psiScore(filled, Seq(col("batch"), col("dim")), bins, alertE4)
+  }
+
+  /** The PSI sum over a zero-filled (keys, bin) grid carrying reference
+    * and current bin counts `__nr`/`__nc` and totals `n_ref`/`n_cur`:
+    * Laplace-smoothed shares `(n+1)/(N+bins)`, each bin's
+    * `(p−q)·ln(p/q)` quantized to e4 THEN summed per key, and the
+    * `drift_flag` above `alertE4`. Shared by [[embPsi]] and
+    * [[psiVsReference]].
+    */
+  private def psiScore(filled: DataFrame, keys: Seq[Column], bins: Int,
+      alertE4: Long): DataFrame = {
     val p = (col("__nr").cast("double") + 1.0) / (col("n_ref").cast("double") + bins)
     val q = (col("__nc").cast("double") + 1.0) / (col("n_cur").cast("double") + bins)
     val term = round((p - q) * log(p / q) * 10000).cast("long")
     filled
       .filter(col("n_ref") > 0 && col("n_cur") > 0)
-      .groupBy(col("batch"), col("dim"), col("n_ref"), col("n_cur"))
+      .groupBy(keys ++ Seq(col("n_ref"), col("n_cur")): _*)
       .agg(sum(term).as("psi_e4"))
       .withColumn("drift_flag", when(col("psi_e4") > alertE4, 1L).otherwise(0L))
   }
@@ -2687,23 +2565,13 @@ object Similarity {
     */
   def truncationAgreement(embeddings: DataFrame, dims: Int = 16): DataFrame = {
     val q = Dedup.quantized(embeddings)
-    def top1(vecs: DataFrame, vCol: String, nCol: String, outId: String): DataFrame = {
-      val queries = broadcast(
-        queryBatch(vecs)
-          .select(col("vec_id").as("query_id"), col(vCol).as("__q_v"), col(nCol).as("__q_n")))
-      val scored = vecs.join(queries, col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("__nid"),
-          Dedup.cosineQ(col("__q_v"), col("__q_n"), col(vCol), col(nCol)).as("__cos"))
-      val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("__nid"))
-      scored.withColumn("__rank", row_number().over(w))
+    def top1(vecs: DataFrame, v: String, n: String, outId: String): DataFrame =
+      prefixCosine(vecs, v, n, "__nid")
+        .withColumn("__rank", queryRank(col("__cos").desc, col("__nid")))
         .filter(col("__rank") === 1)
         .select(col("query_id"), col("__nid").as(outId))
-    }
-    val full = top1(
-      q.select(col("vec_id"), col("qv"), col("norm2")), "qv", "norm2", "full_top1")
-    val tq = q.select(col("vec_id"), slice(col("qv"), 1, dims).as("tv"))
-      .withColumn("tn", Dedup.longDot(col("tv"), col("tv")))
-    val trunc = top1(tq, "tv", "tn", "trunc_top1")
+    val full = top1(q.select(col("vec_id"), col("qv"), col("norm2")), "qv", "norm2", "full_top1")
+    val trunc = top1(prefixVecs(q, dims), "tv", "tn", "trunc_top1")
     full.join(trunc, "query_id")
       .select(
         col("query_id"), col("full_top1"), col("trunc_top1"),
@@ -2731,31 +2599,15 @@ object Similarity {
       dimsList: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
     require(dimsList.nonEmpty && dimsList.forall(_ >= 1), "prefix dims must be positive")
     val q = Dedup.quantized(embeddings)
-    def topK(vecs: DataFrame, vCol: String, nCol: String): DataFrame = {
-      val queries = broadcast(queryBatch(vecs)
-        .select(col("vec_id").as("query_id"), col(vCol).as("__q_v"), col(nCol).as("__q_n")))
-      val scored = vecs.join(queries, col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          Dedup.cosineQ(col("__q_v"), col("__q_n"), col(vCol), col(nCol)).as("__cos"))
-      val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id"))
-      scored.withColumn("__rank", row_number().over(w))
+    def topK(vecs: DataFrame, v: String, n: String): DataFrame =
+      prefixCosine(vecs, v, n)
+        .withColumn("__rank", queryRank(col("__cos").desc, col("neighbor_id")))
         .filter(col("__rank") <= k)
         .select(col("query_id"), col("neighbor_id"))
-    }
     val truth = topK(q.select(col("vec_id"), col("qv"), col("norm2")), "qv", "norm2")
     val frames = dimsList.map { d =>
-      val tq = q.select(col("vec_id"), slice(col("qv"), 1, d).as("tv"))
-        .withColumn("tn", Dedup.longDot(col("tv"), col("tv")))
-      val approx = topK(tq, "tv", "tn").withColumn("__hit", lit(1))
-      truth
-        .join(approx, Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"), count(col("__hit")).as("n_hit"))
-        .select(
-          lit(d.toLong).as("dims"),
-          col("n_truth"), col("n_hit"),
-          when(col("n_truth") > 0,
-            graft.Cols.floorDiv(col("n_hit") * 10000, col("n_truth")))
-            .otherwise(lit(null).cast("long")).as("recall_e4"))
+      recallArm(truth, topK(prefixVecs(q, d), "tv", "tn").withColumn("__hit", lit(1)),
+        lit(d.toLong).as("dims"))
     }
     frames.reduce(_ unionAll _).orderBy(col("dims"))
   }
@@ -2815,27 +2667,22 @@ object Similarity {
     val qCodes = broadcast(queryBatch(m)
       .select(col("vec_id").as("query_id"),
         col("mask_lo").as("q_lo"), col("mask_hi").as("q_hi")))
-    val hw = Window.partitionBy(col("query_id")).orderBy(col("hamming"), col("neighbor_id"))
     val shortlist = m.select(col("vec_id").as("neighbor_id"), col("mask_lo"), col("mask_hi"))
       .join(qCodes, col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         (bit_count(col("mask_lo").bitwiseXOR(col("q_lo"))) +
           bit_count(col("mask_hi").bitwiseXOR(col("q_hi")))).cast("long").as("hamming"))
-      .withColumn("__hr", row_number().over(hw))
+      .withColumn("__hr", queryRank(col("hamming"), col("neighbor_id")))
       .filter(col("__hr") <= k * overfetch)
-    // stage 2: full-vector rerank on the bounded shortlist
-    val qVecs = broadcast(queryBatch(m)
-      .select(col("vec_id").as("query_id"),
-        col("qv").as("q_qv"), col("norm2").as("q_norm2")))
-    val rw = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    shortlist
-      .join(m.select(col("vec_id").as("neighbor_id"), col("qv"), col("norm2")),
-        Seq("neighbor_id"))
-      .join(qVecs, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("hamming"),
-        Dedup.cosineQ(col("q_qv"), col("q_norm2"), col("qv"), col("norm2")).as("cosine"))
-      .withColumn("rank", row_number().over(rw).cast("long"))
-      .filter(col("rank") <= k)
+    // stage 2: full-vector rerank on the bounded shortlist — the
+    // [[exactRerank]] lookups, neighbor side first, carrying `hamming`
+    cutTopK(
+      shortlist
+        .join(m.select(col("vec_id").as("neighbor_id"), col("qv"), col("norm2")),
+          Seq("neighbor_id"))
+        .join(broadcast(queryVecs(m)), Seq("query_id"))
+        .select(col("query_id"), col("neighbor_id"), col("hamming"), exactCosine),
+      k, "rank", col("cosine").desc, col("neighbor_id"))
   }
 
   /** Recall@k of the binary multi-index path ([[binaryTopK]]) against the

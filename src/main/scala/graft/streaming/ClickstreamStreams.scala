@@ -147,21 +147,6 @@ object ClickstreamStreams {
       .option("checkpointLocation", checkpointLocation)
       .outputMode("append")
 
-  /** File sink for dev/test — the first-class replacement for the
-    * reference's commented-out StreamingFileSink
-    * (ClickstreamProcessor.java:156-205).
-    */
-  def fileSink(
-      df: DataFrame,
-      path: String,
-      checkpointLocation: String,
-      fmt: String = "parquet"): DataStreamWriter[Row] =
-    df.writeStream
-      .format(fmt)
-      .option("path", path)
-      .option("checkpointLocation", checkpointLocation)
-      .outputMode("append")
-
   /** The reference's default topic names (ClickstreamProcessor.java:117,
     * 208, 231, 243) — configuration parity for a drop-in switch.
     */

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{Cols, Tables}
+import graft.Cols.dec38
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1798,8 +1799,6 @@ object TextAnalysis {
     * window over the unbounded vocabulary, no driver-side count.
     */
   def burstiness(docs: DataFrame, topTerms: Int = 50): DataFrame = {
-    val dec = "decimal(38,0)"
-    def d(c: Column): Column = c.cast(dec)
     val perDoc = docs
       .select(col("doc_id"), explode(Cols.tokens(col("text"))).as("term"))
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("__c"))
@@ -1808,7 +1807,7 @@ object TextAnalysis {
       .agg(
         count(lit(1)).as("doc_freq"),
         sum(col("__c")).as("total_tf"),
-        sum(d(col("__c")) * d(col("__c"))).as("__s2"))
+        sum(dec38(col("__c")) * dec38(col("__c"))).as("__s2"))
       .orderBy(col("total_tf").desc, col("term"))
       .limit(topTerms)
     val n = docs.agg(count(lit(1)).as("__n"))
@@ -1820,9 +1819,9 @@ object TextAnalysis {
         col("doc_freq"),
         // exact decimal numerator/denominator; one rounded-double division
         // at the very end (the assortativity discipline)
-        round((d(col("__n")) * col("__s2") - d(col("total_tf")) * d(col("total_tf")))
+        round((dec38(col("__n")) * col("__s2") - dec38(col("total_tf")) * dec38(col("total_tf")))
           .cast("double") /
-          (d(col("__n")) * d(col("total_tf"))).cast("double"), 4).as("vmr"),
+          (dec38(col("__n")) * dec38(col("total_tf"))).cast("double"), 4).as("vmr"),
         Cols.floorDiv(col("doc_freq") * 10000L, col("__n")).as("doc_frac_e4"))
       .orderBy(col("total_tf").desc, col("term"))
   }
@@ -1988,8 +1987,6 @@ object TextAnalysis {
     * occurrences of one bigram; the KN numerator is decimal-widened.
     */
   def knBigram(docs: DataFrame, topN: Int = 50): DataFrame = {
-    val dec = "decimal(38,0)"
-    def dd(c: Column): Column = c.cast(dec)
     val toksDf = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(Cols.tokens(col("text")).as("toks"))
@@ -2009,9 +2006,9 @@ object TextAnalysis {
         col("w1"), col("w2"), col("c12"), col("c1"),
         Cols.floorDiv(col("c12") * 1000000000L, col("c1")).as("p_mle_e9"),
         Cols.floorDiv(
-          (dd(greatest(lit(4L) * col("c12") - 3L, lit(0L))) * dd(col("__d"))
-            + dd(lit(3L)) * dd(col("f1")) * dd(col("n2"))) * dd(lit(1000000000L)),
-          dd(lit(4L)) * dd(col("c1")) * dd(col("__d"))).cast("long").as("p_kn_e9"))
+          (dec38(greatest(lit(4L) * col("c12") - 3L, lit(0L))) * dec38(col("__d"))
+            + dec38(lit(3L)) * dec38(col("f1")) * dec38(col("n2"))) * dec38(lit(1000000000L)),
+          dec38(lit(4L)) * dec38(col("c1")) * dec38(col("__d"))).cast("long").as("p_kn_e9"))
       .orderBy(col("c12").desc, col("w1"), col("w2"))
       .limit(topN)
   }
@@ -2041,8 +2038,6 @@ object TextAnalysis {
     * trigram vocabulary.
     */
   def knTrigram(docs: DataFrame, topN: Int = 50): DataFrame = {
-    val dec = "decimal(38,0)"
-    def dd(c: Column): Column = c.cast(dec)
     val toksDf = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(Cols.tokens(col("text")).as("toks"))
@@ -2069,13 +2064,13 @@ object TextAnalysis {
         col("w1"), col("w2"), col("w3"), col("c123"), col("c12dot"),
         Cols.floorDiv(col("c123") * 1000000000L, col("c12dot")).as("p_mle_e9"),
         Cols.floorDiv(
-          (dd(greatest(lit(4L) * col("c123") - 3L, lit(0L)))
-            * dd(lit(4L)) * dd(col("m2dot")) * dd(col("__d2"))
-            + dd(lit(3L)) * dd(col("f12"))
-              * (dd(greatest(lit(4L) * col("m23") - 3L, lit(0L))) * dd(col("__d2"))
-                + dd(lit(3L)) * dd(col("f2")) * dd(col("n3"))))
-            * dd(lit(1000000000L)),
-          dd(lit(16L)) * dd(col("c12dot")) * dd(col("m2dot")) * dd(col("__d2")))
+          (dec38(greatest(lit(4L) * col("c123") - 3L, lit(0L)))
+            * dec38(lit(4L)) * dec38(col("m2dot")) * dec38(col("__d2"))
+            + dec38(lit(3L)) * dec38(col("f12"))
+              * (dec38(greatest(lit(4L) * col("m23") - 3L, lit(0L))) * dec38(col("__d2"))
+                + dec38(lit(3L)) * dec38(col("f2")) * dec38(col("n3"))))
+            * dec38(lit(1000000000L)),
+          dec38(lit(16L)) * dec38(col("c12dot")) * dec38(col("m2dot")) * dec38(col("__d2")))
           .cast("long").as("p_kn_e9"))
       .orderBy(col("c123").desc, col("w1"), col("w2"), col("w3"))
       .limit(topN)
@@ -2097,7 +2092,6 @@ object TextAnalysis {
     * rank window runs over topN rows only.
     */
   def zipfFit(docs: DataFrame, topN: Int = 100): DataFrame = {
-    val dec = "decimal(38,0)"
     val top = docs
       .select(explode(Cols.tokens(col("text"))).as("term"))
       .groupBy(col("term"))
@@ -2117,10 +2111,10 @@ object TextAnalysis {
       sum(col("__y")).as("__sy"),
       sum(col("__x") * col("__y")).as("__sxy"),
       sum(col("__x") * col("__x")).as("__sxx"))
-    val num = (col("n_terms").cast(dec) * col("__sxy").cast(dec)
-      - col("__sx").cast(dec) * col("__sy").cast(dec)) * lit(10000).cast(dec)
-    val den = (col("n_terms").cast(dec) * col("__sxx").cast(dec)
-      - col("__sx").cast(dec) * col("__sx").cast(dec))
+    val num = (dec38(col("n_terms")) * dec38(col("__sxy"))
+      - dec38(col("__sx")) * dec38(col("__sy"))) * dec38(lit(10000))
+    val den = (dec38(col("n_terms")) * dec38(col("__sxx"))
+      - dec38(col("__sx")) * dec38(col("__sx")))
     s.select(
       col("n_terms"),
       when(den =!= 0, graft.Cols.floorDiv(num, den)).cast("long").as("zipf_slope_e4"))

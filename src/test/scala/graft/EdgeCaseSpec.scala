@@ -423,6 +423,15 @@ class EdgeCaseSpec extends SparkSpec {
     assert(Similarity.maxSimTopK(emptyEmb).count() === 0L)
     assert(Similarity.maxSimRerank(emptyEmb).count() === 0L)
     assert(Similarity.sqTopK(emptyEmb).count() === 0L)
+    assert(Similarity.adcRerank(emptyEmb).count() === 0L)
+    assert(Similarity.rqRerank(emptyEmb).count() === 0L)
+    assert(Similarity.rrfFusion(emptyEmb).count() === 0L)
+    assert(Similarity.ivfPqTopK(emptyEmb).count() === 0L)
+    // one keyless-aggregate row per prefix arm: no truth, null recall
+    assert(Similarity.mrlRecallCurve(emptyEmb)
+      .as[(Long, Long, Long, Option[Long])].collect().toList
+      === List(8L, 16L, 32L, 64L).map(d => (d, 0L, 0L, None)))
+    assert(Similarity.embPsiIncremental(emptyEmb).count() === 0L)
     assert(TextAnalysis.knBigram(emptyDocs).count() === 0L)
     assert(TextAnalysis.fertility(
       Seq.empty[(Long, String, String, String, Long)]

@@ -927,4 +927,46 @@ class SimilaritySpec extends SparkSpec {
     assert(c0._6 > 0L && c1._6 < 0L)
     assert(c0._7 === 1L && c1._7 === 0L)
   }
+
+  test("PQ operators reject a subspace count that does not tile the 64-dim vectors") {
+    // 5 × 16 = 80 > 64: subspace 4 would slice past the array, every code
+    // would tie to cid 0, and the ranking would be garbage without an error
+    val e = (0L until 60L).map(i => (i, Seq.fill(64)((i % 7).toFloat / 7), (i % 3).toInt))
+      .toDF("vec_id", "embedding", "label")
+    intercept[IllegalArgumentException](Similarity.adcTopK(e, subspaces = 5))
+    intercept[IllegalArgumentException](Similarity.productQuantize(e, subspaces = 5))
+    intercept[IllegalArgumentException](Similarity.ivfPqTopK(e, subspaces = 5))
+    assert(Similarity.adcTopK(e).count() > 0L, "the tiling count still runs")
+  }
+
+  test("exactRerank: every (query, other vector) pair as the shortlist is bruteForceTopK") {
+    import graft.dedup.Dedup
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // nonzero 4-dim vectors on a coarse grid: many exact cosine ties, so
+    // the neighbor-id tie-break is exercised too
+    val gen = for {
+      n <- Gen.choose(2, 130)
+      rows <- Gen.listOfN(n, for {
+        x0 <- Gen.choose(1, 4)
+        rest <- Gen.listOfN(3, Gen.choose(-4, 4))
+      } yield (x0 +: rest).map(_.toFloat / 4))
+    } yield rows
+    (0 until 4).foreach { i =>
+      val rows = gen.apply(Gen.Parameters.default, Seed(9100L + i)).get
+      val e = rows.zipWithIndex.map { case (v, id) => (id.toLong, v, id % 3) }
+        .toDF("vec_id", "embedding", "label")
+      val q = Dedup.quantized(e)
+      val allPairs = Similarity.queryBatch(q).select($"vec_id".as("query_id"))
+        .crossJoin(q.select($"vec_id".as("neighbor_id")))
+        .filter($"query_id" =!= $"neighbor_id")
+      val k = 1 + i
+      def rows4(df: org.apache.spark.sql.DataFrame) =
+        df.select("query_id", "neighbor_id", "cosine", "rank")
+          .as[(Long, Long, Double, Long)].collect().toSet
+      val want = rows4(Similarity.bruteForceTopK(e, k))
+      assert(want.nonEmpty)
+      assert(rows4(Similarity.exactRerank(q, allPairs, k)) === want, s"draw $i (n=${rows.size})")
+    }
+  }
 }

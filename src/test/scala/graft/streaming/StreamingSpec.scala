@@ -220,9 +220,13 @@ class StreamingSpec extends SparkSpec {
     // reference's enableCheckpointing guarantee, ClickstreamProcessor.java:70-72)
     def runOnce(): Unit = {
       val src = spark.readStream.schema(schema).json(inDir.toString)
-      val q = ClickstreamStreams.fileSink(
-        ClickstreamStreams.clickEventSessions(src).drop("session_window"),
-        outDir, ckpt).start()
+      val q = ClickstreamStreams.clickEventSessions(src).drop("session_window")
+        .writeStream
+        .format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .start()
       try q.processAllAvailable() finally q.stop()
     }
     // u5's session is still OPEN at the first shutdown (its window end
