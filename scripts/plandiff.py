@@ -9,7 +9,13 @@ plan is normalized so that two runs of the same code read the same:
 
 - expression ids (`col#123L` -> `col#N`),
 - exchange plan ids (`plan_id=123`) and RDD ids (`MapPartitionsRDD[45]`),
-- source call sites of checkpointed RDDs (`at Analytics.scala:2538`),
+- source call sites of checkpointed RDDs: the line always
+  (`at Analytics.scala:2538`), and for a `localCheckpoint` or `checkpoint`
+  call site the file too (`localCheckpoint at <src>:N`), since moving the
+  call into a shared helper moves it to another file,
+- lambda variable names (`lambda x_339`), renumbered by first appearance
+  within each plan: Spark names them from one counter for the whole JVM,
+  so one lambda more or fewer renames those of every later plan,
 - lambda class names and object identity hashes (`Foo$$Lambda$12/0x..@1a2b`),
 - UUIDs.
 
@@ -37,16 +43,34 @@ _RULES = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\b(localCheckpoint|checkpoint) at [\w$.]+\.(scala|java):\d+"),
+     r"\1 at <src>:N"),
     (re.compile(r"\bat ([\w$.]+)\.(scala|java):\d+"), r"at \1.\2:N"),
     (re.compile(r"\$\$Lambda\$?\d*/0x[0-9a-f]+"), "$$Lambda"),
     (re.compile(r"([\w$])@[0-9a-f]{4,8}\b"), r"\1@N"),
 ]
 
 
+# Spark's fresh lambda variables: x_N, y_N, z_N from one shared counter
+_LAMBDA = re.compile(r"\blambda ([xyz])_(\d+)\b")
+
+
+def renumber_lambdas(text):
+    """Rename lambda variables `x_N` to `x_1, y_2, ...` by first appearance
+    of each N in `text`, keeping the letter."""
+    seen = {}
+
+    def rename(m):
+        k = seen.setdefault(m.group(2), len(seen) + 1)
+        return f"lambda {m.group(1)}_{k}"
+
+    return _LAMBDA.sub(rename, text)
+
+
 def normalize(text):
     for pattern, repl in _RULES:
         text = pattern.sub(repl, text)
-    return text.splitlines()
+    return renumber_lambdas(text).splitlines()
 
 
 def load(directory):

@@ -1014,7 +1014,7 @@ object Multimodal {
     *
     * Scale: inherits both constituents' postures — pigeonhole-blocked
     * pair generation (never |images|²) and O(log n)-round component
-    * labeling with localCheckpoint discipline.
+    * labeling, one checkpoint per round.
     */
   def imageNearDupClusters(spark: SparkSession, docs: DataFrame): DataFrame =
     // fan ONLY the decode-bound pair side: the contraction side reads

@@ -806,6 +806,16 @@ object Analytics {
       e: DataFrame, a: String = "src", b: String = "dst", node: String = "node"): DataFrame =
     e.select(col(a).as(node)).union(e.select(col(b).as(node)))
 
+  /** One k-core peel round of [[kCore]] and [[coreNumbers]]: the edges
+    * of `e` whose endpoints both have degree ≥ k in `e`.
+    */
+  private def corePeel(e: DataFrame, k: Long): DataFrame = {
+    val keep = endpoints(e).groupBy(col("node")).agg(count(lit(1)).as("d"))
+      .filter(col("d") >= k).select(col("node"))
+    e.join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
+      .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
+  }
+
   /** `(node, __d)`: each node's degree in a distinct undirected edge table. */
   private[ops] def degrees(
       e: DataFrame, a: String = "src", b: String = "dst", node: String = "node"): DataFrame =
@@ -1223,8 +1233,8 @@ object Analytics {
   /** Fixed-iteration weighted PageRank in EXACT INTEGER e9 arithmetic —
     * graph centrality as a deterministic dataflow: every step is a
     * floor-divided integer, so any engine (and any aggregation order)
-    * reproduces identical ranks, and a fixed iteration count keeps the
-    * whole computation one lazy plan (no convergence-test driver loop).
+    * reproduces identical ranks, and a fixed iteration count needs no
+    * convergence test.
     *
     * Per iteration: `r' = (1−d)/n + d · (Σ_in r·w/outw + dangling/n)`,
     * with `d = dampingE4/1e4`, every division floored. Rank mass leaks a
@@ -1241,10 +1251,9 @@ object Analytics {
   def pageRank(edges: DataFrame, iterations: Int = 3, dampingE4: Long = 8500L): DataFrame = {
     require(iterations >= 1 && dampingE4 >= 0 && dampingE4 <= 10000)
     val E = 1000000000L
-    // iteration state checkpoints (the [[bfsHops]]/[[components]]
-    // discipline, missing here through r14): each iteration references
-    // `ranks` twice (contrib + dangling) and the edge/node/out-weight
-    // tables once per round — the un-checkpointed plan doubled per round.
+    // one checkpoint per iteration ([[graft.Rounds]]): each iteration
+    // references `ranks` twice (contrib + dangling) and the edge/node/
+    // out-weight tables once — the un-checkpointed plan doubled per round
     val e = edges.localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
@@ -1252,10 +1261,9 @@ object Analytics {
     val nRow = broadcast(nodes.agg(count(lit(1)).as("__n")))
     val outW = e.groupBy(col("src")).agg(sum(col("weight")).as("__outw"))
       .localCheckpoint()
-    var ranks = nodes.crossJoin(nRow)
+    val init = nodes.crossJoin(nRow)
       .select(col("node"), graft.Cols.floorDiv(lit(E), col("__n")).as("rank_e9"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
+    val ranks = graft.Rounds.iterate(init, iterations) { (ranks, _) =>
       val contrib = e
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .join(outW, "src")
@@ -1268,7 +1276,7 @@ object Analytics {
         ranks
           .join(outW.select(col("src").as("node")), Seq("node"), "left_anti")
           .agg(coalesce(sum(col("rank_e9")), lit(0L)).as("__dm")))
-      val next = nodes
+      nodes
         .join(contrib, Seq("node"), "left")
         .crossJoin(nRow)
         .crossJoin(dangling)
@@ -1279,9 +1287,6 @@ object Analytics {
               lit(dampingE4) *
                 (coalesce(col("__s"), lit(0L)) + graft.Cols.floorDiv(col("__dm"), col("__n"))),
               10000L)).as("rank_e9"))
-        .localCheckpoint()
-      graft.LocalCheckpoints.free(ranks)
-      ranks = next
     }
     graft.LocalCheckpoints.free(e)
     graft.LocalCheckpoints.free(nodes)
@@ -1711,20 +1716,6 @@ object Analytics {
         max(col("__gap")).as("max_gap_days"))
   }
 
-  /** Min-COST paths from the hub landmarks over the weighted basket
-    * graph — [[bfsHops]]' "how far" upgraded to "how cheap", where an
-    * edge's cost is inverse co-purchase support (`max(1, ⌊10⁶ / n_ab⌋)`: a pair
-    * bought together often is a short hop). The relaxation is bounded
-    * Bellman-Ford, `maxHops` unrolled rounds of relax-join + min — a
-    * two-edge chain of strong pairs can undercut one weak direct edge,
-    * which hop counting cannot see (the spec pins exactly that graph).
-    *
-    * Scale: per round one edge-keyed equi-join of the FULL distance
-    * table (Bellman-Ford relaxes settled nodes too — a cheaper path may
-    * arrive after first reach) + one min-aggregate; cost per round is
-    * Σ reached-degree, edge-sized. Fixed unroll, one plan, no driver
-    * iteration — the [[bfsHops]] discipline with min(cost) semantics.
-    */
   /** Symmetrized basket-pair adjacency with inverse-support edge costs
     * (`max(1, ⌊10⁶ / n_ab⌋)`) — the shared weighted-graph first stage of
     * [[cheapestPath]] and [[betweennessWeighted]], one definition so the
@@ -1738,23 +1729,33 @@ object Analytics {
     bothWays(pairs, "item_a", "item_b", "src", "dst", w.as("w"))
   }
 
+  /** Min-COST paths from the hub landmarks over the weighted basket
+    * graph — [[bfsHops]]' "how far" upgraded to "how cheap", where an
+    * edge's cost is inverse co-purchase support (`max(1, ⌊10⁶ / n_ab⌋)`: a pair
+    * bought together often is a short hop). The relaxation is bounded
+    * Bellman-Ford, `maxHops` unrolled rounds of relax-join + min — a
+    * two-edge chain of strong pairs can undercut one weak direct edge,
+    * which hop counting cannot see (the spec pins exactly that graph).
+    *
+    * Scale: per round one edge-keyed equi-join of the FULL distance
+    * table (Bellman-Ford relaxes settled nodes too — a cheaper path may
+    * arrive after first reach) + one min-aggregate; cost per round is
+    * Σ reached-degree, edge-sized. Fixed unroll, one checkpoint per
+    * round — [[bfsHops]] with min(cost) semantics.
+    */
   def cheapestPath(pairs: DataFrame, nSources: Int = 3, maxHops: Int = 3): DataFrame = {
     // per-round checkpoints: same doubling (relax + union both reference
     // the previous round) and same fix as [[bfsHops]]
     val und = weightedUndirect(pairs).localCheckpoint()
     val sources = hubSources(und, nSources)
-    var dist = sources.select(col("source"), col("source").as("node"), lit(0L).as("cost_e6"))
-      .localCheckpoint()
-    for (_ <- 1 to maxHops) {
+    val init = sources.select(col("source"), col("source").as("node"), lit(0L).as("cost_e6"))
+    val dist = graft.Rounds.iterate(init, maxHops) { (dist, _) =>
       val relax = dist.join(und, col("node") === col("src"))
         .select(col("source"), col("dst").as("node"),
           (col("cost_e6") + col("w")).as("cost_e6"))
-      val next = dist.unionAll(relax)
+      dist.unionAll(relax)
         .groupBy(col("source"), col("node"))
         .agg(min(col("cost_e6")).as("cost_e6"))
-        .localCheckpoint()
-      graft.LocalCheckpoints.free(dist)
-      dist = next
     }
     graft.LocalCheckpoints.free(und)
     dist
@@ -2451,7 +2452,7 @@ object Analytics {
     * iterations the report says how much graph survives — the standard
     * dense-substructure screen (spam rings, power-user cliques) and the
     * preprocessing cut before any expensive community algorithm. Fixed
-    * iteration count keeps it ONE lazy plan (the [[pageRank]]
+    * iteration count needs no convergence test (the [[pageRank]]
     * discipline); shrinkage slows near the fixpoint, so the depth must
     * be MEASURED, not assumed — the sf0.01 basket graph needs 10 rounds
     * (5 left it 30 nodes short), and AnalyticsSpec pins
@@ -2460,25 +2461,14 @@ object Analytics {
     *
     * Scale: per round one degree aggregate + two semi-joins, each
     * bounded by the shrinking edge table. Each round's survivor edges
-    * are `localCheckpoint`ed and the retired round freed (the
-    * near-dup-clustering discipline): every round references its input
-    * THREE times (degree + two semi-joins), so an unbroken lineage grows
-    * ~3^rounds and OOMs the planner before any data moves — the
-    * checkpoint keeps the plan constant-size per round. On a real
-    * cluster swap in reliable `checkpoint`.
+    * are checkpointed by [[graft.Rounds]]: every round references its
+    * input THREE times (degree + two semi-joins), so an unbroken lineage
+    * grows ~3^rounds and OOMs the planner before any data moves — the
+    * checkpoint keeps the plan constant-size per round.
     */
   def kCore(edges: DataFrame, k: Int = 3, rounds: Int = 5): DataFrame = {
-    var e = edges.select(col("src"), col("dst")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val keep = endpoints(e).groupBy(col("node")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("node"))
-      val next = e
-        .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint()
-      graft.LocalCheckpoints.free(e)
-      e = next
-    }
+    val e = graft.Rounds.iterate(edges.select(col("src"), col("dst")), rounds)(
+      (e, _) => corePeel(e, k.toLong))
     val coreNodes = endpoints(e).distinct().agg(count(lit(1)).as("n_core_nodes"))
     val coreEdges = e.agg(count(lit(1)).as("n_core_edges"))
     coreNodes.crossJoin(broadcast(coreEdges))
@@ -2497,46 +2487,26 @@ object Analytics {
     *
     * Same incremental discipline as [[trussPeel]]: the (k+1)-core is a
     * subgraph of the k-core, so level k peels level k−1's fixpoint
-    * instead of the full graph, each round is one degree aggregate +
-    * two semi-joins bounded by the shrinking edge set, rounds early-exit
-    * at the fixpoint via the eager checkpoint's row count, and retired
-    * rounds are freed. The per-level cap is MEASURED on the fixtures
-    * (pendant CHAINS peel one hop per round, so the k=2 level dominates
-    * depth — the sf0.01 basket graph's longest chain sets it) and
-    * spec-pinned cap ≡ cap+2 so a deeper fixture fails a test instead
-    * of shipping an unconverged core.
+    * instead of the full graph, and each round is one degree aggregate +
+    * two semi-joins bounded by the shrinking edge set. [[graft.Rounds]]
+    * runs the rounds and stops a level at its row-count fixpoint; that
+    * test is one `count()` job per round, on the round's checkpoint,
+    * plus one on the canonical edge table. The per-level cap is MEASURED
+    * on the fixtures (pendant CHAINS peel one hop per round, so the k=2
+    * level dominates depth — the sf0.01 basket graph's longest chain
+    * sets it) and spec-pinned cap ≡ cap+2 so a deeper fixture fails a
+    * test instead of shipping an unconverged core.
     */
   def coreNumbers(edges: DataFrame, kMax: Int = 4, rounds: Int = 12): DataFrame = {
-    val e0 = canonicalEdges(edges).localCheckpoint()
-    val allNodes = endpoints(e0).distinct().localCheckpoint()
-    var cur = e0
-    var curN = cur.count()
-    val levels = scala.collection.mutable.ArrayBuffer.empty[(Int, DataFrame)]
-    for (k <- 2 to kMax) {
-      var converged = false
-      for (_ <- 1 to rounds if !converged) {
-        val keep = endpoints(cur).groupBy(col("node")).agg(count(lit(1)).as("d"))
-          .filter(col("d") >= k.toLong).select(col("node"))
-        val next = cur
-          .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .localCheckpoint()
-        val nextN = next.count()
-        if (nextN == curN) {
-          graft.LocalCheckpoints.free(next)
-          converged = true
-        } else {
-          if (!(cur eq e0)) graft.LocalCheckpoints.free(cur)
-          cur = next
-          curN = nextN
-        }
-      }
-      // the level's surviving NODE set is all the flag join needs; the
-      // edge set stays only as the next level's peel input
-      levels += ((k, endpoints(cur).distinct().localCheckpoint()))
+    val peel = graft.Rounds.from(canonicalEdges(edges))
+    val allNodes = endpoints(peel.frame).distinct().localCheckpoint()
+    // the level's surviving NODE set is all the flag join needs; the
+    // edge set stays only as the next level's peel input
+    val levels = (2 to kMax).map { k =>
+      peel.iterate(rounds, untilFixpoint = true)((cur, _) => corePeel(cur, k.toLong))
+      (k, endpoints(peel.frame).distinct().localCheckpoint())
     }
-    if (!(cur eq e0)) graft.LocalCheckpoints.free(cur)
-    graft.LocalCheckpoints.free(e0)
+    peel.close()
     val flagged = levels.foldLeft(allNodes) { case (acc, (k, s)) =>
       acc.join(s.withColumn(s"__c$k", lit(1L)), Seq("node"), "left")
     }
@@ -2549,23 +2519,6 @@ object Analytics {
       }.as("core"))
   }
 
-  /** Multi-source BFS hop distances from the graph's hub nodes — the
-    * "how far is everything from the catalog's centers" readout, and the
-    * building block behind landmark-distance features and
-    * diameter/ball-growth estimation. Sources are the `nSources`
-    * highest-degree nodes (ties by id); output is one row per
-    * (source, node) with the exact minimum hop count ≤ `maxHops`.
-    *
-    * The expansion is the standard distributed frontier BFS: each round
-    * joins the CURRENT frontier (nodes whose min distance is exactly
-    * r−1, recovered by the min-aggregate — already-settled nodes never
-    * rejoin) to the adjacency list on the node key, then folds the new
-    * reach into the distance table with one min-aggregate. Cost per
-    * round is Σ frontier-degree — edge-sized and equi-keyed, never
-    * node². `maxHops` is a fixed unroll (one plan, no driver iteration),
-    * the [[labelPropStep]] discipline; deeper walks would move to the
-    * [[components]] checkpoint-per-round loop.
-    */
   /** Symmetrized, deduplicated adjacency of an (src, dst) edge table —
     * the shared first stage of every landmark walk below.
     */
@@ -2583,28 +2536,38 @@ object Analytics {
       .limit(nSources)
       .select(col("src").as("source"))
 
+  /** Multi-source BFS hop distances from the graph's hub nodes — the
+    * "how far is everything from the catalog's centers" readout, and the
+    * building block behind landmark-distance features and
+    * diameter/ball-growth estimation. Sources are the `nSources`
+    * highest-degree nodes (ties by id); output is one row per
+    * (source, node) with the exact minimum hop count ≤ `maxHops`.
+    *
+    * The expansion is the standard distributed frontier BFS: each round
+    * joins the CURRENT frontier (nodes whose min distance is exactly
+    * r−1, recovered by the min-aggregate — already-settled nodes never
+    * rejoin) to the adjacency list on the node key, then folds the new
+    * reach into the distance table with one min-aggregate. Cost per
+    * round is Σ frontier-degree — edge-sized and equi-keyed, never
+    * node². `maxHops` is a fixed unroll, one checkpoint per round.
+    */
   def bfsHops(edges: DataFrame, nSources: Int = 3, maxHops: Int = 3): DataFrame = {
-    // the [[components]] lineage discipline, which this loop lacked
-    // through r14: round r references round r−1 TWICE (frontier filter +
-    // union), so the un-checkpointed plan doubled per round — at maxHops=3
-    // the final li_closeness plan carried ~300 copies of the lineitem scan
-    // and the co-occurrence pyramid, and Catalyst planning dominated the
-    // measured time (plans/r15/li_closeness_before.txt). One checkpoint
-    // per round keeps the plan linear; the edge table materializes once.
+    // one checkpoint per round ([[graft.Rounds]]): round r references
+    // round r−1 TWICE (frontier filter + union), so the un-checkpointed
+    // plan doubled per round — at maxHops=3 the final li_closeness plan
+    // carried ~300 copies of the lineitem scan and the co-occurrence
+    // pyramid, and Catalyst planning dominated the measured time
+    // (plans/r15/li_closeness_before.txt). The edge table materializes once.
     val und = undirect(edges).localCheckpoint()
     val sources = hubSources(und, nSources)
-    var dist = sources.select(col("source"), col("source").as("node"), lit(0L).as("hops"))
-      .localCheckpoint()
-    for (r <- 1 to maxHops) {
+    val init = sources.select(col("source"), col("source").as("node"), lit(0L).as("hops"))
+    val dist = graft.Rounds.iterate(init, maxHops) { (dist, r) =>
       val frontier = dist.filter(col("hops") === (r - 1).toLong)
         .join(und, col("node") === col("src"))
         .select(col("source"), col("dst").as("node"), lit(r.toLong).as("hops"))
-      val next = dist.unionAll(frontier)
+      dist.unionAll(frontier)
         .groupBy(col("source"), col("node"))
         .agg(min(col("hops")).as("hops"))
-        .localCheckpoint()
-      graft.LocalCheckpoints.free(dist)
-      dist = next
     }
     // only the final (checkpointed) distance table backs the returned plan
     graft.LocalCheckpoints.free(und)
@@ -2704,11 +2667,10 @@ object Analytics {
     * Scale: every stage is an equi-join — frontier×adjacency forward
     * (cost Σ frontier-degree, the BFS bound), level×adjacency×level
     * backward (cost Σ inter-level-edge count, ≤ the same bound). Each
-    * level is `localCheckpoint`ed (the [[coreNumbers]] lineage
-    * discipline: the backward pass references every level twice, which
-    * un-checkpointed would re-expand the whole forward pyramid per
-    * round); retired blocks are freed before return. δ terms widen to
-    * decimal(38,0) before summing. Never node², never corpus².
+    * level is `localCheckpoint`ed: the backward pass references every
+    * level twice, which un-checkpointed would re-expand the whole
+    * forward pyramid per round; retired blocks are freed before return.
+    * δ terms widen to decimal(38,0) before summing. Never node², never corpus².
     */
   def betweennessSample(edges: DataFrame, nSources: Int = 3, maxHops: Int = 3): DataFrame = {
     val und = undirect(edges).localCheckpoint()
@@ -2927,32 +2889,23 @@ object Analytics {
     * components.
     *
     * Scale: per round one neighbor-label join (edge-sized, keyed by
-    * node) + one min-aggregate + one node-sized jump join; every
-    * intermediate is `localCheckpoint`ed and the retired one freed —
-    * the [[kCore]] lineage discipline. On a real cluster swap in
-    * reliable `checkpoint`.
+    * node) + one min-aggregate + one node-sized jump join, each stage
+    * checkpointed by [[graft.Rounds]].
     */
   def components(edges: DataFrame, rounds: Int = 5): DataFrame = {
     val sym = bothWays(edges, "src", "dst", "a", "b").localCheckpoint()
-    var labels = sym.select(col("a").as("node")).distinct()
+    val init = sym.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val m = sym
+    val labels = graft.Rounds.from(init).iterate(rounds)(
+      (labels, _) => sym
         .join(labels.select(col("node").as("b"), col("label")), "b")
         .select(col("a").as("node"), col("label"))
         .union(labels)
         .groupBy(col("node"))
-        .agg(min(col("label")).as("label"))
-        .localCheckpoint()
-      val next = m
+        .agg(min(col("label")).as("label")),
+      (m, _) => m
         .join(m.select(col("node").as("label"), col("label").as("__jl")), "label")
-        .select(col("node"), col("__jl").as("label"))
-        .localCheckpoint()
-      graft.LocalCheckpoints.free(labels)
-      graft.LocalCheckpoints.free(m)
-      labels = next
-    }
+        .select(col("node"), col("__jl").as("label"))).frame
     // every round is already materialized, so the edge-sized sym block —
     // the largest intermediate — can be released; only the final label
     // table backs the returned plan
@@ -3157,7 +3110,7 @@ object Analytics {
   }
 
   def edgeSupport(edges: DataFrame): DataFrame = {
-    // checkpoint the canonical edge set ([[trussPeel]]'s `all` shape):
+    // checkpoint the canonical edge set, as [[trussPeel]] does:
     // supportOf references it four times (degrees, orientation, the
     // closing semi-join) plus the final left join — un-checkpointed,
     // each reference re-plans (and without exchange reuse re-executes)
@@ -3187,11 +3140,13 @@ object Analytics {
     * Trussness is computed incrementally: the (k+1)-truss is a subgraph
     * of the k-truss, so level k peels level k−1's survivors rather than
     * the full graph — the expensive first cut (support ≥ 1) runs once.
-    * Each peel round recomputes [[supportOf]] (the cap-free Σ outdeg²
-    * oriented enumeration) over the CURRENT survivor set and drops
-    * edges under k−2; rounds stop early at the fixpoint (the round's
-    * eager `localCheckpoint` already materializes the survivor count,
-    * so the check is a metadata read, not an extra job). The cap is
+    * Each peel round drops the edges whose support is under k−2, then
+    * recomputes [[supportOf]] (the cap-free Σ outdeg² oriented
+    * enumeration) over the CURRENT survivor set. [[graft.Rounds]] runs the
+    * rounds and stops a level at its row-count fixpoint: it checkpoints
+    * the survivors and counts them, one `count()` job per round (plus one
+    * on the first support table), and skips the recount once no edge
+    * dropped. The cap is
     * MEASURED per fixture, not assumed: the dense sf0.001 basket graph
     * peels k=4 for 5 effective rounds (2244 → 2048 → 1997 → 1973 →
     * 1968 → 1966) where sf0.01 needs 2 and sf0.1 one — AnalyticsSpec
@@ -3199,50 +3154,29 @@ object Analytics {
     *
     * Scale: per round one triangle enumeration bounded by the shrinking
     * survivor set (the first round dominates — later levels peel graphs
-    * that are already dense cores); every round's survivors are
-    * `localCheckpoint`ed and the retired round freed (the [[kCore]]
-    * lineage discipline — each round references its input four times,
-    * so unbroken lineage grows geometrically). `rounds` is the per-level
+    * that are already dense cores); each round references its input four
+    * times, so every stage is checkpointed. `rounds` is the per-level
     * cap, MEASURED not assumed: AnalyticsSpec pins registered ≡
-    * registered+1 on the sf0.01 basket graph. On a real cluster swap in
-    * reliable `checkpoint`.
+    * registered+1 on the sf0.01 basket graph.
     */
   def trussPeel(edges: DataFrame, kMax: Int = 4, rounds: Int = 8): DataFrame = {
-    val all = canonicalEdges(edges, "item_a", "item_b").localCheckpoint()
     def withSupport(e: DataFrame): DataFrame =
       e.join(supportOf(e), Seq("item_a", "item_b"), "left")
         .na.fill(0L, Seq("support"))
-        .localCheckpoint()
-    val sup0 = withSupport(all)
-    // sup0 is materialized and carries every column the peel reads, so
-    // the edge table is dead here; unfreed it stays pinned until a GC
-    graft.LocalCheckpoints.free(all)
-    // invariant: `cur` always carries the support of each edge WITHIN the
-    // current survivor set, so a peel round is a filter + recount, and
-    // the expensive triangle enumeration reruns only when edges dropped
-    // (a level inherits its predecessor's fixpoint support table)
-    var cur = sup0
-    var curN = cur.count()
-    val levels = scala.collection.mutable.ArrayBuffer.empty[(Int, DataFrame)]
-    for (k <- 3 to kMax) {
-      var converged = false
-      for (_ <- 1 to rounds if !converged) {
-        val nextE = cur
-          .filter(col("support") >= (k - 2).toLong)
-          .select(col("item_a"), col("item_b"))
-        val nextN = nextE.count()
-        if (nextN == curN) {
-          converged = true
-        } else {
-          val next = withSupport(nextE)
-          // sup0 and level fixpoints stay referenced by the final join
-          if (!(cur eq sup0) && !levels.exists(_._2 eq cur))
-            graft.LocalCheckpoints.free(cur)
-          cur = next
-          curN = nextN
-        }
-      }
-      levels += ((k, cur))
+    // invariant: the current round always carries the support of each
+    // edge WITHIN the current survivor set, so a peel round is a filter +
+    // recount, and the expensive triangle enumeration reruns only when
+    // edges dropped (a level inherits its predecessor's fixpoint support
+    // table). sup0 and the level fixpoints back the final join, so they
+    // are kept; the edge table and every other round are freed.
+    val peel = graft.Rounds.from(canonicalEdges(edges, "item_a", "item_b"))
+    val sup0 = peel.step(withSupport).keep()
+    val levels = (3 to kMax).map { k =>
+      peel.iterate(rounds, untilFixpoint = true)(
+        (cur, _) => cur.filter(col("support") >= (k - 2).toLong)
+          .select(col("item_a"), col("item_b")),
+        (survivors, _) => withSupport(survivors))
+      (k, peel.keep())
     }
     val flagged = levels.foldLeft(sup0) { case (acc, (k, s)) =>
       acc.join(

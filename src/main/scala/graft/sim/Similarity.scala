@@ -1058,8 +1058,8 @@ object Similarity {
     * the [[pqTrainStep]] shape, `rounds` times. Each round's (j, code)
     * readout is `localCheckpoint`ed (≤ k·subspaces rows) so deriving
     * the next codebook AND the final union replays no corpus scan;
-    * retired codebook tables are freed ([[Analytics.kCore]] lineage
-    * law). err_refit reuses the refit aggregate's own sums
+    * [[graft.Rounds]] checkpoints each codebook and frees the retired
+    * ones. err_refit reuses the refit aggregate's own sums
     * (Q − 2Σcᵢsᵢ + nΣcᵢ²) — never a second corpus pass.
     */
   def pqTrainConverge(embeddings: DataFrame, subspaces: Int = 4,
@@ -1067,13 +1067,11 @@ object Similarity {
     val q = Dedup.quantized(embeddings).select(col("vec_id"), col("qv"))
     // seed codebook at subspace grain: (j, cid, 16-dim cvec) — the
     // subvector slices of the k lowest vec_ids, k·subspaces rows
-    var cents = pqCodebook(q, subspaces, codebookK)
+    val cents = graft.Rounds.from(pqCodebook(q, subspaces, codebookK)
       .select(col("cid"), col("cqv"), upTo(subspaces).as("j"))
-      .select(col("j"), col("cid"), subvec(col("cqv"), col("j")).as("cvec"))
-      .localCheckpoint()
-    val perRound = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      val asg = q.crossJoin(broadcast(cents))
+      .select(col("j"), col("cid"), subvec(col("cqv"), col("j")).as("cvec")))
+    val perRound = (1 to rounds).map { r =>
+      val asg = q.crossJoin(broadcast(cents.frame))
         .select(col("vec_id"), col("j"), col("cid"),
           sqL2(subvec(col("qv"), col("j")), col("cvec")).as("dist"))
         .groupBy(col("vec_id"), col("j"))
@@ -1086,23 +1084,20 @@ object Similarity {
         .select(col("j"), col("code"), col("n"), col("err_assign"),
           refitErr("n").as("err_refit"), refitCentroid.as("cvec"))
         .localCheckpoint()
-      perRound += readout.groupBy(col("j"))
+      cents.step(_.as("c")
+        .join(readout.select(col("j"), col("code").as("cid"),
+          col("cvec").as("__rc")), Seq("j", "cid"), "left")
+        .select(col("j"), col("cid"),
+          coalesce(col("__rc"), col("c.cvec")).as("cvec")))
+      readout.groupBy(col("j"))
         .agg(
           sum(col("n")).as("n_vecs"),
           sum(col("err_assign")).as("err_assign"),
           sum(col("err_refit")).as("err_refit"))
         .select(lit(r.toLong).as("round"), col("j").as("subspace"),
           col("n_vecs"), col("err_assign"), col("err_refit"))
-      val nextCents = cents.as("c")
-        .join(readout.select(col("j"), col("code").as("cid"),
-          col("cvec").as("__rc")), Seq("j", "cid"), "left")
-        .select(col("j"), col("cid"),
-          coalesce(col("__rc"), col("c.cvec")).as("cvec"))
-        .localCheckpoint()
-      graft.LocalCheckpoints.free(cents)
-      cents = nextCents
     }
-    graft.LocalCheckpoints.free(cents)
+    cents.close()
     perRound.reduce(_.unionByName(_))
   }
 
@@ -1926,10 +1921,10 @@ object Similarity {
     * doubles anywhere.
     *
     * Scale: each power step is ONE corpus scan ending in a 1-row
-    * aggregate, `localCheckpoint`ed so the next step's plan starts from
-    * the 64-element result instead of re-expanding the whole pyramid
-    * (the [[graft.ops.Analytics.coreNumbers]] lineage discipline —
-    * without it step k re-runs steps 1..k−1 as broadcast subtrees).
+    * aggregate, which [[graft.Rounds]] checkpoints so the next step's
+    * plan starts from the 64-element result instead of re-expanding the
+    * whole pyramid (without it step k re-runs steps 1..k−1 as broadcast
+    * subtrees).
     * 2·`steps`+3 corpus scans total, each map-side-combined; the
     * readout's ×3 arm explode is bounded; nothing ever pairs.
     */
@@ -1943,7 +1938,7 @@ object Similarity {
     // one scan: n, per-dim means (floor), and the per-dim centered-SS
     // seed direction n·ΣQ² − S² (positive, generically non-orthogonal to
     // the top eigendirection)
-    val mom = moments(q, dim)
+    val dirs = graft.Rounds.from(moments(q, dim)
       .select(floorMu.as("mu"), seedDir.as("__v0r"))
       .select(col("mu"), col("__v0r"), arrayMax(col("__v0r")).as("__m0"))
       .select(
@@ -1951,11 +1946,10 @@ object Similarity {
         // pass-1 deflation is a no-op: p = 0 vector, ‖p‖² = 1
         array((0 until dim).map(_ => lit(0L)): _*).as("p"),
         lit(1L).as("pp"),
-        renormE4(col("__v0r"), "__m0").as("v"))
-      .localCheckpoint()
+        renormE4(col("__v0r"), "__m0").as("v")))
     // one power step: v ← normalize_e4( Σ_rows ce·(ce·v) ) where
     // ce = (qv − mu) deflated by the carried direction p
-    def step(prev: DataFrame): DataFrame =
+    def powerStep(prev: DataFrame): DataFrame =
       centerDeflate(q.crossJoin(broadcast(prev)), "mu", "p", "pp", "v")
         .select(col("mu"), col("p"), col("pp"), col("__ce"),
           arrayDot(col("__ce"), col("v")).as("__sv"))
@@ -1965,36 +1959,21 @@ object Similarity {
         .select(col("mu"), col("p"), col("pp"), col("__u"),
           arrayMax(col("__u"), absolute = true).as("__m"))
         .select(col("mu"), col("p"), col("pp"), renormE4(col("__u"), "__m").as("v"))
-        .localCheckpoint()
-    // every intermediate is an eagerly-materialized 1-row checkpoint
-    // consumed only by the NEXT stage; once `fin` exists they are dead
-    // weight and must be freed explicitly (LocalCheckpoints scaladoc —
-    // the blocks are invisible to the CacheManager)
-    val retired = scala.collection.mutable.ArrayBuffer[DataFrame](mom)
-    def stepR(prev: DataFrame): DataFrame = {
-      val n = step(prev); retired += n; n
-    }
-    val v1row = (1 to steps).foldLeft(mom)((acc, _) => stepR(acc))
+    // every stage is a 1-row checkpoint consumed only by the next one,
+    // so each is freed once its successor is materialized
+    dirs.iterate(steps)((v, _) => powerStep(v))
     // re-arm for pass 2: the found direction becomes the deflation
     // carrier, its centered-SS seed re-measured on the deflated corpus
-    val pass2seed = {
-      val armed = v1row.select(col("mu"), col("v").as("p"), normSq1(col("v")).as("pp"))
-        .localCheckpoint()
-      retired += armed
-      centerDeflate(q.crossJoin(broadcast(armed)), "mu", "p", "pp")
-        .agg(
-          first(col("mu")).as("mu"), first(col("p")).as("p"), first(col("pp")).as("pp"),
-          sqSums("__ce", dim).as("__r"))
-        .select(col("mu"), col("p"), col("pp"), col("__r"), arrayMax(col("__r")).as("__m0"))
-        .select(col("mu"), col("p"), col("pp"), renormE4(col("__r"), "__m0").as("v"))
-        .localCheckpoint()
-    }
-    retired += pass2seed
-    val v2row = (1 to steps).foldLeft(pass2seed)((acc, _) => stepR(acc))
-    val fin = v2row.select(
-      col("mu"), col("p"), col("pp"), col("v").as("v2"), normSq1(col("v")).as("vv2"))
-      .localCheckpoint()
-    retired.foreach(graft.LocalCheckpoints.free)
+    dirs.step(_.select(col("mu"), col("v").as("p"), normSq1(col("v")).as("pp")))
+    dirs.step(armed => centerDeflate(q.crossJoin(broadcast(armed)), "mu", "p", "pp")
+      .agg(
+        first(col("mu")).as("mu"), first(col("p")).as("p"), first(col("pp")).as("pp"),
+        sqSums("__ce", dim).as("__r"))
+      .select(col("mu"), col("p"), col("pp"), col("__r"), arrayMax(col("__r")).as("__m0"))
+      .select(col("mu"), col("p"), col("pp"), renormE4(col("__r"), "__m0").as("v")))
+    dirs.iterate(steps)((v, _) => powerStep(v))
+    val fin = dirs.step(_.select(
+      col("mu"), col("p"), col("pp"), col("v").as("v2"), normSq1(col("v")).as("vv2"))).frame
     // readout: the pair-free mean identity (aniso_e6 — which CENTERING
     // already collapses, so it isolates the mean-offset component) plus
     // the rotation-sensitive figure: how much of the arm's total second

@@ -1205,40 +1205,38 @@ object TextAnalysis {
     *
     * Scale: each round is one map-side-combined pair count, a 1-row
     * TakeOrdered top pair (broadcast), and a MAP-ONLY remerge fold — no
-    * shuffle touches the token arrays; rounds are localCheckpointed (the
-    * [[graft.ops.Analytics.kCore]] lineage discipline) so round r+1
-    * never recomputes rounds 1..r. The fold rebuilds each doc's array
-    * (O(tokens²) element copies per doc) — bounded here by the corpus's
-    * short docs; for book-length inputs compose with [[chunk]] first,
-    * which is how production BPE trainers bound merge-window cost
-    * anyway.
+    * shuffle touches the token arrays; [[graft.Rounds]] checkpoints each
+    * round so round r+1 never recomputes rounds 1..r. The fold rebuilds
+    * each doc's array (O(tokens²) element copies per doc) — bounded here
+    * by the corpus's short docs; for book-length inputs compose with
+    * [[chunk]] first, which is how production BPE trainers bound
+    * merge-window cost anyway.
     */
   def bpeMerges(docs: DataFrame, rounds: Int = 3): DataFrame = {
-    val (roundRows, finalToks) = bpeTrain(docs, rounds)
-    graft.LocalCheckpoints.free(finalToks)
+    val (roundRows, toks) = bpeTrain(docs, rounds)
+    toks.close()
     roundRows
   }
 
   /** The merge loop shared by [[bpeMerges]] (the merge table) and
     * [[bpeCompression]] (the applied corpus): returns the per-round rows
-    * AND the final merged token table. The caller owns freeing the
-    * returned checkpoint.
+    * AND the rounds, whose frame is the final merged token table. The
+    * caller owns closing them.
     */
-  private def bpeTrain(docs: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
+  private def bpeTrain(docs: DataFrame, rounds: Int): (DataFrame, graft.Rounds) = {
     // fan out BEFORE the checkpoint: every merge round's pair count and
     // remerge fold then runs at session parallelism instead of on the
     // single-split scan's one task (guide §2.5; the checkpoint pins the
     // partitioning for all rounds)
-    var toks = graft.Tables.fanOutScan(docs)
-      .select(col("doc_id"), Cols.tokens(col("text")).as("toks"))
-      .localCheckpoint()
+    val toks = graft.Rounds.from(graft.Tables.fanOutScan(docs)
+      .select(col("doc_id"), Cols.tokens(col("text")).as("toks")))
     val mergeExpr =
       "aggregate(toks, cast(array() as array<string>), (acc, x) -> " +
         "CASE WHEN size(acc) > 0 AND element_at(acc, -1) = a AND x = b " +
         s"THEN concat(slice(acc, 1, size(acc) - 1), array(concat(a, '$MergeSep', b))) " +
         "ELSE concat(acc, array(x)) END)"
     val roundRows = (1 to rounds).map { r =>
-      val pairs = toks
+      val pairs = toks.frame
         .select(explode(zip_with(
           slice(col("toks"), lit(1), size(col("toks")) - 1),
           slice(col("toks"), lit(2), size(col("toks")) - 1),
@@ -1248,12 +1246,9 @@ object TextAnalysis {
       val top = pairs
         .orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
         .localCheckpoint()
-      val next = toks.crossJoin(broadcast(top))
-        .select(col("doc_id"), expr(mergeExpr).as("toks"))
-        .localCheckpoint()
-      val nAfter = next.agg(sum(size(col("toks"))).as("__na")).localCheckpoint()
-      graft.LocalCheckpoints.free(toks)
-      toks = next
+      toks.step(_.crossJoin(broadcast(top))
+        .select(col("doc_id"), expr(mergeExpr).as("toks")))
+      val nAfter = toks.frame.agg(sum(size(col("toks"))).as("__na")).localCheckpoint()
       top.crossJoin(broadcast(nAfter)).select(
         lit(r.toLong).as("round"),
         col("a").as("lhs"), col("b").as("rhs"),
@@ -1281,7 +1276,7 @@ object TextAnalysis {
     // (checkpoints have no lineage to recompute), so it stays resident
     // until the session drops it — the price of reusing the trained
     // state; the per-round 1-row checkpoints are negligible
-    val (_, finalToks) = bpeTrain(docs, rounds)
+    val finalToks = bpeTrain(docs, rounds)._2.frame
     val before = docs.select(col("doc_id"), col("source"),
       size(Cols.tokens(col("text"))).cast("long").as("__nb"))
     val out = before
