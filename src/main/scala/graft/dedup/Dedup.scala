@@ -814,7 +814,7 @@ object Dedup {
       // invocation-scoped shingle and signature indexes (the
       // lshBandDesign discipline) — the returned lazy frame must not
       // keep two corpus-sized block sets pinned across invocations
-      .localCheckpoint()
+      .transform(graft.Rounds.materialize)
     graft.LocalCheckpoints.free(sigs)
     graft.LocalCheckpoints.free(sh0)
     out
@@ -918,7 +918,7 @@ object Dedup {
       .orderBy(col("bands").desc)
       // 5-row readout: materialize it, then free the invocation-scoped
       // shingle and signature indexes
-      .localCheckpoint()
+      .transform(graft.Rounds.materialize)
     graft.LocalCheckpoints.free(sigs)
     graft.LocalCheckpoints.free(sh0)
     out

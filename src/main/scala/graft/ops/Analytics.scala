@@ -2719,7 +2719,7 @@ object Analytics {
         .join(terms, Seq("source", "node"), "left")
         .select(col("source"), col("node"), col("sigma"),
           coalesce(col("__d"), dec38(lit(0L))).as("delta_e6"))
-        .localCheckpoint()
+        .transform(graft.Rounds.materialize)
       deltas += cur
     }
     // every backward level is materialized; the forward levels and the
@@ -2853,7 +2853,7 @@ object Analytics {
         .select(col("source"), col("node"),
           coalesce(col("__d"), dec38(lit(0L))).as("delta_e6"))
     }
-    val delta = delta0.localCheckpoint()
+    val delta = graft.Rounds.materialize(delta0)
     // the source's own row is excluded, as in [[betweennessSample]]
     // (standard Brandes: δ accumulates over non-source nodes only)
     val out = delta

@@ -492,7 +492,7 @@ object Similarity {
     val out = graphs.zipWithIndex
       .map { case (g, r) => roundStats(r.toLong, g) }
       .reduce(_.unionAll(_))
-      .localCheckpoint()
+      .transform(graft.Rounds.materialize)
     graphs.foreach(graft.LocalCheckpoints.free)
     graft.LocalCheckpoints.free(truth)
     out

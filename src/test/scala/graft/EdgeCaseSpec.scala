@@ -389,6 +389,16 @@ class EdgeCaseSpec extends SparkSpec {
     assert(TextAnalysis.stopwordCandidates(emptyDocs).count() === 0L)
     assert(TextAnalysis.filterPipeline(emptyDocs).count() === 0L)
     assert(TextAnalysis.prepPipeline(emptyDocs).count() === 0L)
+    val emptyTagged = Seq.empty[(Long, String, String, String)]
+      .toDF("doc_id", "text", "lang", "source")
+    assert(TextAnalysis.temperatureMix(emptyTagged).count() === 0L)
+    assert(TextAnalysis.oovRate(emptyDocs).count() === 0L)
+    assert(TextAnalysis.vocabCoverage(emptyDocs).count() === 0L)
+    assert(TextAnalysis.dsirWeights(emptyTagged).count() === 0L)
+    assert(TextAnalysis.decontaminationIncremental(emptyDocs, emptyDocs).count() === 0L)
+    assert(TextAnalysis.winnowOverlap(emptyDocs).count() === 0L)
+    assert(TextAnalysis.langId(emptyTagged).count() === 0L)
+    assert(TextAnalysis.qualityScore(emptyDocs).count() === 0L)
     assert(Dedup.containment(emptyDocs).count() === 0L)
     val emptyEmb = Seq.empty[(Long, Seq[Float], Int)]
       .toDF("vec_id", "embedding", "label")

@@ -1,21 +1,26 @@
 package graft
 
+import graft.dedup.Dedup
 import graft.ops.Analytics
+import graft.text.TextAnalysis
 import org.apache.spark.scheduler.{JobFailed, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable
 
-/** No Spark job of a fixpoint peel fails, even after the query returns.
+/** No Spark job of an operator that checkpoints and then frees its
+  * inputs fails, even after the query returns.
   *
   * `trussPeel` and `coreNumbers` free each retired round's checkpoint
-  * once its successor is materialized. Adaptive execution may finish a
-  * round's query while a shuffle-map stage it no longer needs still
-  * runs (a join side that turned out empty); if that stage reads the
-  * freed round, its job aborts with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`
-  * although the result is correct. A `SparkListener` sees every job,
-  * including such orphans, so each peel runs 40 times and the spec
-  * asserts that no job ended in `JobFailed`.
+  * once its successor is materialized; `lshPrCurve`,
+  * `betweennessWeighted` and `bpeMerges` free the tables a checkpointed
+  * readout was computed from. Adaptive execution may finish a query
+  * while a shuffle-map stage it no longer needs still runs (a join side
+  * that turned out empty); if that stage reads a freed checkpoint, its
+  * job aborts with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` although the
+  * result is correct. A `SparkListener` sees every job, including such
+  * orphans, so each operator runs 40 times and the spec asserts that no
+  * job ended in `JobFailed`.
   */
 class PeelJobsSpec extends SparkSpec {
   import spark.implicits._
@@ -82,6 +87,32 @@ class PeelJobsSpec extends SparkSpec {
 
   test(s"coreNumbers: no job fails over $Runs runs") {
     val failed = failedJobs(Analytics.coreNumbers(k4path, kMax = 4, rounds = 6))
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  // two identical documents and an unrelated one: one true pair
+  private def corpus = {
+    val a = "the quick brown fox jumps over the lazy dog again and again"
+    val b = "completely different words entirely unrelated to anything else here now"
+    Seq((1L, a), (2L, a), (3L, b)).toDF("doc_id", "text")
+  }
+
+  test(s"lshPrCurve: no job fails over $Runs runs") {
+    val failed = failedJobs(Dedup.lshPrCurve(corpus))
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test(s"betweennessWeighted: no job fails over $Runs runs") {
+    val pairs = Seq((1L, 2L, 100L), (2L, 3L, 100L), (1L, 3L, 2L), (3L, 4L, 10L))
+      .toDF("item_a", "item_b", "n_ab")
+    val failed = failedJobs(Analytics.betweennessWeighted(pairs))
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test(s"bpeMerges: no job fails over $Runs runs") {
+    val docs = Seq((1L, "a b a b a b c"), (2L, "a b c a b c"), (3L, "c c c d"))
+      .toDF("doc_id", "text")
+    val failed = failedJobs(TextAnalysis.bpeMerges(docs, rounds = 3))
     assert(failed.isEmpty, failed.mkString("\n"))
   }
 }

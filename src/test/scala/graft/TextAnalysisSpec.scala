@@ -416,6 +416,45 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got === List(("a", 1L, 2L), ("b", 1L, 1L)))
   }
 
+  test("largest remainder: quotas sum to the budget and never favor a smaller group") {
+    // seeded group sizes and budgets, plus an all-equal case (every
+    // remainder ties) and an exact division (no remainder), through both
+    // users of the shared apportionment: quotaAlloc (docs per group) and
+    // temperatureMix (√ of each language's token mass)
+    val rnd = new scala.util.Random(13)
+    val drawn = Seq.fill(6)((Seq.fill(2 + rnd.nextInt(5))(1 + rnd.nextInt(12)),
+      3L + rnd.nextInt(30)))
+    val cases = drawn ++ Seq((Seq(4, 4, 4), 10L), (Seq(2, 3, 5), 10L))
+    // (group size, quota) rows of one run
+    def check(what: String, got: Seq[(Long, Long)], budget: Long): Unit = {
+      assert(got.map(_._2).sum === budget, s"$what: quotas must sum to $budget")
+      for ((sa, qa) <- got; (sb, qb) <- got if sa > sb)
+        assert(qa >= qb, s"$what: size $sa got quota $qa below size $sb's $qb")
+    }
+    cases.foreach { case (sizes, budget) =>
+      val groups = sizes.zipWithIndex.map { case (n, g) => (s"g$g", n) }
+      val perDoc = groups.flatMap { case (g, n) => Seq.fill(n)(g) }
+        .zipWithIndex.map { case (g, i) => (g, i.toLong) }.toDF("lang", "doc_id")
+      check(s"quotaAlloc $sizes / $budget",
+        TextAnalysis.quotaAlloc(perDoc, "lang", budget)
+          .as[(String, Long, Long)].collect().map(r => (r._2, r._3)), budget)
+      // one document of n² tokens per language: its √ mass is exactly n
+      val perLang = groups.map { case (g, n) => (g, Seq.fill(n * n)("w").mkString(" ")) }
+        .toDF("lang", "text")
+      check(s"temperatureMix $sizes / $budget",
+        TextAnalysis.temperatureMix(perLang, budget)
+          .select(col("n_tokens"), col("quota_tokens")).as[(Long, Long)].collect(), budget)
+    }
+  }
+
+  test("vocabCoverage: empty or non-positive cutoffs are rejected by name") {
+    Seq(Seq.empty[Int], Seq(5, 0)).foreach { cutoffs =>
+      val e = intercept[IllegalArgumentException](
+        TextAnalysis.vocabCoverage(docs((1L, "a b c")), cutoffs))
+      assert(e.getMessage.contains("cutoffs"))
+    }
+  }
+
   test("split assignment: deterministic, complete, roughly 80/10/10") {
     val ids = (1L to 1000L).map(i => (i, s"doc $i")).toSeq
     val splits = TextAnalysis.splitAssign(docs(ids: _*))
